@@ -17,7 +17,15 @@ import org.apache.spark.sql.SparkSession
   */
 object Main {
 
-  /** Testable core: dispatch one job and return per-upload outcomes. */
+  /** Testable core: dispatch one job and return per-upload outcomes,
+    * in the job's declaration order.
+    *
+    * The job's extracts run concurrently on a pool of at most
+    * `sparkContext.defaultParallelism` threads; its pre-step (index
+    * maintenance) runs first and alone. When an extract throws, the
+    * others still land, and then the first failure is rethrown with
+    * the later ones suppressed — so no `[graft] … ok` line is printed
+    * for that run and the process exits non-zero ([[jobs.Jobs.run]]). */
   def run(spark: SparkSession, job: String, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =

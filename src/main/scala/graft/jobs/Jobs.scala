@@ -664,11 +664,29 @@ object Jobs {
         col("enroll_status"))
   }
 
-  /** Run one job: every flat query in its pipeline, then every
+  /** Run one job: every flat query in its pipeline and every
     * (per-term extract × current term), each written gzip-CSV to each
     * target under the md5-dated daily key (per-term keys
     * `{group}/{group}-{termId}.gz`, reference jobs.py:41-62). Returns
-    * (query, target, ok) rows; empty for an unknown job. */
+    * (query, target, ok) rows in declaration order — pre-step, flat
+    * extracts, then per-term extracts by term — whatever order the
+    * steps finished in; empty for an unknown job.
+    *
+    * A step is one extract: build its frame, then [[Sinks.fanOut]].
+    * The job's pre-step ([[preSteps]], index maintenance) runs first
+    * and alone, because its reports read what it wrote. The remaining
+    * steps are independent and run concurrently through [[runSteps]],
+    * on at most `sparkContext.defaultParallelism` threads (4 under
+    * `local[4]`): the flat extracts and the term lookup are submitted
+    * together, and each per-term extract as soon as the terms are
+    * known. Each step keeps its own plan, so its Spark jobs and
+    * landed bytes are those of a serial run.
+    *
+    * A step that throws does not stop the others: every extract that
+    * can land still lands, and then the first failure in declaration
+    * order is rethrown, later ones attached as suppressed. A failed
+    * delivery is not a throw — [[Sinks.fanOut]] reports it as
+    * `ok = false` in the returned rows. */
   def run(job: String, spark: SparkSession, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =
@@ -678,35 +696,90 @@ object Jobs {
           s"[jobs] unknown job '$job' — known: ${pipelines.keys.mkString(", ")}")
         Seq.empty
       case Some(extracts) =>
+        // fail before any step runs: every fanOut would throw this, but
+        // only after its face was built
+        require(targets.nonEmpty, "no targets configured")
         // Advisors extracts live under the sis-sysadm/advisors prefix;
         // everything else under the plain sis-data daily root
         // (jobs.py:31-37 vs 52-54).
         val keyFor: String => String =
           if (job == "upload_advisors") Sinks.advisorsKey(isoDate, _)
           else Sinks.dailyKey(isoDate, _)
+        def deliver(name: String, df: DataFrame, key: String) =
+          Sinks.fanOut(df, targets, key).map { case (t, ok) => (name, t, ok) }
         // job-level pre-composition (index maintenance) runs FIRST —
         // the reports below describe the maintenance the run just did
-        val pre = for {
-          (extract, step) <- preSteps.get(job).toSeq
-          df = step(spark, sfDir, isoDate)
-          (target, ok) <- Sinks.fanOut(df, targets, keyFor(extract))
-        } yield (extract, target, ok)
-        val flat = for {
-          (name, extract) <- extracts
-          df = SparkEntry.queries(name)(spark, sfDir)
-          (target, ok) <- Sinks.fanOut(df, targets, keyFor(extract))
-        } yield (extract, target, ok)
+        val pre = preSteps.get(job).toSeq.flatMap { case (extract, step) =>
+          deliver(extract, step(spark, sfDir, isoDate), keyFor(extract))
+        }
         val termQueries = perTermPipelines.getOrElse(job, Seq.empty)
-        val terms =
-          if (termQueries.nonEmpty) currentTermIds(spark, sfDir)
-          else Seq.empty
-        val perTerm = for {
-          term <- terms
-          (dir, file, q) <- termQueries
-          df = q(spark, sfDir, term)
-          (target, ok) <- Sinks.fanOut(df, targets,
-            Sinks.termKey(isoDate, dir, file, term))
-        } yield (s"$file-$term", target, ok)
-        pre ++ flat ++ perTerm
+        val rest = runSteps[(String, String, Boolean)](
+            spark.sparkContext.defaultParallelism) { submit =>
+          for ((name, extract) <- extracts) submit { () =>
+            deliver(extract, SparkEntry.queries(name)(spark, sfDir),
+              keyFor(extract))
+          }
+          if (termQueries.nonEmpty) submit { () =>
+            for (term <- currentTermIds(spark, sfDir);
+                 (dir, file, q) <- termQueries) submit { () =>
+              deliver(s"$file-$term", q(spark, sfDir, term),
+                Sinks.termKey(isoDate, dir, file, term))
+            }
+            Seq.empty
+          }
+        }
+        pre ++ rest
     }
+
+  /** Run a job's steps concurrently and return their rows in
+    * submission order. `submitAll` is called once, on the caller's
+    * thread, with `submit`; a running step may call `submit` as well
+    * (the term lookup submits the per-term extracts it finds), and the
+    * steps it submits come after every step submitted before them.
+    *
+    * The pool starts a thread per submitted step up to `threads`, so
+    * it holds min(steps, threads). Every submitted step runs to the
+    * end even when another throws, so no Spark job keeps running
+    * detached; then the first failure in submission order is
+    * rethrown, with the later ones attached as suppressed. The pool
+    * is shut down and terminated before this returns or throws. */
+  private[graft] def runSteps[T](threads: Int)(
+      submitAll: ((() => Seq[T]) => Unit) => Unit): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException, Executors,
+      Future, TimeUnit}
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val pool = Executors.newFixedThreadPool(threads, { (r: Runnable) =>
+      val t = new Thread(r, s"graft-job-step-${started.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+    val submitted = scala.collection.mutable.ArrayBuffer.empty[Future[Seq[T]]]
+    // submit and record under one lock: a step's follow-ups must not
+    // overtake the record of the step that submitted them
+    def submit(step: () => Seq[T]): Unit = submitted.synchronized {
+      submitted += pool.submit(new Callable[Seq[T]] { def call() = step() })
+    }
+    try {
+      submitAll(submit)
+      val rows = Seq.newBuilder[T]
+      val failures = Seq.newBuilder[Throwable]
+      // a step's follow-ups are recorded before the step completes, so
+      // once the last recorded step is done nothing more can arrive
+      var i = 0
+      while (i < submitted.synchronized(submitted.size)) {
+        try rows ++= submitted.synchronized(submitted(i)).get()
+        catch { case e: ExecutionException => failures += e.getCause }
+        i += 1
+      }
+      failures.result() match {
+        case first +: later =>
+          later.foreach(first.addSuppressed)
+          throw first
+        case _ => rows.result()
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+    }
+  }
 }

@@ -369,7 +369,9 @@ object Partitioning {
     * chars sort identically in Scala and UTF8String), and the bucket
     * offset joins back via broadcast. Bit-identical to the
     * single-window form (PartitioningSpec pins the equivalence), so
-    * any engine can replay it as one plain window.
+    * any engine can replay it as one plain window. NULLs are kept on
+    * both keys: a NULL `partCol` is its own group, and NULL-id rows
+    * sort first in theirs, as NULL md5 does in the single window.
     *
     * The offsets ride the PLAN as a broadcast subtree instead of a
     * driver collect round-trip (r21, guide §5: the collect was a
@@ -411,12 +413,13 @@ object Partitioning {
       .orderBy(col("__ord"), col(idCol))
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
         org.apache.spark.sql.expressions.Window.currentRow)
-    // null-safe equality on the group key — a plain equi-join would
-    // silently drop every NULL-keyed row the window just processed
+    // null-safe equality on both keys — a plain equi-join would
+    // silently drop every NULL-group or NULL-id (NULL bucket) row the
+    // window just processed
     base
       .withColumn("__cum", sum(weightCol).over(w))
       .join(offDf,
-        col(partCol) <=> col("__p") && col("__bkt") === col("__b"))
+        col(partCol) <=> col("__p") && col("__bkt") <=> col("__b"))
       .drop("__p", "__b")
       .withColumn("shard",
         floor((col("__off") + col("__cum") - col(weightCol)) / budget))

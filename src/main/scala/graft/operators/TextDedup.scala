@@ -33,8 +33,9 @@ object TextDedup {
       .select(col(idCol), explode(array_distinct(expr(BigramShingleSql)))
         .as("shingle"))
 
-  /** 128-bit gram identity: two independently-seeded xxhash64 halves
-    * as two FLAT LONG columns (g1, g2) — fixed-width 16-byte keys
+  /** 128-bit gram identity: xxhash64 of the gram plus a
+    * prefix-salted second hash, heuristically independent, as two
+    * FLAT LONG columns (g1, g2) — fixed-width 16-byte keys
     * that join and group like any pair of columns. Flat longs, NOT a
     * struct: struct grouping/join keys fall off the codegen'd
     * primitive-key fast paths (measured r21: a struct-keyed
@@ -45,12 +46,14 @@ object TextDedup {
     * pairs is d²/2^65 for one 64-bit hash — ~270 expected collisions
     * at the 100 TB corpus scale of d ≈ 10¹¹ grams, each one silently
     * inflating an intersection count or merging two LSH buckets —
-    * versus d²/2^129 ≈ 1.5·10⁻¹⁷ for the seeded pair (both halves
-    * must collide simultaneously; the "g2|" salt makes the second
-    * half an independent draw). Non-certification faces
-    * (novelty/chunk-dup reports) keep the single hash: a collision
-    * there perturbs one count cell, not a certified pair set, and
-    * the 8-byte key halves their hottest exchange. */
+    * versus d²/2^129 ≈ 1.5·10⁻¹⁷ for the pair (both halves must
+    * collide simultaneously). Both halves use Spark's one fixed-seed
+    * xxhash64; the "g2|" salt only makes the second half behave like
+    * an independent draw, so the bound is heuristic, not proven.
+    * Non-certification faces (novelty/chunk-dup reports) keep the
+    * single hash: a collision there perturbs one count cell, not a
+    * certified pair set, and the 8-byte key halves their hottest
+    * exchange. */
   def gramKey128(gram: Column): Seq[Column] =
     Seq(xxhash64(gram).as("g1"),
       xxhash64(concat(lit("g2|"), gram)).as("g2"))
@@ -136,8 +139,9 @@ object TextDedup {
     require(nBands > 0 && numPerms % nBands == 0,
       s"numPerms=$numPerms must divide into nBands=$nBands")
     val rows = numPerms / nBands
-    // bucket identity is a 128-bit two-seed xxhash64 PAIR (bkt1,
-    // bkt2 — flat longs, the [[gramKey128]] stance) over the band's
+    // bucket identity is a 128-bit xxhash64 PAIR, the second
+    // prefix-salted (bkt1, bkt2 — flat longs, the [[gramKey128]]
+    // stance and its heuristic independence) over the band's
     // concatenated signature hex, NOT an md5 hex string (r20 moved to
     // one xxhash64 long; r21 verdict #3 widened it back to 128 bits
     // because LSH banding feeds CERTIFICATION faces —
@@ -249,12 +253,12 @@ object TextDedup {
     * branches here. Cost ∝ candidates × overlap, never pairs².
     *
     * Exactness bound: a collision inflating one pair's n_inter needs
-    * BOTH independently-seeded 64-bit halves of [[gramKey128]] to
-    * collide on two distinct grams of the same doc pair —
-    * ~d²/2^129 expected corpus-wide (≈10⁻¹⁷ at d = 10¹¹ grams), so
-    * the verify faces' exactness claim holds at any realistic scale;
-    * the catalog oracle replays the intersection on the strings, so
-    * a collision would surface as a hash mismatch. */
+    * BOTH 64-bit halves of [[gramKey128]] (the second prefix-salted,
+    * heuristically independent) to collide on two distinct grams of
+    * the same doc pair — ~d²/2^129 expected corpus-wide (≈10⁻¹⁷ at
+    * d = 10¹¹ grams), so the verify faces' exactness claim holds at
+    * any realistic scale; the catalog oracle replays the intersection
+    * on the strings, so a collision would surface as a hash mismatch. */
   def pairOverlap(shh: DataFrame, cand: DataFrame): DataFrame = {
     val sizes = shh.groupBy("doc_id").agg(count(lit(1)).as("__n"))
     val inter = cand

@@ -1268,22 +1268,6 @@ object Similarity extends QueryModule {
       FROM rk WHERE rnk <= 10 ORDER BY q_id, rnk""")
   )
 
-  /** HYBRID RANK FUSION — reciprocal-rank fusion (Cormack et al.
-    * 2009, the standard hybrid-retrieval combiner) of the BM25
-    * lexical top-10 with the exact dense-cosine top-10, for the query
-    * docs that exist in BOTH stores (vec_id ≡ doc_id, the
-    * `ss_hybrid_search` convention). Each list contributes
-    * `1000000 div (60 + rank)` micro-points — the published k = 60
-    * as exact integer floor, so fused scores hash cross-engine — and
-    * a doc absent from a list contributes 0 via the full-outer
-    * candidate union. Output carries in_lex/in_dense provenance
-    * flags: the report ALSO measures how much the two retrievers
-    * agree, the observability a hybrid deployment tunes on.
-    *
-    * Scale shape: both input rankings are per-query top-10, so the
-    * fusion joins two ≤ 10·|Q|-row tables on (q_id, doc_id) — fusion
-    * cost is rank-list-sized regardless of corpus size; the expensive
-    * parts are the certified BM25 and brute pipelines it composes. */
   /** The ss_rrf_fusion lineage, factored so the face and the PlanDump
     * evidence tool build the identical plan: returns (result, the
     * persisted postings handle the caller releases). */
@@ -1334,6 +1318,28 @@ object Similarity extends QueryModule {
     (out, tf)
   }
 
+  /** HYBRID RANK FUSION — reciprocal-rank fusion (Cormack et al.
+    * 2009, the standard hybrid-retrieval combiner) of the BM25
+    * lexical top-10 with the exact dense-cosine top-10, for the query
+    * docs that exist in BOTH stores (vec_id ≡ doc_id, the
+    * `ss_hybrid_search` convention). Each list contributes
+    * `1000000 div (60 + rank)` micro-points — the published k = 60
+    * as exact integer floor, so fused scores hash cross-engine. The
+    * two lists become contribution rows (q_id, doc_id, points, one
+    * provenance flag each), their union is repartitioned once by
+    * q_id, and one (q_id, doc_id) aggregate sums the points and takes
+    * the max of each flag: a doc in both lists merges into one row
+    * scoring both contributions, a doc in one list scores only that
+    * one. The fused top-10 per query is ranked by a window over the
+    * same q_id partitioning. Output carries in_lex/in_dense
+    * provenance flags: the report ALSO measures how much the two
+    * retrievers agree, the observability a hybrid deployment tunes on.
+    *
+    * Scale shape: both input rankings are per-query top-10, so the
+    * fusion aggregates ≤ 20·|Q| contribution rows with one exchange —
+    * fusion cost is rank-list-sized regardless of corpus size; the
+    * expensive parts are the certified BM25 and brute pipelines it
+    * composes. */
   val rrfFusion: Q = Q(
     "ss_rrf_fusion",
     (s, dir) => {

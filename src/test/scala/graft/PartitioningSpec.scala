@@ -232,6 +232,27 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     assert(got.size == 6, "no row may vanish, NULL-keyed or not")
   }
 
+  test("packShards keeps NULL-id rows, in the single window's order") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // a NULL id hashes to a NULL md5 and a NULL bucket: the bucket
+    // offsets join must match it null-safely or the row vanishes
+    val d = Seq(
+      (Some(1L), "a", 100L), (None, "a", 150L), (Some(2L), "a", 300L),
+      (None, null.asInstanceOf[String], 50L), (Some(3L), "b", 70L))
+      .toDF("doc_id", "source", "n_tokens")
+    val w = Window.partitionBy("source")
+      .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("source", "doc_id", "n_tokens", "shard")
+        .orderBy("source", "doc_id").collect().map(_.toSeq).toSeq
+    val ref = d.withColumn("cum", sum("n_tokens").over(w))
+      .withColumn("shard", floor((col("cum") - col("n_tokens")) / 200L))
+    val got = Partitioning.packShards(d, "source", "doc_id", "n_tokens", 200L)
+    assert(rows(got) == rows(ref))
+    assert(got.count() == 5, "a NULL-id row was dropped")
+  }
+
   test("bucketed-to-bucketed join plans without a shuffle exchange") {
     val o = Tables(spark, sf, "orders").select("o_orderkey", "o_custkey")
     val c = Tables(spark, sf, "customer").select("c_custkey", "c_name")

@@ -220,7 +220,8 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     //    doc_ids merge in the postings aggregate but double-count in
     //    the shortcut — pin the divergence so the contract line in
     //    buildIndex's doc can never silently rot into "equivalent"
-    val dup = docs.limit(5).union(docs.limit(5))
+    val five = docs.orderBy("doc_id").limit(5)
+    val dup = five.union(five)
     val dupShort = Lexical.buildIndex(dup)
     val dupFull = Lexical.buildIndexFromPostings(Lexical.postings(dup))
     assert(dupShort.nDocs == 2 * dupFull.nDocs,

@@ -175,6 +175,10 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     intercept[IllegalArgumentException] {
       Sinks.fanOut(df, Seq.empty, "k")
     }
+    // and a job run rejects it up front, before any face is built
+    intercept[IllegalArgumentException] {
+      Jobs.run("upload_advisors", spark, sf, Seq.empty, "2024-01-01")
+    }
   }
 
   test("unknown job is a logged no-op, not an exception (jobs.py:64-65)") {
@@ -196,19 +200,26 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("upload_snapshot fans out per current term (jobs.py:55-62)") {
     val dir = Files.createTempDirectory("jobs_term_spec").toString
-    val res = Jobs.run("upload_snapshot", spark, sf,
-      Seq(s"$dir/t1"), "2024-01-01")
-    assert(res.forall(_._3), s"all uploads succeed: $res")
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val res = Jobs.run("upload_snapshot", spark, sf, targets, "2024-01-01")
     val terms = Jobs.currentTermIds(spark, sf)
     assert(terms.nonEmpty && terms.size <= 3)
-    // flat basic-attributes upload plus one key per (group, term)
-    assert(res.map(_._1).toSet ==
-      Set("basic-attributes") ++
-        terms.flatMap(t => Seq(s"courses-$t", s"enrollments-$t")))
+    // flat basic-attributes upload plus one key per (group, term), in
+    // declaration order although the steps ran concurrently
+    val names = Seq("basic-attributes") ++
+      terms.flatMap(t => Seq(s"courses-$t", s"enrollments-$t"))
+    assert(res == names.flatMap(n => targets.map(t => (n, t, true))),
+      s"uploads out of order or failed: $res")
+    def bytes(t: String, key: String) =
+      new java.io.File(s"$t/$key").listFiles()
+        .filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName)
+        .map(f => Files.readAllBytes(f.toPath).toSeq).toSeq
     for (t <- terms; g <- Seq("courses", "enrollments")) {
       val key = Sinks.termKey("2024-01-01", g, g, t)
       assert(key.endsWith(s"$g/$g-$t.gz"), key)
-      assert(new java.io.File(s"$dir/t1/$key").exists(), key)
+      assert(bytes(targets(0), key).nonEmpty, key)
+      assert(bytes(targets(0), key) == bytes(targets(1), key),
+        s"targets differ at $key")
     }
   }
 
@@ -426,6 +437,124 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     assert(res.map(_._1).forall(n =>
       n.startsWith("instructor-updates-") ||
         n.startsWith("enrollment-updates-")))
+  }
+
+  /** Live threads of the step runner's pools, each given a moment to
+    * exit so a thread on its way out is not counted. */
+  private def liveStepThreads(): Seq[Thread] = {
+    import scala.jdk.CollectionConverters._
+    val ts = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith("graft-job-step-"))
+    ts.foreach(_.join(5000))
+    ts.filter(_.isAlive)
+  }
+
+  test("runSteps: rows come back in submission order, on at most " +
+      "min(steps, threads) concurrent threads") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    val running = new AtomicInteger
+    val peak = new AtomicInteger
+    val names = ConcurrentHashMap.newKeySet[String]()
+    // every step waits until two are running: a serial runner would
+    // time out here instead of passing
+    val overlap = new CountDownLatch(2)
+    def step(i: Int): () => Seq[Int] = () => {
+      names.add(Thread.currentThread.getName)
+      peak.accumulateAndGet(running.incrementAndGet(), math.max)
+      try {
+        overlap.countDown()
+        assert(overlap.await(30, TimeUnit.SECONDS), "steps ran serially")
+        Thread.sleep(10L * (6 - i)) // the first submitted finishes last
+        Seq(i, i)
+      } finally running.decrementAndGet()
+    }
+    val rows = Jobs.runSteps[Int](3) { submit =>
+      (0 until 4).foreach(i => submit(step(i)))
+      // a follow-up submitter, like the term lookup: its steps come
+      // after every step submitted before them
+      submit { () => Seq(5, 6).foreach(i => submit(step(i))); Seq.empty }
+    }
+    assert(rows == Seq(0, 0, 1, 1, 2, 2, 3, 3, 5, 5, 6, 6))
+    assert(peak.get >= 2 && peak.get <= 3, s"peak concurrency ${peak.get}")
+    assert(names.size <= 3, s"threads beyond the bound: $names")
+    // fewer steps than threads: one thread per step, no more
+    names.clear()
+    assert(Jobs.runSteps[String](4) { submit =>
+      Seq("a", "b").foreach(x => submit { () =>
+        names.add(Thread.currentThread.getName); Seq(x) })
+    } == Seq("a", "b"))
+    assert(names.size <= 2, s"more threads than steps: $names")
+    assert(liveStepThreads().isEmpty, "the pool outlived runSteps")
+  }
+
+  test("runSteps: concurrent fan-outs land identical bytes in both " +
+      "targets, the same rows a serial run lands") {
+    val dir = Files.createTempDirectory("run_steps_bytes_spec").toString
+    val frames = (0 until 6).map(i =>
+      spark.range(200).selectExpr("id", s"md5(cast(id * $i as string)) as v"))
+    def key(i: Int) = s"daily/k$i/k$i.gz"
+    val res = Jobs.runSteps[(String, Boolean)](4) { submit =>
+      frames.indices.foreach(i => submit(() =>
+        Sinks.fanOut(frames(i), Seq(s"$dir/t1", s"$dir/t2"), key(i))))
+    }
+    assert(res == frames.indices.flatMap(_ =>
+      Seq(s"$dir/t1" -> true, s"$dir/t2" -> true)))
+    def parts(t: String, i: Int): Seq[java.io.File] =
+      new java.io.File(s"$dir/$t/${key(i)}").listFiles()
+        .filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName).toSeq
+    def gz(f: java.io.File): Array[Byte] = Files.readAllBytes(f.toPath)
+    def csv(f: java.io.File): String = {
+      val in = new java.util.zip.GZIPInputStream(
+        new java.io.FileInputStream(f))
+      try new String(in.readAllBytes(), "UTF-8") finally in.close()
+    }
+    for (i <- frames.indices) {
+      assert(parts("t1", i).nonEmpty, s"extract $i did not land")
+      assert(parts("t1", i).map(gz(_).toSeq) ==
+          parts("t2", i).map(gz(_).toSeq),
+        s"targets got different bytes for extract $i")
+      // the serial reference: the same frame through one plain fanOut
+      Sinks.fanOut(frames(i), Seq(s"$dir/serial"), key(i))
+      assert(parts("t1", i).map(csv) == parts("serial", i).map(csv),
+        s"extract $i differs from its serial delivery")
+    }
+  }
+
+  test("runSteps: a throwing step leaves the others landing; the first " +
+      "failure is rethrown after every step finished, later ones " +
+      "suppressed, and no pool thread is left running") {
+    import java.util.concurrent.atomic.AtomicInteger
+    val dir = Files.createTempDirectory("run_steps_fail_spec").toString
+    val finished = new AtomicInteger
+    def step(body: => Seq[String]): () => Seq[String] =
+      () => try body finally finished.incrementAndGet()
+    def land(i: Int): Seq[String] = {
+      val ok = Sinks.fanOut(Seq((i, "x")).toDF("a", "b"), Seq(s"$dir/t1"),
+        s"daily/k$i/k$i.gz")
+      assert(ok.forall(_._2))
+      Seq(s"k$i")
+    }
+    val first = new IllegalStateException("step 1 failed")
+    val later = new IllegalArgumentException("step 3 failed")
+    val thrown = intercept[IllegalStateException] {
+      Jobs.runSteps[String](4) { submit =>
+        submit(step(land(0)))
+        // fails LAST in time, FIRST in submission order
+        submit(step { Thread.sleep(300); throw first })
+        submit(step { Thread.sleep(600); land(2) })
+        submit(step(throw later))
+        submit(step(land(4)))
+      }
+    }
+    assert(thrown eq first, s"not the first failure in step order: $thrown")
+    assert(thrown.getSuppressed.toSeq == Seq(later))
+    assert(finished.get == 5, s"rethrown before every step finished: " +
+      s"${finished.get} of 5")
+    for (i <- Seq(0, 2, 4))
+      assert(new java.io.File(s"$dir/t1/daily/k$i/k$i.gz").isDirectory,
+        s"step $i did not land beside the failures")
+    assert(liveStepThreads().isEmpty, "a pool thread outlived the failure")
   }
 
   test("partitionedParquet dynamic overwrite replaces only incoming " +
