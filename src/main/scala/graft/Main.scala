@@ -23,9 +23,10 @@ object Main {
     * The job's extracts run concurrently on a pool of at most
     * `sparkContext.defaultParallelism` threads; its pre-step (index
     * maintenance) runs first and alone. When an extract throws, the
-    * others still land, and then the first failure is rethrown with
-    * the later ones suppressed — so no `[graft] … ok` line is printed
-    * for that run and the process exits non-zero ([[jobs.Jobs.run]]). */
+    * others still land, and then a [[jobs.Jobs.StepsFailed]] carrying
+    * their rows is thrown, caused by the first failure with the later
+    * ones suppressed ([[jobs.Jobs.run]]). `main` prints the landed
+    * rows' `[graft] …` lines and then exits non-zero. */
   def run(spark: SparkSession, job: String, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =
@@ -54,13 +55,20 @@ object Main {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
-    try {
-      val results = run(spark, job, sfDir, targets, date)
-      results.foreach { case (q, t, ok) =>
+    def report(rows: Seq[(String, String, Boolean)]): Unit =
+      rows.foreach { case (q, t, ok) =>
         println(s"[graft] $q -> $t: ${if (ok) "ok" else "FAILED"}")
       }
+    try {
       // per-bucket failure is isolated+logged, not fatal
-      // (reference: jonesy/jobs.py:128-131)
+      // (reference: jonesy/jobs.py:128-131); a step that throws is
+      // fatal, after the extracts that did land are reported
+      try report(run(spark, job, sfDir, targets, date))
+      catch {
+        case e: jobs.Jobs.StepsFailed[(String, String, Boolean)] @unchecked =>
+          report(e.landed)
+          throw e
+      }
     } finally spark.stop()
   }
 }

@@ -24,9 +24,11 @@ import org.apache.spark.util.sketch.BloomFilter
   * form, which is exactly how the catalog certifies it
   * (dd_decontaminate_bloom shares dd_decontaminate's oracle).
   *
-  * The filter deserializes once per executor (transient lazy), never
-  * per row; codegen reaches it through a reference to this expression
-  * instance, whose serialized form carries only the literal bytes.
+  * The filter deserializes once per task (transient lazy), never per
+  * row: each task deserializes its own copy of this expression, so
+  * each copy decodes its own filter. Codegen reaches it through a
+  * reference to this expression instance, whose serialized form
+  * carries only the literal bytes.
   */
 case class BloomMightContain(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -117,8 +119,10 @@ case class BloomMightContainBcast(
 
   override def prettyName: String = "bloom_might_contain"
 
-  // one deserialize per executor that evaluates the probe, never per
-  // row — bc.value is itself a per-executor cached fetch
+  // one deserialize per task that evaluates the probe, never per row:
+  // each task deserializes its own copy of this expression, so the
+  // lazy filter is decoded once per task, though bc.value is a
+  // per-executor cached fetch
   @transient private lazy val filter: BloomFilter =
     BloomFilter.readFrom(bc.value)
 

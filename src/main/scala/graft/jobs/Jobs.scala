@@ -683,17 +683,19 @@ object Jobs {
     * landed bytes are those of a serial run.
     *
     * A step that throws does not stop the others: every extract that
-    * can land still lands, and then the first failure in declaration
-    * order is rethrown, later ones attached as suppressed. A failed
-    * delivery is not a throw — [[Sinks.fanOut]] reports it as
-    * `ok = false` in the returned rows. */
+    * can land still lands, and then a [[StepsFailed]] is thrown. It
+    * carries the rows of the steps that finished, pre-step first; its
+    * cause is the first failure in declaration order, with the later
+    * ones attached to that as suppressed. A failed delivery is not a
+    * throw — [[Sinks.fanOut]] reports it as `ok = false` in the
+    * returned rows. */
   def run(job: String, spark: SparkSession, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =
     pipelines.get(job) match {
       case None =>
         System.err.println(
-          s"[jobs] unknown job '$job' — known: ${pipelines.keys.mkString(", ")}")
+          s"[jobs] unknown job '$job' -- known: ${pipelines.keys.mkString(", ")}")
         Seq.empty
       case Some(extracts) =>
         // fail before any step runs: every fanOut would throw this, but
@@ -713,7 +715,7 @@ object Jobs {
           deliver(extract, step(spark, sfDir, isoDate), keyFor(extract))
         }
         val termQueries = perTermPipelines.getOrElse(job, Seq.empty)
-        val rest = runSteps[(String, String, Boolean)](
+        val rest = try runSteps[(String, String, Boolean)](
             spark.sparkContext.defaultParallelism) { submit =>
           for ((name, extract) <- extracts) submit { () =>
             deliver(extract, SparkEntry.queries(name)(spark, sfDir),
@@ -727,9 +729,19 @@ object Jobs {
             }
             Seq.empty
           }
+        } catch {
+          case e: StepsFailed[(String, String, Boolean)] @unchecked =>
+            throw new StepsFailed(pre ++ e.landed, e.getCause)
         }
         pre ++ rest
     }
+
+  /** Thrown when some steps of a job threw: `landed` holds the rows of
+    * the steps that finished, in submission order. The cause is the
+    * first failure in submission order; later failures are attached to
+    * it as suppressed. */
+  final class StepsFailed[T](val landed: Seq[T], cause: Throwable)
+      extends RuntimeException(cause)
 
   /** Run a job's steps concurrently and return their rows in
     * submission order. `submitAll` is called once, on the caller's
@@ -740,8 +752,9 @@ object Jobs {
     * The pool starts a thread per submitted step up to `threads`, so
     * it holds min(steps, threads). Every submitted step runs to the
     * end even when another throws, so no Spark job keeps running
-    * detached; then the first failure in submission order is
-    * rethrown, with the later ones attached as suppressed. The pool
+    * detached; then a [[StepsFailed]] is thrown with the rows of the
+    * steps that finished, caused by the first failure in submission
+    * order, with the later ones attached to it as suppressed. The pool
     * is shut down and terminated before this returns or throws. */
   private[graft] def runSteps[T](threads: Int)(
       submitAll: ((() => Seq[T]) => Unit) => Unit): Seq[T] = {
@@ -774,7 +787,7 @@ object Jobs {
       failures.result() match {
         case first +: later =>
           later.foreach(first.addSuppressed)
-          throw first
+          throw new StepsFailed(rows.result(), first)
         case _ => rows.result()
       }
     } finally {

@@ -11,6 +11,15 @@ import org.apache.spark.sql.DataFrame
   * eagerly — one extra scan of result-sized data, cheap next to the
   * released lineage — and then frees every intermediate immediately, so
   * after a catalog query runs the session's cache manager is empty.
+  *
+  * `persist()` of a plan that ends in a shuffle keeps
+  * `spark.sql.shuffle.partitions` partitions: AQE does not coalesce a
+  * cached plan's output partitioning
+  * (`spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` is off
+  * by default), so every stage that reads the cache runs that many
+  * tasks, 200 under Spark's default. A job face that caches such a
+  * plan uses [[materialize]] instead, which is planned by AQE like any
+  * other action.
   */
 object CacheScope {
 

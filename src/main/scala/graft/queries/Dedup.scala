@@ -1065,10 +1065,14 @@ object Dedup extends QueryModule {
       // propagating (r20 advice): otherwise it keeps running detached
       // and its band persist + minLabel checkpoint blocks leak until
       // GC — ready(..) waits without masking the bloom error with a
-      // possibly-later clustering one.
-      val evGrams = TextDedup
+      // possibly-later clustering one. evGrams and kept are materialized
+      // rather than persisted: both plans end in a shuffle, and a
+      // persisted plan keeps spark.sql.shuffle.partitions partitions
+      // (AQE does not coalesce a cached plan's output), so every stage
+      // that reads them would run that many tasks (CacheScope).
+      val evGrams = CacheScope.materialize(TextDedup
         .kShingles(docs.filter(col("doc_id") % 10 === 0), 6)
-        .select(xxhash64(col("shingle")).as("g")).distinct().persist()
+        .select(xxhash64(col("shingle")).as("g")).distinct())
       val bits =
         try Bloom.buildLong(evGrams, "g")
         catch {
@@ -1077,7 +1081,7 @@ object Dedup extends QueryModule {
               Await.ready(labelsF, Duration.Inf)
               labelsF.value.foreach(_.foreach(CacheScope.releaseCheckpoint))
             } catch { case _: Throwable => () }
-            evGrams.unpersist(blocking = false)
+            CacheScope.releaseCheckpoint(evGrams)
             throw t
         }
       val labels = Await.result(labelsF, Duration.Inf)
@@ -1092,16 +1096,14 @@ object Dedup extends QueryModule {
       // stages 3+4: language mix gate, then shard packing. kept's
       // lineage carries every upstream stage and feeds BOTH packShards
       // consumers (the bucket-offset broadcast subtree and the window
-      // probe — ONE job since r21's in-plan offsets) — persist lazily
-      // so the broadcast build fills the cache and the probe side
-      // replays none of the dedup/decontamination work.
-      val kept = docs
+      // probe) — materialized once, here, so neither side replays the
+      // dedup/decontamination work and both read AQE-sized partitions.
+      val kept = CacheScope.materialize(docs
         .filter(col("doc_id") % 10 =!= 0)
         .join(dupDrop, Seq("doc_id"), "left_anti")
         .join(contaminated, Seq("doc_id"), "left_anti")
         .filter(TextAnalysis.mixGate)
-        .withColumn("n_tokens", size(split(col("text"), " ")).cast("long"))
-        .persist()
+        .withColumn("n_tokens", size(split(col("text"), " ")).cast("long")))
       val result = graft.operators.Partitioning
         .packShards(kept, "source", "doc_id", "n_tokens", budget = 2000L)
         .select("source", "doc_id", "lang", "n_tokens", "shard")

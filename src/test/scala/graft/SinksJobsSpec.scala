@@ -537,7 +537,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     }
     val first = new IllegalStateException("step 1 failed")
     val later = new IllegalArgumentException("step 3 failed")
-    val thrown = intercept[IllegalStateException] {
+    val thrown = intercept[Jobs.StepsFailed[_]] {
       Jobs.runSteps[String](4) { submit =>
         submit(step(land(0)))
         // fails LAST in time, FIRST in submission order
@@ -547,14 +547,32 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
         submit(step(land(4)))
       }
     }
-    assert(thrown eq first, s"not the first failure in step order: $thrown")
-    assert(thrown.getSuppressed.toSeq == Seq(later))
+    assert(thrown.getCause eq first,
+      s"not the first failure in step order: ${thrown.getCause}")
+    assert(thrown.getCause.getSuppressed.toSeq == Seq(later))
     assert(finished.get == 5, s"rethrown before every step finished: " +
       s"${finished.get} of 5")
     for (i <- Seq(0, 2, 4))
       assert(new java.io.File(s"$dir/t1/daily/k$i/k$i.gz").isDirectory,
         s"step $i did not land beside the failures")
+    assert(thrown.landed == Seq("k0", "k2", "k4"),
+      s"the landed steps' rows were not carried: ${thrown.landed}")
     assert(liveStepThreads().isEmpty, "a pool thread outlived the failure")
+
+    // through Jobs.run: an input directory holding only `customer`
+    // lands ref_advisor_notes, while ref_instructor_advisor throws on
+    // its missing `lineitem`
+    val partial = Files.createTempDirectory("run_steps_partial_sf")
+    Files.createSymbolicLink(partial.resolve("customer.parquet"),
+      java.nio.file.Paths.get(s"$sf/customer.parquet"))
+    val jobFailed = intercept[Jobs.StepsFailed[_]] {
+      Jobs.run("upload_advisors", spark, partial.toString,
+        Seq(s"$dir/t2"), "2024-01-01")
+    }
+    assert(jobFailed.landed == Seq(
+      ("advisor-note-permissions", s"$dir/t2", true)))
+    assert(jobFailed.getCause.getMessage.contains("lineitem"),
+      s"not the missing-table failure: ${jobFailed.getCause}")
   }
 
   test("partitionedParquet dynamic overwrite replaces only incoming " +
