@@ -1097,6 +1097,12 @@ object Bench {
     cells
   }
 
+  /** The data-path kernel cell names, in execution order. */
+  private val DatapathCells: Seq[String] = Seq("gopher_stats",
+    "bpe_count", "minhash_sig", "simhash", "min_window_md5", "lsh_banding",
+    "span_scrub", "bm25_probe", "ivf_probe", "png_decode",
+    "jpeg_decode", "wav_decode", "fvec_dot", "mg_summary")
+
   /** DATA-PATH meter (r17 verdict #2): at sf0.1 the whole catalog is
     * compile-bound — the median warm probe across all 201 faces is
     * ~0.02 s against a 0.91 s median rep, so the 2× gate guards
@@ -1127,14 +1133,6 @@ object Bench {
     * the three real codec walks (PNG inflate+unfilter, JPEG
     * Huffman+IDCT, WAV PCM16), the brute fvec_dot sweep, and the
     * Misra-Gries sketch pass over events. */
-  /** The data-path kernel cell names, in execution order — public so
-    * [[DatapathProbe]] can validate a caller's cell selection before
-    * a silent filter turns a typo into "no measurement". */
-  val DatapathCells: Seq[String] = Seq("gopher_stats", "bpe_count",
-    "minhash_sig", "simhash", "min_window_md5", "lsh_banding",
-    "span_scrub", "bm25_probe", "ivf_probe", "png_decode",
-    "jpeg_decode", "wav_decode", "fvec_dot", "mg_summary")
-
   def datapathBench(spark: SparkSession, sfDir: String, reps: Int = 3,
                     only: Set[String] = Set.empty): Map[String, Double] = {
     import org.apache.spark.sql.functions._
@@ -1223,8 +1221,10 @@ object Bench {
             docs8.select(col("doc_id"),
               expr("min_window_md5(text, 8)").as("fp"))
           case "lsh_banding" =>
-            graft.operators.TextDedup.lshCandidates(
-              docs8.select("doc_id", "text"), numPerms = 8, nBands = 2)
+            // the band table this persists is released by runOnce's
+            // clearCache before the next rep, and by the finally below
+            graft.operators.TextDedup.lshCandidatesLazy(
+              docs8.select("doc_id", "text"), numPerms = 8, nBands = 2)._1
           case "span_scrub" =>
             graft.operators.TextDedup.scrubRepeatedSpans(
               docs8.select("doc_id", "text"), 20)
@@ -1282,6 +1282,7 @@ object Bench {
         System.err.println(f"[bench] datapath $k median: $v%.3f s") }
       cells
     } finally {
+      spark.catalog.clearCache()
       for (t <- Seq(s"${bm25T}_postings", s"${bm25T}_vocab",
           s"${bm25T}_doclen", s"${bm25T}_scalars", s"${bm25T}_deltas",
           s"${bm25T}__append_pending", s"${bm25T}__fold_pending",

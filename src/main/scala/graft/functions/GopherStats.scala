@@ -169,8 +169,8 @@ object GopherOps {
               // (≥100k chars — base64 blobs, minified JS are real in
               // crawl data) must NOT bleed into the count units and
               // corrupt "tie on count → longer gram" into "higher
-              // count". Same clamp in all four kernels (grouped, HOF
-              // fold, this, and the DuckDB replay).
+              // count". Same clamp in the grouped kernel, this one
+              // and the DuckDB replay.
               val code = cnt * 100000L + math.min(cl, 99999L)
               if (code > top) top = code
             } else if (cnt > 1L) {

@@ -133,9 +133,8 @@ case class MisraGriesAgg(
   override def prettyName: String = "mg_summary"
 }
 
-/** The pure Misra-Gries kernel, shared by the batch aggregate above
-  * and the streaming face (`streaming.Streams.streamingHeavyHitters`)
-  * so both enforce the identical N/(k+1) contract. */
+/** The pure Misra-Gries kernel behind the aggregate above: the
+  * N/(k+1) contract lives here. */
 object MisraGries {
 
   /** One observation of `key` into a summary of width `k`. */

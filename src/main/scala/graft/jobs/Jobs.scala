@@ -471,11 +471,13 @@ object Jobs {
         lit("UC_GRAFT").as("institution"))
       .distinct()
       // the reference orders by (section_id, sis_id) only
-      // (jobs.py/queries.py enrollment ORDER BY); waitlist_position is
-      // an intentional determinism extension — ties on the first two
-      // keys would otherwise leave the CSV row order engine-chosen.
-      // Drop it if byte-parity with a reference-ordered golden file is
-      // ever required.
+      // (jobs.py/queries.py enrollment ORDER BY); waitlist_position
+      // narrows the ties but does NOT settle them: section_id and
+      // waitlist_position are (l_orderkey, l_linenumber), which is not
+      // unique in the fixtures (11,785 such pairs occur more than once
+      // at sf0.01), so distinct rows tied on all three keys still land
+      // in an engine-chosen CSV order. CHANGES.md records the finding;
+      // the job benchmark's manifests pin today's order.
       .orderBy("section_id", "sis_id", "waitlist_position")
   }
 

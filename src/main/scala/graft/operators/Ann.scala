@@ -380,7 +380,7 @@ object Ann {
     * runs its own recoverSwap + overlap-compact on a superset of the
     * rows it appends) doesn't pay the identical tombstone scan and
     * semi-join a second time inside [[appendIvfIndex]] per daily
-    * batch / micro-batch (r19 review). */
+    * batch (r19 review). */
   private def appendAssigned(batch: DataFrame,
                              cents: Array[(Long, Array[Float])],
                              table: String, nBuckets: Int,
@@ -402,9 +402,8 @@ object Ann {
   }
 
   /** The maintenance-caller face of [[appendIvfIndex]] — what the
-    * `maintain_indexes` job and the streaming ingest run per daily
-    * batch / micro-batch. Three hazards of composing the re-run
-    * idempotence guard by hand die here:
+    * `maintain_indexes` job runs per daily batch. Three hazards of
+    * composing the re-run idempotence guard by hand die here:
     *
     *  - ORDER: the tombstone-overlap check must run BEFORE the
     *    already-indexed filter. A tombstoned id's PHYSICAL row is

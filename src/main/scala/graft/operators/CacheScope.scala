@@ -29,7 +29,7 @@ object CacheScope {
     * `LogicalRDD` leaves — unpersist those RDDs or the blocks linger
     * until GC-driven cleanup. COLLECTS the leaves rather than matching
     * only a bare root: callers routinely hand back a checkpoint
-    * wrapped in a projection (`lshCandidates(...).select(...)`), and
+    * wrapped in a projection (`materialize(df).select(...)`), and
     * the old root-only match silently no-op'd on exactly those,
     * leaking the candidate-pair blocks the call existed to free.
     * No-op for plans with no checkpoint leaf. */

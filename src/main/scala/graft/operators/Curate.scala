@@ -30,6 +30,22 @@ object GopherRules {
   val MinWlenMilli = 3000L
   val MaxWlenMilli = 10000L
 
+  /** The ONE spelling of the Gopher keep gate — word-count bounds,
+    * mean-word-length bounds, and the per-n top/dup permille
+    * thresholds — parameterized over how each kernel references its
+    * metric columns. [[metrics]] and [[withMetricsNative]], whose
+    * bit-equality CurationSpec pins, both build their `keep` from it,
+    * so a threshold change cannot reach one and miss the other. */
+  private def keepGate(nWords: Column, meanWlen: Column,
+                       topPm: Int => Column,
+                       dupPm: Int => Column): Column =
+    (Seq(nWords >= MinWords, nWords <= MaxWords,
+      meanWlen >= MinWlenMilli, meanWlen <= MaxWlenMilli) ++
+      TopThresholdPm.toSeq.sortBy(_._1).map { case (n, t) =>
+        topPm(n) <= t } ++
+      DupThresholdPm.toSeq.sortBy(_._1).map { case (n, t) =>
+        dupPm(n) <= t }).reduce(_ && _)
+
   /** Per-document Gopher repetition + length metrics, all exact
     * integers so any SQL engine replays them bit-for-bit:
     *
@@ -46,9 +62,8 @@ object GopherRules {
     *    units: ordering stays count-first always; only the tie-break
     *    saturates at 99 999 chars (grams past the cap tie, and the
     *    reported top_pm charge caps there too — such a doc fails the
-    *    gate on other rules regardless). All four kernels (this
-    *    grouped form, the HOF fold, the native expression, the
-    *    DuckDB replay) clamp identically;
+    *    gate on other rules regardless). This grouped form, the
+    *    native expression and the DuckDB replay clamp identically;
     *  - `dup{5..10}_pm`: EXCESS occurrence mass Σ (count−1)·charlen
     *    over grams with count > 1, permille of non-space chars —
     *    the "fraction of characters in duplicated n-grams" rule
@@ -62,24 +77,6 @@ object GopherRules {
     * combine before the exchange — then two bounded reductions back
     * to |docs| rows. Nothing is pairwise; nothing is collected.
     * Expects (doc_id, text); returns one row per doc, unordered. */
-  /** The ONE spelling of the Gopher keep gate — word-count bounds,
-    * mean-word-length bounds, and the per-n top/dup permille
-    * thresholds — parameterized over how each kernel references its
-    * metric columns. The three kernels ([[metrics]],
-    * [[withMetricsNarrow]], [[withMetricsNative]]) whose bit-equality
-    * CurationSpec pins previously each spelled this conjunction
-    * themselves; a threshold change missed in one would have
-    * de-synchronized them silently (r20 review). */
-  private def keepGate(nWords: Column, meanWlen: Column,
-                       topPm: Int => Column,
-                       dupPm: Int => Column): Column =
-    (Seq(nWords >= MinWords, nWords <= MaxWords,
-      meanWlen >= MinWlenMilli, meanWlen <= MaxWlenMilli) ++
-      TopThresholdPm.toSeq.sortBy(_._1).map { case (n, t) =>
-        topPm(n) <= t } ++
-      DupThresholdPm.toSeq.sortBy(_._1).map { case (n, t) =>
-        dupPm(n) <= t }).reduce(_ && _)
-
   def metrics(docs: DataFrame): DataFrame = {
     val base = docs.select(
       col("doc_id"),
@@ -136,125 +133,29 @@ object GopherRules {
         when(keepCond, 1L).otherwise(0L))
   }
 
-  /** ZERO-SHUFFLE twin of [[metrics]] — identical output, no gram
-    * exchange: every per-(doc, n) statistic only needs run lengths of
-    * EQUAL grams within one document, so the whole rule set computes
-    * in-row with higher-order array functions (sort the doc's n-gram
-    * array, mark run boundaries, zip each boundary with the next to
-    * get (count, charlen) runs, then max/fold the runs). CPU is
-    * O(Σₙ Gₙ log Gₙ) per doc versus the grouped twin's shuffled
-    * (doc, n, gram) stream — at 100 TB this is the shape to run (the
-    * catalog face does; [[metrics]] stays as the map-side-combinable
-    * differential reference, equality pinned in CurationSpec), and
-    * it is stateless per row, so the SAME kernel is the streaming
-    * admission gate (`Streams.streamingGopherGate`).
-    *
-    * Measured (sf0.1, local[32], FULL materialization — count()
-    * prunes these projections, see BENCH_NOTES): grouped ≈ 6.6 s,
-    * this fold ≈ 5.1 s — it wins the shuffle back but pays
-    * interpreted lambda dispatch and a 4-field struct allocation per
-    * gram. The production rung is [[metricsNative]] (fused JVM
-    * kernel, ≈ 0.5 s, zero per-gram allocation); this fold stays as
-    * the pure-built-in differential reference between the grouped
-    * and native forms. */
-  def metricsNarrow(docs: DataFrame): DataFrame =
-    withMetricsNarrow(docs).select(
-      Seq(col("doc_id"), col("n_words"), col("mean_wlen_milli")) ++
-        (2 to 4).map(n => col(s"top${n}_pm")) ++
-        (5 to 10).map(n => col(s"dup${n}_pm")) :+ col("keep"): _*)
-
-  /** [[metricsNarrow]] as a column-appending transform: every input
-    * column passes through (the admission-gate shape —
-    * `Streams.streamingGopherGate` filters on `keep` and drops the
-    * diagnostics), with the metric columns added. Pure per-row
-    * expressions: legal on a streaming DataFrame, no state store.
-    *
-    * Implementation note: all per-n work happens inside ONE
-    * `aggregate` fold per n (sort the gram array, then a linear
-    * run-length fold carrying (prev, run, top, dup) — the finish
-    * lambda closes the last run), so each n costs exactly one sort +
-    * one pass however the optimizer rewrites the projection. An
-    * earlier staged form (separate boundary/run-array columns) was
-    * correct but let projection collapse inline the intermediate
-    * arrays into each lambda ELEMENT reference, turning the
-    * per-row cost super-linear — hence the single-binding fold. */
-  def withMetricsNarrow(docs: DataFrame,
-                        textCol: String = "text"): DataFrame = {
-    // NULL text ≡ empty text (keep = 0 via the word-count gate) — the
-    // grouped reference's behavior, pinned across all three kernels
-    val txt = coalesce(col(textCol), lit(""))
-    var df = docs
-      .withColumn("__t", split(txt, " "))
-      .withColumn("__nc",
-        length(regexp_replace(txt, " ", "")).cast("long"))
-      .withColumn("__nw",
-        size(filter(split(txt, " "), x => x =!= ""))
-          .cast("long"))
-
-    for (n <- 2 to 10) {
-      // charlen of the run being CLOSED (its gram is s.prev)
-      val cl = s"cast(length(s.prev) - ${n - 1} as bigint)"
-      val close =
-        s"'top', greatest(s.top, if(s.prev is null, 0L, " +
-          s"s.run * 100000L + least($cl, 99999L))), " +
-        s"'dup', s.dup + if(s.prev is not null and s.run > 1L, " +
-          s"(s.run - 1L) * $cl, 0L)"
-      df = df.withColumn(s"__m$n", expr(
-        s"aggregate(" +
-          s"if(size(__t) < $n, cast(array() as array<string>), " +
-          s"array_sort(transform(sequence(1, size(__t) - ${n - 1}), " +
-          s"i -> concat_ws(' ', slice(__t, i, $n))))), " +
-          s"named_struct('prev', cast(null as string), 'run', 0L, " +
-          s"'top', 0L, 'dup', 0L), " +
-          s"(s, g) -> if(s.prev is not null and g = s.prev, " +
-          s"named_struct('prev', g, 'run', s.run + 1L, " +
-          s"'top', s.top, 'dup', s.dup), " +
-          s"named_struct('prev', g, 'run', 1L, $close)), " +
-          s"s -> named_struct($close))"))
-    }
-
-    def topPm(n: Int): Column =
-      expr(s"((__m$n.top div 100000) * (__m$n.top % 100000) * 1000)" +
-        s" div greatest(__nc, 1L)")
-    def dupPm(n: Int): Column =
-      expr(s"(__m$n.dup * 1000) div greatest(__nc, 1L)")
-    val nWords = col("__nw")
-    val meanWlen = expr("(__nc * 1000) div greatest(__nw, 1L)")
-
-    val keepCond = keepGate(nWords, meanWlen, topPm, dupPm)
-
-    // ONE projection for every derived column, so each __m struct is
-    // an attribute of the child projection, never re-inlined per use
-    df.select(docs.columns.map(col) ++
-      Seq(nWords.as("n_words"), meanWlen.as("mean_wlen_milli")) ++
-      (2 to 4).map(n => topPm(n).as(s"top${n}_pm")) ++
-      (5 to 10).map(n => dupPm(n).as(s"dup${n}_pm")) :+
-      when(keepCond, 1L).otherwise(0L).as("keep"): _*)
-  }
-
-  /** The NATIVE rung of the kernel ladder — identical output to
-    * [[metrics]]/[[metricsNarrow]], computed by the fused
-    * [[graft.functions.GopherStats]] expression (`gopher_stats`):
-    * split once, per-n index sort + run-length walk in plain JVM
-    * code, no per-gram allocation, no lambda dispatch, no shuffle.
-    * Measured at sf0.1 full evaluation (warm): grouped ≈ 6.6 s,
-    * in-row HOF fold ≈ 5.1 s, native ≈ 0.5 s — the §2.9 preference
-    * order (native Expression > built-in composition > anything
-    * else) demonstrated on one kernel, 3-way equality pinned in
-    * CurationSpec. This is what the catalog face, the streaming
-    * gate, and the composed ingest pipeline run. */
+  /** The production kernel — identical output to [[metrics]],
+    * computed by the fused [[graft.functions.GopherStats]] expression
+    * (`gopher_stats`): split once, per-n index sort + run-length walk
+    * in plain JVM code, no per-gram allocation, no lambda dispatch,
+    * no shuffle. Measured at sf0.1 full evaluation (warm): grouped
+    * ≈ 6.6 s, native ≈ 0.5 s — the §2.9 preference order (native
+    * Expression > built-in composition) on one kernel; CurationSpec
+    * pins its equality with [[metrics]]. The catalog face, the
+    * streaming gate and the composed ingest pipeline run it. */
   def metricsNative(docs: DataFrame): DataFrame =
     withMetricsNative(docs).select(
       Seq(col("doc_id"), col("n_words"), col("mean_wlen_milli")) ++
         (2 to 4).map(n => col(s"top${n}_pm")) ++
         (5 to 10).map(n => col(s"dup${n}_pm")) :+ col("keep"): _*)
 
-  /** [[metricsNative]] as a column-appending transform (the
-    * admission-gate shape, like [[withMetricsNarrow]]). */
+  /** [[metricsNative]] as a column-appending transform: every input
+    * column passes through, with the metric columns and `keep`
+    * added (the admission-gate shape — `Streams.streamingGopherGate`
+    * filters on `keep` and drops the diagnostics). NULL text counts as empty text (keep = 0 via the
+    * word-count gate), as in [[metrics]]. */
   def withMetricsNative(docs: DataFrame,
                         textCol: String = "text"): DataFrame = {
     graft.GraftExtensions.ensure(docs.sparkSession)
-    // NULL ≡ empty, as in withMetricsNarrow
     val df = docs.withColumn("__g",
       expr(s"gopher_stats(coalesce(`$textCol`, ''))"))
 

@@ -672,8 +672,8 @@ object Lexical {
     // a compaction crash inside the scalars replaceTable leaves the
     // table unbound until SOME path probes it — every other table
     // this function touches is recoverSwap'd above, and without this
-    // probe the gate read below would crash-loop a streaming ingest
-    // on every fresh micro-batch until a reader happened to run
+    // probe the gate read below would fail every later append until
+    // a reader happened to run
     Partitioning.recoverSwap(spark, s"${name}_scalars")
     val baseN = spark.table(s"${name}_scalars")
       .select("n_docs").collect()(0).getLong(0)

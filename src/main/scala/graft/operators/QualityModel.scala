@@ -90,23 +90,10 @@ object QualityModel {
         expr("(total_bits * 1000) div n_tokens"))
   }
 
-  /** The frozen reference artifact of `ta_quality_drift`, per source:
-    * the even-slice size, its decile boundaries ((decile ≤ 9,
-    * b_score, b_doc) — only deciles the slice actually populates),
-    * and its decile shares in floor permille (index k−1 holds decile
-    * k, 0 for empty deciles). Small by construction — ≤ 10 rows per
-    * source — this is what a deployment persists after a reference
-    * pass and broadcasts to the live monitor. */
-  final case class DriftRef(nOld: Long, bounds: Seq[(Int, Long, Long)],
-                            oldPermille: IndexedSeq[Long])
-
   /** The reference-slice decile-boundary election — (source, decile,
-    * n_old_k, b_score, b_doc) rows — shared by the batch face
-    * `ta_quality_drift` and [[driftRef]]'s streaming artifact. ONE
-    * definition: the two used to be line-for-line copies, and a
-    * tie-break or ntile-order change applied to one would silently
-    * break the batch/stream replay contract StreamsSpec pins. `old`
-    * is the reference slice with (source, doc_id, score) columns.
+    * n_old_k, b_score, b_doc) rows — of the `ta_quality_drift` face.
+    * `old` is the reference slice with (source, doc_id, score)
+    * columns.
     *
     * Semantics (unchanged, spec- and oracle-pinned): ntile(10) over
     * the injective (score, doc_id) order per source; per populated
@@ -180,34 +167,5 @@ object QualityModel {
       .filter(col("__rn") === col("__j"))
       .select(col("source"), col("decile"), col("n_old_k"),
         col("__bs").as("b_score"), col("doc_id").as("b_doc"))
-  }
-
-  /** Build [[DriftRef]]s from a corpus — the EXACT boundary election
-    * of the `ta_quality_drift` catalog face (md5-parity-0 doc ids are
-    * the reference slice; the [[decileBoundaries]] election),
-    * collected driver-side at the ≤ 10·|sources| grain so
-    * `Streams.streamingQualityDrift` can replay the batch face
-    * row-for-row (StreamsSpec pins it). */
-  def driftRef(docs: DataFrame): Map[String, DriftRef] = {
-    val sc = docs
-      .select(col("source"), col("doc_id"),
-        coalesce(logitOf(col("text")), lit(0L)).as("score"))
-      .filter(expr(
-        "ascii(substring(md5(cast(doc_id as string)), 1, 1)) % 2") === 0)
-    val ob2 = decileBoundaries(sc)
-      .select("source", "decile", "n_old_k", "b_score", "b_doc")
-    ob2.collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-      .groupBy(_._1)
-      .map { case (src, rows) =>
-        val nOld = rows.map(_._3).sum
-        val shares = Array.fill(10)(0L)
-        rows.foreach { case (_, d, nk, _, _) =>
-          shares(d - 1) = nk * 1000 / math.max(nOld, 1L) }
-        val bounds = rows.filter(_._2 <= 9).sortBy(_._2)
-          .map { case (_, d, _, bs, bd) => (d, bs, bd) }.toSeq
-        src -> DriftRef(nOld, bounds, shares.toIndexedSeq)
-      }
   }
 }

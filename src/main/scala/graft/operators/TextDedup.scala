@@ -172,9 +172,9 @@ object TextDedup {
   /** Candidate pairs from band-bucket collisions (a < b), with the
     * number of colliding bands. `bandDf` feeds BOTH sides of the
     * self-join — pass it persisted or checkpointed (as
-    * [[lshCandidates]] does) or its whole upstream lineage is computed
-    * once per side. No caching happens here, so callers own the blocks'
-    * lifetime. */
+    * [[lshCandidatesLazy]] does) or its whole upstream lineage is
+    * computed once per side. No caching happens here, so callers own
+    * the blocks' lifetime. */
   def candidates(bandDf: DataFrame,
                  idCol: String = "doc_id"): DataFrame = {
     val l = bandDf.select(col(idCol).as("doc_a"), col("band"),
@@ -189,41 +189,21 @@ object TextDedup {
       .agg(count(lit(1)).as("shared_bands"))
   }
 
-  /** End-to-end LSH candidates from raw documents. The band table is
-    * persisted LAZILY for the self-join: the single job that
-    * materializes the candidate pairs populates the cache on its first
-    * band scan and reads it on the second, so signatures compute once
-    * without a separate eager-checkpoint job (r6's eager variant cost
-    * an extra full pass — the dd_minhash_lsh bench regression). Lazy
-    * persist also keeps the lineage recomputable on executor loss,
-    * which a localCheckpoint would not. The blocks are released as
-    * soon as the candidate pairs — Σ bucket² bounded — are
-    * themselves materialized. */
-  def lshCandidates(docs: DataFrame, numPerms: Int, nBands: Int,
-                    idCol: String = "doc_id",
-                    textCol: String = "text"): DataFrame = {
-    val (cand, bd) = lshCandidatesLazy(docs, numPerms, nBands, idCol,
-      textCol)
-    CacheScope.eval(cand)(bd)
-  }
-
-  /** Lazy twin of [[lshCandidates]]: the same candidate plan over the
-    * same internally-persisted band table, but WITHOUT the eager
-    * checkpoint — returned alongside the band handle whose release the
-    * CALLER now owns (pass it to `CacheScope.eval(result)(bd)` with
-    * the caller's own intermediates). Use when the candidates feed
-    * exactly ONE lazy consumer: there the checkpoint's extra job
-    * barrier plus block write+read buys nothing — the face's single
-    * final job fills the band cache on its first scan and reads it on
-    * the second, exactly as the eager form's one materializing job
-    * did — and when the caller re-persists the pairs itself (the
-    * recall-certification faces), where checkpoint-then-cache stored
-    * the same small table twice. Callers that COLLECT the pairs
-    * mid-call (the connected-components faces) keep [[lshCandidates]]:
-    * minLabel's own edge materialization wants a truncated plan under
-    * it, not this whole subtree. (r20; measured on
-    * dd_minhash_lsh/dd_fuzzy_verify/dd_method_agreement/
-    * dd_lsh_recall*.) */
+  /** End-to-end LSH candidates from raw documents: the candidate
+    * plan over a band table persisted LAZILY for the self-join,
+    * returned alongside the band handle whose release the CALLER
+    * owns (pass it to `CacheScope.eval(result)(bd)` with the caller's
+    * own intermediates, or unpersist it once the pairs are
+    * materialized). The single job that materializes the pairs fills
+    * the band cache on its first scan and reads it on the second, so
+    * signatures compute once without a separate checkpoint job or a
+    * job barrier; lazy persist also keeps the lineage recomputable on
+    * executor loss, which a localCheckpoint would not. Every face
+    * consumes it this way: the connected-components faces through
+    * `Dedup.lshLabels` (minLabel's own edge materialization is the
+    * one checkpoint), the recall-certification faces by persisting
+    * the pairs themselves. (r20; measured on dd_minhash_lsh/
+    * dd_fuzzy_verify/dd_method_agreement/dd_lsh_recall*.) */
   def lshCandidatesLazy(docs: DataFrame, numPerms: Int, nBands: Int,
                         idCol: String = "doc_id",
                         textCol: String = "text")

@@ -21,17 +21,6 @@ object Curation extends QueryModule {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
 
-  /** GOPHER QUALITY RULES (Rae et al. 2021, A1) — the published
-    * repetition/length gate every large crawl corpus runs: top
-    * 2/3/4-gram character share, duplicated 5..10-gram excess mass,
-    * word count and mean word length, all exact permille/milli
-    * integers, plus the composed keep verdict. The face runs the
-    * NATIVE zero-shuffle kernel
-    * ([[graft.operators.GopherRules.metricsNative]] — the fused
-    * `gopher_stats` run-length expression, no gram exchange at all);
-    * the HOF-fold (`metricsNarrow`) and grouped (`metrics`) twins are
-    * the differential references, equality pinned in CurationSpec. Rule
-    * statement lives on [[graft.operators.GopherRules.metrics]]. */
   /** The Gopher rule replay as a parameterized CTE chain over any
     * `(doc_id, <textExpr>)` relation, ending in
     * `gfin (doc_id, n_words, mean_wlen_milli, top*_pm, dup*_pm,
@@ -123,6 +112,17 @@ object Curation extends QueryModule {
           FROM gbase b LEFT JOIN gpiv p USING (doc_id)))"""
   }
 
+  /** GOPHER QUALITY RULES (Rae et al. 2021, A1) — the published
+    * repetition/length gate every large crawl corpus runs: top
+    * 2/3/4-gram character share, duplicated 5..10-gram excess mass,
+    * word count and mean word length, all exact permille/milli
+    * integers, plus the composed keep verdict. The face runs the
+    * NATIVE zero-shuffle kernel
+    * ([[graft.operators.GopherRules.metricsNative]] — the fused
+    * `gopher_stats` run-length expression, no gram exchange at all);
+    * the grouped twin ([[graft.operators.GopherRules.metrics]]) is the
+    * differential reference, equality pinned in CurationSpec, and
+    * holds the rule statement. */
   val gopherRules: Q = Q(
     "ta_gopher_rules",
     (s, dir) => GopherRules.metricsNative(docs(s, dir)).orderBy("doc_id"),
@@ -422,8 +422,8 @@ object Curation extends QueryModule {
         expr("ascii(substring(md5(cast(doc_id as string)), 1, 1)) % 2")
           .as("half")).persist()
       val old = sc.filter(col("half") === 0)
-      // the SHARED election (QualityModel.decileBoundaries) — the
-      // streaming artifact replays these exact rows
+      // the election lives in QualityModel.decileBoundaries, where
+      // PropertySpec pins it against the ntile spelling
       val ob2 = QualityModel.decileBoundaries(
         old.select("source", "doc_id", "score"))
       val nb = sc.filter(col("half") === 1)

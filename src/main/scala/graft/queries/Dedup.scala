@@ -28,10 +28,9 @@ object Dedup extends QueryModule {
   /** Near-dup cluster labels over the banded candidate graph — the
     * shared stage-1 of every connected-components dedup face. Hands
     * the LAZY candidate plan to minLabel, whose own edge
-    * materialization then pays the ONE checkpoint the eager
-    * lshCandidates form duplicated (its pair checkpoint and
-    * minLabel's edge checkpoint were the same small table twice, one
-    * job barrier apart — r20); the band cache fills inside that same
+    * materialization then pays the ONE checkpoint (a pair checkpoint
+    * in front of it would store the same small table twice, one job
+    * barrier apart — r20); the band cache fills inside that same
     * materializing job and is released as soon as minLabel returns
     * (its edges are materialized eagerly, so nothing reads the band
     * blocks afterwards). */

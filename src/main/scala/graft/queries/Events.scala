@@ -463,9 +463,7 @@ object Events extends QueryModule {
     * upsert is one reduction + one co-partitioned join — the standard
     * MERGE INTO plan without a table format. The snapshot is
     * restricted to keys < 100 so the insert, delete, and no-op
-    * branches are all genuinely exercised (event users run 0..149).
-    * Stream face: [[graft.streaming.Streams.streamingUpsert]] with
-    * `deleteTypes` carries the same tombstone semantics. */
+    * branches are all genuinely exercised (event users run 0..149). */
   val cdcMerge: Q = Q(
     "ev_cdc_merge",
     (s, dir) => {

@@ -1268,9 +1268,9 @@ object Similarity extends QueryModule {
       FROM rk WHERE rnk <= 10 ORDER BY q_id, rnk""")
   )
 
-  /** The ss_rrf_fusion lineage, factored so the face and the PlanDump
-    * evidence tool build the identical plan: returns (result, the
-    * persisted postings handle the caller releases). */
+  /** The ss_rrf_fusion lineage, factored so its plan can be built and
+    * explained without the face's eager materialization: returns
+    * (result, the persisted postings handle the caller releases). */
   private[graft] def rrfFusionLineage(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     import graft.operators.Ann

@@ -2,159 +2,31 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Structured Streaming face of the engine — SURVEY.md §2.10.
   *
   * The reference's incremental job is a cron-driven micro-batch with a
-  * 5-day watermark column filter (jonesy/jobs.py:19,39-49). Structured
-  * Streaming generalizes exactly that: the SAME transform runs over a
-  * batch DataFrame or a `readStream` source; the watermark bounds state
-  * instead of re-extraction, and late rows within 5 days still land —
-  * the reference's lookback re-extraction contract, kept by the engine.
+  * 5-day watermark column filter (jonesy/jobs.py:19,39-49); the engine
+  * runs it that way, as the `upload_recent_refresh` batch job. This
+  * object keeps the stateless and built-in-state stream shapes: the
+  * SAME transform runs over a batch DataFrame or a `readStream`
+  * source, and the watermark bounds the windowed-count, dedup and
+  * join state instead of re-extraction. The admission gates are
+  * per-row maps over the batch faces' kernels, with no state store.
+  * No `graft.Main` job runs a stream; StreamsSpec drives these.
   *
   * Scale stance: windowed counts shuffle on (window, event_type) with
-  * partial aggregation map-side; sessionization state lives per user_id
-  * key in the state store, bounded by the processing-time timeout.
+  * partial aggregation map-side; dedup state is bounded by the
+  * watermark.
   */
 object Streams {
 
-  /** Event row for typed stateful ops. */
+  /** Event row shaped like the `events` table. */
   final case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                          event_type: String, value: Double)
-
-  /** A user session assembled by the stateful operator. */
-  final case class Session(user_id: Long, n_events: Long,
-                           first_ts: Timestamp, last_ts: Timestamp)
-
-  /** Running state per user (public: Spark codegen instantiates it).
-    * `first`/`last` are MICROSECONDS ([[usOf]]) — the batch faces'
-    * gap arithmetic. */
-  final case class SessionState(n: Long, first: Long, last: Long)
-
-  // ------------------------------------------------------------------
-  // Versioned state envelope (r18 verdict #4)
-  // ------------------------------------------------------------------
-
-  /** The ONE schema every stateful twin persists to its state store:
-    * a version stamp plus an opaque string payload. Spark's state
-    * schema check refuses to restore a checkpoint whose state encoder
-    * schema changed — the r16 ScdRunState 3→5-field widening turned
-    * every existing checkpoint into a drain-and-restart outage
-    * (BENCH_NOTES r18 §1 documents the procedure). With the envelope,
-    * the STORE schema is permanently `(ver INT, payload STRING)`:
-    * evolving a twin's state is now a payload-codec change — bump the
-    * codec's `ver`, keep `read` accepting the old versions — and a
-    * restart from an old checkpoint MIGRATES each key's state on
-    * first touch instead of refusing to start. The convention, for
-    * every future twin:
-    *   1. state type in `*GroupsWithState[VersionedState, Out]`;
-    *   2. a [[StateCodec]] with explicit per-field string packing
-    *      ([[StatePack]] — URL-encoded strings so user data can never
-    *      collide with the separators, timestamps as millis:nanos so
-    *      µs precision survives, doubles as raw long bits);
-    *   3. evolution = `ver += 1`, `write` emits the new shape, `read`
-    *      keeps a case for every shipped version (the per-version
-    *      defaults ARE the migration);
-    *   4. pin the old-version payload literal in StreamsSpec so the
-    *      migration path can never silently rot.
-    * Adopting the envelope is itself the LAST schema break: deployed
-    * queries upgrading across it drain once, exactly as BENCH_NOTES
-    * r18 §1 prescribes. */
-  final case class VersionedState(ver: Int, payload: String)
-
-  /** Per-state-class payload codec: `write` always emits the CURRENT
-    * version's shape; `read` must accept every version ever shipped
-    * (old-version branches fill the fields that did not exist yet —
-    * that is the whole migration). */
-  private[graft] trait StateCodec[S] {
-    def ver: Int
-    def write(s: S): String
-    def read(ver: Int, payload: String): S
-  }
-
-  /** Field-packing primitives shared by every codec. Payload grammar:
-    * top-level fields joined by '|'; list/map entries joined by ';'
-    * with ',' inside an entry. String fields are URL-encoded (which
-    * escapes '|', ';', ',', '~' and '%'), so user-supplied values can
-    * never collide with the separators; null strings are the bare
-    * marker '~' (unencodable: a literal "~" value encodes to "%7E"). */
-  private[graft] object StatePack {
-    def pack(fields: String*): String = fields.mkString("|")
-    // limit -1: a trailing EMPTY field (empty string, empty list)
-    // must survive the split — the default limit silently drops it
-    // and shifts every read of a payload whose last field is empty
-    def unpack(p: String): Array[String] = p.split("\\|", -1)
-    def str(s: String): String =
-      if (s == null) "~" else java.net.URLEncoder.encode(s, "UTF-8")
-    def strOf(f: String): String =
-      if (f == "~") null else java.net.URLDecoder.decode(f, "UTF-8")
-    /** millis:nanos — `getTime` alone truncates the sub-millisecond
-      * part every replay-parity comparison depends on. */
-    def ts(t: Timestamp): String = s"${t.getTime}:${t.getNanos}"
-    def tsOf(f: String): Timestamp = {
-      val i = f.indexOf(':')
-      val t = new Timestamp(f.substring(0, i).toLong)
-      t.setNanos(f.substring(i + 1).toInt)
-      t
-    }
-    /** Raw IEEE-754 bits — `toString` round-trips doubles in Java,
-      * but bits are unambiguous for every NaN payload too. */
-    def dbl(d: Double): String =
-      java.lang.Double.doubleToRawLongBits(d).toString
-    def dblOf(f: String): Double =
-      java.lang.Double.longBitsToDouble(f.toLong)
-    def longs(xs: Iterable[Long]): String = xs.mkString(",")
-    def longsOf(f: String): Array[Long] =
-      if (f.isEmpty) Array.empty else f.split(',').map(_.toLong)
-  }
-
-  /** The one decode gate every envelope read passes through: fail
-    * FAST on a payload from a NEWER binary. Every codec's `read`
-    * falls through to the CURRENT shape for versions it doesn't
-    * recognize (that open-endedness IS the upgrade path), so after a
-    * ver bump a binary ROLLBACK restoring the same checkpoint would
-    * silently mis-parse the newer payload as its own shape — state
-    * corruption where a refused restore is the correct outcome (r19
-    * advisor). Guarded here, once, so every codec inherits it. */
-  private[graft] def decodeState[S](codec: StateCodec[S],
-                                    v: VersionedState): S = {
-    if (v.ver > codec.ver) throw new IllegalStateException(
-      s"state payload ver ${v.ver} is newer than this binary's codec " +
-        s"ver ${codec.ver} — refusing to downgrade-parse; roll the " +
-        "binary forward or drain the checkpoint (BENCH_NOTES r18 §1)")
-    codec.read(v.ver, v.payload)
-  }
-
-  /** Typed view over a `GroupState[VersionedState]` — the adapter
-    * that lets every twin's fold read/write its own state class while
-    * the store only ever sees the envelope. Mirrors exactly the
-    * GroupState surface the twins use. */
-  private final class VGroupState[S](u: GroupState[VersionedState],
-                                     codec: StateCodec[S]) {
-    def getOption: Option[S] = u.getOption.map(decodeState(codec, _))
-    def get: S = decodeState(codec, u.get)
-    def update(s: S): Unit =
-      u.update(VersionedState(codec.ver, codec.write(s)))
-    def remove(): Unit = u.remove()
-    def hasTimedOut: Boolean = u.hasTimedOut
-    def getCurrentWatermarkMs(): Long = u.getCurrentWatermarkMs()
-    def setTimeoutTimestamp(ms: Long): Unit = u.setTimeoutTimestamp(ms)
-  }
-
-  import StatePack._
-
-  private[graft] object SessionStateCodec extends StateCodec[SessionState] {
-    val ver = 1
-    def write(s: SessionState): String =
-      pack(s.n.toString, s.first.toString, s.last.toString)
-    def read(v: Int, p: String): SessionState = {
-      val f = unpack(p)
-      SessionState(f(0).toLong, f(1).toLong, f(2).toLong)
-    }
-  }
 
   /** T1/T5 — watermarked tumbling-window counts. Works identically on a
     * batch DataFrame (watermark is a no-op) and a streaming one (state
@@ -170,807 +42,6 @@ object Streams {
         sum(round(col("value") * 100).cast("long")).as("value_cents"))
       .select(col("w.start").as("hour_start"), col("event_type"),
         col("n_events"), col("value_cents"))
-
-  /** Sign-safe unix MICROS of a Timestamp, mirroring Spark's
-    * `unix_micros` — the batch faces chain gaps and order events in
-    * µs, so a millisecond truncation here would classify a
-    * µs-boundary gap differently from the oracle-matched batch plans
-    * (the r8/r11 replay-parity lesson, kept in ONE place for every
-    * stateful twin). */
-  private def usOf(t: Timestamp): Long =
-    math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** The one within-batch event ordering every stateful fold replays —
-    * (ts nanos-precise, event_id tiebreak), the batch faces' total
-    * order. A private single definition so the twins can't drift. */
-  private val byTsThenId: java.util.Comparator[Event] =
-    (a: Event, b: Event) => {
-      val c = a.ts.compareTo(b.ts)
-      if (c != 0) c else java.lang.Long.compare(a.event_id, b.event_id)
-    }
-
-  /** Exact inverse of [[usOf]] — reconstructs the Timestamp down to
-    * the microsecond (a bare `new Timestamp(ms)` would truncate the
-    * sub-millisecond part the fixtures carry). */
-  private def tsOfUs(us: Long): Timestamp = {
-    val t = new Timestamp(math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  /** Custom state — sessionization with `flatMapGroupsWithState`
-    * (SURVEY.md §2.12 / builder mandate: KeyValueGroupedDataset state
-    * ops). EVENT-time semantics, matching the reference's 5-day
-    * lookback contract: a session closes when the WATERMARK passes its
-    * last event + gap — wall-clock stalls don't close sessions, and a
-    * late out-of-order event landing inside the open session's gap
-    * chain still merges into it. Within a micro-batch the group is
-    * processed in (ts, event_id) order and SPLIT at every quiet gap —
-    * the `ev_session_window` gaps-and-islands rule — so two events an
-    * afternoon apart are two sessions even when they share a batch
-    * (completed intra-batch sessions emit immediately; only the open
-    * tail is carried as state). The usual total-order caveat
-    * ([[streamingDebounce]]): a cross-batch late event inside the open
-    * session's span merges rather than retroactively re-splitting
-    * already-emitted history — but ONLY inside the session's actual
-    * reach: a late event older than `first − gap` is NOT in the gap
-    * chain (the merge test `t − last ≤ gap` is vacuous for any
-    * t ≤ last, and blindly merging would rewind `first` up to the
-    * whole lateness allowance, overlapping sessions already emitted
-    * — ADVICE r16). Such stragglers fold through their OWN
-    * gaps-and-islands chain: chains that reach within `gap` of the
-    * open session's start bridge into it (what the batch total order
-    * would have done); detached ones emit as their own (possibly
-    * single-event, zero-length) sessions. Gap arithmetic is exact µs
-    * — the batch face's — via [[usOf]]. */
-  def sessionize(events: Dataset[Event], gapMinutes: Int = 30,
-                 allowedLateness: String = "5 days")
-      : Dataset[Session] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[VersionedState, Session](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, SessionStateCodec)
-          def emit(s: SessionState) =
-            Session(userId, s.n, tsOfUs(s.first), tsOfUs(s.last))
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(emit(s))
-          } else {
-            val sorted = rows.toArray
-            java.util.Arrays.sort(sorted, byTsThenId)
-            val out = Seq.newBuilder[Session]
-            var cur = state.getOption.orNull
-            // gaps-and-islands chain of cross-batch stragglers older
-            // than the open session's reach (sorted ascending, so
-            // they form a prefix of the batch)
-            var late: SessionState = null
-            // resolve the straggler chain against the session about
-            // to be finalized: a chain reaching within gap of its
-            // start is transitively in its chain — the batch total
-            // order would have merged them — and the resolution must
-            // happen BEFORE the session is emitted or carried, never
-            // only at end-of-batch (a mid-batch split would otherwise
-            // emit the session un-bridged and strand the chain as a
-            // spurious extra session)
-            def bridged(s: SessionState): SessionState =
-              if (late == null) s
-              else {
-                val r =
-                  if (s.first - late.last <= gapUs)
-                    SessionState(s.n + late.n, late.first, s.last)
-                  else { out += emit(late); s }
-                late = null
-                r
-              }
-            sorted.foreach { e =>
-              val t = usOf(e.ts)
-              if (cur == null) cur = SessionState(1L, t, t)
-              else if (t < cur.first - gapUs) {
-                if (late == null) late = SessionState(1L, t, t)
-                else if (t - late.last <= gapUs)
-                  late = SessionState(late.n + 1, late.first, t)
-                else {
-                  out += emit(late)
-                  late = SessionState(1L, t, t)
-                }
-              } else if (t - cur.last <= gapUs)
-                // includes the cross-batch late case
-                // cur.first − gap ≤ t < cur.last: inside the open
-                // session's gap chain is inside the session
-                cur = SessionState(cur.n + 1,
-                  math.min(cur.first, t), math.max(cur.last, t))
-              else {
-                // gap exceeded: the session SPLITS — with its final
-                // extent known, bridge-or-emit any straggler chain
-                // first (its events precede this session)
-                out += emit(bridged(cur))
-                cur = SessionState(1L, t, t)
-              }
-            }
-            if (cur != null) cur = bridged(cur)
-            if (cur != null) {
-              state.update(cur)
-              // close at last-event-time + gap (µs horizon rounded UP
-              // to the timeout API's millis so it never fires a
-              // fraction early); if the watermark already passed that
-              // target, close at the earliest timestamp the API
-              // permits — watermark + 1
-              state.setTimeoutTimestamp(
-                math.max(math.floorDiv(cur.last + gapUs + 999L, 1000L),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
-  }
-
-  /** A debounced keeper: the first event of a quiet-gap burst and how
-    * many rapid-fire repeats it suppressed. */
-  final case class Debounced(user_id: Long, event_type: String,
-                             event_id: Long, ts: Timestamp,
-                             n_suppressed: Long)
-
-  /** Open burst per (user, type) (public: Spark codegen instantiates
-    * it). `last` is MICROSECONDS — the batch face chains gaps on
-    * `unix_micros`, and a millisecond truncation here would classify
-    * a µs-boundary gap differently from the oracle-matched batch
-    * plan; the keeper's original Timestamp rides along so the close
-    * emits the batch face's exact row. */
-  final case class BurstState(keeperId: Long, keeperTs: Timestamp,
-                              last: Long, suppressed: Long)
-
-  private[graft] object BurstStateCodec extends StateCodec[BurstState] {
-    val ver = 1
-    def write(s: BurstState): String =
-      pack(s.keeperId.toString, ts(s.keeperTs), s.last.toString,
-        s.suppressed.toString)
-    def read(v: Int, p: String): BurstState = {
-      val f = unpack(p)
-      BurstState(f(0).toLong, tsOf(f(1)), f(2).toLong, f(3).toLong)
-    }
-  }
-
-  /** Streaming debounce — the stream face of `ev_debounce`: one kept
-    * event per quiet-gap burst of the same (user, type), emitted with
-    * its final suppressed count once the WATERMARK passes the burst's
-    * last event + gap (the [[sessionize]] event-time-timeout idiom,
-    * carrying keeper identity instead of min/max). Within a
-    * micro-batch the group is sorted by (ts, event_id) so gap
-    * chaining matches the batch face; across batches a late event
-    * landing inside the open burst's REACH (within gap of the keeper
-    * or later) is suppressed into it, while one older than
-    * keeper − gap folds through its own straggler chain and emits as
-    * its own keeper row(s) — the gap-separated output rows the batch
-    * replay produces, which the old vacuous `t − last ≤ gap` merge
-    * silently swallowed (the sessionize ADVICE-r16 fix, debounce
-    * edition). TWO documented divergences under EXTREME lateness
-    * (both need an event arriving whole batches late, behind the
-    * open burst's keeper):
-    *  1. a cross-batch late event within the burst's reach but
-    *     preceding its keeper is counted as suppressed rather than
-    *     retroactively promoted to keeper (the batch replay, which
-    *     sees a total order, would elect it);
-    *  2. transitive bridging: the batch total order can MERGE a
-    *     straggler chain into the open burst through an in-reach
-    *     late event t ∈ [keeper − gap, keeper) that lies within gap
-    *     of the chain's last element — batch emits ONE keeper row
-    *     (the chain's first event elected keeper), while the stream
-    *     emits the chain as its own keeper row and folds t into the
-    *     burst as a suppressed count. The stream never rewinds an
-    *     emitted-or-open keeper, so it cannot reproduce the merge.
-    * Batch/stream parity on splits that respect event order, and the
-    * chosen behavior for both divergences, are pinned in StreamsSpec.
-    *
-    * State is one open burst per active (user, type) — four longs —
-    * and times out at watermark + gap: bounded by the number of keys
-    * active inside the lateness horizon, never by stream length. */
-  def streamingDebounce(events: Dataset[Event], gapMinutes: Int = 10,
-                        allowedLateness: String = "5 days")
-      : Dataset[Debounced] = {
-    import events.sparkSession.implicits._
-    val gapUs = gapMinutes * 60L * 1000000L
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[VersionedState, Debounced](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Long, String), rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, BurstStateCodec)
-          val (userId, eventType) = key
-          if (state.hasTimedOut) {
-            val b = state.get
-            state.remove()
-            Iterator(Debounced(userId, eventType, b.keeperId,
-              b.keeperTs, b.suppressed))
-          } else {
-            val sorted = rows.toArray
-            java.util.Arrays.sort(sorted, byTsThenId)
-            val out = Seq.newBuilder[Debounced]
-            var cur = state.getOption.orNull
-            // gaps-and-islands chain of cross-batch stragglers older
-            // than the open burst's reach (keeper − gap) — the
-            // sessionize straggler fix (ADVICE r16), debounce edition:
-            // `t − last ≤ gap` is vacuous for any t ≤ last, and
-            // swallowing a gap-DETACHED late event as a suppressed
-            // count loses the whole keeper row the batch face emits
-            // for it. Sorted ascending, so stragglers form a prefix.
-            // unlike sessionize, a burst's keeper timestamp never
-            // rewinds (in-reach late events fold as suppressed counts
-            // without moving it), so every chain element stays
-            // strictly older than keeper − gap and THE STREAM never
-            // merges the chain into the open burst — it flushes as
-            // its own keeper row(s). For gap-separated event sets
-            // that is exactly the batch replay's output; when an
-            // in-reach late event lands within gap of the chain's
-            // last element, the batch total order WOULD transitively
-            // merge chain and burst — divergence #2 in the scaladoc,
-            // pinned in StreamsSpec (the stream keeps the chain
-            // separate and counts the bridging event into the burst)
-            var late: BurstState = null
-            def flushLate(): Unit =
-              if (late != null) {
-                out += Debounced(userId, eventType, late.keeperId,
-                  late.keeperTs, late.suppressed)
-                late = null
-              }
-            sorted.foreach { e =>
-              val t = usOf(e.ts)
-              if (cur == null)
-                cur = BurstState(e.event_id, e.ts, t, 0L)
-              else if (t < usOf(cur.keeperTs) - gapUs) {
-                if (late == null) late = BurstState(e.event_id, e.ts, t, 0L)
-                else if (t - late.last <= gapUs)
-                  late = late.copy(last = math.max(late.last, t),
-                    suppressed = late.suppressed + 1)
-                else {
-                  out += Debounced(userId, eventType, late.keeperId,
-                    late.keeperTs, late.suppressed)
-                  late = BurstState(e.event_id, e.ts, t, 0L)
-                }
-              }
-              else if (t - cur.last <= gapUs)
-                // includes the cross-batch late case t < cur.last but
-                // INSIDE the burst's reach: in the gap chain
-                cur = cur.copy(last = math.max(cur.last, t),
-                  suppressed = cur.suppressed + 1)
-              else {
-                flushLate()
-                out += Debounced(userId, eventType, cur.keeperId,
-                  cur.keeperTs, cur.suppressed)
-                cur = BurstState(e.event_id, e.ts, t, 0L)
-              }
-            }
-            flushLate()
-            if (cur != null) {
-              state.update(cur)
-              // timeout API is millis; round the µs horizon UP so the
-              // timeout never fires a fraction early
-              state.setTimeoutTimestamp(
-                math.max(math.floorDiv(cur.last + gapUs + 999L, 1000L),
-                  state.getCurrentWatermarkMs() + 1))
-            }
-            out.result().iterator
-          }
-      }
-  }
-
-  /** Open conversion path per user: touch counts per channel since the
-    * last purchase, the most recent touch's channel (remainder rule),
-    * and the per-user event-time high-water mark. Bounded by
-    * |channels| — never by path length or stream length. */
-  final case class PathState(counts: Map[String, Long],
-                             lastChannel: String, nTouch: Long,
-                             maxUs: Long)
-
-  private[graft] object PathStateCodec extends StateCodec[PathState] {
-    val ver = 1
-    def write(s: PathState): String =
-      pack(str(s.lastChannel), s.nTouch.toString, s.maxUs.toString,
-        s.counts.toSeq.sorted.map { case (k, n) => str(k) + "," + n }
-          .mkString(";"))
-    def read(v: Int, p: String): PathState = {
-      val f = unpack(p)
-      val counts =
-        if (f(3).isEmpty) Map.empty[String, Long]
-        else f(3).split(';').map { e =>
-          val i = e.lastIndexOf(',')
-          strOf(e.substring(0, i)) -> e.substring(i + 1).toLong
-        }.toMap
-      PathState(counts, strOf(f(0)), f(1).toLong, f(2).toLong)
-    }
-  }
-
-  /** Per-purchase per-channel credit emitted by the streaming
-    * attribution twin. `n_credits` mirrors the batch face's count
-    * grain (touch rows credited, or the one direct conversion). */
-  final case class Credit(user_id: Long, channel: String,
-                          n_credits: Long, cents: Long)
-
-  /** Streaming multi-touch linear attribution — the stream face of
-    * `ev_attribution_linear`: per-user state accumulates touch counts
-    * per channel since the previous purchase; a purchase emits each
-    * channel's credit (`cents div n` per touch, division remainder to
-    * the most recent touch's channel, touchless → `direct` in full)
-    * and resets the path, so credited cents conserve the purchase
-    * EXACTLY at emission time — no retro-aggregation needed
-    * downstream. Batches are processed in (ts, event_id) order, the
-    * batch face's total order; a cross-batch late touch arriving
-    * after its path's purchase already settled credits the NEXT
-    * purchase instead (the same total-order caveat
-    * [[streamingDebounce]] documents — credits still conserve, they
-    * shift one path late). Parity on order-respecting splits is
-    * pinned in StreamsSpec against the batch face.
-    *
-    * State per user is one map bounded by |channels| plus two scalars,
-    * and expires `pathTimeoutDays` past the user's last event (an
-    * explicit attribution window — the marketing-standard bound the
-    * batch face's unbounded paths don't need): abandoned paths free
-    * their state, and a purchase after expiry credits `direct`,
-    * exactly like a fresh user. */
-  def streamingAttributionLinear(events: Dataset[Event],
-                                 allowedLateness: String = "5 days",
-                                 pathTimeoutDays: Int = 30)
-      : Dataset[Credit] = {
-    import events.sparkSession.implicits._
-    events
-      .withWatermark("ts", allowedLateness)
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[VersionedState, Credit](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (userId: Long, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, PathStateCodec)
-          if (state.hasTimedOut) {
-            // abandoned path: trailing touches credit nothing — the
-            // batch face's path-0 drop
-            state.remove()
-            Iterator.empty
-          } else {
-            val sorted = rows.toArray
-            java.util.Arrays.sort(sorted, byTsThenId)
-            val out = Seq.newBuilder[Credit]
-            var cur = state.getOption
-              .getOrElse(PathState(Map.empty, "", 0L, Long.MinValue))
-            sorted.foreach { e =>
-              val t = usOf(e.ts)
-              if (e.event_type == "purchase") {
-                // replicate the batch face's round(value * 100)
-                // EXACTLY: Spark's Round on a double is
-                // BigDecimal.valueOf(d).setScale(0, HALF_UP) — away
-                // from zero on halves, so a -12.5-cent refund rounds
-                // to -13 where math.round's floor(x + 0.5) gives -12
-                // (r11 review: replay parity must survive negatives)
-                val cents = java.math.BigDecimal.valueOf(e.value * 100)
-                  .setScale(0, java.math.RoundingMode.HALF_UP)
-                  .longValueExact()
-                if (cur.nTouch == 0L)
-                  out += Credit(userId, "direct", 1L, cents)
-                else {
-                  val base = cents / cur.nTouch
-                  val rem = cents % cur.nTouch
-                  // deterministic emission order within the purchase
-                  cur.counts.toSeq.sortBy(_._1).foreach { case (ch, n) =>
-                    out += Credit(userId, ch, n, base * n +
-                      (if (ch == cur.lastChannel) rem else 0L))
-                  }
-                }
-                cur = PathState(Map.empty, "", 0L,
-                  math.max(cur.maxUs, t))
-              } else {
-                cur = PathState(
-                  cur.counts.updated(e.event_type,
-                    cur.counts.getOrElse(e.event_type, 0L) + 1L),
-                  e.event_type, cur.nTouch + 1L,
-                  math.max(cur.maxUs, t))
-              }
-            }
-            state.update(cur)
-            val horizonMs = math.floorDiv(cur.maxUs, 1000L) +
-              pathTimeoutDays * 86400000L
-            state.setTimeoutTimestamp(
-              math.max(horizonMs, state.getCurrentWatermarkMs() + 1))
-            out.result().iterator
-          }
-      }
-  }
-
-  /** Open-interval multiset (end times, ascending) + the running peak.
-    * `ends` is bounded by the CURRENT concurrency — the sweep's whole
-    * point — never by stream length. */
-  final case class SweepState(ends: List[Long], peak: Long,
-                              maxT: Long = Long.MinValue)
-
-  private[graft] object SweepStateCodec extends StateCodec[SweepState] {
-    val ver = 1
-    def write(s: SweepState): String =
-      pack(s.peak.toString, s.maxT.toString, longs(s.ends))
-    def read(v: Int, p: String): SweepState = {
-      val f = unpack(p)
-      SweepState(longsOf(f(2)).toList, f(0).toLong, f(1).toLong)
-    }
-  }
-
-  /** Live/peak concurrency per event type after each micro-batch. */
-  final case class Concurrency(event_type: String, live: Long, peak: Long)
-
-  /** Streaming concurrency sweep — the stream face of `ev_concurrency`:
-    * each event opens an interval [ts, ts + max(0, value) seconds) and
-    * per-type state maintains the multiset of OPEN interval end-times
-    * plus the running peak, emitting (live, peak) per type per
-    * micro-batch. Within a batch, events are processed in runs of equal
-    * timestamp: open every interval of the run, then close every end
-    * ≤ t (exclusive ends — a zero-length interval closes in its own
-    * run and never counts, and back-to-back intervals never
-    * double-count), then take the peak — exactly the batch sweep's
-    * (t, delta) point semantics, in the same exact-µs arithmetic.
-    * Parity with the batch face on order-respecting batch splits is
-    * pinned in StreamsSpec. Lateness contract (r10 advice hardened
-    * it): pruning and peak updates anchor to the per-key event-time
-    * high-water mark `maxT`, not the current row's timestamp — a late
-    * interval that already expired by `maxT` is dropped before `live`
-    * is emitted (never a stale over-count), one still open counts
-    * exactly, and `peak` only advances at in-order positions, so a
-    * late run's unobservable transient liveness can only UNDER-count
-    * the peak — the same total-order caveat [[streamingDebounce]]
-    * documents.
-    *
-    * State per type is `peak` longs at worst — for a dashboard's "how
-    * many sessions are live right now / what was the max" this is the
-    * entire memory story at any stream length. */
-  def streamingConcurrency(events: Dataset[Event])
-      : Dataset[Concurrency] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[VersionedState, Concurrency](
-        GroupStateTimeout.NoTimeout) {
-        (tpe: String, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, SweepStateCodec)
-          val sorted = rows.toArray
-          java.util.Arrays.sort(sorted, byTsThenId)
-          var ends = state.getOption.map(_.ends).getOrElse(Nil)
-          var peak = state.getOption.map(_.peak).getOrElse(0L)
-          // high-water mark of event time seen for this key: pruning
-          // and peak updates are anchored to it, not to the current
-          // row's timestamp, so a late batch can neither leave stale
-          // ends inflating the emitted `live` (r10 advice) nor read a
-          // spurious peak off intervals that had not started yet at
-          // the late row's instant
-          var maxT = state.getOption.map(_.maxT).getOrElse(Long.MinValue)
-          // linear merge of two sorted lists — `ends` is maintained
-          // ascending by this very loop, so re-sorting the whole open
-          // multiset per timestamp run (O(n log n) at high live
-          // concurrency) is wasted work; only the run's openings sort.
-          // Iterative, not recursive: `ends` IS the live concurrency,
-          // and a stack frame per open interval would overflow exactly
-          // on the hot keys the sweep exists for
-          def merge(a: List[Long], b: List[Long]): List[Long] = {
-            val out = List.newBuilder[Long]
-            var xs = a
-            var ys = b
-            while (xs.nonEmpty && ys.nonEmpty)
-              if (xs.head <= ys.head) { out += xs.head; xs = xs.tail }
-              else { out += ys.head; ys = ys.tail }
-            out ++= xs
-            out ++= ys
-            out.result()
-          }
-          var i = 0
-          while (i < sorted.length) {
-            val t = usOf(sorted(i).ts)
-            // run of equal timestamps: open all, then close all ≤ t
-            var opened = List.empty[Long]
-            while (i < sorted.length && usOf(sorted(i).ts) == t) {
-              val dur = math.max(0L,
-                math.round(sorted(i).value * 1000000L))
-              opened = (t + dur) :: opened
-              i += 1
-            }
-            ends = merge(ends, opened.sorted).dropWhile(_ <= t)
-            // peak only advances at in-order positions — a late run's
-            // transient liveness between t and maxT is unobservable
-            // (the documented under-count), never an over-count
-            if (t >= maxT) {
-              maxT = t
-              peak = math.max(peak, ends.length.toLong)
-            }
-          }
-          // final prune at the high-water mark: a late interval that
-          // already expired by maxT must not linger in `live`
-          ends = ends.dropWhile(_ <= maxT)
-          state.update(SweepState(ends, peak, maxT))
-          Concurrency(tpe, ends.length.toLong, peak)
-      }
-  }
-
-  /** The maintained latest state per key, emitted as a changelog row.
-    * `op` is 'U' (upsert) or 'D' (tombstone — the key is deleted from
-    * the maintained table; `value` carries the tombstone event's
-    * payload for audit, a MERGE sink ignores it on 'D'). */
-  final case class KeyState(user_id: Long, ts: Timestamp,
-                            event_id: Long, value: Double, op: String)
-
-  private[graft] object KeyStateCodec extends StateCodec[KeyState] {
-    val ver = 1
-    def write(s: KeyState): String =
-      pack(s.user_id.toString, ts(s.ts), s.event_id.toString,
-        dbl(s.value), str(s.op))
-    def read(v: Int, p: String): KeyState = {
-      val f = unpack(p)
-      KeyState(f(0).toLong, tsOf(f(1)), f(2).toLong, dblOf(f(3)),
-        strOf(f(4)))
-    }
-  }
-
-  /** Streaming UPSERT with tombstones — the stream face of the batch
-    * CDC merge (`ev_cdc_merge`): `mapGroupsWithState` maintains the
-    * latest (ts, event_id)-ordered change per key and emits one
-    * changelog row per key per micro-batch — exactly the stream a
-    * MERGE-applying sink consumes (Update output mode). Events whose
-    * `event_type` is in `deleteTypes` are tombstones: when the latest
-    * change for a key is a tombstone the emitted row carries op='D'
-    * and the sink drops the key. Latest-wins is enforced against BOTH
-    * the batch (single-pass fold over the group iterator, never
-    * materialized) and the carried state, so an out-of-order older
-    * event can never overwrite newer state — including never
-    * RESURRECTING a deleted key, which is exactly why the tombstone
-    * stays in state instead of clearing it (`state.remove` would
-    * forget the deletion and let a late pre-delete event reinsert);
-    * a newer upsert after the tombstone re-inserts the key, the
-    * standard changelog lifecycle. This is the idempotence half of
-    * the T6 contract on the streaming face.
-    *
-    * State is one row per distinct key (tombstones included): bounded
-    * by the dimension's cardinality, not the stream's length — for
-    * table maintenance the state IS the table, so no timeout is set; a
-    * TTL variant would swap in ProcessingTimeTimeout to garbage-collect
-    * tombstones once the feed's lateness horizon passes. */
-  def streamingUpsert(events: Dataset[Event],
-                      deleteTypes: Set[String] = Set.empty)
-      : Dataset[KeyState] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[VersionedState, KeyState](
-        GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, KeyStateCodec)
-          // Full-precision ts compare (Timestamp.compareTo includes
-          // nanos) — NOT getTime, whose millisecond truncation could
-          // pick a different winner than the batch twin ev_cdc_merge's
-          // max(struct(ts, event_id)) for two events in the same
-          // millisecond but different microseconds (ADVICE r8).
-          def newer(aTs: java.sql.Timestamp, aId: Long,
-                    bTs: java.sql.Timestamp, bId: Long) = {
-            val c = aTs.compareTo(bTs)
-            c > 0 || (c == 0 && aId > bId)
-          }
-          var best: KeyState = state.getOption.orNull
-          rows.foreach { e =>
-            if (best == null ||
-                newer(e.ts, e.event_id, best.ts, best.event_id))
-              best = KeyState(userId, e.ts, e.event_id, e.value,
-                if (deleteTypes(e.event_type)) "D" else "U")
-          }
-          state.update(best)
-          best
-      }
-  }
-
-  /** One closed SCD2 interval, emitted when the next run opens. */
-  final case class ScdInterval(user_id: Long, event_type: String,
-                               valid_from: Timestamp, valid_to: Timestamp,
-                               n_events: Long)
-
-  /** The open run per user — the stream's is_current row, held as
-    * state rather than emitted (public: Spark codegen instantiates
-    * it). `lastLate` is the event_type of the most recent zero-length
-    * late emission anchored at this run's start (null when none):
-    * an at-least-once source redelivering the same late event every
-    * batch would otherwise append an identical changelog row per
-    * redelivery (ADVICE r16) — one string of state dedups the
-    * consecutive-redelivery case; genuinely alternating late types
-    * still each emit, which a changelog applier tolerates by the
-    * zero-length contract. A genuinely DISTINCT late event of the
-    * same type as the last late emission also collapses into it —
-    * deliberately: the zero-length row carries no event identity or
-    * count, so a second emission would be byte-identical and convey
-    * nothing; per-event late tallies belong to the batch-face
-    * reconciliation (T3), not the changelog.
-    *
-    * `firstId` is the run-anchor event's id — the byTsThenId
-    * tiebreak for a cross-batch event carrying the SAME timestamp as
-    * the open run's start: with a smaller id the batch total order
-    * places it BEFORE the anchor, so it is late (ts alone would route
-    * it through the in-order branch and rewind the open run — the
-    * older-event-overwriting-newer-state inversion).
-    *
-    * STATE-SCHEMA MIGRATION: adding `lastLate` and `firstId` widened
-    * the state from 3 to 5 fields — under the pre-envelope typed
-    * encoder that made every existing checkpoint unrestorable (the
-    * r16 outage BENCH_NOTES r18 §1 documents). Under the
-    * [[VersionedState]] envelope that same widening is now the worked
-    * migration example: [[ScdRunStateCodec]] is at ver 2 and its
-    * `read` still accepts the 3-field ver-1 payload, filling
-    * `lastLate`/`firstId` with the defaults — a restart from a ver-1
-    * checkpoint upgrades each key's run on first touch. */
-  final case class ScdRunState(event_type: String, valid_from: Timestamp,
-                               n: Long, lastLate: String = null,
-                               firstId: Long = Long.MinValue)
-
-  /** Ver 2 = the full 5-field run. Ver 1 is the pre-r17 3-field form
-    * (event_type, valid_from, n): `lastLate` had no dedup memory and
-    * `firstId` no anchor tiebreak — exactly the defaults a fresh run
-    * starts with, so filling them in IS the migration (the first
-    * post-restart late event may emit one extra zero-length row,
-    * which the changelog applier tolerates by the zero-length
-    * contract; the anchor tiebreak re-arms at the next run open). */
-  private[graft] object ScdRunStateCodec extends StateCodec[ScdRunState] {
-    val ver = 2
-    def write(s: ScdRunState): String =
-      pack(str(s.event_type), ts(s.valid_from), s.n.toString,
-        str(s.lastLate), s.firstId.toString)
-    def read(v: Int, p: String): ScdRunState = {
-      val f = unpack(p)
-      v match {
-        case 1 =>
-          ScdRunState(strOf(f(0)), tsOf(f(1)), f(2).toLong)
-        case _ =>
-          ScdRunState(strOf(f(0)), tsOf(f(1)), f(2).toLong,
-            strOf(f(3)), f(4).toLong)
-      }
-    }
-  }
-
-  /** Streaming SCD2 — the stream face of the batch intervalization
-    * (`ev_scd2`): per user, maintain the open event-type run as state
-    * and emit a closed `[valid_from, valid_to)` interval the moment a
-    * different type arrives — the history-table changelog a warehouse
-    * applies incrementally instead of rebuilding the dimension each
-    * refresh. Rows are processed in event-time order WITHIN each
-    * micro-batch (full-precision ts, event_id tiebreak — the batch
-    * twin's exact ordering); fed in order, the closed intervals are
-    * row-identical to the batch face's `valid_to IS NOT NULL` rows,
-    * which is the equivalence `StreamsSpec` pins. A cross-batch late
-    * event (inside lateness but after a newer run opened) cannot
-    * retroactively split an emitted interval — the append-mode
-    * limitation every changelog SCD2 shares; the open run is the
-    * key's LATEST truth and is never rewound by the late arrival
-    * (same type folds into its count; a different type emits as a
-    * zero-length interval anchored at the open run's start, keeping
-    * the chain monotone). The batch face is the reconciliation path,
-    * exactly the snapshot/incremental duality of T3.
-    *
-    * Scale: state is ONE small row per user (bounded by key
-    * cardinality, like [[streamingUpsert]]); the per-batch sort
-    * materializes only one user's slice of one micro-batch, bounded
-    * by batch sizing, not stream length. */
-  def streamingScd2(events: Dataset[Event]): Dataset[ScdInterval] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[VersionedState, ScdInterval](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (userId: Long, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, ScdRunStateCodec)
-          val sorted = rows.toArray
-          java.util.Arrays.sort(sorted, byTsThenId)
-          val out = Seq.newBuilder[ScdInterval]
-          var cur = state.getOption.orNull
-          sorted.foreach { e =>
-            if (cur == null)
-              cur = ScdRunState(e.event_type, e.ts, 1L,
-                firstId = e.event_id)
-            else if (e.ts.compareTo(cur.valid_from) < 0 ||
-                (e.ts.compareTo(cur.valid_from) == 0 &&
-                  e.event_id < cur.firstId)) {
-              // late INCLUDES the equal-timestamp smaller-id case:
-              // byTsThenId (the batch face's total order) places that
-              // event before the run's anchor, so routing it through
-              // the in-order branch would rewind the open run
-              // a cross-batch late event predates the open run (the
-              // in-batch sort can't reorder across batches). The open
-              // run is the key's LATEST truth and must never be
-              // rewound — an older event overwriting newer state is
-              // the inversion streamingUpsert guards against. Same
-              // type folds into the run's count; a different type
-              // emits the LATE run as a zero-length interval anchored
-              // at the open run's start (the chain stays monotone, a
-              // history table applying the changelog sees the stale
-              // type for zero duration and the open run untouched).
-              if (cur.event_type == e.event_type)
-                cur = cur.copy(n = cur.n + 1)
-              else if (cur.lastLate != e.event_type) {
-                // dedup a redelivered late event: the same type
-                // re-emitting the identical zero-length row every
-                // batch is at-least-once noise, not history
-                out += ScdInterval(userId, e.event_type,
-                  cur.valid_from, cur.valid_from, 1L)
-                cur = cur.copy(lastLate = e.event_type)
-              }
-            }
-            else if (cur.event_type == e.event_type)
-              cur = cur.copy(n = cur.n + 1)
-            else {
-              out += ScdInterval(userId, cur.event_type, cur.valid_from,
-                e.ts, cur.n)
-              cur = ScdRunState(e.event_type, e.ts, 1L,
-                firstId = e.event_id)
-            }
-          }
-          if (cur != null) state.update(cur)
-          out.result().iterator
-      }
-  }
-
-  /** One heavy-hitter counter of a per-type streaming summary. */
-  final case class HotItem(event_type: String, item: String, est: Long)
-
-  /** Carried MG summary per key (public: Spark codegen instantiates
-    * it). */
-  final case class MgCarry(counters: Map[String, Long])
-
-  private[graft] object MgCarryCodec extends StateCodec[MgCarry] {
-    val ver = 1
-    def write(s: MgCarry): String =
-      s.counters.toSeq.sorted.map { case (k, n) => str(k) + "," + n }
-        .mkString(";")
-    def read(v: Int, p: String): MgCarry =
-      MgCarry(
-        if (p.isEmpty) Map.empty
-        else p.split(';').map { e =>
-          val i = e.lastIndexOf(',')
-          strOf(e.substring(0, i)) -> e.substring(i + 1).toLong
-        }.toMap)
-  }
-
-  /** Streaming heavy hitters — the stream face of the `mg_summary`
-    * aggregate (the trending-items dashboard a 100 TB event stream
-    * actually serves): per event_type, a Misra-Gries summary of width
-    * `k` over user ids is carried as state and re-emitted as a
-    * k-row changelog every micro-batch. The SAME kernel
-    * (`functions.MisraGries.add`) processes every observation, so the
-    * stream inherits the batch face's theorem verbatim: for every
-    * item, est ≤ exact and exact − est ≤ N/(k+1) over the whole
-    * stream so far, regardless of batch boundaries — pinned in
-    * StreamsSpec across a two-batch split.
-    *
-    * State is one ≤k-entry map per event type — bounded by
-    * |types|·k, never by users or stream length; the per-batch group
-    * fold is one pass, never materialized. */
-  def streamingHeavyHitters(events: Dataset[Event], k: Int = 16)
-      : Dataset[HotItem] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState[VersionedState, HotItem](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (eventType: String, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, MgCarryCodec)
-          val buf = scala.collection.mutable.HashMap.empty[String, Long]
-          state.getOption.foreach(_.counters.foreach { case (key, c) =>
-            buf.update(key, c)
-          })
-          rows.foreach(e =>
-            graft.functions.MisraGries.add(buf, e.user_id.toString, k))
-          state.update(MgCarry(buf.toMap))
-          buf.toSeq.map { case (item, est) =>
-            HotItem(eventType, item, est)
-          }.iterator
-      }
-  }
 
   /** Streaming exact dedup — the stream face of `dd_exact`: drop rows
     * whose key was already seen, with the watermark bounding the
@@ -991,8 +62,8 @@ object Streams {
 
   /** Streaming NEAR-dedup — the stream face of the SimHash batch
     * family: each arriving document gets its packed fingerprint from
-    * the shuffle-free per-row form (`TextDedup.withSimhashInt` — a
-    * higher-order fold, no stateful aggregation), and documents whose
+    * the shuffle-free per-row form (`TextDedup.withSimhashInt`, the
+    * native `simhash_long` expression), and documents whose
     * fingerprint was already seen inside the watermark are dropped.
     * Same-fingerprint ≈ near-identical text (all 32 bit-votes agree),
     * so this is the d=0 tier of streaming near-dedup; the d≥1 tiers
@@ -1089,57 +160,6 @@ object Streams {
                         textCol: String = "text"): DataFrame =
     graft.operators.Pii.withScrub(docs, textCol)
 
-  /** Running per-source BPE token budget after each micro-batch. */
-  final case class TokenBudget(source: String, docs: Long,
-                               tokens: Long, shard: Long)
-
-  /** (docs, tokens) running pair per source. */
-  private[graft] object TokenBudgetStateCodec
-      extends StateCodec[(Long, Long)] {
-    val ver = 1
-    def write(s: (Long, Long)): String = pack(s._1.toString, s._2.toString)
-    def read(v: Int, p: String): (Long, Long) = {
-      val f = unpack(p); (f(0).toLong, f(1).toLong)
-    }
-  }
-
-  /** Streaming token-budget monitor — the ingest-time face of the
-    * BPE budget family (`ta_bpe_token_stats` / `ta_bpe_shard_assign`):
-    * per source, the running document and BPE-token totals and the
-    * shard index the NEXT document would start in (`tokens div
-    * budget` — the same floor arithmetic as the batch packer). The
-    * tokenizer is the identical [[graft.functions.BpeOps]] kernel the
-    * batch faces run, so a live ingest meter and a batch backfill can
-    * never disagree on token mass. State per source is two longs —
-    * bounded by |sources| at any stream length; totals are sums, so
-    * the emitted numbers are independent of arrival order within and
-    * across batches (StreamsSpec pins batch-split parity against the
-    * batch aggregate). */
-  def streamingTokenBudget(docs: DataFrame, budget: Long = 6000L)
-      : Dataset[TokenBudget] = {
-    require(budget > 0)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col("source").cast("string"), col("text").cast("string"))
-      .as[(String, String)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[VersionedState, TokenBudget](
-        GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, String)],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, TokenBudgetStateCodec)
-          var (nDocs, nToks) = state.getOption.getOrElse((0L, 0L))
-          rows.foreach { case (_, text) =>
-            nDocs += 1
-            if (text != null)
-              nToks += graft.functions.BpeOps.countTokens(
-                org.apache.spark.unsafe.types.UTF8String.fromString(text))
-          }
-          state.update((nDocs, nToks))
-          TokenBudget(src, nDocs, nToks, nToks / budget)
-      }
-  }
-
   /** Streaming classifier admission gate — the ingest-time face of
     * `ta_classifier_score`: every arriving document is scored by the
     * shared [[graft.operators.QualityModel]] kernel (one per-row
@@ -1154,191 +174,6 @@ object Streams {
     docs.filter(
       coalesce(graft.operators.QualityModel.logitOf(col(textCol)),
         lit(0L)) > 0)
-
-  /** Running RFM state after each micro-batch. */
-  final case class RfmState(user_id: Long, last_us: Long,
-                            frequency: Long, monetary_cents: Long)
-
-  /** (last_us, frequency, cents) running triple per user. */
-  private[graft] object RfmStateCodec
-      extends StateCodec[(Long, Long, Long)] {
-    val ver = 1
-    def write(s: (Long, Long, Long)): String =
-      pack(s._1.toString, s._2.toString, s._3.toString)
-    def read(v: Int, p: String): (Long, Long, Long) = {
-      val f = unpack(p); (f(0).toLong, f(1).toLong, f(2).toLong)
-    }
-  }
-
-  /** Streaming RFM accumulator — the live half of `ev_rfm`: per user,
-    * the running (last-purchase timestamp, purchase count, exact
-    * cents) triple the batch face aggregates before scoring. Quintile
-    * scores need the cross-user distribution, so scoring stays a
-    * report-time batch step over this state (exactly how the batch
-    * face scores its per-user aggregate); the stream maintains the
-    * expensive part — the fact-table collapse — incrementally.
-    * State per user is three longs; last/count/sum are
-    * arrival-order-independent, so emitted rows match the batch
-    * aggregate under ANY batch split (StreamsSpec pins replay
-    * parity). */
-  def streamingRfm(events: Dataset[Event]): Dataset[RfmState] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.filter(_.event_type == "purchase")
-      .groupByKey(_.user_id)
-      .mapGroupsWithState[VersionedState, RfmState](
-        GroupStateTimeout.NoTimeout) {
-        (user: Long, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, RfmStateCodec)
-          var (lastUs, freq, cents) =
-            state.getOption.getOrElse((Long.MinValue, 0L, 0L))
-          rows.foreach { e =>
-            // sign-safe micros and Spark-exact HALF_UP cents — the
-            // streamingAttributionLinear replay-parity idioms
-            val us = usOf(e.ts)
-            if (us > lastUs) lastUs = us
-            freq += 1
-            cents += java.math.BigDecimal.valueOf(e.value * 100)
-              .setScale(0, java.math.RoundingMode.HALF_UP)
-              .longValueExact()
-          }
-          state.update((lastUs, freq, cents))
-          RfmState(user, lastUs, freq, cents)
-      }
-  }
-
-  /** Frontier summary after each micro-batch: the live skyline's
-    * size and exact integer digests (min x, max y, coordinate sums —
-    * enough for StreamsSpec to pin set-level parity against the
-    * batch operator without shipping the frontier itself). */
-  final case class Frontier(key: String, size: Long, min_x: Long,
-                            max_y: Long, x_sum: Long, y_sum: Long)
-
-  /** The frontier as (x, y, count) entries. */
-  private[graft] object SkylineStateCodec
-      extends StateCodec[List[(Long, Long, Long)]] {
-    val ver = 1
-    def write(s: List[(Long, Long, Long)]): String =
-      s.map { case (x, y, c) => s"$x,$y,$c" }.mkString(";")
-    def read(v: Int, p: String): List[(Long, Long, Long)] =
-      if (p.isEmpty) Nil
-      else p.split(';').map { e =>
-        val f = e.split(',')
-        (f(0).toLong, f(1).toLong, f(2).toLong)
-      }.toList
-  }
-
-  /** Streaming Pareto-frontier monitor — the live face of
-    * `operators.Skyline`: per key, the running 2-D skyline (minimize
-    * x, maximize y) of every point seen so far, maintained by
-    * incremental insertion (a point enters iff nothing dominates it
-    * and evicts whatever it dominates — the fold form of the batch
-    * staircase; skylines are insertion-order independent, so emitted
-    * state matches the batch operator under ANY batch split,
-    * duplicates-survive-together included). The best-trade-off
-    * monitor a pipeline runs live: cheapest price per quality tier,
-    * best quality per price so far.
-    *
-    * State per key is the frontier as (x, y, count) entries — exact
-    * duplicates fold into the count (batch parity keeps
-    * duplicates-survive-together semantics in the DIGESTS while the
-    * stored list stays one entry per distinct point; r11 advice: the
-    * plain-list form grew state linearly on a stream repeating one
-    * frontier point), so state is bounded by |distinct x on the
-    * frontier| entries regardless of arrivals; NOT
-    * watermark-bounded, so keys with unbounded distinct-x streams
-    * need a coordinate quantization upstream. */
-  def streamingSkyline(points: DataFrame): Dataset[Frontier] = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    points.select(col("key").cast("string"), col("x").cast("long"),
-        col("y").cast("long"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[VersionedState, Frontier](
-        GroupStateTimeout.NoTimeout) {
-        (key: String, rows: Iterator[(String, Long, Long)],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, SkylineStateCodec)
-          var st = state.getOption.getOrElse(Nil)
-          rows.foreach { case (_, x, y) =>
-            val dominated = st.exists(q =>
-              q._1 <= x && q._2 >= y && (q._1 < x || q._2 > y))
-            if (!dominated) {
-              if (st.exists(q => q._1 == x && q._2 == y))
-                st = st.map(q =>
-                  if (q._1 == x && q._2 == y) (q._1, q._2, q._3 + 1)
-                  else q)
-              else
-                st = (x, y, 1L) :: st.filterNot(q =>
-                  x <= q._1 && y >= q._2 && (x < q._1 || y > q._2))
-            }
-          }
-          state.update(st)
-          Frontier(key, st.map(_._3).sum,
-            st.map(_._1).min, st.map(_._2).max,
-            st.map(q => q._1 * q._3).sum, st.map(q => q._2 * q._3).sum)
-      }
-  }
-
-  /** Online CUSUM state after each micro-batch. */
-  final case class CusumState(event_type: String, n: Long,
-                              s_cents: Long, alarmed: Boolean)
-
-  /** (n, S cents, alarmed latch) per type. */
-  private[graft] object CusumStateCodec
-      extends StateCodec[(Long, Long, Boolean)] {
-    val ver = 1
-    def write(s: (Long, Long, Boolean)): String =
-      pack(s._1.toString, s._2.toString, if (s._3) "1" else "0")
-    def read(v: Int, p: String): (Long, Long, Boolean) = {
-      val f = unpack(p); (f(0).toLong, f(1).toLong, f(2) == "1")
-    }
-  }
-
-  /** Online CUSUM level-shift detector — the STREAMING half of
-    * `ev_cusum_changepoint`: the batch face locates a past change
-    * point retrospectively (it needs the stream's own mean); the
-    * live detector tracks the running deviation from a KNOWN
-    * reference level `targetCents` (the production setup — the
-    * reference comes from history or an SLA) and latches `alarmed`
-    * once |S| crosses `thresholdCents`. State per type is two longs
-    * and a flag; S is a plain sum of (cents − target), so the
-    * emitted (n, S) equals the batch fold under ANY batch split
-    * (StreamsSpec pins replay parity). The latch tests the running
-    * sum per event, so WHEN it fires can shift with within-batch
-    * arrival order (the detection-delay artifact every online
-    * detector has — never the (n, S) values); once latched it stays
-    * latched until the query restarts — an alert, not a gauge.
-    *
-    * Scale: |types|-bounded state, one shuffle per micro-batch on
-    * the type key. */
-  def streamingCusum(events: Dataset[Event], targetCents: Long,
-                     thresholdCents: Long): Dataset[CusumState] = {
-    require(thresholdCents > 0)
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.event_type)
-      .mapGroupsWithState[VersionedState, CusumState](
-        GroupStateTimeout.NoTimeout) {
-        (tpe: String, rows: Iterator[Event],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, CusumStateCodec)
-          var (n, sCents, alarmed) =
-            state.getOption.getOrElse((0L, 0L, false))
-          rows.foreach { e =>
-            n += 1
-            sCents += java.math.BigDecimal.valueOf(e.value * 100)
-              .setScale(0, java.math.RoundingMode.HALF_UP)
-              .longValueExact() - targetCents
-            if (math.abs(sCents) > thresholdCents) alarmed = true
-          }
-          state.update((n, sCents, alarmed))
-          CusumState(tpe, n, sCents, alarmed)
-      }
-  }
 
   /** Stream-stream join: each interaction event paired with error
     * events by the same user in the preceding `lookbackMinutes`. Both
@@ -1377,302 +212,6 @@ object Streams {
     graft.GraftExtensions.ensure(emb.sparkSession)
     graft.operators.Ann.ivfAssign(emb, cents, idCol, vecCol)
   }
-
-  /** Drift report after each micro-batch — the `ta_quality_drift`
-    * row shape (n_old from the frozen reference, the rest from the
-    * running comparison-slice state). */
-  final case class DriftReport(source: String, n_old: Long,
-                               n_new: Long, l1_permille: Long,
-                               max_shift_permille: Long,
-                               drift_decile: Long)
-
-  /** Ten decile counters per source. */
-  private[graft] object DriftCountsCodec extends StateCodec[Array[Long]] {
-    val ver = 1
-    def write(s: Array[Long]): String = longs(s)
-    def read(v: Int, p: String): Array[Long] = longsOf(p)
-  }
-
-  /** Streaming quality-distribution drift monitor — the live face of
-    * `ta_quality_drift`: score each arriving doc with the shared
-    * QualityModel kernel, bucket it against the FROZEN reference
-    * decile boundaries (built once by `QualityModel.driftRef`, a
-    * ≤ 10-rows-per-source driver artifact — the thing a deployment
-    * persists after a reference pass), and keep ten decile counters
-    * per source. Every emission recomputes the batch face's exact
-    * integer report from the counters: floor-permille shares, L1
-    * distance, worst decile by the `|Δ|·16 + (10 − k)` sentinel
-    * argmax. State is 10 longs per source — bounded by |sources|,
-    * not stream length — and counts are arrival-order independent,
-    * so the final emission equals the batch face under ANY batch
-    * split (StreamsSpec pins row parity against the catalog face).
-    *
-    * The corpus-refresh QA signal, live: a spam wave or extractor
-    * regression moves decile shares mid-ingest, before any mean
-    * moves and long before the nightly batch report. */
-  def streamingQualityDrift(docs: DataFrame,
-      ref: Map[String, graft.operators.QualityModel.DriftRef])
-      : Dataset[DriftReport] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val emptyRef = graft.operators.QualityModel.DriftRef(
-      0L, Seq.empty, IndexedSeq.fill(10)(0L))
-    docs
-      .select(col("source"), col("doc_id").cast("long"),
-        coalesce(graft.operators.QualityModel.logitOf(col("text")),
-          lit(0L)).as("score"))
-      .as[(String, Long, Long)]
-      .groupByKey(_._1)
-      .mapGroupsWithState[VersionedState, DriftReport](
-        GroupStateTimeout.NoTimeout) {
-        (src: String, rows: Iterator[(String, Long, Long)],
-         vs: GroupState[VersionedState]) =>
-          val state = new VGroupState(vs, DriftCountsCodec)
-          val r = ref.getOrElse(src, emptyRef)
-          val counts = state.getOption.getOrElse(Array.fill(10)(0L))
-          rows.foreach { case (_, docId, score) =>
-            // the batch face's bucketing sum: 1 + |boundaries below
-            // (score, doc_id)| over the existing deciles <= 9
-            val d = 1 + r.bounds.count { case (_, bs, bd) =>
-              bs < score || (bs == score && bd < docId) }
-            counts(d - 1) += 1
-          }
-          state.update(counts)
-          val nNew = counts.sum
-          var l1 = 0L
-          var code = Long.MinValue
-          var k = 1
-          while (k <= 10) {
-            val sn = if (nNew > 0) counts(k - 1) * 1000 / nNew else 0L
-            val ad = math.abs(r.oldPermille(k - 1) - sn)
-            l1 += ad
-            val c = ad * 16 + (10L - k)
-            if (c > code) code = c
-            k += 1
-          }
-          DriftReport(src, r.nOld, nNew, l1, code / 16, 10 - code % 16)
-      }
-  }
-
-  /** Streaming ingest into the BM25 serving bundle — the live face of
-    * `maintain_indexes`'s lexical append step
-    * (`Jobs.maintainServingIndexes`): every micro-batch of crawl docs
-    * lands through `Lexical.appendIndexTables`, which tokenizes ONLY
-    * the batch, bucket-appends its postings under the catalog's spec,
-    * and stages the vocab/doclen/scalar adds as append-deltas the
-    * read path folds in (batch-sized end-to-end, r16 verdict #1 — no
-    * per-micro-batch full-postings derive) — the bundle is
-    * probe-ready after every micro-batch instead of once nightly.
-    * Delivery is idempotent at the DATA level, beyond
-    * the checkpoint's path level: the doc-id guard inside
-    * appendIndexTables (the `newKeysOnly` broadcast-probe shape, big
-    * side never shuffles) drops already-indexed docs and collapses
-    * intra-batch duplicates to one row per id, so an at-least-once
-    * source or a checkpoint-less replay converges to zero-row appends
-    * instead of double-counting df/nDocs/sumDl (T6 on the index
-    * face), and a batch re-adding a deferred-deleted doc still
-    * compacts first. The caller bootstraps the resident bundle
-    * once (`Lexical.writeIndexTables`, exactly as the batch job
-    * does); takedowns and compaction stay batch-gated decisions.
-    * Micro-batch-split parity with the one-shot batch append — same
-    * scalars, same probe ranking — is pinned in StreamsSpec.
-    *
-    * Cross-session visibility: the appends run in the streaming
-    * execution's CLONED session, so a separate reader session that
-    * has already planned over the bundle holds a stale file listing
-    * in its own relation cache — Spark's standard per-session cache
-    * contract. Such a reader calls `catalog.refreshTable` on the
-    * bundle tables before probing (probe jobs that open the bundle
-    * fresh, like `rankedFromIndex` over `readIndexTables` in a new
-    * session, need nothing). */
-  /** Read-or-create the per-LINEAGE stamp file inside `checkpoint`.
-    * The delivery-manifest key must identify a micro-batch across the
-    * whole life of the serving table, but Spark's batchId is unique
-    * only within one checkpoint LINEAGE: the documented
-    * drain-and-restart-fresh procedure (BENCH_NOTES r18 §1) wipes the
-    * checkpoint, and an operator reusing the SAME path would restart
-    * batch ids at 0 — colliding with the prior lineage's manifest
-    * rows still in `<table>__manifest`, so deliverOnce would silently
-    * skip the new lineage's first micro-batches (r19 advisor, medium).
-    * A stamp STORED IN the checkpoint dir has exactly the right
-    * lifetime: restarts from an intact checkpoint read the same stamp
-    * (redelivered batches still dedup), while wiping the dir destroys
-    * the stamp with the batch-id state it scoped, so the fresh
-    * lineage mints fresh keys. The StreamingQuery runId would NOT
-    * work here — it changes on every restart, which would break the
-    * across-restart redelivery dedup that is the manifest's purpose. */
-  private[graft] def lineageStamp(spark: SparkSession,
-                                  checkpoint: String): String = {
-    val p = new org.apache.hadoop.fs.Path(checkpoint, "graft_lineage")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def readIt(): String = {
-      val in = fs.open(p)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-      finally in.close()
-    }
-    // WRITE-TEMP-THEN-RENAME, never create-in-place: a reader racing
-    // a direct create could observe the stamp file EMPTY (created,
-    // bytes unflushed) and key its manifest rows under lineage "" —
-    // re-opening the silent-skip collision this stamp exists to
-    // close; a crash between create and write would even leave the
-    // empty stamp permanently (r20 review). The rename is atomic on
-    // local/HDFS; a lost rename race means the winner's stamp is THE
-    // lineage id. An empty read is always a hard error, never a key.
-    def nonEmpty(s: String): String = {
-      if (s.isEmpty) throw new IllegalStateException(
-        s"empty lineage stamp at $p — checkpoint dir corrupted; " +
-          "remove the file (or wipe the checkpoint) and restart")
-      s
-    }
-    if (fs.exists(p)) nonEmpty(readIt())
-    else {
-      fs.mkdirs(p.getParent)
-      val id = java.util.UUID.randomUUID().toString
-      val tmp = new org.apache.hadoop.fs.Path(
-        checkpoint, s"graft_lineage.tmp.$id")
-      val out = fs.create(tmp, false)
-      try out.write(id.getBytes("UTF-8")) finally out.close()
-      if (fs.rename(tmp, p)) id
-      else {
-        // lost the rename race (two starts on one new checkpoint)
-        fs.delete(tmp, false)
-        nonEmpty(readIt())
-      }
-    }
-  }
-
-  def startBm25IngestQuery(docs: DataFrame, name: String,
-                           checkpoint: String) = {
-    val lineage = lineageStamp(docs.sparkSession, checkpoint)
-    docs.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // an empty micro-batch (idle trigger) must not churn the
-        // guard probes and delta swaps — the append is a no-op anyway.
-        // Same lineage-scoped delivery-manifest guard as the IVF
-        // ingest twin: a redelivered batch skips on the manifest
-        // instead of relying on the data-level already-indexed filter,
-        // which a takedown landing between the crash and the
-        // redelivery makes ambiguous (redelivery vs genuine re-add).
-        if (batch.head(1).nonEmpty)
-          graft.operators.Partitioning.deliverOnce(batch.sparkSession,
-            name, Some(f"ingest:$lineage:$batchId%012d")) {
-            graft.operators.Lexical.appendIndexTables(
-              batch.sparkSession, name, batch)
-            ()
-          }
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming ingest into the IVF serving index — the dense twin of
-    * [[startBm25IngestQuery]] and the live face of
-    * `maintain_indexes`'s vector append step: each micro-batch of
-    * embeddings assigns to the FROZEN serving centroids (the
-    * [[streamingIvfAssign]] serve-frozen / retrain-offline stance)
-    * and bucket-appends via `Ann.appendIvfBatch`, the guarded
-    * maintenance face — probe plans keep their pruned, exchange-free
-    * shape after any number of micro-batches. The guard handles what
-    * an at-least-once micro-batch feed throws at a serving index:
-    * the bucket spec comes from the CATALOG, never a parameter;
-    * redelivered ids drop via the `newKeysOnly` broadcast-probe shape
-    * (the index never shuffles for the guard) and intra-batch
-    * duplicates collapse to one row per id; a batch re-adding a
-    * TOMBSTONED id compacts first — checked against the batch BEFORE
-    * the already-indexed filter, which would otherwise hide the
-    * re-add behind the tombstoned id's still-physical row and discard
-    * the fresh embedding forever. Retraining stays the batch drift
-    * gate's decision (`ss_ivf_append` → `Ann.retrainIvfIndex`), after
-    * which the query restarts with the refreshed centroid literals.
-    * Cross-session readers refresh the table before probing — see
-    * [[startBm25IngestQuery]]'s visibility note. */
-  def startIvfIngestQuery(emb: DataFrame, table: String,
-                          cents: Array[(Long, Array[Float])],
-                          checkpoint: String) = {
-    val lineage = lineageStamp(emb.sparkSession, checkpoint)
-    emb.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // delivery-manifest guard on the micro-batch identity (r19
-        // review): the data-level newKeysOnly guard alone cannot
-        // distinguish a REDELIVERED batch from a genuine re-add — a
-        // crash after the append committed but before the checkpoint,
-        // followed by a takedown of one of the batch's ids, would on
-        // redelivery compact that id's tombstone away and re-append
-        // the taken-down vector (a GDPR-deleted row serving again).
-        // NARROWS, not closes: deliverOnce records the key only AFTER
-        // the body commits, so a crash inside the body→manifest gap
-        // still replays the body on redelivery — the manifest shrinks
-        // the resurrection window to that gap; an operator auditing
-        // GDPR deletion reconciles through the batch takedown path.
-        // The key is scoped by [[lineageStamp]] (NOT the checkpoint
-        // path — a wiped-and-reused path restarts batch ids at 0 and
-        // must not collide with the prior lineage's manifest rows)
-        // and zero-padded so the manifest-cap compaction's
-        // lexicographic retention stays temporal.
-        if (batch.head(1).nonEmpty)
-          graft.operators.Partitioning.deliverOnce(batch.sparkSession,
-            table, Some(f"ingest:$lineage:$batchId%012d")) {
-            graft.operators.Ann.appendIvfBatch(
-              batch.sparkSession, table, batch, cents)
-            ()
-          }
-        ()
-      }
-      .start()
-  }
-
-  /** Streaming takedowns for the IVF serving index — the delete twin
-    * of [[startIvfIngestQuery]], for the feeds that arrive
-    * continuously in production (GDPR/DMCA requests, re-crawl
-    * invalidations): each micro-batch of vector ids lands as deferred
-    * tombstones via `Ann.tombstoneIvfVectors` — a tombstone-sized
-    * merge, never an index rewrite — and every probe subtracts them
-    * with the broadcast anti-join until the compaction gate trips and
-    * folds physically. Redelivery is a no-op by construction (the
-    * tombstone merge is a set union; ids already absent from the
-    * index are dropped before they can inflate the gate), so an
-    * at-least-once feed needs nothing beyond the checkpoint.
-    * Micro-batch-split parity with the one-shot batch takedown is
-    * pinned in StreamsSpec; cross-session readers refresh per
-    * [[startBm25IngestQuery]]'s visibility note. */
-  def startIvfTakedownQuery(ids: DataFrame, table: String,
-                            checkpoint: String) =
-    ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (batch.head(1).nonEmpty)
-          graft.operators.Ann.tombstoneIvfVectors(
-            batch.sparkSession, table, batch)
-        ()
-      }
-      .start()
-
-  /** Streaming takedowns for the BM25 serving bundle — the lexical
-    * twin of [[startIvfTakedownQuery]]: each micro-batch of doc ids
-    * lands in the delete-delta table via `Lexical.removeDocsDeferred`
-    * (tombstones + precomputed df/scalar decrements served through
-    * broadcast anti-joins — one removed-slice aggregate per batch,
-    * never a re-tokenize or a postings rewrite), folding physically
-    * only at the compaction gate. Redelivered or never-indexed ids
-    * drop against the LIVE view before they can double-decrement df
-    * or inflate the gate, so at-least-once feeds converge. */
-  def startBm25TakedownQuery(ids: DataFrame, name: String,
-                             checkpoint: String) =
-    ids.writeStream
-      .outputMode(OutputMode.Append)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (batch.head(1).nonEmpty)
-          graft.operators.Lexical.removeDocsDeferred(
-            batch.sparkSession, name, batch)
-        ()
-      }
-      .start()
 
   /** Streaming fan-out — the reference's multi-target S3 sink
     * (SURVEY.md S5) on the streaming face: every micro-batch is written

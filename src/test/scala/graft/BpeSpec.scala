@@ -93,47 +93,6 @@ class BpeSpec extends AnyFunSuite with SharedSpark {
       "document order must be word order")
   }
 
-  test("streamingTokenBudget totals match the batch aggregate across batch splits") {
-    graft.GraftExtensions.ensure(spark)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val docs = spark.read
-      .parquet("/root/testdata/sf0.001/documents.parquet")
-      .selectExpr("source", "text").as[(String, String)]
-      .collect().toSeq
-    val (b1, b2) = docs.splitAt(docs.size / 3)
-    val source = MemoryStream[(String, String)]
-    val q = graft.streaming.Streams.streamingTokenBudget(
-        source.toDF().toDF("source", "text"), budget = 1000L)
-      .writeStream.format("memory").queryName("tok_budget")
-      .outputMode("update").start()
-    try {
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      // last emitted row per source = the final running totals; they
-      // must equal the batch aggregate over the same rows, regardless
-      // of how the stream was batch-split
-      val streamed = spark.table("tok_budget")
-        .groupBy("source")
-        .agg(org.apache.spark.sql.functions.max("docs").as("docs"),
-          org.apache.spark.sql.functions.max("tokens").as("tokens"))
-        .as[(String, Long, Long)].collect()
-        .map { case (s, d, t) => s -> (d, t) }.toMap
-      val batch = docs.groupBy(_._1).map { case (s, rows) =>
-        s -> (rows.size.toLong, rows.map { case (_, t) =>
-          graft.functions.BpeOps.tokens(
-            org.apache.spark.unsafe.types.UTF8String.fromString(t))
-            .numElements().toLong }.sum)
-      }
-      assert(streamed == batch)
-      // shard index is the packer's floor arithmetic
-      val row = spark.table("tok_budget").as[graft.streaming.Streams.TokenBudget]
-        .collect().maxBy(_.tokens)
-      assert(row.shard == row.tokens / 1000L)
-    } finally q.stop()
-  }
-
   test("non-BMP characters split as code points, never lone surrogates") {
     // U+1D11E (musical G clef) is one character in any SQL engine's
     // length(); a UTF-16-unit split would shear it into two surrogate

@@ -90,7 +90,7 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
     assert(out(2L).getAs[Long]("keep") == 0L)
   }
 
-  test("metricsNarrow equals the grouped metrics on crafted and random docs") {
+  test("metricsNative equals the grouped metrics on crafted and random docs") {
     val rnd = new scala.util.Random(42)
     val vocab = Vector("alpha", "bb", "gamma7", "x", "delta", "ee")
     val random = (100L until 400L).map { id =>
@@ -110,19 +110,17 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
       (1L, "aa bb x aa bb y cc dddd z cc dddd w"),
       (2L, "one two three"),
       (3L, ""),
-      // supplementary-plane chars (surrogate pairs in UTF-16): all
-      // three kernels must count CODEPOINTS, not code units
+      // supplementary-plane chars (surrogate pairs in UTF-16): both
+      // kernels must count CODEPOINTS, not code units
       (4L, "😀😀a b 😀😀a b 漢x 漢x 漢x c d e"),
-      // NULL text ≡ empty text in every kernel (all-zero row, keep 0)
+      // NULL text ≡ empty text in both kernels (all-zero row, keep 0)
       (6L, null.asInstanceOf[String]),
-      // whale gram (120k chars): all three kernels clamp the packed
+      // whale gram (120k chars): both kernels clamp the packed
       // witness charlen at 99 999 identically
       (7L, { val w = "b" * 60000
              s"$w $w z $w $w p q r p q s p q" }))
     val docs = (crafted ++ random).toDF("doc_id", "text")
     val grouped = GopherRules.metrics(docs).orderBy("doc_id").collect().toSeq
-    val narrow = GopherRules.metricsNarrow(docs).orderBy("doc_id").collect().toSeq
-    assert(narrow.map(_.toSeq) == grouped.map(_.toSeq))
     val native = GopherRules.metricsNative(docs).orderBy("doc_id").collect().toSeq
     assert(native.map(_.toSeq) == grouped.map(_.toSeq),
       "native gopher_stats kernel diverges from the grouped reference")

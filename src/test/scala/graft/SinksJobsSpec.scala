@@ -575,6 +575,44 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
       s"not the missing-table failure: ${jobFailed.getCause}")
   }
 
+  test("a corrupt input table fails the job: no extract that reads it " +
+      "is reported ok, and the extracts that do not read it land") {
+    import java.nio.file.{Files => F, Paths}
+    // lineitem truncated to half its bytes; every other table intact.
+    // ref_instructor_advisor reads lineitem, ref_advisor_notes does not
+    val data = F.createTempDirectory("corrupt_input_sf")
+    for (t <- graft.sources.Tables.names if t != "lineitem")
+      F.createSymbolicLink(data.resolve(s"$t.parquet"),
+        Paths.get(s"$sf/$t.parquet"))
+    val whole = F.readAllBytes(Paths.get(s"$sf/lineitem.parquet"))
+    F.write(data.resolve("lineitem.parquet"),
+      java.util.Arrays.copyOf(whole, whole.length / 2))
+    val dir = F.createTempDirectory("corrupt_input_out").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val failed = intercept[Jobs.StepsFailed[_]] {
+      Jobs.run("upload_advisors", spark, data.toString, targets,
+        "2024-01-01")
+    }
+    assert(failed.getCause.getMessage.contains("lineitem"),
+      s"the failure does not name the corrupt table: ${failed.getCause}")
+    val landed = failed.landed.map {
+      case (extract: String, target: String, ok: Boolean) =>
+        (extract, target, ok)
+    }
+    assert(!landed.exists { case (e, _, ok) =>
+      e == "instructor-advisor-map" && ok },
+      s"an extract of the corrupt table was reported ok: $landed")
+    assert(landed == targets.map(("advisor-note-permissions", _, true)),
+      s"the extract without lineitem did not land everywhere: $landed")
+    for (t <- targets) {
+      val key = Sinks.advisorsKey("2024-01-01", "advisor-note-permissions")
+      assert(new java.io.File(s"$t/$key").exists(), s"$t/$key missing")
+      val bad = Sinks.advisorsKey("2024-01-01", "instructor-advisor-map")
+      assert(!new java.io.File(s"$t/$bad").exists(),
+        s"$t/$bad landed from a corrupt input")
+    }
+  }
+
   test("partitionedParquet dynamic overwrite replaces only incoming " +
     "partitions, idempotently") {
     val dir = Files.createTempDirectory("dynpart").toString

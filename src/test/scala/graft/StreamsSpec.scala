@@ -242,146 +242,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("sessionize closes by event time and merges a late out-of-order row") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.sessionize(source.toDS(), gapMinutes = 30,
-        allowedLateness = "10 minutes").writeStream
-      .format("memory").queryName("sess_et")
-      .outputMode("append").start()
-    try {
-      source.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-01 10:10:00"), 7, "view", 1.0))
-      q.processAllAvailable()
-      // watermark (10:00) hasn't passed last+gap (10:40) → still open
-      assert(spark.table("sess_et").count() == 0)
-      // out-of-order row inside the lateness allowance merges into the
-      // open session instead of starting a new one
-      source.addData(Event(3, ts("2024-01-01 10:05:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_et").count() == 0)
-      // a later event elsewhere pushes the watermark to 11:20 > 10:40 —
-      // user 7's session times out and is emitted; user 9's stays open
-      source.addData(Event(4, ts("2024-01-01 11:30:00"), 9, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("sess_et")
-        .as[graft.streaming.Streams.Session].collect().toSeq
-      assert(rows == Seq(graft.streaming.Streams.Session(7, 3,
-        ts("2024-01-01 10:00:00"), ts("2024-01-01 10:10:00"))))
-    } finally q.stop()
-  }
-
-  test("sessionize: a cross-batch straggler older than the open " +
-      "session's reach emits as its own session instead of rewinding " +
-      "the open one; one within reach still merges") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.sessionize(source.toDS(), gapMinutes = 30,
-        allowedLateness = "1 day").writeStream
-      .format("memory").queryName("sess_late")
-      .outputMode("append").start()
-    try {
-      source.addData(
-        Event(1, ts("2024-01-02 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-02 10:10:00"), 7, "view", 1.0))
-      q.processAllAvailable()
-      // a straggler 20h older than the open session's start: far
-      // outside its gap chain — before ADVICE r16 the vacuous merge
-      // test (t − last ≤ gap for any t ≤ last) swallowed it, rewinding
-      // first by 20h; now it emits as its own single-event session
-      source.addData(Event(3, ts("2024-01-01 14:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val stragglers = spark.table("sess_late")
-        .as[graft.streaming.Streams.Session].collect().toSeq
-      assert(stragglers == Seq(graft.streaming.Streams.Session(7, 1,
-        ts("2024-01-01 14:00:00"), ts("2024-01-01 14:00:00"))),
-        s"straggler did not emit as its own session: $stragglers")
-      // a late event INSIDE the open session's reach (≥ first − gap)
-      // still merges rather than fragmenting
-      source.addData(Event(4, ts("2024-01-02 09:45:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      // close the open session via the event-time timeout
-      source.addData(Event(5, ts("2024-01-03 12:00:00"), 9, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("sess_late")
-        .as[graft.streaming.Streams.Session].collect().toSet
-      assert(rows.contains(graft.streaming.Streams.Session(7, 3,
-        ts("2024-01-02 09:45:00"), ts("2024-01-02 10:10:00"))),
-        s"in-reach late event did not merge into the open session: $rows")
-      // and the open session was never rewound across the straggler
-      assert(!rows.exists(s => s.user_id == 7 &&
-          s.first_ts == ts("2024-01-01 14:00:00") && s.n_events > 1),
-        s"open session rewound into the straggler: $rows")
-    } finally q.stop()
-  }
-
-  test("sessionize: a straggler chain bridges into a session that is " +
-      "emitted MID-batch by a split, not only into the end-of-batch " +
-      "open tail") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.sessionize(source.toDS(), gapMinutes = 30,
-        allowedLateness = "1 day").writeStream
-      .format("memory").queryName("sess_bridge")
-      .outputMode("append").start()
-    try {
-      source.addData(
-        Event(1, ts("2024-01-02 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-02 10:10:00"), 7, "view", 1.0))
-      q.processAllAvailable()
-      // one batch: a straggler at 09:25 (outside the open session's
-      // 09:30 reach), a 09:35 that merges and EXTENDS the reach over
-      // the straggler, and an 11:00 that splits. Batch truth is ONE
-      // closed session [09:25, 10:10] n=4 — the chain must bridge
-      // into the session finalized by the mid-batch split, not strand
-      // as a spurious [09:25] while the session emits as [09:35, ...]
-      source.addData(
-        Event(3, ts("2024-01-02 09:25:00"), 7, "click", 1.0),
-        Event(4, ts("2024-01-02 09:35:00"), 7, "click", 1.0),
-        Event(5, ts("2024-01-02 11:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("sess_bridge")
-        .as[graft.streaming.Streams.Session].collect().toSeq
-      assert(rows == Seq(graft.streaming.Streams.Session(7, 4,
-        ts("2024-01-02 09:25:00"), ts("2024-01-02 10:10:00"))),
-        s"mid-batch split did not bridge the straggler chain: $rows")
-    } finally q.stop()
-  }
-
-  test("sessionize splits at the quiet gap INSIDE one micro-batch") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.sessionize(source.toDS(), gapMinutes = 30,
-        allowedLateness = "10 minutes").writeStream
-      .format("memory").queryName("sess_split")
-      .outputMode("append").start()
-    try {
-      // two events an afternoon apart sharing a batch: the
-      // gaps-and-islands rule says TWO sessions — the completed
-      // morning one emits immediately, the evening one stays open
-      source.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-01 10:05:00"), 7, "view", 1.0),
-        Event(3, ts("2024-01-01 18:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("sess_split")
-        .as[graft.streaming.Streams.Session].collect().toSeq
-      assert(rows == Seq(graft.streaming.Streams.Session(7, 2,
-        ts("2024-01-01 10:00:00"), ts("2024-01-01 10:05:00"))),
-        s"gap inside a batch did not split the session: $rows")
-      // the open evening session closes by event-time timeout
-      source.addData(Event(4, ts("2024-01-02 12:00:00"), 9, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("sess_split")
-          .as[graft.streaming.Streams.Session].collect().toSet ==
-        Set(graft.streaming.Streams.Session(7, 2,
-            ts("2024-01-01 10:00:00"), ts("2024-01-01 10:05:00")),
-          graft.streaming.Streams.Session(7, 1,
-            ts("2024-01-01 18:00:00"), ts("2024-01-01 18:00:00"))))
-    } finally q.stop()
-  }
-
   test("streaming URL dedup drops canonical re-crawls across batches") {
     implicit val sq = spark.sqlContext
     val source = MemoryStream[(Long, Timestamp, String)]
@@ -585,101 +445,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
     } finally q.stop()
   }
 
-  test("streamingUpsert keeps latest per key; old events never win") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingUpsert(source.toDS())
-      .writeStream.format("memory").queryName("upsert_test")
-      .outputMode("update").start()
-    try {
-      source.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 7, "purchase", 10.0),
-        Event(2, ts("2024-01-01 11:00:00"), 7, "purchase", 20.0),
-        Event(3, ts("2024-01-01 10:30:00"), 8, "purchase", 5.0))
-      q.processAllAvailable()
-      val b1 = spark.table("upsert_test")
-        .as[(Long, Timestamp, Long, Double, String)].collect().toSet
-      // within one batch, the later event wins for user 7
-      assert(b1 == Set(
-        (7L, ts("2024-01-01 11:00:00"), 2L, 20.0, "U"),
-        (8L, ts("2024-01-01 10:30:00"), 3L, 5.0, "U")))
-      // batch 2: an out-of-order OLDER event for 7 (must not
-      // overwrite), a genuine update for 8, a brand-new key 9
-      source.addData(
-        Event(4, ts("2024-01-01 09:00:00"), 7, "purchase", 99.0),
-        Event(5, ts("2024-01-01 12:00:00"), 8, "purchase", 6.0),
-        Event(6, ts("2024-01-01 12:30:00"), 9, "purchase", 1.0))
-      q.processAllAvailable()
-      val all = spark.table("upsert_test")
-        .as[(Long, Timestamp, Long, Double, String)].collect()
-      // the changelog's LAST emission per key is the merged state
-      val latest = all.groupBy(_._1).map { case (_, rows) =>
-        rows.maxBy(r => (r._2.getTime, r._3))
-      }.toSet
-      assert(latest == Set(
-        (7L, ts("2024-01-01 11:00:00"), 2L, 20.0, "U"), // old ignored
-        (8L, ts("2024-01-01 12:00:00"), 5L, 6.0, "U"),  // updated
-        (9L, ts("2024-01-01 12:30:00"), 6L, 1.0, "U"))) // inserted
-      // user 7's batch-2 changelog row re-emits the UNCHANGED state
-      // (state write is idempotent), never the stale 09:00 value
-      assert(!all.exists(r => r._1 == 7L && r._3 == 4L))
-    } finally q.stop()
-  }
-
-  test("streamingUpsert tombstones: delete, no resurrection, re-insert; " +
-      "replay-parity with the batch latest-change reduction") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingUpsert(source.toDS(),
-        deleteTypes = Set("error"))
-      .writeStream.format("memory").queryName("upsert_tomb")
-      .outputMode("update").start()
-    // the full feed, delivered across three micro-batches below — the
-    // batch-side expectation is computed over this SAME list with the
-    // ev_cdc_merge reduction (max by (ts, event_id), op from kind)
-    val feed = Seq(
-      Event(1, ts("2024-01-01 10:00:00"), 7, "purchase", 10.0),
-      Event(2, ts("2024-01-01 11:00:00"), 8, "purchase", 20.0),
-      // batch 2: tombstone for 7, update for 8
-      Event(3, ts("2024-01-01 12:00:00"), 7, "error", 0.0),
-      Event(4, ts("2024-01-01 12:30:00"), 8, "purchase", 21.0),
-      // batch 3: LATE pre-delete event for 7 (must NOT resurrect),
-      // newer post-delete upsert for 9 then its even newer tombstone
-      Event(5, ts("2024-01-01 11:30:00"), 7, "purchase", 99.0),
-      Event(6, ts("2024-01-01 13:00:00"), 9, "purchase", 1.0),
-      Event(7, ts("2024-01-01 13:30:00"), 9, "error", 0.0))
-    try {
-      source.addData(feed(0), feed(1)); q.processAllAvailable()
-      source.addData(feed(2), feed(3)); q.processAllAvailable()
-      val mid = spark.table("upsert_tomb")
-        .as[(Long, Timestamp, Long, Double, String)].collect()
-        .groupBy(_._1).map { case (_, r) =>
-          r.maxBy(x => (x._2.getTime, x._3)) }.toSet
-      // after batch 2 the changelog's latest rows: 7 deleted, 8 updated
-      assert(mid == Set(
-        (7L, ts("2024-01-01 12:00:00"), 3L, 0.0, "D"),
-        (8L, ts("2024-01-01 12:30:00"), 4L, 21.0, "U")))
-      source.addData(feed(4), feed(5), feed(6)); q.processAllAvailable()
-      val fin = spark.table("upsert_tomb")
-        .as[(Long, Timestamp, Long, Double, String)].collect()
-        .groupBy(_._1).map { case (_, r) =>
-          r.maxBy(x => (x._2.getTime, x._3)) }.toSet
-      // replay parity: the stream's final state per key equals the
-      // batch reduction of the whole feed (ev_cdc_merge's changes
-      // side) — latest (ts, event_id) wins, op derived from its kind
-      val expected = feed.groupBy(_.user_id).map { case (uid, evs) =>
-        val w = evs.maxBy(e => (e.ts.getTime, e.event_id))
-        (uid, w.ts, w.event_id, w.value,
-          if (w.event_type == "error") "D" else "U")
-      }.toSet
-      assert(fin == expected)
-      // and concretely: the late pre-delete event never resurrected 7
-      assert(fin.contains((7L, ts("2024-01-01 12:00:00"), 3L, 0.0, "D")))
-      // 9's lifecycle ended deleted even though it was born after 7 died
-      assert(fin.contains((9L, ts("2024-01-01 13:30:00"), 7L, 0.0, "D")))
-    } finally q.stop()
-  }
-
   test("per-row simhash is bit-identical to the grouped batch form") {
     // the streaming-safe fold and the explode+groupBy reference plan
     // must produce the same fingerprint for every doc
@@ -693,436 +458,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
     val diff = grouped.join(perRow, "doc_id")
       .filter("g <> r").count()
     assert(diff == 0)
-  }
-
-  test("streaming SCD2 closes intervals at type changes across batches") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingScd2(source.toDS())
-      .writeStream.format("memory").queryName("scd2_test")
-      .outputMode("append").start()
-    try {
-      // batch 1, deliberately out of order within the batch: the
-      // event-time sort must still see click,click,view
-      source.addData(
-        Event(3, ts("2024-01-01 10:10:00"), 7, "view", 1.0),
-        Event(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-01 10:05:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val b1 = spark.table("scd2_test")
-        .as[(Long, String, Timestamp, Timestamp, Long)].collect().toSet
-      assert(b1 == Set((7L, "click", ts("2024-01-01 10:00:00"),
-        ts("2024-01-01 10:10:00"), 2L)),
-        "click run closes when view opens; open view run is state only")
-      // batch 2: a new type closes the view run carried in state
-      source.addData(Event(4, ts("2024-01-01 10:20:00"), 7, "purchase", 1.0))
-      q.processAllAvailable()
-      val b2 = spark.table("scd2_test")
-        .as[(Long, String, Timestamp, Timestamp, Long)].collect().toSet
-      assert(b2 == b1 + ((7L, "view", ts("2024-01-01 10:10:00"),
-        ts("2024-01-01 10:20:00"), 1L)))
-      // batch 3: a cross-batch LATE event older than the open run —
-      // the LATE type emits as a zero-length interval anchored at the
-      // open run's start (never an inverted interval), and the open
-      // run — the key's latest truth — is NOT rewound: an older event
-      // must never overwrite newer state (the streamingUpsert rule)
-      source.addData(Event(5, ts("2024-01-01 09:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val b3 = spark.table("scd2_test")
-        .as[(Long, String, Timestamp, Timestamp, Long)].collect()
-      b3.foreach { case (_, _, from, to, _) =>
-        assert(!to.before(from), s"inverted interval [$from, $to)")
-      }
-      assert(b3.toSet == b2 + ((7L, "click",
-        ts("2024-01-01 10:20:00"), ts("2024-01-01 10:20:00"), 1L)))
-      // batch 3b: the SAME late event redelivered (at-least-once
-      // source) must not append a second identical zero-length row
-      // every batch (ADVICE r16) — the run state remembers its last
-      // late emission and dedups the redelivery
-      val nBefore = spark.table("scd2_test").count()
-      source.addData(Event(5, ts("2024-01-01 09:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("scd2_test").count() == nBefore,
-        "redelivered late event re-emitted its zero-length interval")
-      // batch 4: the next in-order type closes the STILL-OPEN purchase
-      // run with its full span — proof the late click did not steal it
-      source.addData(Event(6, ts("2024-01-01 10:40:00"), 7, "view", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("scd2_test")
-          .as[(Long, String, Timestamp, Timestamp, Long)].collect()
-          .toSet == b3.toSet + ((7L, "purchase",
-        ts("2024-01-01 10:20:00"), ts("2024-01-01 10:40:00"), 1L)),
-        "the open run was rewound by a late event")
-    } finally q.stop()
-  }
-
-  test("streaming heavy hitters keep the MG bound across batch splits") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingHeavyHitters(source.toDS(), k = 4)
-      .writeStream.format("memory").queryName("hh_test")
-      .outputMode("update").start()
-    try {
-      def mk(ids: Seq[Long], startId: Long) = ids.zipWithIndex.map {
-        case (u, i) => Event(startId + i,
-          ts("2024-01-01 10:00:00"), u, "click", 1.0)
-      }
-      // skewed stream split across two batches: user 7 dominates,
-      // a long tail of singletons forces decrements at k=4
-      val b1Ids = Seq.fill(30)(7L) ++ (100L to 119L)
-      val b2Ids = Seq.fill(20)(7L) ++ Seq.fill(10)(8L) ++ (200L to 214L)
-      source.addData(mk(b1Ids, 0))
-      q.processAllAvailable()
-      val n1 = spark.table("hh_test").count().toInt
-      source.addData(mk(b2Ids, 1000))
-      q.processAllAvailable()
-      // batch 2 re-emits the complete current summary; the memory
-      // sink appends batches in order, so the rows past the batch-1
-      // snapshot ARE that summary
-      val est = spark.table("hh_test")
-        .as[(String, String, Long)].collect().drop(n1)
-        .map(r => r._2 -> r._3).toMap
-      val all = b1Ids ++ b2Ids
-      val exact = all.groupBy(_.toString).map { case (u, v) =>
-        u -> v.size.toLong }
-      val slack = all.size.toLong / 5 // N/(k+1)
-      (exact.keySet ++ est.keySet).foreach { item =>
-        val e = est.getOrElse(item, 0L)
-        val ex = exact.getOrElse(item, 0L)
-        assert(e <= ex && ex - e <= slack,
-          s"item $item est=$e exact=$ex slack=$slack")
-      }
-      // the dominant user must survive with a near-exact count
-      assert(est.contains("7"), "heavy item evicted")
-    } finally q.stop()
-  }
-
-  test("streaming SCD2 replay equals the batch face's closed intervals") {
-    implicit val sq = spark.sqlContext
-    val events = graft.sources.Tables(spark, "/root/testdata/sf0.001",
-      "events").as[Event].collect().toSeq
-    val source = MemoryStream[Event]
-    val q = Streams.streamingScd2(source.toDS())
-      .writeStream.format("memory").queryName("scd2_replay")
-      .outputMode("append").start()
-    try {
-      source.addData(events)
-      q.processAllAvailable()
-      val streamed = spark.table("scd2_replay")
-        .as[(Long, String, Timestamp, Timestamp, Long)].collect().toSet
-      val batch = graft.queries.Events.scd2
-        .fn(spark, "/root/testdata/sf0.001")
-        .filter("valid_to IS NOT NULL")
-        .selectExpr("user_id", "event_type", "valid_from", "valid_to",
-          "n_events")
-        .as[(Long, String, Timestamp, Timestamp, Long)].collect().toSet
-      assert(streamed == batch,
-        s"stream ${streamed.size} vs batch ${batch.size} closed intervals")
-    } finally q.stop()
-  }
-
-  test("streaming debounce replay equals the batch face's kept events") {
-    implicit val sq = spark.sqlContext
-    val events = graft.sources.Tables(spark, "/root/testdata/sf0.001",
-      "events").as[Event].collect().toSeq
-    val source = MemoryStream[Event]
-    val q = Streams.streamingDebounce(source.toDS())
-      .writeStream.format("memory").queryName("debounce_replay")
-      .outputMode("append").start()
-    try {
-      source.addData(events)
-      q.processAllAvailable()
-      // push the watermark far past every burst's last + gap so every
-      // open burst times out; the sentinel's own burst stays open and
-      // is never emitted
-      source.addData(Event(-1L, ts("2030-01-01 00:00:00"), -1L,
-        "click", 0.0))
-      q.processAllAvailable()
-      val streamed = spark.table("debounce_replay")
-        .as[(Long, String, Long, Timestamp, Long)].collect().toSet
-      val batch = graft.queries.Events.debounce
-        .fn(spark, "/root/testdata/sf0.001")
-        .selectExpr("user_id", "event_type", "event_id", "ts",
-          "n_suppressed")
-        .as[(Long, String, Long, Timestamp, Long)].collect().toSet
-      assert(streamed == batch,
-        s"stream ${streamed.size} vs batch ${batch.size} kept events")
-    } finally q.stop()
-  }
-
-  test("streaming debounce suppresses a gap-chained late event and " +
-    "closes by event time") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingDebounce(source.toDS(), gapMinutes = 10,
-        allowedLateness = "30 minutes").writeStream
-      .format("memory").queryName("debounce_et")
-      .outputMode("append").start()
-    try {
-      source.addData(
-        Event(1, ts("2024-01-01 10:00:00"), 7, "click", 1.0),
-        Event(2, ts("2024-01-01 10:08:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      // burst open (keeper 1, 1 suppressed); nothing emitted yet
-      assert(spark.table("debounce_et").count() == 0)
-      // late out-of-order row inside the burst span chains into it
-      source.addData(Event(3, ts("2024-01-01 10:04:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      assert(spark.table("debounce_et").count() == 0)
-      // another user pushes the watermark past 10:18 → burst closes
-      source.addData(Event(4, ts("2024-01-01 11:00:00"), 9, "view", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("debounce_et")
-        .as[graft.streaming.Streams.Debounced].collect().toSeq
-      assert(rows == Seq(graft.streaming.Streams.Debounced(7, "click",
-        1, ts("2024-01-01 10:00:00"), 2)))
-    } finally q.stop()
-  }
-
-  test("streaming debounce emits a gap-DETACHED cross-batch straggler " +
-      "as its own keeper row instead of swallowing it") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingDebounce(source.toDS(), gapMinutes = 10,
-        allowedLateness = "5 days").writeStream
-      .format("memory").queryName("debounce_straggler")
-      .outputMode("append").start()
-    try {
-      source.addData(Event(10, ts("2024-01-01 12:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      // a straggler 3 HOURS before the open burst's keeper — far
-      // outside its gap chain. The old vacuous t−last≤gap merge
-      // counted it as suppressed; the batch replay emits it as its
-      // own keeper row
-      source.addData(
-        Event(2, ts("2024-01-01 09:00:00"), 7, "click", 1.0),
-        Event(3, ts("2024-01-01 09:05:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val early = spark.table("debounce_straggler")
-        .as[graft.streaming.Streams.Debounced].collect().toSeq
-      assert(early == Seq(graft.streaming.Streams.Debounced(7, "click",
-        2, ts("2024-01-01 09:00:00"), 1L)),
-        s"straggler chain not emitted as its own keeper row: $early")
-      // close the open burst by watermark; its count must NOT include
-      // the stragglers
-      source.addData(Event(99, ts("2030-01-01 00:00:00"), 9, "view", 1.0))
-      q.processAllAvailable()
-      val all = spark.table("debounce_straggler")
-        .as[graft.streaming.Streams.Debounced].collect().toSet
-      assert(all.contains(graft.streaming.Streams.Debounced(7, "click",
-        10, ts("2024-01-01 12:00:00"), 0L)),
-        s"open burst closed with a polluted count: $all")
-    } finally q.stop()
-  }
-
-  test("streaming debounce transitive-bridging divergence (#2): a " +
-      "late in-reach event within gap of the straggler chain keeps " +
-      "the chain separate instead of batch's retroactive merge") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingDebounce(source.toDS(), gapMinutes = 10,
-        allowedLateness = "5 days").writeStream
-      .format("memory").queryName("debounce_bridge")
-      .outputMode("append").start()
-    try {
-      source.addData(Event(10, ts("2024-01-01 12:00:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      // straggler chain at 11:35/11:43 (both < keeper − gap = 11:50)
-      // plus a BRIDGING in-reach event at 11:52: within gap of the
-      // chain's last element (9 min) AND inside the burst's reach.
-      // The batch total order chains 11:35→11:43→11:52→12:00 into ONE
-      // burst (keeper 2, suppressed 3); the stream cannot rewind its
-      // open keeper, so it emits the chain as its own keeper row and
-      // counts the bridge into the burst — the documented divergence
-      // #2 (streamingDebounce scaladoc), pinned here as chosen
-      source.addData(
-        Event(2, ts("2024-01-01 11:35:00"), 7, "click", 1.0),
-        Event(3, ts("2024-01-01 11:43:00"), 7, "click", 1.0),
-        Event(4, ts("2024-01-01 11:52:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val early = spark.table("debounce_bridge")
-        .as[graft.streaming.Streams.Debounced].collect().toSeq
-      assert(early == Seq(graft.streaming.Streams.Debounced(7, "click",
-        2, ts("2024-01-01 11:35:00"), 1L)),
-        s"chain not emitted as its own keeper row: $early")
-      source.addData(Event(99, ts("2030-01-01 00:00:00"), 9, "view", 1.0))
-      q.processAllAvailable()
-      val all = spark.table("debounce_bridge")
-        .as[graft.streaming.Streams.Debounced].collect().toSet
-      assert(all.contains(graft.streaming.Streams.Debounced(7, "click",
-        10, ts("2024-01-01 12:00:00"), 1L)),
-        s"bridging event not folded into the open burst: $all")
-    } finally q.stop()
-  }
-
-  test("streamingScd2 equal-timestamp smaller-id late event does not " +
-      "rewind the open run (byTsThenId tiebreak)") {
-    implicit val sq = spark.sqlContext
-    val source = MemoryStream[Event]
-    val q = Streams.streamingScd2(source.toDS())
-      .writeStream.format("memory").queryName("scd2_tie")
-      .outputMode("append").start()
-    try {
-      // open run: type X anchored at (ts=T, id=5)
-      source.addData(Event(5, ts("2024-01-01 10:00:00"), 7, "X", 1.0))
-      q.processAllAvailable()
-      // cross-batch event with the SAME timestamp but a SMALLER id
-      // and a different type: byTsThenId places it BEFORE the anchor,
-      // so it is late — it must emit the zero-length late interval
-      // and leave the open run as X, not close X and install Y
-      source.addData(Event(3, ts("2024-01-01 10:00:00"), 7, "Y", 1.0))
-      q.processAllAvailable()
-      val mid = spark.table("scd2_tie")
-        .selectExpr("event_type", "n_events")
-        .as[(String, Long)].collect().toSeq
-      assert(mid == Seq(("Y", 1L)),
-        s"tie-late event mishandled (expected one zero-length Y): $mid")
-      // a genuinely newer X event extends the STILL-OPEN X run
-      source.addData(Event(9, ts("2024-01-01 11:00:00"), 7, "Z", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("scd2_tie")
-        .selectExpr("event_type", "n_events")
-        .as[(String, Long)].collect().toSet
-      assert(rows.contains(("X", 1L)),
-        s"open X run was rewound by the tie-late event: $rows")
-    } finally q.stop()
-  }
-
-  test("streamingAttributionLinear replay-parity: per-channel credits " +
-      "match ev_attribution_linear over order-respecting batch splits") {
-    implicit val sq = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    val feed = graft.sources.Tables(spark, sf, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event].collect().toSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val chunks = feed.grouped((feed.size + 2) / 3).toSeq
-    val source = MemoryStream[Event]
-    val q = Streams.streamingAttributionLinear(source.toDS())
-      .writeStream.format("memory").queryName("attr_test")
-      .outputMode("append").start()
-    try {
-      chunks.foreach { c => source.addData(c); q.processAllAvailable() }
-      val got = spark.table("attr_test")
-        .groupBy("channel")
-        .agg(org.apache.spark.sql.functions.sum("n_credits").as("n"),
-          org.apache.spark.sql.functions.sum("cents").as("c"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      val expect = graft.queries.Events.attributionLinear.fn(spark, sf)
-        .collect().map(r => r.getString(0) ->
-          ((r.getLong(1), r.getLong(2)))).toMap
-      assert(got == expect,
-        s"stream credits $got != batch attribution $expect")
-    } finally q.stop()
-  }
-
-  test("streamingConcurrency replay-parity: peak matches ev_concurrency " +
-      "over order-respecting batch splits") {
-    implicit val sq = spark.sqlContext
-    val sf = "/root/testdata/sf0.001"
-    // the full fixture stream, in event order, split into three batches
-    val feed = graft.sources.Tables(spark, sf, "events")
-      .selectExpr("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event].collect().toSeq
-      .sortBy(e => (e.ts.getTime, e.ts.getNanos, e.event_id))
-    val chunks = feed.grouped((feed.size + 2) / 3).toSeq
-    val source = MemoryStream[Event]
-    val q = Streams.streamingConcurrency(source.toDS())
-      .writeStream.format("memory").queryName("conc_test")
-      .outputMode("update").start()
-    try {
-      chunks.foreach { c => source.addData(c); q.processAllAvailable() }
-      // peak is monotone across batches, so max(peak) = final peak
-      val got = spark.table("conc_test")
-        .groupBy("event_type")
-        .agg(org.apache.spark.sql.functions.max("peak").as("peak"))
-        .as[(String, Long)].collect().toMap
-      val expect = graft.queries.Events.concurrency.fn(spark, sf)
-        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got == expect,
-        s"stream peaks $got != batch sweep $expect")
-    } finally q.stop()
-  }
-
-  test("streamingConcurrency cross-batch lateness only UNDER-counts, " +
-      "as documented") {
-    // Three 1-minute intervals overlap at 10:00:30 → batch peak 3.
-    // Streamed with the third arriving a batch LATE (after the other
-    // two were processed and their ends closed by nothing — still
-    // open, but the late event's overlap window has passed), the
-    // documented divergence direction is an under-count, never an
-    // over-count.
-    implicit val sq = spark.sqlContext
-    val a = Event(1, ts("2024-01-01 10:00:00"), 1, "t", 60.0)
-    val b = Event(2, ts("2024-01-01 10:00:10"), 2, "t", 60.0)
-    val late = Event(3, ts("2024-01-01 10:00:20"), 3, "t", 60.0)
-    val tail = Event(4, ts("2024-01-01 12:00:00"), 4, "t", 1.0)
-    val source = MemoryStream[Event]
-    val q = Streams.streamingConcurrency(source.toDS())
-      .writeStream.format("memory").queryName("conc_late")
-      .outputMode("update").start()
-    try {
-      source.addData(a, b); q.processAllAvailable()
-      // `tail` (far future) closes a and b's intervals BEFORE the
-      // late event is seen — the overlap can no longer be observed
-      source.addData(tail); q.processAllAvailable()
-      source.addData(late); q.processAllAvailable()
-      val peak = spark.table("conc_late")
-        .agg(org.apache.spark.sql.functions.max("peak"))
-        .head().getLong(0)
-      val batchPeak = 3L // a, b, late all live at 10:00:30
-      assert(peak == 2L,
-        s"late replay should observe only a+b overlapping, got $peak")
-      assert(peak <= batchPeak, "divergence must be an under-count")
-      // the late interval expired long before the high-water mark
-      // (12:00) — it must be pruned from the emitted live count, not
-      // linger as a stale end (the r10-advice over-count mode). Only
-      // `tail` (open until 12:00:01 > maxT) is genuinely live, so the
-      // late batch emits live=1; a stale late end would read 2.
-      val liveAfterLate = spark.table("conc_late").collect().last
-      assert(liveAfterLate.getAs[Long]("live") == 1L,
-        s"expired late interval must not inflate live: $liveAfterLate")
-    } finally q.stop()
-  }
-
-  test("streamingRfm state matches the batch RFM aggregate across batch splits") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val ev = graft.sources.Tables(spark, "/root/testdata/sf0.001", "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event].collect().toSeq
-    val (b1, b2) = ev.splitAt(ev.size / 3)
-    val source = MemoryStream[Event]
-    val q = Streams.streamingRfm(source.toDS())
-      .writeStream.format("memory").queryName("rfm_state")
-      .outputMode("update").start()
-    try {
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      // last emission per user = final running state; must equal the
-      // batch face's per-user collapse (the ev_rfm pre-quintile
-      // stage, same unix_micros / HALF_UP-cents expressions) under
-      // this arbitrary batch split
-      val streamed = spark.table("rfm_state")
-        .groupBy("user_id")
-        .agg(max("last_us").as("last_us"),
-          max("frequency").as("frequency"),
-          max("monetary_cents").as("monetary_cents"))
-        .as[(Long, Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      val batch = graft.sources.Tables(
-          spark, "/root/testdata/sf0.001", "events")
-        .filter(col("event_type") === "purchase")
-        .groupBy("user_id")
-        .agg(max(unix_micros(col("ts"))).as("last_us"),
-          count(lit(1)).as("frequency"),
-          sum(round(col("value") * 100).cast("long"))
-            .as("monetary_cents"))
-        .as[(Long, Long, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
-      assert(streamed == batch)
-    } finally q.stop()
   }
 
   test("streamingIvfAssign matches the batch assignment across batch splits") {
@@ -1148,111 +483,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
         .select("vec_id", "cell").as[(Long, Long)].collect().toMap
       assert(streamed == batch,
         "streamed cell assignment diverged from the batch argmax")
-    } finally q.stop()
-  }
-
-  test("streamingSkyline folds exact duplicates into counts (bounded state)") {
-    implicit val sq = spark.sqlContext
-    // one frontier point arriving 5 times across 2 batches: the
-    // digests must count all 5 arrivals (batch duplicates-survive
-    // parity) while state holds one (x, y, count) entry — the r11
-    // unbounded-growth hazard was exactly this stream
-    val source = MemoryStream[(String, Long, Long)]
-    val q = Streams.streamingSkyline(
-        source.toDF().toDF("key", "x", "y"))
-      .writeStream.format("memory").queryName("sky_dup")
-      .outputMode("update").start()
-    try {
-      source.addData(("k", 2L, 9L), ("k", 2L, 9L), ("k", 2L, 9L))
-      q.processAllAvailable()
-      source.addData(("k", 2L, 9L), ("k", 2L, 9L))
-      q.processAllAvailable()
-      val last = spark.table("sky_dup").collect().last
-      assert((last.getLong(1), last.getLong(2), last.getLong(3),
-        last.getLong(4), last.getLong(5)) == ((5L, 2L, 9L, 10L, 45L)))
-    } finally q.stop()
-  }
-
-  test("streamingSkyline frontier matches the batch skyline across batch splits") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, lit, pmod}
-    // tie-heavy coordinates so equal-x, equal-y and exact-duplicate
-    // cases all occur; two keys to prove state isolation
-    val rnd = new scala.util.Random(7)
-    val pts = (1 to 200).map(i =>
-      (if (i % 2 == 0) "a" else "b",
-        rnd.nextInt(7).toLong, rnd.nextInt(7).toLong))
-    val (b1, b2) = pts.splitAt(70)
-    val source = MemoryStream[(String, Long, Long)]
-    val q = Streams.streamingSkyline(
-        source.toDF().toDF("key", "x", "y"))
-      .writeStream.format("memory").queryName("sky_state")
-      .outputMode("update").start()
-    try {
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("sky_state")
-        .orderBy("key").collect()
-        .groupBy(_.getString(0)).map { case (k, rs) =>
-          val last = rs.last
-          k -> ((last.getLong(1), last.getLong(2), last.getLong(3),
-            last.getLong(4), last.getLong(5)))
-        }
-      for (k <- Seq("a", "b")) {
-        val batch = graft.operators.Skyline.skyline2d(
-            pts.filter(_._1 == k).map(p => (p._2, p._3)).toDF("x", "y"),
-            "x", "y", bucket = pmod(col("x") + col("y"), lit(3)))
-          .as[(Long, Long)].collect()
-        val expect = (batch.length.toLong, batch.map(_._1).min,
-          batch.map(_._2).max, batch.map(_._1).sum, batch.map(_._2).sum)
-        assert(streamed(k) == expect,
-          s"key $k: streamed=${streamed(k)} batch=$expect")
-      }
-    } finally q.stop()
-  }
-
-  test("streamingCusum (n, S) matches the batch fold; monotone drift alarms") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions._
-    val ev = graft.sources.Tables(spark, "/root/testdata/sf0.001", "events")
-      .select("event_id", "ts", "user_id", "event_type", "value")
-      .as[Event].collect().toSeq
-    // target 0: every event's cents are positive, so S is strictly
-    // increasing and crossing the bar is arrival-order-independent
-    val target = 0L
-    val (b1, b2) = ev.splitAt(ev.size / 4)
-    val source = MemoryStream[Event]
-    val q = Streams.streamingCusum(source.toDS(), target,
-        thresholdCents = 100000L)
-      .writeStream.format("memory").queryName("cusum_state")
-      .outputMode("update").start()
-    try {
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      val streamed = spark.table("cusum_state")
-        .groupBy("event_type")
-        .agg(max("n").as("n"),
-          max_by(col("s_cents"), col("n")).as("s_cents"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      val batch = graft.sources.Tables(
-          spark, "/root/testdata/sf0.001", "events")
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"),
-          sum(round(col("value") * 100).cast("long") - target)
-            .as("s"))
-        .as[(String, Long, Long)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-      assert(streamed == batch)
-      // with target 0 the drift is strictly one-sided (all cents
-      // positive), every type's final S is ~1M cents >> the bar, and
-      // any arrival order crosses — the latch must be set everywhere
-      val alarms = spark.table("cusum_state")
-        .groupBy("event_type")
-        .agg(max_by(col("alarmed"), col("n")).as("alarmed"))
-        .as[(String, Boolean)].collect().toMap
-      assert(alarms.values.forall(identity),
-        s"expected all types latched: $alarms")
     } finally q.stop()
   }
 
@@ -1290,7 +520,7 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .selectExpr("doc_id", "text").as[(Long, String)].collect().toSeq
     val keep = graft.operators.GopherRules
-      .metricsNarrow(docs.toDF("doc_id", "text"))
+      .metrics(docs.toDF("doc_id", "text"))
       .filter(col("keep") === 1L)
       .select("doc_id").as[Long].collect().toSet
     assert(keep.nonEmpty && keep.size < docs.size,
@@ -1312,124 +542,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
         s"gate/batch disagree: gateOnly=${ids -- keep} " +
           s"batchOnly=${keep -- ids}")
     } finally q.stop()
-  }
-
-  test("streamingQualityDrift's final state replays the batch " +
-    "ta_quality_drift rows across batch splits") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.{col, max, struct}
-    val sf = "/root/testdata/sf0.001"
-    val docsDf = spark.read.parquet(s"$sf/documents.parquet")
-    val ref = graft.operators.QualityModel.driftRef(docsDf)
-    assert(ref.nonEmpty && ref.values.forall(_.bounds.nonEmpty),
-      "every fixture source must have a reference slice")
-    assert(ref.values.exists(_.bounds.size == 9),
-      "some reference slice must populate all nine boundaries")
-    // the comparison slice (md5-parity 1), streamed in two batches
-    val odd = docsDf.filter(org.apache.spark.sql.functions.expr(
-        "ascii(substring(md5(cast(doc_id as string)), 1, 1)) % 2") === 1)
-      .selectExpr("source", "doc_id", "text")
-      .as[(String, Long, String)].collect().toSeq
-    val source = MemoryStream[(String, Long, String)]
-    val q = Streams.streamingQualityDrift(
-        source.toDF().toDF("source", "doc_id", "text"), ref)
-      .writeStream.format("memory").queryName("qdrift")
-      .outputMode("update").start()
-    try {
-      val (b1, b2) = odd.splitAt(odd.size / 3)
-      source.addData(b1: _*); q.processAllAvailable()
-      source.addData(b2: _*); q.processAllAvailable()
-      // last emission per source = final running report
-      val streamed = spark.table("qdrift")
-        .groupBy("source")
-        .agg(max(struct(col("n_new"), col("n_old"), col("l1_permille"),
-          col("max_shift_permille"), col("drift_decile"))).as("s"))
-        .selectExpr("source", "s.*")
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(2), r.getLong(1),
-          r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
-      val batch = SparkEntry.queries("ta_quality_drift")(spark, sf)
-        .collect()
-        .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5)))).toMap
-      // a live monitor reports the sources that ARRIVED; the batch
-      // face also rows sources whose comparison slice is empty
-      // (fixture sources hold a single doc-id parity) — for those
-      // the only check is that there was indeed nothing to stream
-      assert(streamed == batch.filter(_._2._2 > 0),
-        s"stream/batch drift reports disagree:\n  stream=$streamed\n" +
-          s"  batch=$batch")
-      assert(batch.values.forall(v => v._2 > 0 || v._1 > 0),
-        "batch face must never row a source with neither slice")
-    } finally q.stop()
-  }
-
-  test("streaming BM25 ingest converges the serving bundle to the " +
-    "one-shot batch append under any micro-batch split; redelivery " +
-    "appends nothing") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Lexical
-    val sf = "/root/testdata/sf0.001"
-    val docs = graft.sources.Tables(spark, sf, "documents")
-      .select("doc_id", "text")
-    val resident = docs.filter(col("doc_id") % 7 =!= 0)
-    val day = docs.filter(col("doc_id") % 7 === 0)
-    val live = "bm25_singest_spec"
-    val twin = "bm25_singestb_spec"
-    try {
-      Lexical.writeIndexTables(Lexical.buildIndex(resident), live,
-        buckets = 8)
-      Lexical.writeIndexTables(Lexical.buildIndex(resident), twin,
-        buckets = 8)
-      Lexical.appendIndexTables(spark, twin, day) // the batch twin
-      val rows = day.as[(Long, String)].collect().toSeq
-      assert(rows.size >= 3, "fixture too small to micro-batch")
-      val source = MemoryStream[(Long, String)]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("bm25_singest_ck").toString
-      val q = Streams.startBm25IngestQuery(
-        source.toDF().toDF("doc_id", "text"), live, ckpt)
-      try {
-        val (b1, b2) = rows.splitAt(rows.size / 2)
-        source.addData(b1: _*); q.processAllAvailable()
-        source.addData(b2: _*); q.processAllAvailable()
-        // at-least-once redelivery: the WHOLE day replays — the
-        // data-level guard must converge it to a zero-row append
-        source.addData(rows: _*); q.processAllAvailable()
-      } finally q.stop()
-      // the stream wrote from its CLONED session; this session planned
-      // over the bundle during the bootstrap build, so its relation
-      // cache is stale — the documented cross-session refresh contract
-      for (t <- Seq("postings", "vocab", "doclen", "scalars"))
-        spark.catalog.refreshTable(s"${live}_$t")
-      val served = Lexical.readIndexTables(spark, live)
-      val batch = Lexical.readIndexTables(spark, twin)
-      assert(served.nDocs == batch.nDocs && served.sumDl == batch.sumDl,
-        "streamed scalars diverged from the batch append")
-      def postingSet(ix: Lexical.Bm25Index) = ix.tf.collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(postingSet(served) == postingSet(batch),
-        "streamed postings diverged from the batch append")
-      val queries = docs.filter(col("doc_id") % 250 === 0)
-      def ranked(ix: Lexical.Bm25Index) =
-        Lexical.rankedFromIndex(ix, queries)
-          .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-      val viaStream = ranked(served)
-      assert(viaStream == ranked(batch),
-        "streamed-bundle probe diverged from the batch append's")
-      assert(viaStream.nonEmpty, "parity vacuous: no ranked rows")
-    } finally {
-      for (n <- Seq(live, twin);
-          t <- Seq("postings", "vocab", "doclen", "scalars", "deltas");
-          sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${n}_$t$sx")
-      // the ingest query's delivery manifest too: a leftover managed-
-      // table DIRECTORY (no catalog entry in the next session) makes
-      // the next same-name saveAsTable throw LOCATION_ALREADY_EXISTS
-      for (n <- Seq(live, twin); sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${n}__manifest$sx")
-    }
   }
 
   test("a REDELIVERED ingest micro-batch cannot resurrect a vector " +
@@ -1475,479 +587,6 @@ class StreamsSpec extends AnyFunSuite with SharedSpark {
       for (x <- Seq(t, s"${t}__scalars", s"${t}__tombstones",
           s"${t}__manifest"); sx <- Seq("", "__stage", "__old"))
         spark.sql(s"DROP TABLE IF EXISTS $x$sx")
-    }
-  }
-
-  test("streaming IVF ingest converges the serving index to the " +
-    "one-shot batch append; probe stays bucket-pruned and redelivery " +
-    "appends nothing") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Ann
-    val sf = "/root/testdata/sf0.001"
-    val emb = graft.sources.Tables(spark, sf, "embeddings")
-    val resident = emb.filter(col("vec_id") % 7 =!= 0)
-    val day = emb.filter(col("vec_id") % 7 === 0)
-    val live = "ivf_singest_spec"
-    val twin = "ivf_singestb_spec"
-    try {
-      val cents = Ann.ivfCentroids(spark, resident, 10,
-        steps = graft.queries.Similarity.IvfSteps)
-      Ann.buildIvfIndex(spark, resident, cents, live, nBuckets = 8)
-      Ann.buildIvfIndex(spark, resident, cents, twin, nBuckets = 8)
-      Ann.appendIvfIndex(day, cents, twin, nBuckets = 8)
-      val rows = day.select("vec_id", "embedding")
-        .as[(Long, Array[Float])].collect().toSeq
-      assert(rows.size >= 3, "fixture too small to micro-batch")
-      val source = MemoryStream[(Long, Array[Float])]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("ivf_singest_ck").toString
-      val q = Streams.startIvfIngestQuery(
-        source.toDF().toDF("vec_id", "embedding"), live, cents, ckpt)
-      try {
-        val (b1, b2) = rows.splitAt(rows.size / 2)
-        source.addData(b1: _*); q.processAllAvailable()
-        source.addData(b2: _*); q.processAllAvailable()
-        source.addData(rows: _*); q.processAllAvailable() // redelivery
-      } finally q.stop()
-      // cross-session cache refresh (see the BM25 ingest test's note)
-      spark.catalog.refreshTable(live)
-      spark.catalog.refreshTable(s"${live}__scalars")
-      def cellSet(t: String) = spark.table(t)
-        .selectExpr("vec_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(cellSet(live) == cellSet(twin),
-        "streamed assignments diverged from the batch append")
-      // the maintained scalar must track the physical count exactly
-      // (redelivered micro-batches add zero)
-      assert(spark.table(s"${live}__scalars")
-          .collect()(0).getLong(0) == spark.table(live).count(),
-        "streamed scalar count drifted from the physical table")
-      val queries = Ann.ivfProbeCells(
-        emb.filter(col("vec_id") < 3), cents, nprobe = 2)
-        .transform(graft.operators.CacheScope.materialize)
-      val probed = Ann.probeIvfIndex(spark, live, queries, 10)
-      val plan = probed.queryExecution.executedPlan.toString
-      assert(plan.contains("SelectedBucketsCount"),
-        s"streamed-index probe scan is not bucket-pruned:\n$plan")
-      val a = probed.collect().map(_.toSeq).toSeq
-      val b = Ann.probeIvfIndex(spark, twin, queries, 10)
-        .collect().map(_.toSeq).toSeq
-      assert(a == b && a.nonEmpty,
-        "streamed-index probe diverged from the batch append's")
-      graft.operators.CacheScope.releaseCheckpoint(queries)
-    } finally {
-      for (t <- Seq(live, twin);
-          sx <- Seq("", "__scalars", "__tombstones", "__stage", "__old",
-            "__scalars__stage", "__scalars__old",
-            // the ingest manifest: a leftover managed-table DIRECTORY
-            // breaks the next session's same-name saveAsTable
-            "__manifest", "__manifest__stage", "__manifest__old"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sx")
-    }
-  }
-
-  test("streaming takedowns converge both serving indexes to the " +
-    "one-shot batch takedown; redelivered ids are no-ops") {
-    implicit val sq = spark.sqlContext
-    import org.apache.spark.sql.functions.col
-    import graft.operators.{Ann, Lexical}
-    val sf = "/root/testdata/sf0.001"
-    // --- IVF ------------------------------------------------------
-    val emb = graft.sources.Tables(spark, sf, "embeddings")
-    val victims = emb.filter(col("vec_id") % 50 === 0).select("vec_id")
-      .as[Long].collect().toSeq
-    assert(victims.size >= 2, "fixture too small to micro-batch")
-    val live = "ivf_stake_spec"
-    val twin = "ivf_stakeb_spec"
-    try {
-      val cents = Ann.ivfCentroids(spark, emb, 10,
-        steps = graft.queries.Similarity.IvfSteps)
-      Ann.buildIvfIndex(spark, emb, cents, live, nBuckets = 8)
-      Ann.buildIvfIndex(spark, emb, cents, twin, nBuckets = 8)
-      import spark.implicits._
-      Ann.tombstoneIvfVectors(spark, twin,
-        victims.toDF("vec_id")) // one-shot batch twin
-      val source = MemoryStream[Long]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("ivf_stake_ck").toString
-      val q = Streams.startIvfTakedownQuery(
-        source.toDF().toDF("vec_id"), live, ckpt)
-      try {
-        val (b1, b2) = victims.splitAt(victims.size / 2)
-        source.addData(b1: _*); q.processAllAvailable()
-        source.addData(b2: _*); q.processAllAvailable()
-        source.addData(victims: _*); q.processAllAvailable() // replay
-      } finally q.stop()
-      spark.catalog.refreshTable(s"${live}__tombstones")
-      def tombs(t: String) = spark.table(s"${t}__tombstones")
-        .as[Long].collect().toSet
-      assert(tombs(live) == tombs(twin) &&
-        tombs(live) == victims.toSet,
-        "streamed tombstones diverged from the batch takedown")
-      val queries = Ann.ivfProbeCells(
-        emb.filter(col("vec_id") < 3), cents, nprobe = 2)
-        .transform(graft.operators.CacheScope.materialize)
-      def probed(t: String) = Ann.probeIvfIndex(spark, t, queries, 10)
-        .collect().map(_.toSeq).toSeq
-      val a = probed(live)
-      assert(a == probed(twin) && a.nonEmpty,
-        "streamed-takedown probe diverged from the batch takedown's")
-      val servedIds = Ann.probeIvfIndex(spark, live, queries, 10)
-        .select("vec_id").as[Long].collect().toSet
-      assert(servedIds.intersect(victims.toSet).isEmpty,
-        "a taken-down vector still serves")
-      graft.operators.CacheScope.releaseCheckpoint(queries)
-    } finally {
-      for (t <- Seq(live, twin);
-          sx <- Seq("", "__scalars", "__tombstones", "__stage", "__old",
-            "__tombstones__stage", "__tombstones__old",
-            "__scalars__stage", "__scalars__old",
-            // the ingest manifest: a leftover managed-table DIRECTORY
-            // breaks the next session's same-name saveAsTable
-            "__manifest", "__manifest__stage", "__manifest__old"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sx")
-    }
-    // --- BM25 -----------------------------------------------------
-    val docs = graft.sources.Tables(spark, sf, "documents")
-      .select("doc_id", "text")
-    val dVictims = docs.filter(col("doc_id") % 50 === 0)
-      .select("doc_id").as[Long].collect().toSeq
-    assert(dVictims.size >= 2, "fixture too small to micro-batch")
-    val bLive = "bm25_stake_spec"
-    val bTwin = "bm25_stakeb_spec"
-    try {
-      Lexical.writeIndexTables(Lexical.buildIndex(docs), bLive,
-        buckets = 8)
-      Lexical.writeIndexTables(Lexical.buildIndex(docs), bTwin,
-        buckets = 8)
-      import spark.implicits._
-      Lexical.removeDocsDeferred(spark, bTwin, dVictims.toDF("doc_id"))
-      val source = MemoryStream[Long]
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("bm25_stake_ck").toString
-      val q = Streams.startBm25TakedownQuery(
-        source.toDF().toDF("doc_id"), bLive, ckpt)
-      try {
-        val (b1, b2) = dVictims.splitAt(dVictims.size / 2)
-        source.addData(b1: _*); q.processAllAvailable()
-        source.addData(b2: _*); q.processAllAvailable()
-        source.addData(dVictims: _*); q.processAllAvailable() // replay
-      } finally q.stop()
-      spark.catalog.refreshTable(s"${bLive}_deltas")
-      val served = Lexical.readIndexTables(spark, bLive)
-      val batch = Lexical.readIndexTables(spark, bTwin)
-      assert(served.nDocs == batch.nDocs && served.sumDl == batch.sumDl,
-        "streamed-takedown scalars diverged from the batch delete " +
-          s"(stream ${served.nDocs}/${served.sumDl} vs " +
-          s"batch ${batch.nDocs}/${batch.sumDl})")
-      val queries = docs.filter(col("doc_id") % 250 === 0)
-      def ranked(ix: Lexical.Bm25Index) =
-        Lexical.rankedFromIndex(ix, queries)
-          .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-      val viaStream = ranked(served)
-      assert(viaStream == ranked(batch) && viaStream.nonEmpty,
-        "streamed-takedown probe diverged from the batch delete's")
-    } finally {
-      for (n <- Seq(bLive, bTwin);
-          t <- Seq("postings", "vocab", "doclen", "scalars", "deltas");
-          sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${n}_$t$sx")
-    }
-  }
-
-  test("versioned state codecs round-trip every field shape (r18 " +
-      "verdict #4 convention)") {
-    import graft.streaming.Streams._
-    // separator-hostile strings, null strings, the null marker as a
-    // VALUE, µs-precision timestamps, negative/NaN doubles, empty and
-    // loaded collections — if any of these corrupts, a restart
-    // silently mutates state instead of restoring it
-    val uglies = Seq("a|b;c,d", "~", "", null, "plain",
-      "%7C already encoded", "日本語")
-    val t1 = ts("2024-01-01 10:00:00"); t1.setNanos(123456000)
-    def rt[S](c: StateCodec[S], s: S): Unit =
-      assert(c.read(c.ver, c.write(s)) === s,
-        s"codec ${c.getClass.getSimpleName} corrupted $s")
-    rt(SessionStateCodec, SessionState(3L, -5L, Long.MaxValue))
-    rt(BurstStateCodec, BurstState(9L, t1, 77L, 0L))
-    for (u <- uglies) {
-      rt(PathStateCodec, PathState(
-        Map(Option(u).getOrElse("null") -> 2L, "email" -> 1L),
-        u, 3L, Long.MinValue))
-      rt(ScdRunStateCodec, ScdRunState(u, t1, 4L, u, -1L))
-      rt(KeyStateCodec, KeyState(1L, t1, 2L, -12.5, u))
-      rt(MgCarryCodec, MgCarry(Map(Option(u).getOrElse("x") -> 5L)))
-    }
-    rt(PathStateCodec, PathState(Map.empty, "", 0L, Long.MinValue))
-    rt(MgCarryCodec, MgCarry(Map.empty))
-    // NaN != NaN under case-class equality — compare the raw bits
-    val nanBack = KeyStateCodec.read(KeyStateCodec.ver,
-      KeyStateCodec.write(KeyState(1L, t1, 2L, Double.NaN, "U")))
-    assert(java.lang.Double.doubleToRawLongBits(nanBack.value) ===
-      java.lang.Double.doubleToRawLongBits(Double.NaN))
-    assert(nanBack.copy(value = 0.0) ===
-      KeyState(1L, t1, 2L, 0.0, "U"))
-    rt(SweepStateCodec, SweepState(Nil, 0L))
-    rt(SweepStateCodec, SweepState(List(1L, 2L, 3L), 9L, 100L))
-    rt(TokenBudgetStateCodec, (0L, 0L))
-    rt(RfmStateCodec, (Long.MinValue, 7L, -42L))
-    rt(CusumStateCodec, (5L, -3L, true))
-    rt(CusumStateCodec, (0L, 0L, false))
-    rt(SkylineStateCodec, Nil)
-    rt(SkylineStateCodec, List((1L, 2L, 3L), (-4L, 5L, 1L)))
-    // Array equality is by reference — compare contents
-    assert(DriftCountsCodec.read(1,
-      DriftCountsCodec.write(Array(1L, 0L, 5L))).toSeq ===
-      Seq(1L, 0L, 5L))
-    assert(DriftCountsCodec.read(1,
-      DriftCountsCodec.write(Array.empty[Long])).isEmpty)
-  }
-
-  test("ScdRunState ver-1 payload migrates: the 3-field pre-r17 form " +
-      "reads with the widened defaults (the envelope's worked example)") {
-    import graft.streaming.Streams._
-    // a literal ver-1 payload as the pre-widening codec would have
-    // written it: (event_type, valid_from millis:nanos, n). Pinned as
-    // a LITERAL so a packing change can't silently redefine what old
-    // checkpoints contain.
-    val v1 = "purchase|1704103200000:123456000|7"
-    val s = ScdRunStateCodec.read(1, v1)
-    val want = ts("2024-01-01 10:00:00"); want.setNanos(123456000)
-    assert(s.event_type === "purchase")
-    assert(s.valid_from === want)
-    assert(s.n === 7L)
-    // the migration: fields that did not exist in ver 1 land on the
-    // fresh-run defaults
-    assert(s.lastLate == null)
-    assert(s.firstId === Long.MinValue)
-    // and the current writer emits ver 2, which reads back identically
-    assert(ScdRunStateCodec.ver === 2)
-    assert(ScdRunStateCodec.read(2, ScdRunStateCodec.write(s)) === s)
-  }
-
-  test("streamingScd2 restores its state from a checkpoint across a " +
-      "query restart (the envelope's restart pin, r18 verdict #4)") {
-    // batch A opens a run per user; the query STOPS; batch B closes
-    // the runs after the restart. The closed intervals' valid_from
-    // and n must come from the RESTORED state — a lost or corrupted
-    // envelope would re-seed the run at batch B and emit wrong
-    // anchors (or refuse to start on a schema mismatch, the exact
-    // r16 outage this envelope exists to end).
-    val base = java.nio.file.Files.createTempDirectory("vstate").toString
-    val (in, out, cp) = (s"$base/in", s"$base/out", s"$base/cp")
-    val schema = "event_id LONG, ts TIMESTAMP, user_id LONG, " +
-      "event_type STRING, value DOUBLE"
-    def start() = Streams.streamingScd2(
-      spark.readStream.schema(schema).parquet(in).as[Event])
-      .writeStream.format("parquet")
-      .option("path", out).option("checkpointLocation", cp)
-      .outputMode("append").start()
-    // batch A: user 7 opens a 2-event "view" run; user 8 opens "cart"
-    Seq(Event(1, ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-        Event(2, ts("2024-01-01 10:05:00"), 7, "view", 1.0),
-        Event(3, ts("2024-01-01 10:00:00"), 8, "cart", 1.0))
-      .toDF().write.parquet(in)
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    assert(spark.read.schema(
-        "user_id LONG, event_type STRING, valid_from TIMESTAMP, " +
-          "valid_to TIMESTAMP, n_events LONG")
-      .parquet(out).count() == 0, "no run closed yet")
-    // batch B after the RESTART: different types close both runs
-    Seq(Event(4, ts("2024-01-01 11:00:00"), 7, "purchase", 1.0),
-        Event(5, ts("2024-01-01 11:00:00"), 8, "purchase", 1.0))
-      .toDF().write.mode("append").parquet(in)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    val got = spark.read.parquet(out)
-      .orderBy("user_id")
-      .collect()
-      .map(r => (r.getLong(0), r.getString(1),
-        r.getTimestamp(2), r.getTimestamp(3), r.getLong(4)))
-      .toSeq
-    assert(got === Seq(
-      (7L, "view", ts("2024-01-01 10:00:00"),
-        ts("2024-01-01 11:00:00"), 2L),
-      (8L, "cart", ts("2024-01-01 10:00:00"),
-        ts("2024-01-01 11:00:00"), 1L)),
-      s"state did not survive the restart: $got")
-  }
-
-  test("decodeState refuses a payload from a NEWER binary instead of " +
-      "mis-parsing it as the current shape (downgrade guard, r19 " +
-      "advisor)") {
-    import graft.streaming.Streams._
-    // current and every shipped-older version still decode
-    val cur = ScdRunStateCodec.write(ScdRunState("view",
-      ts("2024-01-01 10:00:00"), 2L))
-    assert(decodeState(ScdRunStateCodec,
-      VersionedState(ScdRunStateCodec.ver, cur)).n === 2L)
-    assert(decodeState(ScdRunStateCodec,
-      VersionedState(1, "view|1704103200000:0|2")).n === 2L)
-    // a ver-(cur+1) payload — what a future binary would write — must
-    // throw, NOT fall through the codec's open-ended current-shape
-    // case (a rolled-back binary restoring it would silently corrupt)
-    val e = intercept[IllegalStateException] {
-      decodeState(ScdRunStateCodec,
-        VersionedState(ScdRunStateCodec.ver + 1, cur))
-    }
-    assert(e.getMessage.contains("newer than this binary"),
-      s"wrong refusal: ${e.getMessage}")
-  }
-
-  test("lineageStamp is stable across restarts from an intact " +
-      "checkpoint and minted fresh when the path is wiped and reused " +
-      "— prior-lineage manifest rows cannot swallow the new lineage's " +
-      "first batches (r19 advisor, medium)") {
-    import graft.operators.Partitioning
-    val cp = java.nio.file.Files
-      .createTempDirectory("lineage_spec").toString
-    val t = "lineage_spec_tbl"
-    try {
-      val s1 = Streams.lineageStamp(spark, cp)
-      assert(Streams.lineageStamp(spark, cp) === s1,
-        "stamp not stable across reads of an intact checkpoint")
-      // lineage 1 delivers its batch 0
-      var ran = 0
-      def key(stamp: String, b: Long) = Some(f"ingest:$stamp:$b%012d")
-      assert(Partitioning.deliverOnce(spark, t, key(s1, 0)) { ran += 1 })
-      assert(!Partitioning.deliverOnce(spark, t, key(s1, 0)) { ran += 1 },
-        "redelivered batch 0 not skipped")
-      assert(ran === 1)
-      // the drain-and-restart-fresh procedure: wipe the checkpoint,
-      // REUSE the same path — batch ids restart at 0
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File(cp)).deleteRecursively()
-      val s2 = Streams.lineageStamp(spark, cp)
-      assert(s2 !== s1, "wiped checkpoint did not mint a new lineage")
-      // the new lineage's batch 0 must RUN — under the old
-      // path-scoped key it would collide with lineage 1's manifest
-      // row and be silently skipped (un-indexed data loss)
-      assert(Partitioning.deliverOnce(spark, t, key(s2, 0)) { ran += 1 },
-        "fresh lineage's first batch was swallowed by the prior " +
-          "lineage's manifest row")
-      assert(ran === 2)
-    } finally {
-      for (sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${t}__manifest$sx")
-    }
-  }
-
-  test("streaming BM25 ingest restarts from its checkpoint: batches " +
-      "before and after the restart each land exactly once (r19 " +
-      "verdict #6)") {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Lexical
-    val sf = "/root/testdata/sf0.001"
-    val docs = graft.sources.Tables(spark, sf, "documents")
-      .select("doc_id", "text")
-    val resident = docs.filter(col("doc_id") % 7 =!= 0)
-    val dayA = docs.filter(col("doc_id") % 14 === 0)
-    val dayB = docs.filter(col("doc_id") % 14 === 7)
-    val live = "bm25_restart_spec"
-    val twin = "bm25_restartb_spec"
-    val base = java.nio.file.Files
-      .createTempDirectory("bm25_restart").toString
-    val (in, cp) = (s"$base/in", s"$base/cp")
-    try {
-      Lexical.writeIndexTables(Lexical.buildIndex(resident), live,
-        buckets = 8)
-      Lexical.writeIndexTables(Lexical.buildIndex(resident), twin,
-        buckets = 8)
-      Lexical.appendIndexTables(spark, twin, dayA)
-      Lexical.appendIndexTables(spark, twin, dayB)
-      def start() = Streams.startBm25IngestQuery(
-        spark.readStream.schema("doc_id LONG, text STRING").parquet(in),
-        live, cp)
-      dayA.write.parquet(in)
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      val stamp = Streams.lineageStamp(spark, cp)
-      dayB.write.mode("append").parquet(in)
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      assert(Streams.lineageStamp(spark, cp) === stamp,
-        "restart from an intact checkpoint changed the lineage — " +
-          "redelivery dedup across restarts would break")
-      for (t <- Seq("postings", "vocab", "doclen", "scalars"))
-        spark.catalog.refreshTable(s"${live}_$t")
-      // exactly once: dayA must not re-apply on the restart (the
-      // scalars would double-count), dayB must not be lost
-      val served = Lexical.readIndexTables(spark, live)
-      val batch = Lexical.readIndexTables(spark, twin)
-      assert(served.nDocs == batch.nDocs && served.sumDl == batch.sumDl,
-        "restarted stream's scalars diverged from the batch appends")
-      val queries = docs.filter(col("doc_id") % 250 === 0)
-      val viaStream = Lexical.rankedFromIndex(served, queries)
-        .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq
-      assert(viaStream == Lexical.rankedFromIndex(batch, queries)
-          .orderBy("q_id", "rnk").collect().map(_.toSeq).toSeq,
-        "restarted stream's probe diverged from the batch appends'")
-      assert(viaStream.nonEmpty, "parity vacuous: no ranked rows")
-    } finally {
-      for (n <- Seq(live, twin);
-          t <- Seq("postings", "vocab", "doclen", "scalars", "deltas");
-          sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${n}_$t$sx")
-      for (n <- Seq(live, twin); sx <- Seq("", "__stage", "__old"))
-        spark.sql(s"DROP TABLE IF EXISTS ${n}__manifest$sx")
-    }
-  }
-
-  test("streaming IVF ingest restarts from its checkpoint: batches " +
-      "before and after the restart each land exactly once (r19 " +
-      "verdict #6)") {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.Ann
-    val sf = "/root/testdata/sf0.001"
-    val emb = graft.sources.Tables(spark, sf, "embeddings")
-    val resident = emb.filter(col("vec_id") % 7 =!= 0)
-    val dayA = emb.filter(col("vec_id") % 14 === 0)
-      .select("vec_id", "embedding")
-    val dayB = emb.filter(col("vec_id") % 14 === 7)
-      .select("vec_id", "embedding")
-    val live = "ivf_restart_spec"
-    val twin = "ivf_restartb_spec"
-    val base = java.nio.file.Files
-      .createTempDirectory("ivf_restart").toString
-    val (in, cp) = (s"$base/in", s"$base/cp")
-    try {
-      val cents = Ann.ivfCentroids(spark, resident, 10,
-        steps = graft.queries.Similarity.IvfSteps)
-      Ann.buildIvfIndex(spark, resident, cents, live, nBuckets = 8)
-      Ann.buildIvfIndex(spark, resident, cents, twin, nBuckets = 8)
-      Ann.appendIvfIndex(dayA, cents, twin, nBuckets = 8)
-      Ann.appendIvfIndex(dayB, cents, twin, nBuckets = 8)
-      def start() = Streams.startIvfIngestQuery(
-        spark.readStream
-          .schema("vec_id LONG, embedding ARRAY<FLOAT>").parquet(in),
-        live, cents, cp)
-      dayA.write.parquet(in)
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      val stamp = Streams.lineageStamp(spark, cp)
-      dayB.write.mode("append").parquet(in)
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      assert(Streams.lineageStamp(spark, cp) === stamp,
-        "restart from an intact checkpoint changed the lineage")
-      spark.catalog.refreshTable(live)
-      spark.catalog.refreshTable(s"${live}__scalars")
-      def cellSet(t: String) = spark.table(t)
-        .selectExpr("vec_id", "cell").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(cellSet(live) == cellSet(twin),
-        "restarted stream's assignments diverged from the batch appends")
-      assert(spark.table(s"${live}__scalars")
-          .collect()(0).getLong(0) == spark.table(live).count(),
-        "restarted stream's scalar count drifted from the physical table")
-    } finally {
-      for (t <- Seq(live, twin);
-          sx <- Seq("", "__scalars", "__tombstones", "__stage", "__old",
-            "__scalars__stage", "__scalars__old",
-            "__manifest", "__manifest__stage", "__manifest__old"))
-        spark.sql(s"DROP TABLE IF EXISTS $t$sx")
     }
   }
 }

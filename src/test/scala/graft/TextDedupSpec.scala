@@ -11,6 +11,14 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
   private def docs = Tables(spark, sf, "documents")
 
+  /** Collect the LSH candidate pairs (doc_a, doc_b, shared_bands),
+    * then release the band table the lazy plan persisted. */
+  private def candidateRows(d: org.apache.spark.sql.DataFrame,
+                            perms: Int, nBands: Int) = {
+    val (cand, bd) = TextDedup.lshCandidatesLazy(d, perms, nBands)
+    try cand.collect() finally bd.unpersist(blocking = false)
+  }
+
   test("paragraph dedup: df>=3 scrubbed, df=2 kept, all-scrubbed doc " +
       "survives empty, para order stable") {
     import spark.implicits._
@@ -127,8 +135,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("lshCandidates works at non-default (numPerms=6, bands=3)") {
-    val cand = TextDedup.lshCandidates(docs, numPerms = 6, nBands = 3)
-    val rows = cand.collect()
+    val rows = candidateRows(docs, perms = 6, nBands = 3)
     assert(rows.nonEmpty)
     // shared_bands bounded by the band count; pairs ordered a < b
     rows.foreach { r =>
@@ -192,8 +199,8 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       (0 until 10).map(i => (i.toLong + 10, texts(i)))).toDF(
       "doc_id", "text")
     Seq((8, 2), (8, 4), (6, 3)).foreach { case (perms, nBands) =>
-      val pairs = TextDedup.lshCandidates(dup, perms, nBands)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val pairs = candidateRows(dup, perms, nBands)
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       (0 until 10).foreach { i =>
         val hit = pairs.find(p => p._1 == i && p._2 == i + 10)
         assert(hit.nonEmpty, s"($perms,$nBands): missing pair $i")
@@ -244,8 +251,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     assert(split.size == nDocs, "every document assigned")
     assert(split.values.map(_._2).toSet.subsetOf(
       Set("train", "val", "test")))
-    val cand = TextDedup.lshCandidates(docs, 8, 2)
-      .select("doc_a", "doc_b").collect()
+    val cand = candidateRows(docs, 8, 2)
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(cand.nonEmpty, "fixture must exercise the property")
     cand.foreach { case (a, b) =>
@@ -259,8 +265,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
     // banding theory: rows-per-band shrinks → collision probability
     // rises → the candidate set can only grow
     def pairs(nBands: Int) =
-      TextDedup.lshCandidates(docs, 8, nBands)
-        .select("doc_a", "doc_b").collect()
+      candidateRows(docs, 8, nBands)
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     val twoBands = pairs(2)
     val fourBands = pairs(4)
