@@ -13,7 +13,8 @@ import org.apache.spark.sql.SparkSession
   * all reused) maps, the r12-verdict-#5 separation of compile from
   * execute. A query that throws is reported with value -1 and its
   * message in the `errors` map rather than silently recording a
-  * fast time.
+  * fast time. A full-catalog run then times the data-path kernel
+  * cells ([[datapathBench]]) with the same rep count.
   *
   * The regression gate is SELF-ARBITRATING (r9 verdict #1: a 5.9×
   * flag on dd_curation_pipeline could not be settled because the
@@ -107,15 +108,8 @@ object Bench {
       f"[bench] host calib: cpu $calib%.3f s, shuffle $calibSh%.3f s")
     // optional args = subset of query names, for local iteration on one
     // query without paying for the whole catalog
-    // SPARK_GRAFT_SKEW_BENCH=only: run just the skew-evidence section
-    // without paying for the catalog. On an idle same-frame host the
-    // measured cells are SPLICED into the detail record's skew
-    // section (the controlled-seeding path — see the skewOnly block
-    // below); the catalog queries/total are never touched.
-    val skewOnly = sys.env.get("SPARK_GRAFT_SKEW_BENCH").contains("only")
     val selected =
-      if (skewOnly) Seq.empty
-      else if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
+      if (args.isEmpty) SparkEntry.queries.toSeq.sortBy(_._1)
       else args.toSeq.map(n => n -> SparkEntry.queries(n))
     // one timed query = `reps` purge+run cycles, median reported.
     // Purge discipline between runs: drop persisted intermediates so
@@ -228,16 +222,6 @@ object Bench {
       }
       (median, err, cold, warm)
     }
-    // skew evidence runs BEFORE the catalog loop (r11 verdict #2):
-    // measured after 500+ query executions the same cells read 2-6×
-    // slower with the distortion landing UNEVENLY — the highly
-    // parallel salted/uniform cells absorb the loaded JVM's GC and
-    // code-cache pressure while the single-task plain-skew sort
-    // barely moves, which inverted the salted-wins-on-skew result
-    // the fixture actually shows in a controlled context (r11:
-    // scd2 5.79 vs 5.87 "tie" in the driver record; 3.0 vs 5.3 in a
-    // fresh JVM). The host calib above has already absorbed JVM
-    // warm-up, so this position is the controlled frame.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
     val sfName = new java.io.File(sfDir).getName
@@ -249,21 +233,15 @@ object Bench {
             java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
         else None
       } catch { case _: Exception => None }
-    // SKEW-MATRIX GUARD (r12 verdict #1): the skew cells carry the
-    // repo's measured salting claims, and three rounds running a
-    // loaded-host closing refresh could overwrite the controlled
-    // matrix with physically-backwards noise (r12: scd2_plain_uniform
-    // 13.6 s vs plain_skew 6.5 s at calib_sh 2.4× the builder's).
-    // The run's calib probes are compared against the floor file's
-    // frame (median of the per-query calibs recorded when each floor
-    // was set — the best-evidenced picture of this host unloaded);
-    // past SkewCalibGuard× on either probe the host is LOADED and
-    // the previous record's controlled cells are CARRIED FORWARD
-    // verbatim (context "carried") instead of re-measured. A loaded
-    // host with no controlled matrix to carry still measures, but
-    // the record says "loaded" so the cells can never be quoted as
-    // controlled evidence. skewPlan is the pure decision kernel
-    // (BenchFormatSpec pins it).
+    // LOADED-HOST GUARD: a loaded-host refresh must not overwrite
+    // controlled datapath cells with noise, nor fail a catalog flag
+    // on an uncontrolled frame. The run's calib probes are compared
+    // against the floor file's frame (median of the per-query calibs
+    // recorded when each floor was set — the best-evidenced picture
+    // of this host unloaded); past SkewCalibGuard× on either probe,
+    // or with the launch loadavg past LoadavgGate, the host is
+    // LOADED. hostLoaded is the pure predicate (BenchFormatSpec pins
+    // it).
     val floorFrame: Option[(Double, Double)] =
       readText(floorPath(detailPath)).flatMap { txt =>
         // contains, not exists(_ != _): a record MISSING its frame
@@ -290,126 +268,6 @@ object Bench {
         f"${floorFrame.map(_._2).getOrElse(-1.0)}%.2f s " +
         f"(guard ${SkewCalibGuard}x), loadavg $loadavg%.2f " +
         f"(gate $LoadavgGate)")
-    val prevSkewTxt = readText(detailPath)
-    // the carried cells are only controlled evidence in THEIR frame:
-    // a previous record measured under a different sf/cpus/meas must
-    // not be carried forward as if it were this run's configuration
-    // (r13 advice #3 — floorFrame is frame-checked, the carry wasn't)
-    // .contains, not .forall: a record missing sf/cpus must read
-    // FOREIGN-frame, not vacuously same-frame — detailJson always
-    // writes both, so absence means a hand-edited/truncated record
-    // whose cells must not become carry/splice eligible (r14 advice #4)
-    val prevSkewFrameOk = prevSkewTxt.exists { t =>
-      parseDetailField(t, "sf").contains(sfName) &&
-        parseDetailField(t, "cpus").contains(cpus) &&
-        parseDetailField(t, "meas").getOrElse("count") == Meas
-    }
-    val prevSkewCells =
-      if (prevSkewFrameOk)
-        prevSkewTxt.map(parseSkewBench).getOrElse(Map.empty)
-      else Map.empty[String, Double]
-    // None = the record predates the context tag entirely — r13
-    // verdict #1: the ONE such incumbent is the r12 loaded-closing-
-    // host matrix (physically-backwards cells at calib_sh 2.4× the
-    // builder frame), so "no tag" must read UNTRUSTED, not controlled
-    val prevSkewCtx: Option[String] = prevSkewTxt
-      .flatMap(t => parseDetailField(t, "skew_bench_context"))
-    val skewReps = math.max(1,
-      sys.env.get("SPARK_GRAFT_SKEW_REPS")
-        .flatMap(s => scala.util.Try(s.trim.toInt).toOption)
-        .getOrElse(3))
-    // skewDevs: Some(set) iff the per-cell deviation guard COMPARED
-    // (a controlled fresh measure over a carried controlled matrix);
-    // None on carry/loaded/no-prior paths — absence of the tag must
-    // not read as "guard ran, clean" (r14 verdict #1/#2: a controlled
-    // run's noisy cell silently replaced a clean carried reading with
-    // no flag). Deviating cells are re-repped once, focused; a cell
-    // still >SkewDeviationFactor× off after arbitration ships, but
-    // NAMED in the record so notes-vs-record drift is self-reporting.
-    val (skew, skewCtx, skewDevs)
-        : (Map[String, Double], String, Option[Set[String]]) =
-      if (args.nonEmpty && !skewOnly) (Map.empty, "", None)
-      else if (sys.env.get("SPARK_GRAFT_SKEW_BENCH").contains("0"))
-        // disabled, but a full run still overwrites the detail record:
-        // carry the previous matrix forward instead of silently
-        // destroying the controlled evidence the guard machinery
-        // exists to protect — under the provenance-preserving tag
-        // (carrying a 'loaded' matrix must not re-tag it 'carried',
-        // which skewPlan treats as controlled-equivalent)
-        (prevSkewCells, carryCtx(prevSkewCells, prevSkewCtx), None)
-      else skewPlan(loadedHost, prevSkewCells, prevSkewCtx) match {
-        case (false, ctx) =>
-          System.err.println(
-            s"[bench] skew bench NOT re-measured (host loaded): " +
-              s"carrying the previous controlled matrix, context=$ctx")
-          (prevSkewCells, ctx, None)
-        case (true, ctx) =>
-          try {
-            var cells = skewBench(spark, skewReps)
-            val guardArmed = ctx == "controlled" &&
-              prevSkewCells.nonEmpty &&
-              prevSkewCtx.exists(c => c == "controlled" || c == "carried")
-            val devs: Option[Set[String]] =
-              if (!guardArmed) None
-              else {
-                val first = skewDeviations(cells, prevSkewCells)
-                if (first.nonEmpty) {
-                  System.err.println(s"[bench] skew cells deviate >" +
-                    s"${SkewDeviationFactor}x from the carried " +
-                    s"controlled matrix: ${first.toSeq.sorted
-                      .mkString(", ")} -- re-repping those cells")
-                  cells = cells ++ skewBench(spark, skewReps, only = first)
-                }
-                val stillOff = skewDeviations(cells, prevSkewCells)
-                for (k <- stillOff.toSeq.sorted) System.err.println(
-                  f"[bench] skew $k CONFIRMED deviant after re-rep: " +
-                    f"${cells(k)}%.3f s vs carried " +
-                    f"${prevSkewCells(k)}%.3f s -- tagged in the record")
-                Some(stillOff)
-              }
-            (cells, ctx, devs)
-          } catch { case e: Exception =>
-            // same carry rule as the disabled path: an OOM or an
-            // agreePairs mismatch must not let the full-run detail
-            // overwrite destroy the carried controlled matrix
-            System.err.println(s"[bench] skew bench skipped " +
-              s"(previous matrix carried): $e")
-            (prevSkewCells, carryCtx(prevSkewCells, prevSkewCtx), None)
-          }
-      }
-    // SPARK_GRAFT_SKEW_BENCH=only exists to SEED the controlled
-    // matrix from an idle host without paying for the catalog: the
-    // measured cells are spliced into the existing detail record
-    // (everything else untouched) so the next loaded-host closing
-    // refresh has sound controlled evidence to carry. A loaded host
-    // never splices — skewPlan already refused to measure fresh —
-    // and neither does a FOREIGN-FRAME host: a record whose
-    // sf/cpus/meas differ from this run has no floor frame to judge
-    // "idle" against (hostLoaded degrades to false), so without the
-    // prevSkewFrameOk gate a 4-thread laptop could stamp its cells
-    // into a 32-cpu record as controlled — the same laundering shape
-    // the provenance fix closes on the carry path.
-    if (skewOnly) {
-      if (!prevSkewFrameOk) System.err.println(
-        s"[bench] skew-only run NOT spliced: $detailPath is a " +
-          "different sf/cpus/meas frame than this run")
-      else if (skew.nonEmpty && skewCtx == "controlled") {
-        prevSkewTxt.flatMap(
-          spliceSkewBench(_, skew, skewCtx, skewDevs)) match {
-          case Some(patched) =>
-            java.nio.file.Files.write(
-              java.nio.file.Paths.get(detailPath),
-              (patched + "\n").getBytes("UTF-8"))
-            System.err.println(
-              s"[bench] controlled skew matrix spliced into $detailPath")
-          case None => System.err.println(
-            s"[bench] $detailPath has no skew_bench section to " +
-              "splice -- controlled cells printed above only")
-        }
-      } else System.err.println(
-        s"[bench] skew-only run NOT spliced (context=$skewCtx): " +
-          "an idle host is required to seed controlled evidence")
-    }
     var coldMap = Map.empty[String, Double]
     var warmMap = Map.empty[String, Double]
     val results = selected.map { case (name, _) =>
@@ -425,8 +283,8 @@ object Bench {
     // destroy the regression baseline for everything else. Subset
     // timings land in the detail file only when the caller names one
     // explicitly.
-    val writeDetail = !skewOnly &&
-      (args.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_DETAIL"))
+    val writeDetail =
+      args.isEmpty || sys.env.contains("SPARK_GRAFT_BENCH_DETAIL")
     // regression gate BEFORE overwriting: r8's 36→52s drift hid inside
     // a total that still passed the 2× bar — per-query comparison
     // against the last recorded run is what actually catches a cluster
@@ -551,7 +409,7 @@ object Bench {
           // the arbitration consulted the calib probes but never the
           // loadavg leg. An uncontrolled frame demotes a failed rerun
           // to frame_noise: carried, non-authoritative, not counted
-          // as unresolved — the catalog-flag analogue of the skew
+          // as unresolved — the catalog-flag analogue of the datapath
           // section's carry-on-loaded-host stance.
           // LAUNCH loadavg only, never arbitration-time: by the gate
           // the run's OWN 200 queries on 32 threads have pushed the
@@ -621,14 +479,12 @@ object Bench {
     } catch { case e: Exception =>
       System.err.println(s"[bench] regression gate skipped: $e")
     }
-    // DATA-PATH meter (r17 verdict #2) — same decision kernel and
-    // guard discipline as the skew matrix: controlled host measures,
-    // loaded host carries the previous controlled cells, a fresh
-    // controlled cell deviating >2× from its carried value is
+    // DATA-PATH meter (r17 verdict #2): controlled host measures,
+    // loaded host carries the previous controlled cells (skewPlan),
+    // a fresh controlled cell deviating >2× from its carried value is
     // re-repped once and named in the record if it persists.
     //
-    // POSITION: deliberately AFTER the catalog loop and its gate —
-    // the opposite choice from the skew matrix, for a reason. The
+    // POSITION: deliberately AFTER the catalog loop and its gate. The
     // section compiles ~60 generated classes and churns GC/code
     // cache; run before the catalog it shifted the whole catalog's
     // JVM frame and manufactured 8 false floor flags on its first
@@ -638,15 +494,31 @@ object Bench {
     // to its own carried value, guarded by the same calib gate), so
     // what they need is positional CONSISTENCY, not a pristine JVM —
     // fixed-position post-catalog gives them exactly that every run.
+    val prevDetailTxt = readText(detailPath)
+    // the carried cells are only controlled evidence in THEIR frame:
+    // a previous record measured under a different sf/cpus/meas must
+    // not be carried forward as if it were this run's configuration
+    // (r13 advice #3 — floorFrame is frame-checked, the carry wasn't)
+    // .contains, not .forall: a record missing sf/cpus must read
+    // FOREIGN-frame, not vacuously same-frame — detailJson always
+    // writes both, so absence means a hand-edited/truncated record
+    // whose cells must not become carry eligible (r14 advice #4)
+    val prevFrameOk = prevDetailTxt.exists { t =>
+      parseDetailField(t, "sf").contains(sfName) &&
+        parseDetailField(t, "cpus").contains(cpus) &&
+        parseDetailField(t, "meas").getOrElse("count") == Meas
+    }
     val prevDpCells =
-      if (prevSkewFrameOk)
-        prevSkewTxt.map(parseDatapathBench).getOrElse(Map.empty)
+      if (prevFrameOk)
+        prevDetailTxt.map(parseDatapathBench).getOrElse(Map.empty)
       else Map.empty[String, Double]
-    val prevDpCtx: Option[String] = prevSkewTxt
+    // None = the record predates the context tag: unknown provenance,
+    // which skewPlan never treats as controlled
+    val prevDpCtx: Option[String] = prevDetailTxt
       .flatMap(t => parseDetailField(t, "datapath_bench_context"))
     val (datapath, dpCtx, dpDevs)
         : (Map[String, Double], String, Option[Set[String]]) =
-      if (skewOnly || args.nonEmpty) (Map.empty, "", None)
+      if (args.nonEmpty) (Map.empty, "", None)
       else if (sys.env.get("SPARK_GRAFT_DATAPATH_BENCH").contains("0"))
         (prevDpCells, carryCtx(prevDpCells, prevDpCtx), None)
       else skewPlan(loadedHost, prevDpCells, prevDpCtx) match {
@@ -657,7 +529,7 @@ object Bench {
           (prevDpCells, ctx, None)
         case (true, ctx) =>
           try {
-            var cells = datapathBench(spark, sfDir, skewReps)
+            var cells = datapathBench(spark, sfDir, reps)
             val guardArmed = ctx == "controlled" &&
               prevDpCells.nonEmpty &&
               prevDpCtx.exists(c => c == "controlled" || c == "carried")
@@ -671,7 +543,7 @@ object Bench {
                     s"controlled cells: ${first.toSeq.sorted
                       .mkString(", ")} -- re-repping those cells")
                   cells = cells ++
-                    datapathBench(spark, sfDir, skewReps, only = first)
+                    datapathBench(spark, sfDir, reps, only = first)
                 }
                 val stillOff = skewDeviations(cells, prevDpCells)
                 for (k <- stillOff.toSeq.sorted) System.err.println(
@@ -690,8 +562,8 @@ object Bench {
     if (writeDetail) {
       java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
         (detailJson(results, reps, sfName, calib, cpus, reruns, calib2,
-          unresolvedFlags, skew, calibSh, calibSh2, skewCtx,
-          coldMap, warmMap, skewDevs,
+          unresolvedFlags, calibSh = calibSh, calibSh2 = calibSh2,
+          coldMap = coldMap, warmMap = warmMap,
           datapath = datapath, datapathCtx = dpCtx,
           datapathDevs = dpDevs, loadavg = loadavg,
           // 0 whenever the loaded predicate fires (the loadavg leg
@@ -700,7 +572,7 @@ object Bench {
           // load signal — a first-ever quiet-launch run must not
           // self-report "controlled" off loadavg alone when the calib
           // legs had nothing to compare against (same
-          // unknown-provenance rule as the skew context tag)
+          // unknown-provenance rule as the datapath context tag)
           controlled = if (loadedHost) 0
             else if (floorFrame.isEmpty) -1 else 1) + "\n")
           .getBytes("UTF-8"))
@@ -768,10 +640,7 @@ object Bench {
             "not updated")
       } catch { case e: Exception =>
         System.err.println(s"[bench] floor update skipped: $e") }
-    } else if (skewOnly) System.err.println(
-      s"[bench] skew-only run: catalog record in $detailPath " +
-        "untouched (only the skew section may have been spliced above)")
-    else System.err.println(
+    } else System.err.println(
       s"[bench] subset run: $detailPath left untouched (set " +
         "SPARK_GRAFT_BENCH_DETAIL to record subset timings)")
     val line = headline(results, reps, sfName, detailPath, reruns)
@@ -784,7 +653,7 @@ object Bench {
     // best-effort, never fails the run, full-catalog runs only (a
     // subset run's partial total must not masquerade as a catalog
     // record — same rule as the detail record above).
-    if (args.isEmpty && !skewOnly) {
+    if (args.isEmpty) {
       try java.nio.file.Files.write(
         java.nio.file.Paths.get(sys.env.getOrElse(
           "SPARK_GRAFT_BENCH_LAST", "BENCH_LAST.json")),
@@ -793,308 +662,6 @@ object Bench {
         System.err.println(s"[bench] BENCH_LAST write skipped: $e") }
     }
     spark.stop()
-  }
-
-  /** Skew-evidence harness (r10 verdict #5): the salted operators'
-    * 100×-scale claims, MEASURED instead of argued. Synthesizes two
-    * deterministic in-memory fixtures — one with a hot key carrying
-    * ~90% of the mass, one uniform — and times the plain vs the
-    * skew-hardened form of the same computation on each:
-    *
-    *   - `join`: plain shuffle join vs
-    *     [[graft.operators.Partitioning.adaptiveSaltedJoin]] (the
-    *     right side is sized past the broadcast threshold so the
-    *     plain form is a real sort-merge join; AQE stays at its
-    *     session defaults — the comparison includes whatever runtime
-    *     splitting Spark already does, so a salted win is a win over
-    *     Spark's best effort, not over a strawman).
-    *   - `scd2`: the single-window SCD2 intervalization vs
-    *     [[graft.operators.Partitioning.scd2TwoPhase]] — the
-    *     event-level sort of a hot user is the cost the time-bucket
-    *     salt spreads.
-    *
-    * Each timing counts the full result; the plain/salted outputs are
-    * row-count-checked against each other in passing. One rep per
-    * cell (the signal is the skew/uniform RATIO, coarse by design);
-    * results land in the detail record under `skew_bench` and are
-    * NOT part of the catalog total or the regression gate.
-    *
-    * Expected reading (r14's committed controlled matrix — the
-    * full-catalog idle-host refresh, local[32], median of 3
-    * interleaved reps, calib 0.222/0.911 inside the floor frame; a
-    * same-day seeding run on the same host read every cell within
-    * ±20%, the fixtures' honest noise floor — the RATIOS below are
-    * the evidence, not the absolute cells. The section executes
-    * BEFORE the catalog loop; r11's post-catalog position read the
-    * same cells 2-6× slower with the distortion inverting the scd2
-    * result):
-    *
-    *   - JOIN cells, layer 1: AQE's runtime skew split serves the
-    *     90%-hot join well enough that plain and salted land within
-    *     rep noise of each other (plain 3.43 s vs salted 2.59 s
-    *     medians, rep spreads overlapping — the MG sketch pass plus
-    *     hot-sliver replication roughly cancels against the split
-    *     AQE already does); salted pays a small constant on uniform
-    *     data (1.52 vs 1.35 s). Salting a shuffle JOIN buys little
-    *     on Spark with AQE skew-join on — it is for window/ordered
-    *     shapes AQE cannot split.
-    *   - SCD2 cells, layer 2: window-partition skew gets NO runtime
-    *     split, and the time-bucket salt WINS on the wide-row,
-    *     windows-heavy shape (4.21 vs 5.86 s at 95%-hot; the gap
-    *     widens with the hot user's mass) at the documented ~2.5×
-    *     cost on uniform data (3.79 vs 1.54 s).
-    *   - CUSUM cells, layer 2 again: under the honest FULL-
-    *     materialization meter the two-phase form WINS ≈ 2.6× on the
-    *     99%-hot fixture (plain 9.66 s vs 3.72 s — the hot type's
-    *     single-task ordered sort is the bottleneck) and pays ≈ 2.2×
-    *     on uniform data (4.47 vs 2.02 s). An earlier "plain wins at
-    *     every in-memory mass" reading was a count()-forcing
-    *     artifact — the pruner deleted the plain window's prefix-sum
-    *     projection while the two-phase join kept its work billed
-    *     (see Partitioning.prefixSumTwoPhase and BENCH_NOTES).
-    *
-    * That asymmetry — use AQE where it sees, salt where it cannot —
-    * is exactly the Partitioning layer's contract.
-    *
-    * MEASUREMENT DISCIPLINE (r12 verdict #1 — third round in which a
-    * loaded-host refresh could overwrite a controlled matrix with
-    * physically-backwards cells): each cell is now the MEDIAN of
-    * `reps` (default 3) INTERLEAVED passes — the full cell sequence
-    * runs end-to-end `reps` times, so a monotone host drift lands
-    * evenly across cells instead of inflating whichever ran last —
-    * and the caller (main) refuses to overwrite a controlled matrix
-    * at all when the run's calib probes exceed [[SkewCalibGuard]]×
-    * the floor-file frame (the previous record's cells are carried
-    * forward, tagged `"skew_bench_context":"carried"`). */
-  def skewBench(spark: SparkSession, reps: Int = 3,
-                only: Set[String] = Set.empty): Map[String, Double] = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    def timed(f: => Unit): Double = {
-      spark.catalog.clearCache()
-      System.gc()
-      val t0 = System.nanoTime()
-      f
-      (System.nanoTime() - t0) / 1e9
-    }
-    // ---- join fixture: 2M fact rows; hot = 90% on key 0; right =
-    // 1M rows, 10 per key (~16 MB: past the 10 MB broadcast bar)
-    def leftDf(skewed: Boolean) = spark.range(0, 2000000L, 1, 32)
-      .selectExpr(
-        if (skewed)
-          "CASE WHEN id % 10 < 9 THEN CAST(0 AS BIGINT) ELSE id % 100000 END AS k"
-        else "id % 100000 AS k",
-        "id AS v")
-    val rightDf = spark.range(0, 1000000L, 1, 32)
-      .selectExpr("id % 100000 AS k", "id AS payload")
-    var counts = Map.empty[String, Long]
-    def joinCell(name: String, skewed: Boolean, salted: Boolean): (String, Double) = {
-      val l = leftDf(skewed)
-      val sec = timed {
-        val j =
-          if (salted)
-            graft.operators.Partitioning
-              .adaptiveSaltedJoin(l, rightDf, "k", salts = 32)
-          else l.join(rightDf, Seq("k"), "inner")
-        counts += name -> j.queryExecution.toRdd.count()
-      }
-      name -> sec
-    }
-    // ---- scd2 fixture: 4M events; hot = 95% on one user (the
-    // AQE-blind shape: window-partition skew gets no runtime split,
-    // so the plain form sorts ~3.8M rows in ONE task); type runs of
-    // ~97 events; 1 event/second so 3600 s buckets spread the hot
-    // user over ~1100 buckets
-    def evDf(skewed: Boolean) = spark.range(0, 4000000L, 1, 32)
-      .selectExpr(
-        if (skewed)
-          "CASE WHEN id % 20 < 19 THEN 'hot' ELSE concat('u', id % 20000) END AS user_id"
-        else "concat('u', id % 20000) AS user_id",
-        "concat('t', (id div 97) % 3) AS event_type",
-        "timestamp_micros(1700000000000000 + id * 1000000) AS ts",
-        "id AS event_id")
-    def plainScd2(ev: org.apache.spark.sql.DataFrame) = {
-      val wAll = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val wTyp = Window.partitionBy("user_id", "event_type")
-        .orderBy("ts", "event_id")
-      val wLead = Window.partitionBy("user_id")
-        .orderBy("valid_from", "first_event_id")
-      ev.select(col("user_id"), col("event_type"), col("ts"),
-          col("event_id"),
-          (row_number().over(wAll) - row_number().over(wTyp)).as("grp"))
-        .groupBy("user_id", "event_type", "grp")
-        .agg(min("ts").as("valid_from"),
-          min("event_id").as("first_event_id"),
-          count(lit(1)).as("n_events"))
-        .select(col("user_id"), col("event_type"), col("valid_from"),
-          lead("valid_from", 1).over(wLead).as("valid_to"),
-          col("n_events"))
-    }
-    // regime instrumentation (r15 verdict #1: the scd2 UNIFORM cells
-    // have read bimodally across controlled runs — {2.4–2.9} vs
-    // {4.1–5.7+} — with record-vs-notes drift three rounds running):
-    // per rep, log the JVM-state suspects (GC + JIT compilation time
-    // spent INSIDE the timed region) and the executed AQE plan's
-    // shape, so a regime flip names its cause in the run log instead
-    // of surfacing as an unexplained record delta
-    def gcMillis: Long = {
-      val it = java.lang.management.ManagementFactory
-        .getGarbageCollectorMXBeans.iterator()
-      var t = 0L
-      while (it.hasNext) t += math.max(0L, it.next().getCollectionTime)
-      t
-    }
-    def jitMillis: Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime
-      else 0L
-    }
-    def planShape(df: org.apache.spark.sql.DataFrame): String = {
-      val p = df.queryExecution.executedPlan.toString
-      def n(pat: String) = pat.r.findAllIn(p).size
-      s"exchanges=${n("Exchange hashpartitioning")} " +
-        s"aqeReads=${n("AQEShuffleRead")} " +
-        s"coalesced=${n("coalesced")} skewSplit=${n("skewed")} " +
-        s"sorts=${n("\\bSort\\b")}"
-    }
-    def scd2Cell(name: String, skewed: Boolean, salted: Boolean): (String, Double) = {
-      val ev = evDf(skewed)
-      // hoisted so the plan-shape rendering (a toString + five regex
-      // scans over the executed plan) happens OUTSIDE the timed
-      // region — instrumentation introduced to EXPLAIN this cell's
-      // bimodality must not perturb the sub-second readings it
-      // arbitrates
-      var done: org.apache.spark.sql.DataFrame = null
-      val (gc0, jit0) = (gcMillis, jitMillis)
-      val sec = timed {
-        val r =
-          if (salted)
-            graft.operators.Partitioning.scd2TwoPhase(ev, 3600L)
-          else plainScd2(ev)
-        counts += name -> r.queryExecution.toRdd.count()
-        done = r
-      }
-      System.err.println(f"[bench] skew $name regime: gc=${
-        gcMillis - gc0}ms jit=${jitMillis - jit0}ms ${planShape(done)}")
-      name -> sec
-    }
-    // ---- cusum fixture: the ordered PREFIX-SUM family (r12's
-    // prefixSumTwoPhase twin) — 8M events, one type carrying 99% ≈
-    // 7.9M rows in ONE window task. Deliberately kept NARROW rows
-    // (three longs + a short type string — the real ev_cusum shape)
-    // and realistic roughly-time-ordered arrival, both of which favor
-    // the plain window, so the cells measure the honest floor of the
-    // comparison — and under FULL materialization the two-phase form
-    // still wins ≈ 2.8× on the hot fixture (plain ≈ 10.5 s vs
-    // ≈ 3.7 s; a pre-841cc66 count()-forcing read had the pruner
-    // deleting the plain window's projection and inverted the cells —
-    // see prefixSumTwoPhase's scaladoc). Bucket size
-    // 50 000 s → ~160 buckets; |types|·|buckets| ≈ 32k offset rows
-    // stays a planning-class collect/broadcast (the first cut's
-    // 3600 s buckets shipped 223k offset rows and that alone cost
-    // more than the salt saved).
-    def cuDf(skewed: Boolean) = spark.range(0, 8000000L, 1, 32)
-      .selectExpr(
-        if (skewed)
-          "CASE WHEN id % 100 < 99 THEN 'hot' ELSE concat('t', id % 200) END AS event_type"
-        else "concat('t', id % 200) AS event_type",
-        "1700000000000000 + id * 1000000 AS us",
-        "id AS event_id",
-        "(id % 1000) - 500 AS cents")
-    def plainCusum(e: org.apache.spark.sql.DataFrame) = {
-      val wOrd = Window.partitionBy("event_type")
-        .orderBy("us", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val wAll = Window.partitionBy("event_type")
-      e.withColumn("pk", sum("cents").over(wOrd))
-        .withColumn("k", row_number().over(Window
-          .partitionBy("event_type").orderBy("us", "event_id"))
-          .cast("long"))
-        .withColumn("n", count(lit(1)).over(wAll))
-        .withColumn("tot", sum("cents").over(wAll))
-        .withColumn("s", col("n") * col("pk") - col("k") * col("tot"))
-        .groupBy("event_type")
-        .agg(max(struct(abs(col("s")).as("a"), (-col("k")).as("nk"),
-          col("s").as("s"), col("us").as("us"))).as("peak"))
-        .select(col("event_type"), (-col("peak.nk")).as("k_star"),
-          col("peak.s").as("s_star"), col("peak.us").as("us_star"))
-    }
-    def cusumCell(name: String, skewed: Boolean, salted: Boolean): (String, Double) = {
-      val e = cuDf(skewed)
-      val sec = timed {
-        val r =
-          if (salted)
-            graft.operators.Partitioning.cusumTwoPhase(e, 50000L)
-          else plainCusum(e)
-        counts += name -> r.queryExecution.toRdd.count()
-      }
-      name -> sec
-    }
-    // names listed alongside the thunks so a focused re-rep (`only`,
-    // the deviation-arbitration path) can select cells before running
-    val allCellDefs: Seq[(String, () => (String, Double))] = Seq(
-      "join_plain_skew" ->
-        (() => joinCell("join_plain_skew", skewed = true, salted = false)),
-      "join_salted_skew" ->
-        (() => joinCell("join_salted_skew", skewed = true, salted = true)),
-      "join_plain_uniform" ->
-        (() => joinCell("join_plain_uniform", skewed = false, salted = false)),
-      "join_salted_uniform" ->
-        (() => joinCell("join_salted_uniform", skewed = false, salted = true)),
-      "scd2_plain_skew" ->
-        (() => scd2Cell("scd2_plain_skew", skewed = true, salted = false)),
-      "scd2_salted_skew" ->
-        (() => scd2Cell("scd2_salted_skew", skewed = true, salted = true)),
-      "scd2_plain_uniform" ->
-        (() => scd2Cell("scd2_plain_uniform", skewed = false, salted = false)),
-      "scd2_salted_uniform" ->
-        (() => scd2Cell("scd2_salted_uniform", skewed = false, salted = true)),
-      "cusum_plain_skew" ->
-        (() => cusumCell("cusum_plain_skew", skewed = true, salted = false)),
-      "cusum_salted_skew" ->
-        (() => cusumCell("cusum_salted_skew", skewed = true, salted = true)),
-      "cusum_plain_uniform" ->
-        (() => cusumCell("cusum_plain_uniform", skewed = false, salted = false)),
-      "cusum_salted_uniform" ->
-        (() => cusumCell("cusum_salted_uniform", skewed = false, salted = true)))
-    val cellDefs = (if (only.isEmpty) allCellDefs
-      else allCellDefs.filter(d => only(d._1))).map(_._2)
-    // INTERLEAVED reps (r12 verdict #1): the whole cell sequence runs
-    // end-to-end `reps` times so a monotone host drift spreads over
-    // every cell instead of landing on whichever cell ran last — the
-    // failure shape of the single-rep matrix was exactly a
-    // pair-of-cells ratio inverted by when each happened to run.
-    var samples = Map.empty[String, List[Double]].withDefaultValue(Nil)
-    val agreePairs = Seq("join_plain_skew" -> "join_salted_skew",
-      "join_plain_uniform" -> "join_salted_uniform",
-      "scd2_plain_skew" -> "scd2_salted_skew",
-      "scd2_plain_uniform" -> "scd2_salted_uniform",
-      "cusum_plain_skew" -> "cusum_salted_skew",
-      "cusum_plain_uniform" -> "cusum_salted_uniform")
-    for (r <- 1 to math.max(1, reps)) {
-      for (cell <- cellDefs) {
-        val (name, sec) = cell()
-        samples += name -> (sec :: samples(name))
-        System.err.println(f"[bench] skew $name rep $r: $sec%.3f s")
-      }
-      // result-equality sanity EVERY rep (counts is overwritten each
-      // rep, so the check must run before the next pass — r13 advice
-      // #1 caught the post-loop placement verifying the last rep only)
-      // — pairs gated on presence so a focused `only` re-rep of one
-      // side does not require its twin
-      for ((p, s) <- agreePairs
-          if counts.contains(p) && counts.contains(s))
-        require(counts(p) == counts(s),
-          s"skew bench mismatch (rep $r): $p=${counts(p)} vs $s=${counts(s)}")
-    }
-    val cells = samples.map { case (k, ts) =>
-      val sorted = ts.sorted
-      k -> sorted(sorted.size / 2)
-    }
-    cells.foreach { case (k, v) =>
-      System.err.println(f"[bench] skew $k median: $v%.3f s") }
-    cells
   }
 
   /** The data-path kernel cell names, in execution order. */
@@ -1117,12 +684,12 @@ object Bench {
     * rebuild the DataFrame each pass — Spark's source-keyed codegen
     * cache makes the rebuild warm-plan (analysis only, no javac),
     * while fresh ShuffleDependencies keep every exchange honestly
-    * re-executed. Cells are INTERLEAVED across reps like [[skewBench]]
-    * and reported as medians; the section reuses the skew section's
-    * entire guard machinery (calib-gated carry, context tag,
-    * deviation re-rep) via [[skewPlan]]/[[skewDeviations]], lands in
-    * the detail record as `datapath_bench`, and never touches the
-    * catalog total or the regression gate.
+    * re-executed. Cells are INTERLEAVED across reps and reported as
+    * medians; the section is guarded by a calib-gated carry, a
+    * context tag and a deviation re-rep ([[skewPlan]]/
+    * [[skewDeviations]]), lands in the detail record as
+    * `datapath_bench`, and never touches the catalog total or the
+    * regression gate.
     *
     * Cell inventory (the per-row/kernel cost centers a 100 TB run is
     * made of): the four native text expressions (gopher_stats,
@@ -1310,8 +877,8 @@ object Bench {
     * [[LoadavgGate]] at launch or arbitration, or calibs past the
     * floor-frame guard) — the flag is NON-AUTHORITATIVE, carried
     * rather than failed, and excluded from `unresolved_flags`. The
-    * same stance the skew/datapath sections have always taken on a
-    * loaded host, extended to catalog floor flags. */
+    * same stance the datapath section takes on a loaded host,
+    * extended to catalog floor flags. */
   final case class Rerun(name: String, first: Double, rerun: Double,
                          prev: Double, resolved: Boolean,
                          floorProv: Option[String] = None,
@@ -1338,7 +905,7 @@ object Bench {
                         errored: Boolean): Boolean =
     !resolved && frameUncontrolled && !errored
 
-  /** The skew matrix may only be re-measured when the host's calib
+  /** The datapath cells may only be re-measured when the host's calib
     * probes are within this factor of the floor-file frame — past it
     * the host is loaded and a refresh would record noise. */
   val SkewCalibGuard = 1.5
@@ -1372,22 +939,20 @@ object Bench {
         (fs > 0 && calibSh > 0 && calibSh > fs * SkewCalibGuard)
     }
 
-  /** The skew-section decision kernel: (reMeasure?, contextTag).
-    * Controlled host → measure, tag "controlled". Loaded host with a
-    * previous matrix that is itself controlled evidence (context
-    * literally "controlled", or an earlier "carried" of one) → do NOT
-    * measure; carry the previous cells forward tagged "carried", so a
-    * loaded refresh can never replace controlled numbers. Everything
-    * else on a loaded host — no previous cells, a record already
-    * tagged "loaded", or a PRE-GUARD record with no context tag at
-    * all — → measure but tag "loaded": recorded, never quotable as
-    * controlled. The untagged case is the r13 verdict-#1 fix: the one
-    * contextless incumbent in history is the r12 loaded-closing-host
-    * matrix (scd2_plain_uniform 13.6 s vs plain_skew 6.5 s —
-    * physically backwards), and the previous "default to controlled"
-    * reading laundered it into quotable evidence for two rounds. An
-    * untagged matrix has unknown provenance and is carried NOWHERE;
-    * it gets replaced the first time any host qualifies to measure. */
+  /** The datapath section's decision kernel: (reMeasure?,
+    * contextTag). Controlled host → measure, tag "controlled". Loaded
+    * host with previous cells that are themselves controlled evidence
+    * (context literally "controlled", or an earlier "carried" of one)
+    * → do NOT measure; carry the previous cells forward tagged
+    * "carried", so a loaded refresh can never replace controlled
+    * numbers. Everything else on a loaded host — no previous cells, a
+    * record already tagged "loaded", or a record with no context tag
+    * at all — → measure but tag "loaded": recorded, never quotable as
+    * controlled. Untagged cells have unknown provenance (r13
+    * verdict #1: defaulting them to "controlled" once laundered a
+    * loaded host's physically-backwards cells into quotable
+    * evidence), so they are carried NOWHERE and get replaced the
+    * first time any host qualifies to measure. */
   def skewPlan(loadedHost: Boolean, prevCells: Map[String, Double],
                prevCtx: Option[String]): (Boolean, String) =
     if (!loadedHost) (true, "controlled")
@@ -1422,8 +987,8 @@ object Bench {
     * direction — from the carried controlled value (r14 verdict #1:
     * the calib guard gates the RUN, but a single noisy cell inside an
     * otherwise-controlled run could still silently replace a clean
-    * reading — scd2_salted_uniform landed at 15.86 s over a 3.79 s
-    * controlled cell with nothing in the record saying so). Cells
+    * reading — one landed at 15.86 s over a 3.79 s controlled cell
+    * with nothing in the record saying so). Cells
     * missing on either side, or nonpositive, cannot deviate. */
   def skewDeviations(fresh: Map[String, Double],
                      carried: Map[String, Double],
@@ -1433,75 +998,11 @@ object Bench {
       f > 0 && c > 0 && (f > c * factor || f * factor < c)
     }
 
-  /** Replace the `"skew_bench":{...}` cells and the
-    * `"skew_bench_context"` tag inside an existing detail line,
-    * leaving every other byte untouched — the skew-only seeding path
-    * (a fresh controlled matrix must not discard the catalog record
-    * it rides in). A record with cells but NO context tag — the
-    * pre-guard unknown-provenance class this path exists to
-    * displace — gets the tag inserted right after the replaced
-    * cells. None only when the line has no skew section at all
-    * (nothing is guessed about where one would belong). */
-  def spliceSkewBench(detailTxt: String, cells: Map[String, Double],
-                      ctx: String,
-                      devs: Option[Set[String]] = None): Option[String] = {
-    val start = detailTxt.indexOf("\"skew_bench\":{")
-    val end = if (start < 0) -1 else detailTxt.indexOf('}', start)
-    if (start < 0 || end < 0 || cells.isEmpty) None
-    else {
-      // the first-'}' scan is correct ONLY while the section is a
-      // flat name→number map; a nested value would make `end` the
-      // WRONG brace and silently truncate the record on splice —
-      // fail loudly instead (r14 advice #3)
-      val section = detailTxt.substring(
-        start + "\"skew_bench\":{".length, end)
-      require(!section.contains('{'),
-        "skew_bench section is no longer a flat map -- " +
-          "spliceSkewBench's brace scan cannot splice it safely")
-      val body = cells.toSeq.sorted.map { case (k, v) =>
-        jsonStr(k) + ":" + fmt(v, 3) }.mkString(",")
-      val ctxJson = "\"skew_bench_context\":" + jsonStr(ctx)
-      val ctxRe = "\"skew_bench_context\":\"[^\"]*\"".r
-      val devsRe = ",\"skew_bench_deviations\":\\[[^\\]]*\\]".r
-      val devsJson = devs.map(_.toSeq.sorted.map(jsonStr)
-        .mkString(",\"skew_bench_deviations\":[", ",", "]"))
-      // the deviations tag rides with the context tag: dropped (a
-      // splice replaces the whole matrix, so stale names must not
-      // survive it) then re-inserted when this splice's guard ran
-      val base0 = devsRe.replaceFirstIn(detailTxt, "")
-      val start0 = base0.indexOf("\"skew_bench\":{")
-      val end0 = base0.indexOf('}', start0)
-      if (ctxRe.findFirstIn(base0).nonEmpty) {
-        val withCells = base0.substring(0, start0) +
-          "\"skew_bench\":{" + body + base0.substring(end0)
-        Some(ctxRe.replaceFirstIn(withCells,
-          java.util.regex.Matcher.quoteReplacement(
-            ctxJson + devsJson.getOrElse(""))))
-      } else
-        // pre-guard record: tag inserted adjacent to the cells, the
-        // position detailJson itself serializes it at
-        Some(base0.substring(0, start0) +
-          "\"skew_bench\":{" + body + "}," + ctxJson +
-          devsJson.getOrElse("") + base0.substring(end0 + 1))
-    }
-  }
-
-  /** The flat `"name":number` map inside `"skew_bench":{...}` of a
-    * detail line, tolerant like [[parseDetailQueries]]. */
-  def parseSkewBench(json: String): Map[String, Double] =
-    parseFlatSection(json, "skew_bench")
-
   /** The flat `"name":number` cell map inside `"datapath_bench":{...}`
     * of a detail line — the data-path kernel meter (r17 verdict #2),
     * tolerant like [[parseDetailQueries]]. */
   def parseDatapathBench(json: String): Map[String, Double] =
     parseFlatSection(json, "datapath_bench")
-
-  /** The numeric `"frame":{...}` block of a detail line — launch
-    * loadavg, calib pair, controlled verdict (r17 verdict #5).
-    * Missing block → empty map (pre-frame records). */
-  def parseFrame(json: String): Map[String, Double] =
-    parseFlatSection(json, "frame")
 
   /** Monotone floor file beside the detail record: per query, the
     * best-ever raw median and the host calib of the run that set it.
@@ -1700,17 +1201,6 @@ object Bench {
     math.max(c, s)
   }
 
-  /** Queries in both maps that slowed past both thresholds:
-    * (name, previous, current), worst factor first. */
-  def regressions(prev: Map[String, Double],
-                  cur: Map[String, Double]): Seq[(String, Double, Double)] =
-    cur.toSeq.collect {
-      case (k, n) if prev.get(k).exists(o =>
-          o > 0 && n > o * RegressionFactor &&
-            n - o > RegressionFloorSec) =>
-        (k, prev(k), n)
-    }.sortBy { case (_, o, n) => -(n / o) }
-
   /** Extract the `queries` map from a detail line this object wrote.
     * Hand-rolled like the writer (no JSON lib on the classpath): the
     * format is flat `"name":number` pairs inside the queries object.
@@ -1720,11 +1210,10 @@ object Bench {
     parseFlatSection(json, "queries")
 
   /** The flat `"name":number` map inside `"<key>":{...}` — the ONE
-    * scan [[parseDetailQueries]] and [[parseSkewBench]] share (they
-    * were line-for-line copies; the first-'}' truncation-tolerance
-    * contract and the nested-brace hazard `spliceSkewBench` guards
-    * against now live in a single place). Tolerant of a truncated
-    * tail: a missing section returns empty, never throws. */
+    * scan [[parseDetailQueries]] and [[parseDatapathBench]] share.
+    * It ends the section at its first '}', so the section must stay
+    * a flat map: a nested value would truncate it. Tolerant of a
+    * truncated tail: a missing section returns empty, never throws. */
   private def parseFlatSection(json: String,
                                key: String): Map[String, Double] = {
     val header = "\"" + key + "\":{"
@@ -1801,13 +1290,10 @@ object Bench {
                  cpus: String = "", reruns: Seq[Rerun] = Nil,
                  calib2: Double = -1.0,
                  unresolvedFlags: Int = -1,
-                 skew: Map[String, Double] = Map.empty,
                  calibSh: Double = -1.0,
                  calibSh2: Double = -1.0,
-                 skewCtx: String = "",
                  coldMap: Map[String, Double] = Map.empty,
                  warmMap: Map[String, Double] = Map.empty,
-                 skewDevs: Option[Set[String]] = None,
                  datapath: Map[String, Double] = Map.empty,
                  datapathCtx: String = "",
                  datapathDevs: Option[Set[String]] = None,
@@ -1850,27 +1336,9 @@ object Bench {
         val fn = reruns.count(_.frameNoise)
         if (fn > 0) s""","frame_noise_flags":$fn""" else ""
       }
-    // skew evidence AFTER queries (parseDetailQueries scans to the
-    // first '}' past "queries":{ — nested objects must not precede it)
-    val skewPart =
-      (if (skew.isEmpty) ""
-       else skew.toSeq.sorted.map { case (k, v) =>
-         jsonStr(k) + ":" + fmt(v, 3)
-       }.mkString(""","skew_bench":{""", ",", "}")) +
-        (if (skew.nonEmpty && skewCtx.nonEmpty)
-          s""","skew_bench_context":${jsonStr(skewCtx)}"""
-         else "") +
-        // present (possibly []) ONLY when the deviation guard ran —
-        // "guard compared, these cells still disagree with the carried
-        // controlled matrix after a focused re-rep"; absent on carry/
-        // loaded paths where no comparison was possible
-        (if (skew.nonEmpty && skewDevs.isDefined)
-          skewDevs.get.toSeq.sorted.map(jsonStr)
-            .mkString(""","skew_bench_deviations":[""", ",", "]")
-         else "")
-    // data-path kernel cells (r17 verdict #2) — same shape and guard
-    // tags as the skew section, AFTER queries for the same parse
-    // reason (nested objects must not precede the queries scan)
+    // data-path kernel cells (r17 verdict #2), AFTER queries
+    // (parseDetailQueries scans to the first '}' past "queries":{ —
+    // nested objects must not precede it)
     val datapathPart =
       (if (datapath.isEmpty) ""
        else datapath.toSeq.sorted.map { case (k, v) =>
@@ -1879,19 +1347,23 @@ object Bench {
         (if (datapath.nonEmpty && datapathCtx.nonEmpty)
           s""","datapath_bench_context":${jsonStr(datapathCtx)}"""
          else "") +
+        // present (possibly []) ONLY when the deviation guard ran —
+        // "guard compared, these cells still disagree with the carried
+        // controlled cells after a focused re-rep"; absent on carry/
+        // loaded paths where no comparison was possible
         (if (datapath.nonEmpty && datapathDevs.isDefined)
           datapathDevs.get.toSeq.sorted.map(jsonStr)
             .mkString(""","datapath_bench_deviations":[""", ",", "]")
          else "")
     // self-adjudicating frame block (r17 verdict #5): launch loadavg,
-    // the calib pair, and the controlled verdict in ONE place —
-    // numeric-only so parseFlatSection round-trips it. controlled:
+    // the calib pair, and the controlled verdict in ONE place, as a
+    // flat numeric map. controlled:
     // 1 = calibs inside the floor frame's guard AND loadavg under
     // the gate, 0 = loaded, absent field (-1) = the writer predates
     // the block or had no frame to judge against.
     // ORDERING CONSTRAINT: the block reuses the top-level key names
     // "calib"/"calib_sh" (kept for record-format stability — readers
-    // address the block via parseFrame), and the tolerant
+    // address the block by its "frame" key), and the tolerant
     // parseDetailField returns the FIRST match in the line — so this
     // part must serialize AFTER calibPart. BenchFormatSpec pins
     // parseDetailField("calib") == the top-level value on a
@@ -1921,7 +1393,7 @@ object Bench {
         jsonStr(k) + ":" + fmt(v, 6)
       }.mkString(s""","$tag":{""", ",", "}")
     val repsPart = auxMap("cold", coldMap) + auxMap("warm", warmMap)
-    s"""{"metric":"total","value":${fmt(total, 6)}$resolvedPart,"unit":"sec","reps":$reps$calibPart$cpusPart,"meas":"$Meas","queries":$qs$rerunPart$flagsPart$skewPart$datapathPart$framePart$repsPart${errPart(results)},"sf":"$sfName"}"""
+    s"""{"metric":"total","value":${fmt(total, 6)}$resolvedPart,"unit":"sec","reps":$reps$calibPart$cpusPart,"meas":"$Meas","queries":$qs$rerunPart$flagsPart$datapathPart$framePart$repsPart${errPart(results)},"sf":"$sfName"}"""
   }
 
   /** `,"value_resolved":N` when any flag was rerun-arbitrated to load

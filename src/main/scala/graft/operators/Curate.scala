@@ -140,8 +140,7 @@ object GopherRules {
     * no shuffle. Measured at sf0.1 full evaluation (warm): grouped
     * ≈ 6.6 s, native ≈ 0.5 s — the §2.9 preference order (native
     * Expression > built-in composition) on one kernel; CurationSpec
-    * pins its equality with [[metrics]]. The catalog face, the
-    * streaming gate and the composed ingest pipeline run it. */
+    * pins its equality with [[metrics]]. The catalog faces run it. */
   def metricsNative(docs: DataFrame): DataFrame =
     withMetricsNative(docs).select(
       Seq(col("doc_id"), col("n_words"), col("mean_wlen_milli")) ++
@@ -150,8 +149,8 @@ object GopherRules {
 
   /** [[metricsNative]] as a column-appending transform: every input
     * column passes through, with the metric columns and `keep`
-    * added (the admission-gate shape — `Streams.streamingGopherGate`
-    * filters on `keep` and drops the diagnostics). NULL text counts as empty text (keep = 0 via the
+    * added, so a caller can filter on `keep` and keep its own
+    * columns. NULL text counts as empty text (keep = 0 via the
     * word-count gate), as in [[metrics]]. */
   def withMetricsNative(docs: DataFrame,
                         textCol: String = "text"): DataFrame = {

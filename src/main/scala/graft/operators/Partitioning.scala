@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   *
   * Defense layers, in order: (1) AQE skew-join splitting handles skewed
   * *joins* automatically at runtime; (2) explicit salting below handles
-  * the cases AQE cannot — skewed aggregation keys, and stateful/stream
-  * joins where AQE never sees the full distribution; (3) bucketing
+  * the cases AQE cannot — skewed aggregation keys, and joins whose skew
+  * sits upstream of the exchange AQE splits; (3) bucketing
   * pre-pays the shuffle once at write time so every later join/agg on
   * the bucket key is exchange-free.
   */
@@ -51,104 +51,12 @@ object Partitioning {
       .drop("__salt")
   }
 
-  /** Sketch-driven skew join: salt ONLY the hot keys. [[saltedJoin]]
-    * replicates the whole right side ×salts — correct, but at 100 TB
-    * the replication is the cost, and skew is almost never
-    * whole-table: a handful of keys carry the mass. This variant finds
-    * those keys with ONE pass of the engine's Misra-Gries aggregate
-    * (`mg_summary(key, k)` — k-sized partial states, no shuffle of the
-    * fact table), collects the ≤k survivors (a planning-class
-    * round-trip, the IVF-seed idiom), and splits the join: cold keys
-    * take the plain shuffle join untouched; hot keys take the salted
-    * path with the right side replicated for the hot sliver only.
-    * Result equals the plain inner join on `key` for ANY detected set
-    * — MG false positives merely salt a warm key (harmless), and the
-    * MG lower-bound estimate guarantees every key above
-    * |left|/(k+1) rows is caught, which is exactly the population that
-    * can skew a reducer.
-    *
-    * Routing assumption: hot/cold membership is decided on
-    * `cast(key AS string)` (MG sketches strings). For key types whose
-    * string form is injective (integers, strings — every catalog use)
-    * the routing is exact and the isin(≤k literals) predicate pushes
-    * to the scan on a string column. For non-injective casts
-    * (float/decimal: `1.0` vs `1.00`) distinct keys sharing a string
-    * form are co-routed — the RESULT is still the plain inner join
-    * (both branches join on the raw key), but a cast-wrapped isin
-    * neither pushes down nor salts precisely; prefer an integer or
-    * string join key, which is also the right call at 100 TB
-    * independent of this operator. `minHotRows` tightens the cut when
-    * the caller knows its target partition size.
-    *
-    * This is the explicit, plannable form of AQE's skew-join split —
-    * needed when the skew sits UPSTREAM of where AQE can see it
-    * (inside a multi-join stage) or when the join must behave
-    * identically across replays regardless of runtime statistics. */
-  def adaptiveSaltedJoin(left: DataFrame, right: DataFrame, key: String,
-                         salts: Int, k: Int = 64,
-                         minHotRows: Long = 1L): DataFrame = {
-    require(salts > 0 && k > 0)
-    graft.GraftExtensions.ensure(left.sparkSession)
-    val hot = left
-      .select(col(key).cast("string").as("__k"))
-      .agg(expr(s"mg_summary(__k, $k)").as("mg"))
-      .selectExpr("explode(mg) AS (item, est)")
-      .collect() // ≤ k rows by construction
-      .filter(_.getLong(1) >= math.max(1L, minHotRows))
-      .map(_.getString(0)).toSeq
-    if (hot.isEmpty) left.join(right, Seq(key), "inner")
-    else {
-      def isHot(df: DataFrame) =
-        df.col(key).cast("string").isin(hot: _*)
-      // null keys: isin yields NULL, so both branches drop them —
-      // the inner join's own null semantics, preserved
-      val cold = left.filter(!isHot(left))
-        .join(right.filter(!isHot(right)), Seq(key), "inner")
-      // positional salt, like saltedJoin: duplicate hot-key rows must
-      // still spread (a whole-row hash collapses them to one salt)
-      val saltedLeft = left.filter(isHot(left)).withColumn("__salt",
-        pmod(monotonically_increasing_id(), lit(salts.toLong))
-          .cast("int"))
-      val saltedRight = right.filter(isHot(right)).withColumn("__salt",
-        explode(lit((0 until salts).toArray)))
-      val hotJoin = saltedLeft
-        .join(saltedRight, Seq(key, "__salt"), "inner")
-        .drop("__salt")
-      // positional union, NOT unionByName: both branches are built as
-      // `left.join(right, Seq(key))` shapes so their column ORDER is
-      // identical by construction, while duplicate non-key column
-      // names (left and right both carrying `v` — legal for the plain
-      // join this operator promises to equal) would make unionByName
-      // throw on ambiguous attributes exactly when a hot key exists
-      cold.union(hotJoin)
-    }
-  }
-
-  /** Salted two-phase aggregation for skewed group keys: phase 1
-    * aggregates (key, salt) — the positional salt (see [[saltedJoin]])
-    * spreads a hot key over `salts` reducers even on duplicate rows
-    * — phase 2 merges the partials per key. `partials` maps a column to
-    * its phase-1 aggregate; `merges` folds phase-1 results per key.
-    * (For algebraic aggregates Spark's map-side partial aggregation
-    * already does this; explicit salting is for holistic aggregates or
-    * when the partial-agg hash table overflows on a hot key.) */
-  def saltedCount(df: DataFrame, key: String, salts: Int): DataFrame = {
-    require(salts > 0)
-    df.withColumn("__salt",
-        pmod(monotonically_increasing_id(), lit(salts.toLong))
-          .cast("int"))
-      .groupBy(col(key), col("__salt"))
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum("__partial").as("n"))
-  }
-
-  /** Salted two-phase stats over a skewed group key — the general form
-    * of [[saltedCount]] for the count/sum/min/max family: phase 1
-    * aggregates (key, salt) so a hot key's rows spread over `salts`
-    * reducers, phase 2 merges partials per key (sum of counts/sums,
-    * min of mins, max of maxes). Output: key, n_rows, sum_val,
-    * min_val, max_val — equal to the unsalted single-phase aggregate
+  /** Salted two-phase stats over a skewed group key, for the
+    * count/sum/min/max family: phase 1 aggregates (key, salt) — the
+    * positional salt of [[saltedJoin]] — so a hot key's rows spread
+    * over `salts` reducers, phase 2 merges partials per key (sum of
+    * counts/sums, min of mins, max of maxes). Output: key, n_rows,
+    * sum_val, min_val, max_val — equal to the unsalted single-phase aggregate
     * by algebraic decomposability, which is how the catalog face
     * (rel_salted_agg) certifies it against a plain GROUP BY oracle. */
   def saltedStats(df: DataFrame, key: String, valueCol: String,
@@ -163,193 +71,6 @@ object Partitioning {
       .groupBy(col(key))
       .agg(sum("__n").as("n_rows"), sum("__s").as("sum_val"),
         min("__mn").as("min_val"), max("__mx").as("max_val"))
-  }
-
-  /** Skew-hardened SCD2 intervalization — the salted two-phase form of
-    * the `ev_scd2` plan (r9 verdict #7: the plain face's doc concedes
-    * "skew degrades to one partition's sort" when one user_id carries
-    * the mass). The salt must preserve per-user event ORDER, so it is
-    * a TIME-RANGE bucket (`floor(epoch(ts) / bucketSeconds)`) rather
-    * than a hash: phase 1 computes maximal same-type runs per
-    * (user_id, bucket) — the expensive event-level window sort now
-    * spreads a hot user over its time buckets — and phase 2 stitches
-    * runs that touch across bucket boundaries with the SAME
-    * gaps-and-islands trick over RUN rows, which are bounded by the
-    * user's run count, not its event count. Worst case (a user whose
-    * type alternates every event) leaves runs ≈ events and saves
-    * nothing — the same worst case the salted aggregates have; typical
-    * hot keys have long runs and the event-level sort is the cost that
-    * matters.
-    *
-    * Equality with the plain window (PartitioningSpec pins it
-    * row-for-row): a plain island never straddles a bucket boundary
-    * un-merged, because phase 2 re-merges ADJACENT same-type runs, and
-    * run adjacency is judged in true event order — the merge orders
-    * runs by (valid_from, ord_id) where ord_id is the run's genuinely
-    * FIRST event id (`min(struct(ts, event_id))`), not the plain
-    * face's min(event_id), which under equal-ts ties need not be the
-    * first event and could interleave runs falsely. The output keeps
-    * the plain face's `min(event_id)` as first_event_id and its
-    * (valid_from, first_event_id) lead ordering, so the emitted
-    * interval chain is bit-identical to `ev_scd2`. */
-  def scd2TwoPhase(events: DataFrame, bucketSeconds: Long): DataFrame = {
-    require(bucketSeconds > 0)
-    import org.apache.spark.sql.expressions.Window
-    val wAll = Window.partitionBy("user_id", "__bkt")
-      .orderBy("ts", "event_id")
-    val wTyp = Window.partitionBy("user_id", "__bkt", "event_type")
-      .orderBy("ts", "event_id")
-    val runs = events
-      .withColumn("__bkt",
-        floor(unix_timestamp(col("ts")) / bucketSeconds))
-      .select(col("user_id"), col("event_type"), col("ts"),
-        col("event_id"), col("__bkt"),
-        (row_number().over(wAll) - row_number().over(wTyp)).as("grp"))
-      .groupBy("user_id", "__bkt", "event_type", "grp")
-      .agg(min("ts").as("valid_from"),
-        min("event_id").as("first_event_id"),
-        min(struct(col("ts"), col("event_id"))).as("first_ev"),
-        count(lit(1)).as("n_events"))
-      .withColumn("ord_id", col("first_ev.event_id"))
-    val wAll2 = Window.partitionBy("user_id")
-      .orderBy("valid_from", "ord_id")
-    val wTyp2 = Window.partitionBy("user_id", "event_type")
-      .orderBy("valid_from", "ord_id")
-    val merged = runs
-      .select(col("user_id"), col("event_type"), col("valid_from"),
-        col("first_event_id"), col("n_events"),
-        (row_number().over(wAll2) - row_number().over(wTyp2)).as("grp2"))
-      .groupBy("user_id", "event_type", "grp2")
-      .agg(min("valid_from").as("valid_from"),
-        min("first_event_id").as("first_event_id"),
-        sum("n_events").as("n_events"))
-    val wLead = Window.partitionBy("user_id")
-      .orderBy("valid_from", "first_event_id")
-    merged
-      .select(col("user_id"), col("event_type"), col("valid_from"),
-        lead(col("valid_from"), 1).over(wLead).as("valid_to"),
-        col("n_events"))
-      .withColumn("is_current", col("valid_to").isNull)
-      .select(col("user_id"), col("event_type"), col("valid_from"),
-        col("valid_to"), col("is_current"), col("n_events"))
-      .orderBy("user_id", "valid_from", "event_type")
-  }
-
-  /** Skew-hardened ordered running sum + position — the two-phase
-    * form of `sum(w) OVER (PARTITION BY part ORDER BY ord, tie ROWS
-    * UNBOUNDED PRECEDING)` plus `row_number()` over the same frame,
-    * for the per-type ordered prefix-sum family (`ev_cusum_changepoint`,
-    * resampling, rolling values): the plain window sorts a hot key's
-    * FULL history in one partition — at 100 TB with a few dominant
-    * event types that partition is the job (r11 "What's missing" #3).
-    * Same recipe as [[scd2TwoPhase]]/[[packShards]]: bucket the order
-    * dimension (`__bkt = floor(ord / bucketSize)` — monotone in ord,
-    * so (bkt, ord, tie) IS the flat (ord, tie) order), window each
-    * (part, bucket) independently, prefix-sum the per-bucket totals
-    * (weight sum AND row count) on the driver — ≤ |part|·|buckets|
-    * rows; pick bucketSize so that stays planning-class — and add the
-    * broadcast offsets back. Bit-identical to the single-window form
-    * (PartitioningSpec pins it), so any engine replays it as one
-    * plain window.
-    *
-    * `ord` must be numeric, non-negative and non-null (floor-div
-    * bucketing — unix micros/seconds qualify); `part` a string key
-    * (NULL keys form their own group, the packShards convention);
-    * `weight` must be an INTEGRAL, NON-NULL column (the offsets
-    * collect reads longs, and a bucket whose first rows are all-null
-    * would locally sum to NULL where the single window's running sum
-    * skips nulls — `coalesce` upstream if the source is nullable).
-    * Output: the input columns + `cumCol` (running weight sum) +
-    * `idxCol` (1-based position per part). `df` is evaluated twice
-    * (offsets job + result plan) — persist expensive lineages first.
-    *
-    * Measured (Bench skew cells, r12, FULL materialization): on the
-    * 8M-row fixture with one type carrying 99% of the mass the
-    * two-phase form wins ≈ 2.8× (plain ≈ 10.5 s vs two-phase
-    * ≈ 3.7 s on local[32]) — the hot key's single-task ordered sort
-    * is the bottleneck, and bucketing spreads it; on the uniform
-    * fixture the two extra passes cost ≈ 1.7× (2.4 vs 4.2 s), so
-    * this is a skew tool, not a default. An earlier r12 reading
-    * ("plain stays ahead at every in-memory mass") was a
-    * count()-forcing artifact: the pruner deleted the plain
-    * window's prefix-sum projection while the two-phase variant's
-    * join structure kept its work billed — the honest meter
-    * (meas=full, BENCH_NOTES) inverted the cells. At 100 TB the win
-    * compounds: past task-memory the plain form doesn't slow down,
-    * it spills or dies. */
-  def prefixSumTwoPhase(df: DataFrame, partCol: String, ordCol: String,
-                        tieCol: String, weightCol: String,
-                        bucketSize: Long, cumCol: String = "cum",
-                        idxCol: String = "k"): DataFrame = {
-    require(bucketSize > 0)
-    val base = df.withColumn("__bkt",
-      floor(col(ordCol) / bucketSize).cast("long"))
-    val totals = base.groupBy(partCol, "__bkt")
-      .agg(sum(weightCol).as("__s"), count(lit(1)).as("__c")).collect()
-      .map(r => (Option(r.getString(0)), r.getLong(1),
-        if (r.isNullAt(2)) 0L else r.getLong(2), r.getLong(3)))
-    val offsets = totals.groupBy(_._1).iterator.flatMap {
-      case (part, rows) =>
-        val sorted = rows.sortBy(_._2)
-        val cumS = sorted.scanLeft(0L)(_ + _._3)
-        val cumC = sorted.scanLeft(0L)(_ + _._4)
-        sorted.zip(cumS.zip(cumC)).map { case ((_, bkt, _, _), (os, oc)) =>
-          (part.orNull, bkt, os, oc) }
-    }.toSeq
-    val spark = df.sparkSession
-    import spark.implicits._
-    val offDf = broadcast(
-      offsets.toDF(partCol, "__bkt", "__offs", "__offc"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col(partCol), col("__bkt"))
-      .orderBy(col(ordCol), col(tieCol))
-      .rowsBetween(org.apache.spark.sql.expressions.Window
-        .unboundedPreceding, 0)
-    base
-      .withColumn("__lcum", sum(weightCol).over(w))
-      .withColumn("__lk", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col(partCol), col("__bkt"))
-          .orderBy(col(ordCol), col(tieCol))).cast("long"))
-      .join(offDf,
-        base(partCol) <=> offDf(partCol) &&
-          base("__bkt") === offDf("__bkt"))
-      .drop(offDf(partCol)).drop(offDf("__bkt"))
-      .withColumn(cumCol, col("__offs") + col("__lcum"))
-      .withColumn(idxCol, col("__offc") + col("__lk"))
-      .drop("__bkt", "__lcum", "__lk", "__offs", "__offc")
-  }
-
-  /** Skew-hardened twin of the `ev_cusum_changepoint` plan: the
-    * ordered prefix sum rides [[prefixSumTwoPhase]] (time-bucketed —
-    * a hot type's history spreads over its buckets) and the per-type
-    * (n, total) come from a map-combined groupBy broadcast back —
-    * replacing BOTH per-type global windows of the plain face (the
-    * unordered n/tot window materializes the full partition too).
-    * Input: (event_type, us, event_id, cents) — the face's
-    * projection; output bit-identical to it (PartitioningSpec).
-    * The catalog face keeps the plain window (literal single-window
-    * parity with its DuckDB oracle, and the sf0.1 fixture has no
-    * dominant type); swap this in when one does — measured ≈ 2.8×
-    * ahead on the 99%-hot fixture, see [[prefixSumTwoPhase]]. */
-  def cusumTwoPhase(e: DataFrame, bucketSeconds: Long): DataFrame = {
-    val totals = broadcast(e.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("cents").as("tot")))
-    val cum = prefixSumTwoPhase(e, "event_type", "us", "event_id",
-      "cents", bucketSeconds * 1000000L, cumCol = "pk", idxCol = "k")
-    // null-safe equality — a NULL event_type forms its own group in
-    // BOTH the window face and prefixSumTwoPhase, so a plain equi-join
-    // here would silently drop that group (r12 review)
-    cum
-      .join(totals, cum("event_type") <=> totals("event_type"))
-      .drop(totals("event_type"))
-      .withColumn("s", col("n") * col("pk") - col("k") * col("tot"))
-      .groupBy("event_type")
-      .agg(max(struct(abs(col("s")).as("a"), (-col("k")).as("nk"),
-        col("s").as("s"), col("us").as("us"))).as("peak"))
-      .select(col("event_type"), (-col("peak.nk")).as("k_star"),
-        col("peak.s").as("s_star"), col("peak.us").as("us_star"))
-      .orderBy("event_type")
   }
 
   /** Exact token-budget shard packing WITHOUT a per-group global sort.
@@ -407,7 +128,6 @@ object Partitioning {
     // ORDER BY peers, and RANGE would hand every peer the shared
     // inclusive total — the `cum - weight` exclusive-prefix identity
     // below then breaks exactly on redelivered rows
-    // (prefixSumTwoPhase pins the same choice)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(partCol), col("__bkt"))
       .orderBy(col("__ord"), col(idCol))
@@ -717,7 +437,6 @@ object Partitioning {
     * parallelizes). The partition-count probe is planning-time only
     * (split enumeration; no job runs). */
   def ensureParallelism(df: DataFrame, keyCol: String): DataFrame = {
-    if (df.isStreaming) return df // micro-batches parallelize at the source
     import org.apache.spark.sql.catalyst.plans.logical._
     val target = df.sparkSession.sparkContext.defaultParallelism
     // walk down through narrow single-child nodes to the first

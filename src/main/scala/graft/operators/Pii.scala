@@ -4,10 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** PII detection/redaction — the scrub every corpus runs before text
-  * leaves curation, shared verbatim by the batch catalog face
-  * (`ta_pii_redact`) and the streaming ingest face
-  * (`streaming.Streams.streamingPiiScrub`): one definition of what
-  * counts as PII, so batch backfills and live ingest can never drift.
+  * leaves curation, run by the catalog face `ta_pii_redact`: one
+  * definition of what counts as PII.
   *
   * Regexes use ASCII-only classes so the Java regex engine (Spark)
   * and RE2 (the DuckDB oracle) agree on every byte. Email classes
@@ -19,7 +17,7 @@ import org.apache.spark.sql.functions._
   * no digits, so later passes can never re-match earlier rewrites.
   *
   * Scale shape: pure per-row regex work — codegen'd built-ins, zero
-  * shuffle, stateless (streaming-safe with no watermark needed).
+  * shuffle, stateless.
   */
 object Pii {
 

@@ -5,9 +5,9 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The shared linear quality-model kernel behind `ta_classifier_score`
-  * and the streaming admission gate — ONE formula for the feature hash
-  * and the weight vector, so a batch backfill and a live ingest filter
-  * can never disagree on a verdict (the Pii/BpeOps discipline).
+  * and the faces that score text per row — ONE formula for the feature
+  * hash and the weight vector, so two faces can never disagree on a
+  * verdict (the Pii/BpeOps discipline).
   *
   * Features are the hashing-trick dims of `ta_hash_embed` (token →
   * md5-ascii dim in [0, 64)); the weight per dim is the fixed integer
@@ -27,7 +27,7 @@ object QualityModel {
     (dim * 37 + 11) % 21 - 10
 
   /** Per-ROW logit: fold the model over a document's tokens in one
-    * narrow expression — the streaming-gate form. Equals the batch
+    * narrow expression, with no shuffle. Equals the batch
     * explode → (doc, dim)-count → Σ cnt·w(dim) plan exactly (the sum
     * of per-token weights IS that double aggregation flattened), which
     * EdgeCaseSpec pins row-for-row against the catalog face. */

@@ -336,11 +336,9 @@ object TextDedup {
     * ZERO shuffle, computed by the NATIVE codegen'd expression
     * (functions.SimhashLong: one fused loop over the raw bytes — md5
     * per token, nibble-parity votes, no hex strings or arrays
-    * allocated — inside whole-stage codegen). This is the
-    * STREAMING-safe form (no stateful aggregation, so it composes with
-    * watermarks, dropDuplicates, and stateful ops downstream) and the
-    * right batch form whenever the fingerprint is an intermediate
-    * column rather than the grouped result. [[withSimhashIntFold]]
+    * allocated — inside whole-stage codegen). This is the right
+    * form whenever the fingerprint is an intermediate column rather
+    * than the grouped result. [[withSimhashIntFold]]
     * keeps the declarative higher-order-fold plan as the differential
     * reference the equivalence specs pin the native kernel against. */
   def withSimhashInt(docs: DataFrame, bits: Int = 32,

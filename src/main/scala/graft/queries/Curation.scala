@@ -249,11 +249,9 @@ object Curation extends QueryModule {
     * kernel as `ta_bpe_shard_assign`.
     *
     * Scale (100 TB): one narrow BPE kernel pass, then a per-source
-    * running sum. The catalog face keeps the plain per-source window
-    * (literal single-window parity with the oracle); a source whose
-    * history outgrows one task swaps in
-    * [[graft.operators.Partitioning.prefixSumTwoPhase]] — pinned
-    * bit-identical on exactly this plan in CurationSpec. */
+    * running sum. The face keeps the plain per-source window (literal
+    * single-window parity with the oracle), so one source's history
+    * sorts in one task. */
   val packSequences: Q = Q(
     "ta_pack_sequences",
     (s, dir) => {

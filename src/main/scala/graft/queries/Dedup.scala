@@ -1479,8 +1479,8 @@ object Dedup extends QueryModule {
     * rebuild. (doc_id, hash) is deduped BEFORE counting, so df is a
     * map-side-combinable count, never a per-key countDistinct
     * expansion. The join back is hash-on-hash; hot boilerplate hashes
-    * are exactly the skewed keys AQE's skew split (or
-    * `adaptiveSaltedJoin`) handles. The rebuild is one per-doc
+    * are exactly the skewed keys AQE's skew split handles. The
+    * rebuild is one per-doc
     * groupBy: collect kept (para_id, para) structs, sort by the
     * integer id, join with spaces — bounded by doc length, the same
     * per-doc bound every ta_* face carries. 64-bit hashes: at corpus

@@ -118,11 +118,10 @@ object Events extends QueryModule {
       ORDER BY event_id""")
   )
 
-  /** T5 ext — tumbling 1-hour window aggregation, the batch face of the
-    * Structured Streaming shape (`window(ts, "1 hour")` is exactly what a
-    * `readStream` pipeline would use; graft.streaming drives the real
-    * streaming path). Value sums are exact integer cents — double sums
-    * are order-dependent across partitions (see Joins.starJoin). */
+  /** T5 ext — tumbling 1-hour window aggregation (`window(ts,
+    * "1 hour")`), run as one batch plan like every face. Value sums
+    * are exact integer cents — double sums are order-dependent across
+    * partitions (see Joins.starJoin). */
   val windowAgg: Q = Q(
     "ev_window_agg",
     (s, dir) =>
@@ -603,10 +602,8 @@ object Events extends QueryModule {
     * only user-level co-location (hash(user_id) satisfies every
     * ClusteredDistribution here by the subset rule), so the plan is
     * scan → exchange → sorts/agg/window. No join, no second shuffle;
-    * skew degrades to one partition's sort — for hot user_ids use
-    * `Partitioning.scd2TwoPhase`, the time-bucket-salted two-phase
-    * form whose result PartitioningSpec pins bit-identical to this
-    * face. */
+    * skew degrades to one partition's sort: a hot user_id's whole
+    * history sorts in one task. */
   val scd2: Q = Q(
     "ev_scd2",
     (s, dir) => {
@@ -1504,18 +1501,9 @@ object Events extends QueryModule {
     * Scale (100 TB): one exchange on event_type for the ordered
     * prefix window (the ev_scd2 shape), then a map-combined argmax
     * aggregate to |types| rows. A hot type concentrates its full
-    * history in one window partition; `Partitioning.cusumTwoPhase`
-    * (time-bucketed prefix sums + broadcast offsets, r12) is the
-    * bit-identical twin for that case — measured under the honest
-    * full-materialization meter (Bench skew cells, post-841cc66):
-    * two-phase wins ≈ 2.8× on the 99%-hot fixture (plain ≈ 10.5 s vs
-    * ≈ 3.7 s) and costs ≈ 1.7× on uniform data, so swap it in when
-    * one type dominates, keep the plain window otherwise. (An
-    * earlier "plain wins at every in-memory mass" reading was a
-    * count()-pruning artifact — see prefixSumTwoPhase's scaladoc.)
-    * The catalog face keeps the plain window because the sf0.1
-    * fixture is uniform and the single window is literally the
-    * oracle's plan. */
+    * history in one window partition; the face keeps the plain
+    * window because the sf0.1 fixture is uniform and the single
+    * window is literally the oracle's plan. */
   val cusumChangepoint: Q = Q(
     "ev_cusum_changepoint",
     (s, dir) => {

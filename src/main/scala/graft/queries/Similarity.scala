@@ -1268,56 +1268,6 @@ object Similarity extends QueryModule {
       FROM rk WHERE rnk <= 10 ORDER BY q_id, rnk""")
   )
 
-  /** The ss_rrf_fusion lineage, factored so its plan can be built and
-    * explained without the face's eager materialization: returns
-    * (result, the persisted postings handle the caller releases). */
-  private[graft] def rrfFusionLineage(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    import graft.operators.Ann
-    val emb = Tables(s, dir, "embeddings")
-    val (lexAll, tf) = bm25Ranked(Tables(s, dir, "documents"))
-    val lex = lexAll.join(
-      emb.select(col("vec_id").as("q_id")), Seq("q_id"), "left_semi")
-      .select(col("q_id"), col("doc_id"), col("rnk").as("l_rnk"))
-    val dq = emb.filter(col("vec_id") % 250 === 0)
-      .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val dense = Ann.topkBrute(s, emb, dq, K)
-      .select(col("q_id"), col("vec_id").as("doc_id"),
-        col("rank").cast("long").as("d_rnk"))
-    // fusion by UNION + one q_id repartition + pair aggregate, not a
-    // (q_id, doc_id) full-outer join (r21 verdict #4): row-identical —
-    // a doc present in both lists merges to one row whose rrf_micro
-    // is the sum of its two contributions and whose flags are the max
-    // of the per-list flags, exactly the join's coalesce arithmetic —
-    // but the join form paid THREE exchanges for the tiny rank lists
-    // (Spark requires ALL join keys for co-partitioning, so both
-    // q_id-partitioned windows re-exchanged on (q_id, doc_id), then
-    // the fusion window exchanged back to q_id). The single q_id
-    // repartition satisfies the pair aggregate's clustering (subset
-    // rule) AND is exactly the fusion window's partitioning — the
-    // bm25Ranked scoring-tail discipline applied to the fusion tail.
-    val fused = lex
-      .select(col("q_id"), col("doc_id"),
-        expr("1000000 div (60 + l_rnk)").as("c"),
-        lit(1L).as("in_lex"), lit(0L).as("in_dense"))
-      .unionByName(dense.select(col("q_id"), col("doc_id"),
-        expr("1000000 div (60 + d_rnk)").as("c"),
-        lit(0L).as("in_lex"), lit(1L).as("in_dense")))
-      .repartition(col("q_id"))
-      .groupBy("q_id", "doc_id")
-      .agg(sum("c").as("rrf_micro"), max("in_lex").as("in_lex"),
-        max("in_dense").as("in_dense"))
-    val w = Window.partitionBy("q_id")
-      .orderBy(col("rrf_micro").desc, col("doc_id"))
-    val out = fused
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 10)
-      .select("q_id", "rnk", "doc_id", "rrf_micro", "in_lex",
-        "in_dense")
-      .orderBy("q_id", "rnk")
-    (out, tf)
-  }
-
   /** HYBRID RANK FUSION — reciprocal-rank fusion (Cormack et al.
     * 2009, the standard hybrid-retrieval combiner) of the BM25
     * lexical top-10 with the exact dense-cosine top-10, for the query
@@ -1343,7 +1293,48 @@ object Similarity extends QueryModule {
   val rrfFusion: Q = Q(
     "ss_rrf_fusion",
     (s, dir) => {
-      val (out, tf) = rrfFusionLineage(s, dir)
+      import graft.operators.Ann
+      val emb = Tables(s, dir, "embeddings")
+      val (lexAll, tf) = bm25Ranked(Tables(s, dir, "documents"))
+      val lex = lexAll.join(
+        emb.select(col("vec_id").as("q_id")), Seq("q_id"), "left_semi")
+        .select(col("q_id"), col("doc_id"), col("rnk").as("l_rnk"))
+      val dq = emb.filter(col("vec_id") % 250 === 0)
+        .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
+      val dense = Ann.topkBrute(s, emb, dq, K)
+        .select(col("q_id"), col("vec_id").as("doc_id"),
+          col("rank").cast("long").as("d_rnk"))
+      // fusion by UNION + one q_id repartition + pair aggregate, not a
+      // (q_id, doc_id) full-outer join (r21 verdict #4): row-identical —
+      // a doc present in both lists merges to one row whose rrf_micro
+      // is the sum of its two contributions and whose flags are the max
+      // of the per-list flags, exactly the join's coalesce arithmetic —
+      // but the join form paid THREE exchanges for the tiny rank lists
+      // (Spark requires ALL join keys for co-partitioning, so both
+      // q_id-partitioned windows re-exchanged on (q_id, doc_id), then
+      // the fusion window exchanged back to q_id). The single q_id
+      // repartition satisfies the pair aggregate's clustering (subset
+      // rule) AND is exactly the fusion window's partitioning — the
+      // bm25Ranked scoring-tail discipline applied to the fusion tail.
+      val fused = lex
+        .select(col("q_id"), col("doc_id"),
+          expr("1000000 div (60 + l_rnk)").as("c"),
+          lit(1L).as("in_lex"), lit(0L).as("in_dense"))
+        .unionByName(dense.select(col("q_id"), col("doc_id"),
+          expr("1000000 div (60 + d_rnk)").as("c"),
+          lit(0L).as("in_lex"), lit(1L).as("in_dense")))
+        .repartition(col("q_id"))
+        .groupBy("q_id", "doc_id")
+        .agg(sum("c").as("rrf_micro"), max("in_lex").as("in_lex"),
+          max("in_dense").as("in_dense"))
+      val w = Window.partitionBy("q_id")
+        .orderBy(col("rrf_micro").desc, col("doc_id"))
+      val out = fused
+        .withColumn("rnk", row_number().over(w).cast("long"))
+        .filter(col("rnk") <= 10)
+        .select("q_id", "rnk", "doc_id", "rrf_micro", "in_lex",
+          "in_dense")
+        .orderBy("q_id", "rnk")
       graft.operators.CacheScope.eval(out)(tf)
     },
     Some(s"""

@@ -1246,8 +1246,7 @@ object TextAnalysis extends QueryModule {
       FROM cum GROUP BY lang ORDER BY lang NULLS FIRST""")
   )
 
-  // PII regexes + scrub live in operators.Pii — ONE definition shared
-  // with the streaming ingest face, so batch and stream cannot drift.
+  // PII regexes + scrub live in operators.Pii.
   private val EmailRe = graft.operators.Pii.EmailRe
   private val Ipv4Re = graft.operators.Pii.Ipv4Re
   private val PhoneRe = graft.operators.Pii.PhoneRe

@@ -2,6 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import com.fasterxml.jackson.databind.ObjectMapper
+import scala.jdk.CollectionConverters._
 
 /** The bench stdout line is a DRIVER CONTRACT: only the last ~2000
   * chars of stdout survive capture, with the sbt epilogue inside the
@@ -12,6 +13,13 @@ import com.fasterxml.jackson.databind.ObjectMapper
 class BenchFormatSpec extends AnyFunSuite {
 
   private val mapper = new ObjectMapper
+
+  /** The detail record's `frame` block read back as a flat
+    * name → number map; empty when the block is absent. */
+  private def parseFrame(json: String): Map[String, Double] =
+    Option(mapper.readTree(json).get("frame")).fold(Map.empty[String, Double]) {
+      f => f.fields.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
+    }
 
   private def mk(n: Int, err: Int = 0): Seq[(String, Double, Option[String])] =
     (1 to n).map { i =>
@@ -95,7 +103,8 @@ class BenchFormatSpec extends AnyFunSuite {
       "ev_lag_lead" -> 0.20, "rel_union" -> 0.15,
       // new query with no previous number: not comparable
       "rel_copurchase" -> 1.06)
-    val regs = Bench.regressions(prev, cur)
+    val regs = Bench.regressionsWithFloor(prev, None, None, Map.empty,
+      cur, -1)
     assert(regs.map(_._1).toSet === Set("dd_incremental",
       "dd_curation_pipeline", "dd_minhash_bound", "dd_exact"))
     // worst factor first
@@ -167,46 +176,27 @@ class BenchFormatSpec extends AnyFunSuite {
     val prev = Map("a" -> 1.0, "b" -> 0.5)
     val slowHost = Map("a" -> 2.2, "b" -> 1.1).map {
       case (k, v) => k -> v / (0.88 / 0.4) }
-    assert(Bench.regressions(prev, slowHost).isEmpty)
+    assert(Bench.regressionsWithFloor(prev, None, None, Map.empty,
+      slowHost, -1).isEmpty)
     // ...while a genuine 4× regression still clears the 1.5× bar
     // after the same normalization
     val realReg = Map("a" -> 4.0 / (0.88 / 0.4), "b" -> 0.5)
-    assert(Bench.regressions(prev, realReg).map(_._1) === Seq("a"))
+    assert(Bench.regressionsWithFloor(prev, None, None, Map.empty,
+      realReg, -1).map(_._1) === Seq("a"))
   }
 
-  test("skew_bench evidence serializes after queries and stays valid JSON") {
-    val skew = Map("join_plain_skew" -> 1.605, "scd2_salted_skew" -> 3.463)
-    val detail = Bench.detailJson(mk(120), 3, "sf0.1", calib = 0.2,
-      cpus = "32", skew = skew)
-    val js = mapper.readTree(detail)
-    assert(js.get("skew_bench").get("join_plain_skew").asDouble() === 1.605)
-    // the queries parser must still stop at the queries object
-    assert(Bench.parseDetailQueries(detail).size === 120)
-  }
-
-  test("skew context + cold/warm maps serialize, round-trip, stay parseable") {
-    val skew = Map("cusum_plain_skew" -> 10.5, "cusum_salted_skew" -> 3.7)
+  test("cold/warm maps serialize, round-trip, stay parseable") {
     val cold = Map("dd_some_catalog_query_name_001" -> 1.9)
     val warm = Map("dd_some_catalog_query_name_001" -> 0.8)
     val detail = Bench.detailJson(mk(120), 3, "sf0.1", calib = 0.2,
-      cpus = "32", skew = skew, skewCtx = "carried",
-      coldMap = cold, warmMap = warm)
+      cpus = "32", coldMap = cold, warmMap = warm)
     val js = mapper.readTree(detail)
-    assert(js.get("skew_bench_context").asText() === "carried")
     assert(js.get("cold").get("dd_some_catalog_query_name_001")
       .asDouble() === 1.9)
     assert(js.get("warm").get("dd_some_catalog_query_name_001")
       .asDouble() === 0.8)
-    // the queries parser still stops at the queries object, and the
-    // skew parser round-trips its own section
+    // the queries parser still stops at the queries object
     assert(Bench.parseDetailQueries(detail).size === 120)
-    assert(Bench.parseSkewBench(detail) === skew)
-    assert(Bench.parseDetailField(detail, "skew_bench_context")
-      === Some("carried"))
-    // no context tag without cells; no tag requested → absent
-    val bare = Bench.detailJson(mk(5), 3, "sf0.1", skew = skew)
-    assert(!mapper.readTree(bare).has("skew_bench_context"))
-    assert(Bench.parseSkewBench("{\"queries\":{\"a\":1}}") === Map.empty)
   }
 
   test("datapath_bench cells + context + deviations serialize after " +
@@ -214,8 +204,7 @@ class BenchFormatSpec extends AnyFunSuite {
     val dp = Map("gopher_stats" -> 1.234, "bm25_probe" -> 0.456,
       "png_decode" -> 2.001)
     val detail = Bench.detailJson(mk(120), 3, "sf0.1", calib = 0.2,
-      cpus = "32", skew = Map("join_plain_skew" -> 1.5),
-      skewCtx = "controlled", datapath = dp,
+      cpus = "32", datapath = dp,
       datapathCtx = "controlled", datapathDevs = Some(Set("png_decode")))
     val js = mapper.readTree(detail)
     assert(js.get("datapath_bench").get("gopher_stats")
@@ -223,12 +212,10 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(js.get("datapath_bench_context").asText() === "controlled")
     assert(js.get("datapath_bench_deviations").get(0)
       .asText() === "png_decode")
-    // round-trips through its own parser; the queries/skew parsers
-    // still stop at their own sections
+    // round-trips through its own parser; the queries parser still
+    // stops at its own section
     assert(Bench.parseDatapathBench(detail) === dp)
     assert(Bench.parseDetailQueries(detail).size === 120)
-    assert(Bench.parseSkewBench(detail) ===
-      Map("join_plain_skew" -> 1.5))
     assert(Bench.parseDetailField(detail, "datapath_bench_context")
       === Some("controlled"))
     // no cells → no section, no tags; missing section parses empty
@@ -238,8 +225,8 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(!mapper.readTree(bare).has("datapath_bench_context"))
     assert(Bench.parseDatapathBench("{\"queries\":{\"a\":1}}")
       === Map.empty)
-    // the carry/guard decision kernel is shared with the skew matrix:
-    // a loaded host carries controlled datapath cells verbatim
+    // the carry/guard decision kernel: a loaded host carries
+    // controlled datapath cells verbatim
     assert(Bench.skewPlan(loadedHost = true, dp,
       Some("controlled")) === ((false, "carried")))
     // and the deviation guard flags a >2x cell in either direction
@@ -261,7 +248,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // r18 verdict #1: a loadavg-2.47 launch shipped 4 UNRESOLVED
     // flags its own frame block refuted. A flag whose rerun persists
     // on an UNCONTROLLED frame is now tagged frame_noise and never
-    // counts as unresolved — the catalog analogue of the skew
+    // counts as unresolved — the catalog analogue of the datapath
     // section's carry-on-loaded-host stance.
     val reruns = Seq(
       Bench.Rerun("ss_recall_report", 2.9, 2.8, 1.81,
@@ -314,7 +301,7 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(js.get("frame").get("calib").asDouble() === 0.21)
     assert(js.get("frame").get("calib_sh").asDouble() === 0.8)
     assert(js.get("frame").get("controlled").asInt() === 1)
-    val f = Bench.parseFrame(detail)
+    val f = parseFrame(detail)
     assert(f("loadavg") === 0.375 && f("controlled") === 1.0)
     // the queries parser still stops at the queries object
     assert(Bench.parseDetailQueries(detail).size === 50)
@@ -334,7 +321,7 @@ class BenchFormatSpec extends AnyFunSuite {
     // pre-frame writer: both unset → block absent, parseFrame empty
     val pre = Bench.detailJson(mk(5), 3, "sf0.1")
     assert(!mapper.readTree(pre).has("frame"))
-    assert(Bench.parseFrame(pre) === Map.empty)
+    assert(parseFrame(pre) === Map.empty)
   }
 
   test("skew guard: loaded host can never overwrite a controlled matrix") {
@@ -386,54 +373,19 @@ class BenchFormatSpec extends AnyFunSuite {
       Some("loaded")) === ((true, "loaded")))
   }
 
-  test("skew-only splice replaces cells + context, touches nothing else") {
-    val orig = Bench.detailJson(mk(20), 3, "sf0.1", calib = 0.3,
-      cpus = "32", skew = Map("scd2_plain_uniform" -> 13.641,
-        "scd2_plain_skew" -> 6.458), skewCtx = "carried")
-    val fresh = Map("scd2_plain_uniform" -> 5.8, "scd2_plain_skew" -> 11.2)
-    val patched = Bench.spliceSkewBench(orig, fresh, "controlled").get
-    val js = mapper.readTree(patched)
-    assert(js.get("skew_bench").get("scd2_plain_uniform").asDouble() === 5.8)
-    assert(js.get("skew_bench").size() === 2)
-    assert(js.get("skew_bench_context").asText() === "controlled")
-    // the catalog record around the splice is byte-identical
-    assert(js.get("queries").size() === 20)
-    assert(js.get("calib").asDouble() === 0.3)
-    assert(Bench.parseSkewBench(patched) === fresh)
-    // a PRE-GUARD record (cells, no context tag — the unknown-
-    // provenance class the seeding path exists to displace) gets the
-    // tag inserted next to the replaced cells, staying valid JSON
-    val preGuard = Bench.detailJson(mk(20), 3, "sf0.1", calib = 0.3,
-      skew = Map("scd2_plain_uniform" -> 13.641))
-    assert(!mapper.readTree(preGuard).has("skew_bench_context"))
-    val seeded = Bench.spliceSkewBench(preGuard, fresh, "controlled").get
-    val sjs = mapper.readTree(seeded)
-    assert(sjs.get("skew_bench_context").asText() === "controlled")
-    assert(sjs.get("skew_bench").get("scd2_plain_skew").asDouble() === 11.2)
-    assert(sjs.get("skew_bench").size() === 2)
-    assert(sjs.get("queries").size() === 20)
-    assert(Bench.parseDetailField(seeded, "skew_bench_context")
-      === Some("controlled"))
-    // no skew section at all / no cells → refuse rather than guess
-    val bare = Bench.detailJson(mk(5), 3, "sf0.1")
-    assert(Bench.spliceSkewBench(bare, fresh, "controlled") === None)
-    assert(Bench.spliceSkewBench(orig, Map.empty, "controlled") === None)
-  }
-
-  test("skew deviation guard: >2x cells detected, tagged, spliced; " +
-      "brace drift fails loudly") {
+  test("skew deviation guard: >2x cells detected and tagged") {
     // the kernel: either direction past the factor, missing or
     // nonpositive cells can never deviate (r14 verdict #1: a 15.86 s
     // cell over a 3.79 s carried controlled value shipped untagged)
-    val carried = Map("scd2_salted_uniform" -> 3.79,
-      "join_plain_skew" -> 1.6, "cusum_plain_skew" -> 10.0,
+    val carried = Map("gopher_stats" -> 3.79,
+      "bpe_count" -> 1.6, "minhash_sig" -> 10.0,
       "gone" -> 2.0, "bad" -> -1.0)
-    val fresh = Map("scd2_salted_uniform" -> 15.86, // 4.2× slower
-      "join_plain_skew" -> 0.7,                     // 2.3× faster
-      "cusum_plain_skew" -> 11.0,                   // within 2×
+    val fresh = Map("gopher_stats" -> 15.86, // 4.2× slower
+      "bpe_count" -> 0.7,                    // 2.3× faster
+      "minhash_sig" -> 11.0,                 // within 2×
       "new_cell" -> 9.9, "bad" -> 5.0)
     assert(Bench.skewDeviations(fresh, carried)
-      === Set("scd2_salted_uniform", "join_plain_skew"))
+      === Set("gopher_stats", "bpe_count"))
     assert(Bench.skewDeviations(fresh, carried, factor = 5.0)
       === Set.empty)
     // exactly at the factor is NOT a deviation (strict >)
@@ -441,45 +393,22 @@ class BenchFormatSpec extends AnyFunSuite {
       === Set.empty)
     // detailJson: the tag is present (sorted, possibly empty) exactly
     // when the guard compared — Some — and absent when it could not
-    val skew = Map("scd2_salted_uniform" -> 15.86)
+    val dp = Map("gopher_stats" -> 15.86)
     val tagged = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "controlled",
-      skewDevs = Some(Set("scd2_salted_uniform")))
+      datapath = dp, datapathCtx = "controlled",
+      datapathDevs = Some(Set("gopher_stats")))
     val tjs = mapper.readTree(tagged)
-    assert(tjs.get("skew_bench_deviations").size() === 1)
-    assert(tjs.get("skew_bench_deviations").get(0).asText()
-      === "scd2_salted_uniform")
+    assert(tjs.get("datapath_bench_deviations").size() === 1)
+    assert(tjs.get("datapath_bench_deviations").get(0).asText()
+      === "gopher_stats")
     val clean = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "controlled", skewDevs = Some(Set.empty))
-    assert(mapper.readTree(clean).get("skew_bench_deviations").size()
-      === 0)
+      datapath = dp, datapathCtx = "controlled",
+      datapathDevs = Some(Set.empty))
+    assert(mapper.readTree(clean).get("datapath_bench_deviations")
+      .size() === 0)
     val noGuard = Bench.detailJson(mk(10), 3, "sf0.1", cpus = "32",
-      skew = skew, skewCtx = "carried")
-    assert(!mapper.readTree(noGuard).has("skew_bench_deviations"))
-    // splice: a stale deviations tag is dropped with the matrix it
-    // described; the new guard's tag rides in with the context
-    val fresh2 = Map("scd2_salted_uniform" -> 3.9)
-    val respliced = Bench.spliceSkewBench(tagged, fresh2, "controlled",
-      devs = Some(Set.empty)).get
-    val rjs = mapper.readTree(respliced)
-    assert(rjs.get("skew_bench").get("scd2_salted_uniform")
-      .asDouble() === 3.9)
-    assert(rjs.get("skew_bench_deviations").size() === 0)
-    assert(rjs.get("queries").size() === 10)
-    val guardless = Bench.spliceSkewBench(tagged, fresh2,
-      "controlled").get
-    assert(!mapper.readTree(guardless).has("skew_bench_deviations"))
-    val reTagged = Bench.spliceSkewBench(noGuard, fresh2, "controlled",
-      devs = Some(Set("scd2_salted_uniform"))).get
-    assert(mapper.readTree(reTagged).get("skew_bench_deviations")
-      .get(0).asText() === "scd2_salted_uniform")
-    // a nested value inside skew_bench would put the first '}' at
-    // the wrong brace — the splice must refuse loudly, not truncate
-    val nested = tagged.replace(""""skew_bench":{""",
-      """"skew_bench":{"inner":{"x":1},""")
-    intercept[IllegalArgumentException] {
-      Bench.spliceSkewBench(nested, fresh2, "controlled")
-    }
+      datapath = dp, datapathCtx = "carried")
+    assert(!mapper.readTree(noGuard).has("datapath_bench_deviations"))
   }
 
   test("value_resolved: resolved flags replace their medians in the companion total") {

@@ -38,8 +38,7 @@ class CacheDisciplineSpec extends AnyFunSuite with SharedSpark {
       "per materialize call") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-ckpt-spec").toString
+    val dir = tempDir("graft-ckpt-spec").toString
     spark.conf.set("graft.checkpoint.dir", dir)
     try {
       val d = Seq(1, 2, 3).toDF("x")

@@ -6,13 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Layered config precedence — reference jonesy.py:7-11:
   * `.env.shared` < `.env.secret` < process env. */
-class ConfigSpec extends AnyFunSuite {
+class ConfigSpec extends AnyFunSuite with SharedSpark {
 
   private def write(dir: String, name: String, body: String): Unit =
     Files.write(java.nio.file.Paths.get(dir, name), body.getBytes("UTF-8"))
 
   test("secret overrides shared, process env overrides both") {
-    val dir = Files.createTempDirectory("cfg").toString
+    val dir = tempDir("cfg").toString
     write(dir, ".env.shared",
       """# shared defaults
         |A=from_shared
@@ -30,7 +30,7 @@ class ConfigSpec extends AnyFunSuite {
   }
 
   test("dotenv parsing: quotes, export prefix, comments, missing file") {
-    val dir = Files.createTempDirectory("cfg2").toString
+    val dir = tempDir("cfg2").toString
     write(dir, ".env.shared",
       """export K1="quoted value"
         |K2='single'
@@ -43,7 +43,7 @@ class ConfigSpec extends AnyFunSuite {
     assert(!merged.contains("K3"))
     assert(merged("K4") == "a=b=c")
     // no .env.secret present — the layer is just empty
-    assert(Config.load(Files.createTempDirectory("cfg3").toString,
+    assert(Config.load(tempDir("cfg3").toString,
       env = Map("ONLY" -> "env")) == Map("ONLY" -> "env"))
   }
 }

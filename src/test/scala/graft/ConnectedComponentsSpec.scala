@@ -102,7 +102,7 @@ class ConnectedComponentsSpec extends AnyFunSuite with SharedSpark {
     // from executor-memory localCheckpoint() to reliable checkpoint()
     // — the fault-tolerant path a real cluster needs. Same fixpoint,
     // and checkpoint files actually land in the configured dir.
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val dir = tempDir("graft-ckpt")
       .toString
     spark.conf.set("graft.checkpoint.dir", dir)
     try {

@@ -1,15 +1,13 @@
 package graft
 
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.{GopherRules, HtmlText, Partitioning, UrlCanon}
+import graft.operators.{GopherRules, HtmlText, UrlCanon}
 
 /** r12 curation kernels: Gopher rule arithmetic vs a brute Scala
-  * reference, HtmlText totality on malformed input, domainSuffixes
-  * suffix-rule semantics, and the packSequences ↔ prefixSumTwoPhase
-  * scale-path equality the `ta_pack_sequences` scaladoc promises. */
+  * reference, HtmlText totality on malformed input, and
+  * domainSuffixes suffix-rule semantics. */
 class CurationSpec extends AnyFunSuite with SharedSpark {
 
   import spark.implicits._
@@ -272,25 +270,5 @@ class CurationSpec extends AnyFunSuite with SharedSpark {
       .join(Seq("example.net").toDF("suf"), Seq("suf"), "left_semi")
       .select("domain").distinct().as[String].collect().toSet
     assert(blocked == Set("sub.example.net", "example.net"))
-  }
-
-  // ---- packSequences scale path ----------------------------------
-
-  test("pack-sequences window equals prefixSumTwoPhase bit-for-bit") {
-    val df = (0L until 400L).map { i =>
-      (s"src${i % 3}", i, 1L + (i * 7) % 90)
-    }.toDF("source", "doc_id", "n_bpe")
-    val w = Window.partitionBy("source").orderBy("doc_id")
-      .rowsBetween(Window.unboundedPreceding, 0)
-    def derive(c: org.apache.spark.sql.DataFrame) = c
-      .select(col("source"), col("doc_id"), col("n_bpe"),
-        expr("(cum - n_bpe) div 256").as("seq_first"),
-        expr("(cum - 1) div 256").as("seq_last"),
-        expr("(cum - n_bpe) % 256").as("seq_offset"))
-      .orderBy("source", "doc_id")
-    val plain = derive(df.withColumn("cum", sum("n_bpe").over(w)))
-    val twoPhase = derive(Partitioning.prefixSumTwoPhase(
-      df, "source", "doc_id", "doc_id", "n_bpe", bucketSize = 64L))
-    assert(plain.collect().toSeq == twoPhase.collect().toSeq)
   }
 }

@@ -117,11 +117,13 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
         graft.operators.QualityModel.logitOf(col("text")).as("logit"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(folded == batch, "fold and aggregation disagree")
-    // NULL text: logit is NULL, the gate's coalesce drops the doc —
-    // pinned so the admission behavior can't drift silently
-    val g = graft.streaming.Streams.streamingClassifierGate(
-      Seq((1L, null: String), (2L, "")).toDF("doc_id", "text"))
-    assert(g.count() == 0, "null/empty text must not pass the gate")
+    // NULL text folds to a NULL logit and empty text to 0 — pinned
+    // so the faces' coalesce-to-0 scoring can't drift silently
+    val degenerate = Seq((1L, null: String), (2L, "")).toDF("doc_id", "text")
+      .select(graft.operators.QualityModel.logitOf(col("text")))
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0)))
+    assert(degenerate.toSeq == Seq(None, Some(0L)),
+      "null/empty text must not fold to a positive logit")
   }
 
   test("cdcChunks fails fast on invalid window/mask instead of " +
@@ -152,7 +154,7 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     assert(out(3L) == ((2L, 0L, "two words")))
   }
 
-  test("bloom gate and streaming gate are total on degenerate docs") {
+  test("bloom gate is total on degenerate docs") {
     import org.apache.spark.sql.functions._
     // empty member set: build over zero rows must still gate soundly
     val empty = weird.filter(lit(false))
@@ -179,18 +181,6 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     val ngated = weird.select(xxhash64(col("text")).as("g"))
       .filter(graft.operators.Bloom.gateLong(spark, nbits, col("g")))
     assert(ngated.count() == 0, "all-NULL-key filter admits nothing")
-    // the streaming gram gate passes short/empty docs (no 6-gram) and
-    // stays total on repeated separators — batch DataFrame, same code.
-    // NULL text joins the always-pass set: split(NULL) propagates NULL
-    // through exists, and an unguarded filter would silently drop the
-    // row as if contaminated
-    val withNull = weird.unionAll(
-      Seq((6L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val passed = graft.streaming.Streams
-      .streamingDecontaminationGate(withNull, bits)
-      .select("doc_id").as[Long].collect().toSet
-    assert(passed == Set(1L, 2L, 3L, 4L, 5L, 6L),
-      "empty filter contaminates nothing; short/empty/null docs always pass")
   }
 
   test("normalization and mix gates are total on degenerate text") {
@@ -308,7 +298,7 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
-  test("mg_summary and adaptiveSaltedJoin are total on empty/null input") {
+  test("mg_summary is total on empty/null input") {
     import org.apache.spark.sql.functions._
     GraftExtensions.ensure(spark)
     // global aggregate over zero rows yields one row with an EMPTY
@@ -320,24 +310,13 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     val nulls = weird.select(lit(null).cast("string").as("token"))
     val mn = nulls.agg(expr("mg_summary(token, 4)").as("mg")).head()
     assert(mn.getMap[String, Long](0).isEmpty)
-    // empty fact side: detection finds nothing, the plain-join path
-    // returns the (empty) inner join rather than throwing
-    val left = weird.filter(lit(false))
-      .select(col("doc_id").as("k"), col("text"))
-    val right = weird.select(col("doc_id").as("k"),
-      col("text").as("name"))
-    val joined = graft.operators.Partitioning
-      .adaptiveSaltedJoin(left, right, "k", salts = 4)
-    assert(joined.count() == 0)
-    assert(joined.columns.toSeq == Seq("k", "text", "name"))
   }
 
   test("linear attribution: equal split with remainder-to-last-touch, " +
       "path reset at each purchase, exact revenue conservation") {
     import org.apache.spark.sql.functions._
     val ts = java.sql.Timestamp.valueOf(_: String)
-    val dir = java.nio.file.Files
-      .createTempDirectory("edge_attr").toString
+    val dir = tempDir("edge_attr").toString
     Seq(
       // user 1, path 1: ad + email then a 101-cent purchase →
       // 101 div 2 = 50 each, remainder 1 to the LAST touch (email)
@@ -379,8 +358,7 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
   test("sweep/resample/winsorize faces are total on degenerate events") {
     import org.apache.spark.sql.functions._
     val ts = java.sql.Timestamp.valueOf(_: String)
-    val dir = java.nio.file.Files
-      .createTempDirectory("edge_events").toString
+    val dir = tempDir("edge_events").toString
     Seq(
       // user 1: a single event (1-point grid, 1 interval)
       (1L, ts("2024-01-01 10:00:00"), 1L, "solo", 60.0, "{}"),
@@ -475,8 +453,7 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     // fixtures lack are pinned through a synthetic mini-fixture dir —
     // the same read path (Tables), the same face functions
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("latent_fixture").toString
+    val dir = tempDir("latent_fixture").toString
     def t(s: String) = java.sql.Timestamp.valueOf(s)
     // events: $.k integral / non-integral / scientific / absent, and
     // one user whose two events sit EXACTLY the 2h session gap apart
@@ -524,8 +501,7 @@ class EdgeCaseSpec extends AnyFunSuite with SharedSpark {
     // Tables read path
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    val dir = java.nio.file.Files
-      .createTempDirectory("latent_docs").toString
+    val dir = tempDir("latent_docs").toString
     Seq(
       (1L, "alpha beta gamma delta", "en", "web", 22L),
       (2L, null.asInstanceOf[String], "xx", "web", 0L), // NULL text

@@ -20,7 +20,7 @@ class GoldenSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("gzip CSV output is byte-identical across runs") {
-    val base = Files.createTempDirectory("golden").toString
+    val base = tempDir("golden").toString
     val q = SparkEntry.queries("ref_term_courses")
     Sinks.gzipCsv(q(spark, sf), s"$base/a")
     Sinks.gzipCsv(q(spark, sf), s"$base/b")
@@ -77,7 +77,7 @@ class GoldenSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("snapshot enrollments-{term}.gz carries the full 13-col projection") {
-    val base = Files.createTempDirectory("golden_wide").toString
+    val base = tempDir("golden_wide").toString
     val term = graft.jobs.Jobs.currentTermIds(spark, sf).head
     val df = graft.jobs.Jobs.termEnrollments(spark, sf, term)
     // the reference's column order, queries.py:294-307
@@ -98,7 +98,7 @@ class GoldenSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("term-parameterized extract is byte-identical across runs") {
-    val base = Files.createTempDirectory("golden_term").toString
+    val base = tempDir("golden_term").toString
     val term = graft.jobs.Jobs.currentTermIds(spark, sf).head
     Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term), s"$base/a")
     Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term), s"$base/b")

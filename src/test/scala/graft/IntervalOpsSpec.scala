@@ -198,7 +198,7 @@ class IntervalOpsSpec extends AnyFunSuite with SharedSpark {
     // non-ANSI Long arithmetic must throw, not mis-rank (r10 advice)
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("anomaly_guard")
+    val dir = tempDir("anomaly_guard")
       .toString
     (1 to 10).map(i => (i.toLong, "t", 2.0e8))
       .toDF("event_id", "event_type", "value")

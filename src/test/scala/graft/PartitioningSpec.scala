@@ -26,53 +26,11 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     assert(plain == salted)
   }
 
-  test("adaptiveSaltedJoin equals the plain join under heavy skew") {
-    import spark.implicits._
-    // one key carries half the fact table; a null key must vanish in
-    // both forms (inner-join null semantics)
-    val left = ((1 to 500).map(i => (Some(7L), s"hot_$i")) ++
-      (1 to 200).map(i => (Some(i.toLong % 40), s"cold_$i")) ++
-      Seq((None: Option[Long], "null_row")))
-      .toDF("k", "payload")
-    val right = (0 to 40).map(i => (i.toLong, s"dim_$i")).toDF("k", "name")
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "payload", "name").orderBy("k", "payload")
-        .collect().map(_.toSeq).toSeq
-    val plain = canon(left.join(right, Seq("k"), "inner"))
-    for ((mk, minHot) <- Seq((4, 1L), (64, 1L), (8, 400L)))
-      assert(canon(Partitioning.adaptiveSaltedJoin(
-        left, right, "k", salts = 8, k = mk, minHotRows = minHot))
-        == plain, s"k=$mk minHotRows=$minHot")
-    // the detection contract: with the threshold above every cold
-    // key's count, ONLY the hot key is salted — the right side's
-    // replicated sliver is 1 key × salts rows, not |right| × salts
-    GraftExtensions.ensure(spark)
-    val hot = left.select(col("k").cast("string").as("__k"))
-      .agg(expr("mg_summary(__k, 8)").as("mg"))
-      .selectExpr("explode(mg) AS (item, est)")
-      .filter(col("est") >= 400L).collect()
-    assert(hot.map(_.getString(0)).toSeq == Seq("7"),
-      "only the genuinely hot key clears the threshold")
-  }
-
-  test("saltedCount equals plain groupBy count") {
-    val o = Tables(spark, sf, "orders")
-    val plain = o.groupBy("o_orderstatus").agg(count(lit(1)).as("n"))
-      .orderBy("o_orderstatus").collect().map(r => (r.getString(0),
-        r.getLong(1))).toSeq
-    val salted = Partitioning.saltedCount(o, "o_orderstatus", 8)
-      .orderBy("o_orderstatus").collect().map(r => (r.getString(0),
-        r.getLong(1))).toSeq
-    assert(plain == salted)
-  }
-
   test("salting spreads byte-identical duplicate rows — the replicated " +
       "hot-key shape the whole-row-hash salt silently un-salted") {
     import spark.implicits._
     val dup = Seq.fill(400)(("hot", 1L)).toDF("k", "v").repartition(4)
     // result parity on a duplicates-only input (salt-agnostic results)
-    val cnt = Partitioning.saltedCount(dup, "k", 8).collect()
-    assert(cnt.length == 1 && cnt(0).getLong(1) == 400L)
     val st = Partitioning.saltedStats(dup, "k", "v", 8).collect()(0)
     assert(st.getLong(1) == 400L && st.getLong(2) == 400L)
     val dim = Seq(("hot", "d")).toDF("k", "name")
@@ -96,78 +54,6 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     val salted = Partitioning.saltedStats(d, "lang", "n_chars", 8)
       .orderBy("lang").collect().map(_.toSeq).toSeq
     assert(plain == salted)
-  }
-
-  test("scd2TwoPhase equals the plain window face row-for-row; " +
-      "phase-1 windows partition on the time bucket") {
-    import graft.operators.Partitioning
-    val events = Tables(spark, sf, "events")
-    val twoPhase = Partitioning.scd2TwoPhase(events, bucketSeconds = 21600)
-    // equality pin: bit-identical interval chain vs the plain window
-    val plain = graft.queries.Events.scd2.fn(spark, sf).collect().toSeq
-    assert(twoPhase.collect().toSeq == plain,
-      "salted two-phase SCD2 diverged from the plain window")
-    // plan pin: the event-level sort (the skew cost) runs under
-    // windows partitioned by (user_id, __bkt) — a hot user spreads
-    // over its time buckets; only run-level windows key on user_id
-    // alone
-    val plan = twoPhase.queryExecution.executedPlan.toString
-    val winSpecs = "Window \\[[^\\n]*\\], \\[([^\\]]*)\\], "
-      .r.findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(winSpecs.exists(_.contains("__bkt")),
-      s"no bucket-partitioned window in plan: $winSpecs")
-    // a smaller bucket (more salt) must not change the result either
-    assert(Partitioning.scd2TwoPhase(events, 3600).collect().toSeq
-      == plain, "bucket granularity leaked into the result")
-  }
-
-  test("prefixSumTwoPhase equals the single-window running sum and index") {
-    import org.apache.spark.sql.expressions.Window
-    import graft.operators.Partitioning
-    val e = Tables(spark, sf, "events")
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val w = Window.partitionBy("event_type").orderBy("us", "event_id")
-    val ref = e
-      .withColumn("cum", sum("cents")
-        .over(w.rowsBetween(Window.unboundedPreceding, 0)))
-      .withColumn("k", row_number().over(w).cast("long"))
-      .select("event_type", "event_id", "cum", "k")
-      .orderBy("event_type", "k").collect().toSeq
-    // hour buckets: many per type, so phase-2 offsets genuinely stitch
-    val got = Partitioning.prefixSumTwoPhase(e, "event_type", "us",
-        "event_id", "cents", bucketSize = 3600L * 1000000L)
-      .select("event_type", "event_id", "cum", "k")
-      .orderBy("event_type", "k").collect().toSeq
-    assert(got == ref,
-      "two-phase running sum diverged from the single window")
-  }
-
-  test("cusumTwoPhase equals ev_cusum_changepoint; windows partition " +
-      "on the time bucket") {
-    import graft.operators.Partitioning
-    val e = Tables(spark, sf, "events")
-      .select(col("event_type"), unix_micros(col("ts")).as("us"),
-        col("event_id"),
-        round(col("value") * 100).cast("long").as("cents"))
-    val plain = SparkEntry.queries("ev_cusum_changepoint")(spark, sf)
-      .collect().toSeq
-    val twoPhase = Partitioning.cusumTwoPhase(e, bucketSeconds = 21600)
-    assert(twoPhase.collect().toSeq == plain,
-      "two-phase cusum diverged from the plain-window face")
-    // the skew cost — the event-level ordered window — must key on
-    // (event_type, __bkt), never event_type alone; per-type totals
-    // arrive by broadcast join, so NO window in the plan sees a whole
-    // type's history in one partition
-    val plan = twoPhase.queryExecution.executedPlan.toString
-    val winSpecs = "Window \\[[^\\n]*\\], \\[([^\\]]*)\\], "
-      .r.findAllMatchIn(plan).map(_.group(1)).toSeq
-    assert(winSpecs.nonEmpty && winSpecs.forall(_.contains("__bkt")),
-      s"event-level window not bucket-partitioned: $winSpecs")
-    // a different salt granularity must not change the answer
-    assert(Partitioning.cusumTwoPhase(e, 3600).collect().toSeq == plain,
-      "bucket granularity leaked into the cusum result")
   }
 
   test("packShards equals the single-window reference computation") {
@@ -311,7 +197,7 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("partitioned lake write: pruned reads, dynamic per-partition overwrite") {
-    val base = java.nio.file.Files.createTempDirectory("lake").toString
+    val base = tempDir("lake").toString
     val events = Tables(spark, sf, "events")
       .withColumn("dt", to_date(col("ts")))
     Partitioning.writePartitioned(events, s"$base/events", "dt")

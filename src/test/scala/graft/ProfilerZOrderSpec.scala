@@ -93,7 +93,7 @@ class ProfilerZOrderSpec extends AnyFunSuite with SharedSpark {
     val df = Seq((1, 2, 9L)).toDF("a", "b", "__zkey")
     val e = intercept[IllegalArgumentException] {
       graft.operators.ZOrder.writeZOrdered(df, "a", "b", 4,
-        java.nio.file.Files.createTempDirectory("zk").toString, 1)
+        tempDir("zk").toString, 1)
     }
     assert(e.getMessage.contains("__zkey"))
   }
@@ -146,7 +146,7 @@ class ProfilerZOrderSpec extends AnyFunSuite with SharedSpark {
     val n = 32
     val grid = (0 until n).flatMap(a => (0 until n).map(b =>
       (a.toLong, b.toLong))).toDF("a", "b")
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder")
+    val dir = tempDir("graft-zorder")
       .toString
     try {
       ZOrder.writeZOrdered(grid, "a", "b", 5, dir, numFiles = 16)

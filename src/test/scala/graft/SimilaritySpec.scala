@@ -390,8 +390,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
     import graft.operators.Lexical
     val docs = graft.sources.Tables(spark, sf, "documents")
     val idx = Lexical.buildIndex(docs)
-    val dir = java.nio.file.Files
-      .createTempDirectory("bm25_bundle_spec").toString
+    val dir = tempDir("bm25_bundle_spec").toString
     Lexical.writeIndex(idx, s"$dir/bm25")
     val reloaded = Lexical.readIndex(spark, s"$dir/bm25")
     assert(reloaded.nDocs == idx.nDocs && reloaded.sumDl == idx.sumDl)
@@ -468,8 +467,7 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
       def nEx(d: org.apache.spark.sql.DataFrame): Int =
         "Exchange hashpartitioning".r
           .findAllIn(d.queryExecution.executedPlan.toString).size
-      val dir = java.nio.file.Files
-        .createTempDirectory("bm25_plain_spec").toString
+      val dir = tempDir("bm25_plain_spec").toString
       Lexical.writeIndex(idx, s"$dir/bm25")
       val plain = Lexical.readIndex(spark, s"$dir/bm25")
       val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
@@ -886,6 +884,51 @@ class SimilaritySpec extends AnyFunSuite with SharedSpark {
       for (base <- Seq(t, tomb, s"${t}__scalars");
           suffix <- Seq("", "__stage", "__old"))
         spark.sql(s"DROP TABLE IF EXISTS $base$suffix")
+    }
+  }
+
+  test("a REDELIVERED ingest micro-batch cannot resurrect a vector " +
+      "tombstoned between the crash and the redelivery (the " +
+      "delivery-manifest guard, r19 review)") {
+    // the window the data-level newKeysOnly guard cannot close: batch
+    // B (with id X) appends and the job dies BEFORE the source commits
+    // it; a takedown then tombstones X; the source redelivers B. The
+    // tombstone-overlap compact would physically drop X, newKeysOnly
+    // would then pass it, and the GDPR-deleted vector would serve
+    // again — unless the append body is keyed by batch identity in
+    // the delivery manifest (Partitioning.deliverOnce). This replays
+    // both deliveries by hand.
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{Ann, Partitioning}
+    val emb = graft.sources.Tables(spark, sf, "embeddings")
+    val t = "ivf_redeliver_spec"
+    try {
+      val resident = emb.filter(col("vec_id") % 7 =!= 0)
+      val batchB = emb.filter(col("vec_id") % 7 === 0)
+      val cents = Ann.ivfCentroids(spark, resident, 8, steps = 1)
+      Ann.buildIvfIndex(spark, resident, cents, t, nBuckets = 4)
+      val key = Some("ingest:cp-spec:000000000001")
+      def body(): Unit = { Ann.appendIvfBatch(spark, t, batchB, cents); () }
+      // delivery 1: appends (crash simulated by NOT advancing the
+      // source — the manifest row is the part that survives)
+      assert(Partitioning.deliverOnce(spark, t, key)(body()))
+      // takedown of one batch-B id lands as a tombstone
+      val x = batchB.select("vec_id").orderBy("vec_id").limit(1)
+      Ann.tombstoneIvfVectors(spark, t, x, compactFraction = 10.0)
+      val xId = x.collect()(0).getLong(0)
+      def served: Set[Long] = Ann.liveIvfVectors(spark, t)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(!served.contains(xId), "takedown did not mask X")
+      // redelivery of batch B: the manifest must skip the body — the
+      // compact-then-append path would resurrect X
+      assert(!Partitioning.deliverOnce(spark, t, key)(body()),
+        "redelivered batch was not skipped")
+      assert(!served.contains(xId),
+        "redelivered micro-batch resurrected a tombstoned vector")
+    } finally {
+      for (x <- Seq(t, s"${t}__scalars", s"${t}__tombstones",
+          s"${t}__manifest"); sx <- Seq("", "__stage", "__old"))
+        spark.sql(s"DROP TABLE IF EXISTS $x$sx")
     }
   }
 

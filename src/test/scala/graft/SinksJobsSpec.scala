@@ -15,7 +15,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   private val sf = "/root/testdata/sf0.001"
 
   test("gzipCsv writes one headerless gzip part; timestamps serialized") {
-    val dir = Files.createTempDirectory("sink_spec").toString
+    val dir = tempDir("sink_spec").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .withColumn("last_updated",
         org.apache.spark.sql.functions.to_timestamp(
@@ -38,7 +38,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     // cast NTZ → TIMESTAMP first (session TZ is UTC, so the wall time
     // IS the contract's UTC instant) instead of crashing on exactly
     // the inputs its scaladoc claims to absorb
-    val dir = Files.createTempDirectory("sink_ntz_spec").toString
+    val dir = tempDir("sink_ntz_spec").toString
     val df = Seq(1L).toDF("id").withColumn("last_updated",
       org.apache.spark.sql.functions.expr(
         "CAST('2024-01-15 12:00:00' AS TIMESTAMP_NTZ)"))
@@ -51,7 +51,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("gzip CSV doubles interior quotes (RFC 4180, the python " +
       "csv.writer convention)") {
-    val dir = Files.createTempDirectory("sink_rfc_spec").toString
+    val dir = tempDir("sink_rfc_spec").toString
     Sinks.gzipCsv(Seq(("ROBERT \"BOB\" SMITH", 1L)).toDF("name", "n"),
       s"$dir/out")
     val part = new java.io.File(s"$dir/out").listFiles()
@@ -67,7 +67,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("a failed delivery preserves the target's previous extract " +
       "(the reference's atomic-put contract)") {
-    val dir = Files.createTempDirectory("sink_keep_spec").toString
+    val dir = tempDir("sink_keep_spec").toString
     val ok = Seq((1L, "a")).toDF("id", "v")
     val key = "k/q.gz"
     val r1 = Sinks.fanOut(ok, Seq(s"$dir/t1", s"$dir/t2"), key)
@@ -89,7 +89,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("single-target fanOut keeps the previous extract through a " +
       "failed delivery (the same atomic-put contract as multi-target)") {
-    val dir = Files.createTempDirectory("sink_keep1_spec").toString
+    val dir = tempDir("sink_keep1_spec").toString
     val ok = Seq((1L, "a")).toDF("id", "v")
     val key = "k/q.gz"
     assert(Sinks.fanOut(ok, Seq(s"$dir/t1"), key).forall(_._2))
@@ -112,7 +112,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fanOut isolates a failing target and continues (jobs.py:128-131)") {
-    val dir = Files.createTempDirectory("fan_spec").toString
+    val dir = tempDir("fan_spec").toString
     val df = Seq((1, "x")).toDF("a", "b")
     val results = Sinks.fanOut(df,
       Seq(s"$dir/good", "file:///proc/definitely/not/writable"),
@@ -122,7 +122,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("fanOut executes the plan once for N targets, identical bytes") {
-    val dir = Files.createTempDirectory("fan_once_spec").toString
+    val dir = tempDir("fan_once_spec").toString
     val df = spark.range(1000).selectExpr("id", "md5(cast(id as string)) as v")
     val group = "fanout-once-spec"
     spark.sparkContext.setJobGroup(group, "fanOut single-execution audit")
@@ -153,7 +153,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     def fanDirs() = tmpRoot.listFiles()
       .filter(_.getName.startsWith("graft-fanout")).map(_.getName).toSet
     val before = fanDirs()
-    val dir = Files.createTempDirectory("fan_clean_spec").toString
+    val dir = tempDir("fan_clean_spec").toString
     val df = Seq((1, "x")).toDF("a", "b")
     val res = Sinks.fanOut(df, Seq(s"$dir/t1", s"$dir/t2"), "daily/k/q.gz")
     assert(res.map(_._2) == Seq(true, true))
@@ -162,7 +162,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("empty result writes a valid empty output (jobs.py:181-184 path)") {
-    val dir = Files.createTempDirectory("empty_spec").toString
+    val dir = tempDir("empty_spec").toString
     val df = Seq((1L, "a")).toDF("id", "v").filter("id < 0")
     Sinks.gzipCsv(df, s"$dir/out")
     val back = spark.read.option("header", "false")
@@ -187,7 +187,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("upload_advisors pipeline writes every query to every target") {
-    val dir = Files.createTempDirectory("jobs_spec").toString
+    val dir = tempDir("jobs_spec").toString
     // via the production entrypoint's core (graft.Main.run == Jobs.run)
     val res = graft.Main.run(spark, "upload_advisors", sf,
       Seq(s"$dir/t1", s"$dir/t2"), "2024-01-01")
@@ -199,7 +199,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("upload_snapshot fans out per current term (jobs.py:55-62)") {
-    val dir = Files.createTempDirectory("jobs_term_spec").toString
+    val dir = tempDir("jobs_term_spec").toString
     val targets = Seq(s"$dir/t1", s"$dir/t2")
     val res = Jobs.run("upload_snapshot", spark, sf, targets, "2024-01-01")
     val terms = Jobs.currentTermIds(spark, sf)
@@ -224,7 +224,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("curate_corpus job ships shard map, health report, scrubbed corpus") {
-    val dir = Files.createTempDirectory("jobs_curate_spec").toString
+    val dir = tempDir("jobs_curate_spec").toString
     val res = graft.Main.run(spark, "curate_corpus", sf,
       Seq(s"$dir/t1", s"$dir/t2"), "2024-01-01")
     // 19 extracts × 2 targets, all successful
@@ -246,7 +246,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("release_corpus job ships the card/drift/mix/merges/privacy pack") {
-    val dir = Files.createTempDirectory("jobs_release_spec").toString
+    val dir = tempDir("jobs_release_spec").toString
     val res = graft.Main.run(spark, "release_corpus", sf,
       Seq(s"$dir/t1"), "2024-01-01")
     assert(res.size == 8 && res.forall(_._3), s"uploads: $res")
@@ -259,7 +259,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("event_analytics job ships the sweep/anomaly/resample pack") {
-    val dir = Files.createTempDirectory("jobs_events_spec").toString
+    val dir = tempDir("jobs_events_spec").toString
     val res = graft.Main.run(spark, "event_analytics", sf,
       Seq(s"$dir/t1"), "2024-01-01")
     assert(res.size == 8 && res.forall(_._3), s"uploads: $res")
@@ -274,7 +274,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   test("maintain_indexes job: bootstrap, append, takedown and gates " +
       "compose end-to-end; reports fan out; a re-run converges") {
     import org.apache.spark.sql.functions._
-    val dir = Files.createTempDirectory("jobs_maint_spec").toString
+    val dir = tempDir("jobs_maint_spec").toString
     try {
       val res = graft.Main.run(spark, "maintain_indexes", sf,
         Seq(s"$dir/t1"), "2024-01-01")
@@ -429,7 +429,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("upload_recent_refresh is per-term only (jobs.py:39-49)") {
-    val dir = Files.createTempDirectory("jobs_refresh_spec").toString
+    val dir = tempDir("jobs_refresh_spec").toString
     val res = Jobs.run("upload_recent_refresh", spark, sf,
       Seq(s"$dir/t1"), "2024-01-01")
     val terms = Jobs.currentTermIds(spark, sf)
@@ -490,7 +490,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   test("runSteps: concurrent fan-outs land identical bytes in both " +
       "targets, the same rows a serial run lands") {
-    val dir = Files.createTempDirectory("run_steps_bytes_spec").toString
+    val dir = tempDir("run_steps_bytes_spec").toString
     val frames = (0 until 6).map(i =>
       spark.range(200).selectExpr("id", s"md5(cast(id * $i as string)) as v"))
     def key(i: Int) = s"daily/k$i/k$i.gz"
@@ -525,7 +525,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
       "failure is rethrown after every step finished, later ones " +
       "suppressed, and no pool thread is left running") {
     import java.util.concurrent.atomic.AtomicInteger
-    val dir = Files.createTempDirectory("run_steps_fail_spec").toString
+    val dir = tempDir("run_steps_fail_spec").toString
     val finished = new AtomicInteger
     def step(body: => Seq[String]): () => Seq[String] =
       () => try body finally finished.incrementAndGet()
@@ -562,7 +562,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     // through Jobs.run: an input directory holding only `customer`
     // lands ref_advisor_notes, while ref_instructor_advisor throws on
     // its missing `lineitem`
-    val partial = Files.createTempDirectory("run_steps_partial_sf")
+    val partial = tempDir("run_steps_partial_sf")
     Files.createSymbolicLink(partial.resolve("customer.parquet"),
       java.nio.file.Paths.get(s"$sf/customer.parquet"))
     val jobFailed = intercept[Jobs.StepsFailed[_]] {
@@ -580,14 +580,14 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     import java.nio.file.{Files => F, Paths}
     // lineitem truncated to half its bytes; every other table intact.
     // ref_instructor_advisor reads lineitem, ref_advisor_notes does not
-    val data = F.createTempDirectory("corrupt_input_sf")
+    val data = tempDir("corrupt_input_sf")
     for (t <- graft.sources.Tables.names if t != "lineitem")
       F.createSymbolicLink(data.resolve(s"$t.parquet"),
         Paths.get(s"$sf/$t.parquet"))
     val whole = F.readAllBytes(Paths.get(s"$sf/lineitem.parquet"))
     F.write(data.resolve("lineitem.parquet"),
       java.util.Arrays.copyOf(whole, whole.length / 2))
-    val dir = F.createTempDirectory("corrupt_input_out").toString
+    val dir = tempDir("corrupt_input_out").toString
     val targets = Seq(s"$dir/t1", s"$dir/t2")
     val failed = intercept[Jobs.StepsFailed[_]] {
       Jobs.run("upload_advisors", spark, data.toString, targets,
@@ -613,9 +613,45 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     }
   }
 
+  test("an empty input table is not a failure: every extract is " +
+      "reported ok, and the one that reads it lands a valid empty gzip, " +
+      "byte-identical on both targets") {
+    import java.nio.file.{Files => F, Paths}
+    // lineitem replaced by a zero-row parquet of the same schema; every
+    // other table intact. ref_instructor_advisor reads lineitem
+    val data = tempDir("empty_input_sf")
+    for (t <- graft.sources.Tables.names if t != "lineitem")
+      F.createSymbolicLink(data.resolve(s"$t.parquet"),
+        Paths.get(s"$sf/$t.parquet"))
+    spark.read.parquet(s"$sf/lineitem.parquet").limit(0)
+      .write.parquet(data.resolve("lineitem.parquet").toString)
+    val dir = tempDir("empty_input_out").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val landed = Jobs.run("upload_advisors", spark, data.toString, targets,
+      "2024-01-01")
+    val want = for ((_, e) <- Jobs.pipelines("upload_advisors");
+                    t <- targets) yield (e, t, true)
+    assert(landed.sorted == want.sorted,
+      s"every extract must be reported ok on every target: $landed")
+    val key = Sinks.advisorsKey("2024-01-01", "instructor-advisor-map")
+    val bytes = targets.map { t =>
+      val parts = Option(new java.io.File(s"$t/$key").listFiles())
+        .getOrElse(Array.empty[java.io.File])
+        .filter(_.getName.startsWith("part-"))
+      assert(parts.length == 1,
+        s"$t/$key is reported ok but holds ${parts.length} part files")
+      F.readAllBytes(parts.head.toPath).toSeq
+    }
+    assert(bytes.distinct.size == 1, "the targets received different bytes")
+    val gz = new java.util.zip.GZIPInputStream(
+      new java.io.ByteArrayInputStream(bytes.head.toArray))
+    try assert(gz.readAllBytes().isEmpty, "the empty extract carries rows")
+    finally gz.close()
+  }
+
   test("partitionedParquet dynamic overwrite replaces only incoming " +
     "partitions, idempotently") {
-    val dir = Files.createTempDirectory("dynpart").toString
+    val dir = tempDir("dynpart").toString
     // non-date partition values: partition-column type inference would
     // otherwise read ISO strings back as DATEs
     def table(): Set[(Long, String)] =

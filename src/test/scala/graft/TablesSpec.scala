@@ -20,7 +20,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("events ts long→timestamp uses floor division (pre-1970 safe)") {
-    val dir = Files.createTempDirectory("tables_spec").toString
+    val dir = tempDir("tables_spec").toString
     // 1500 ns → 1 µs; -1500 ns → floor(-1.5 µs) = -2 µs, NOT -1 (trunc)
     Seq((1L, 1500L), (2L, -1500L), (3L, 0L))
       .toDF("event_id", "ts").write.mode("overwrite")
@@ -37,7 +37,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     // INTERVAL arithmetic reject. The source layer casts it to
     // TIMESTAMP; under the pinned UTC session zone the epoch value is
     // unchanged — pin both the type and the exact micros.
-    val dir = Files.createTempDirectory("tables_ntz").toString
+    val dir = tempDir("tables_ntz").toString
     spark.sql("SELECT 1L AS event_id, " +
         "TIMESTAMP_NTZ'2024-03-01 12:30:45.123456' AS ts")
       .write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -55,7 +55,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     // with Spark for the Hive metastore): partitioned parallel read,
     // lowercase contract, and the filter reaching the database as a
     // pushed predicate rather than a post-scan Spark filter.
-    val dbDir = Files.createTempDirectory("derby_spec").toString
+    val dbDir = tempDir("derby_spec").toString
     val url = s"jdbc:derby:$dbDir/graftdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try {
@@ -83,7 +83,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("jdbcAutoBounds derives the partition window from the data") {
-    val dbDir = Files.createTempDirectory("derby_auto").toString
+    val dbDir = tempDir("derby_auto").toString
     val url = s"jdbc:derby:$dbDir/graftdb;create=true"
     val conn = java.sql.DriverManager.getConnection(url)
     try {
@@ -127,7 +127,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("a long ts column outside events is NOT reinterpreted") {
-    val dir = Files.createTempDirectory("tables_spec2").toString
+    val dir = tempDir("tables_spec2").toString
     Seq((1L, 123456789L)).toDF("id", "ts").write.mode("overwrite")
       .parquet(s"$dir/lineitem.parquet")
     val schema = Tables(spark, dir, "lineitem").schema
@@ -143,7 +143,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     val src = Tables(spark, "/root/testdata/sf0.001", "lineitem")
       .withColumn("l_shipdate",
         col("l_shipdate") + expr("INTERVAL '0.000123' SECOND"))
-    val dir = Files.createTempDirectory("lake_rt").toString
+    val dir = tempDir("lake_rt").toString
     for (fmt <- Tables.lakeFormats) {
       Tables.writeLake(src, s"$dir/$fmt", fmt)
       val back = Tables.readLake(spark, s"$dir/$fmt", fmt,
@@ -180,7 +180,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     // pays one footer read per file (metadata, not data) to union the
     // schemas; rows written before the column existed surface it as
     // null, and the new files' values come through intact.
-    val dir = Files.createTempDirectory("evolve").toString
+    val dir = tempDir("evolve").toString
     Seq((1L, "a")).toDF("id", "name")
       .write.parquet(s"$dir/batch=1")
     Seq((2L, "b", 9L)).toDF("id", "name", "score")
@@ -201,7 +201,7 @@ class TablesSpec extends AnyFunSuite with SharedSpark {
     // as the explicit, operator-chosen degraded-read mode. The schema
     // is passed explicitly so footer inference doesn't mask which
     // contract is under test.
-    val dir = Files.createTempDirectory("corrupt").toString + "/t"
+    val dir = tempDir("corrupt").toString + "/t"
     val schema = Seq((1L, "a")).toDF("id", "v").schema
     Seq((1L, "a"), (2L, "b")).toDF("id", "v").write.parquet(dir)
     java.nio.file.Files.write(

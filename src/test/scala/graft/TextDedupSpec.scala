@@ -36,7 +36,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       (40L, p),
       (50L, s"$q ${uniq("e")}"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("para_dedup")
+    val dir = tempDir("para_dedup")
       .toString
     crafted.write.parquet(s"$dir/documents.parquet")
     val got = graft.queries.Dedup.paragraphDedup.fn(spark, dir)
@@ -66,7 +66,7 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       (3L, "s2", s"$six x x $six"),
       (4L, "s3", "short text"))
       .toDF("doc_id", "source", "text")
-    val dir = java.nio.file.Files.createTempDirectory("ngram_rate")
+    val dir = tempDir("ngram_rate")
       .toString
     crafted.write.parquet(s"$dir/documents.parquet")
     val got = graft.queries.Dedup.ngramDupRate.fn(spark, dir).collect()
@@ -388,5 +388,18 @@ class TextDedupSpec extends AnyFunSuite with SharedSpark {
       "exact copies of an earlier doc must score zero")
     assert(got(4L) > 0L && got(4L) < 1000L,
       "partial-overlap doc must score strictly between")
+  }
+
+  test("per-row simhash is bit-identical to the grouped batch form") {
+    // the per-row fold and the explode+groupBy reference plan
+    // must produce the same fingerprint for every doc
+    val grouped = TextDedup.simhashIntGrouped(docs, 32)
+      .withColumnRenamed("simhash_int", "g")
+    val perRow = TextDedup.withSimhashInt(docs, 32)
+      .select(org.apache.spark.sql.functions.col("doc_id"),
+        org.apache.spark.sql.functions.col("simhash_int").as("r"))
+    val diff = grouped.join(perRow, "doc_id")
+      .filter("g <> r").count()
+    assert(diff == 0)
   }
 }
