@@ -16,10 +16,8 @@ import graft.functions.Fns
   * sink, fan-out as a loop over targets with per-target error isolation.
   *
   * Scale note: `coalesce(1)` exists for byte-parity with the reference's
-  * one-file-per-query output. At 100 TB the same sink runs with
-  * `singleFile = false` — a parallel multi-part write into the same
-  * md5-dated prefix — and downstream globs the prefix; nothing else
-  * changes.
+  * one-file-per-query output, so the final write of each extract runs
+  * as a single task.
   */
 object Sinks {
 
@@ -89,11 +87,8 @@ object Sinks {
 
   /** S4 — headerless gzip CSV (reference: jonesy/jobs.py:100-114,175:
     * csv.writer into GzipFile, lineterminator='\n', UTF-8). */
-  def gzipCsv(df: DataFrame, path: String, singleFile: Boolean = true)
-      : Unit = {
-    val out = if (singleFile) serializeTimestamps(df).coalesce(1)
-              else serializeTimestamps(df)
-    out.write
+  def gzipCsv(df: DataFrame, path: String): Unit =
+    serializeTimestamps(df).coalesce(1).write
       .mode("overwrite")
       .option("compression", "gzip")
       .option("header", "false")
@@ -104,27 +99,6 @@ object Sinks {
       // interior quote
       .option("escape", "\"")
       .csv(path)
-  }
-
-  /** Partitioned parquet sink with DYNAMIC partition overwrite — the
-    * lake-table maintenance write the daily jobs need at scale: a
-    * re-run (or a backfill of one day) replaces ONLY the partitions
-    * present in the incoming batch and leaves every other partition's
-    * files untouched, instead of `overwrite`'s default
-    * truncate-the-whole-table. Same T6 idempotence contract as the
-    * gzip sink — re-delivering a batch lands byte-identical
-    * partitions — but at partition granularity, so a 100 TB table
-    * never rewrites except where data changed.
-    *
-    * The mode is set on the WRITER (not the session) so the contract
-    * travels with this sink and can't leak into unrelated writes. */
-  def partitionedParquet(df: DataFrame, path: String,
-                         partitionCols: Seq[String]): Unit =
-    // ONE mechanism: the dynamic-overwrite contract lives in
-    // operators.Partitioning.writePartitioned; this is the job-layer
-    // name for it (a second verbatim writer here drifted from the
-    // operator copy once already)
-    graft.operators.Partitioning.writePartitioned(df, path, partitionCols)
 
   import org.apache.hadoop.fs.{FileSystem => HFileSystem, Path => HPath}
 

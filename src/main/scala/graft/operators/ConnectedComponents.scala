@@ -189,8 +189,6 @@ object ConnectedComponents {
         prev = next
         labels = next.select("id", "label")
         iter += 1
-        if (sys.env.contains("GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] round $iter converged=$converged")
       }
       if (!converged) throw new IllegalStateException(
         s"ConnectedComponents.minLabel: no fixpoint after $maxIters rounds" +

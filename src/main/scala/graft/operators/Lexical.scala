@@ -134,12 +134,11 @@ object Lexical {
       r.getLong(0), r.getLong(1))
   }
 
-  /** [[buildIndex]] from an existing postings relation — the entry
-    * point for callers that PERSIST `tf` before building (the
-    * `ss_bm25_remove` report derives the base index, the removed
-    * slice and the final join all from the same postings): the scalar
-    * collect here populates the cache, so the whole face tokenizes
-    * the corpus once instead of once per consumer. */
+  /** [[buildIndex]] from an existing postings relation, with the
+    * corpus scalars derived from the postings themselves. No face
+    * builds through it (`ss_bm25_remove` calls [[buildIndex]]); its
+    * one caller is SimilaritySpec's reference check that the
+    * scalar shortcut in [[buildIndex]] equals this derivation. */
   def buildIndexFromPostings(tf: DataFrame): Bm25Index = {
     val (nd, sd) = corpusScalars(tf)
     Bm25Index(tf, vocabOf(tf), docLengths(tf), nd, sd)

@@ -421,9 +421,6 @@ object Partitioning {
     (if (keys.isEmpty) w else w.partitionBy(keys: _*)).parquet(path)
   }
 
-  def writePartitioned(df: DataFrame, path: String, key: String): Unit =
-    writePartitioned(df, path, Seq(key))
-
   /** Guarantee a floor of scan parallelism for NARROW pipelines.
     *
     * A fully narrow plan (per-row fingerprints, signature folds)

@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import scala.jdk.CollectionConverters._
 
 /** The bench stdout line is a DRIVER CONTRACT: only the last ~2000
@@ -20,6 +20,16 @@ class BenchFormatSpec extends AnyFunSuite {
     Option(mapper.readTree(json).get("frame")).fold(Map.empty[String, Double]) {
       f => f.fields.asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
     }
+
+  /** `json` written to a file and read back through Bench's record
+    * reader. */
+  private def read(json: String): Option[JsonNode] = {
+    val f = java.nio.file.Files.createTempFile("bench_record", ".json")
+    try {
+      java.nio.file.Files.write(f, json.getBytes("UTF-8"))
+      Bench.readRecord(f.toString)
+    } finally java.nio.file.Files.delete(f)
+  }
 
   private def mk(n: Int, err: Int = 0): Seq[(String, Double, Option[String])] =
     (1 to n).map { i =>
@@ -110,19 +120,20 @@ class BenchFormatSpec extends AnyFunSuite {
     // worst factor first
     assert(regs.head._1 === "dd_incremental")
     // the comparison source is the detail file this object writes —
-    // parse must invert detailJson for any catalog
+    // the reader must invert detailJson for any catalog
     val detail = Bench.detailJson(mk(120), 3, "sf0.1")
-    val parsed = Bench.parseDetailQueries(detail)
+    val rec = read(detail).get
+    val parsed = Bench.numbers(rec, "queries")
     assert(parsed.size === 120)
     assert(parsed("dd_some_catalog_query_name_001") === 0.037)
     // scalar fields for the sf/reps mismatch guard
-    assert(Bench.parseDetailField(detail, "sf") === Some("sf0.1"))
-    assert(Bench.parseDetailField(detail, "reps") === Some("3"))
-    // a truncated file (killed mid-write) must parse to empty, never
-    // throw — the gate runs AFTER the whole catalog was timed
+    assert(Bench.frameOf(rec).sf === "sf0.1")
+    assert(Bench.frameOf(rec).reps === "3")
+    // a truncated file (killed mid-write) must read as no record,
+    // never throw — the gate runs AFTER the whole catalog was timed
     val cut = detail.substring(0, detail.indexOf("\"queries\":{") + 15)
-    assert(Bench.parseDetailQueries(cut) === Map.empty)
-    assert(Bench.parseDetailQueries("") === Map.empty)
+    assert(read(cut) === None)
+    assert(read("") === None)
   }
 
   test("self-arbitration record: reruns + unresolved_flags round-trip") {
@@ -144,10 +155,9 @@ class BenchFormatSpec extends AnyFunSuite {
       .asBoolean())
     assert(js.get("calib2").asDouble() == 0.26)
     assert(js.get("unresolved_flags").asInt() == 1)
-    // the queries map parse is UNAFFECTED by the nested rerun objects
-    // (they serialize after it — parseDetailQueries scans to the first
-    // closing brace past "queries":{)
-    assert(Bench.parseDetailQueries(detail).size == 120)
+    // the queries map reads back UNAFFECTED by the nested rerun
+    // objects
+    assert(Bench.numbers(read(detail).get, "queries").size == 120)
     // gate-compared-clean run: flags count present as explicit zero
     val clean = Bench.detailJson(mk(5), 3, "sf0.1", calib = 0.25,
       unresolvedFlags = 0)
@@ -164,12 +174,13 @@ class BenchFormatSpec extends AnyFunSuite {
     val detail = Bench.detailJson(mk(10), 3, "sf0.1", calib = 0.412,
       cpus = "32")
     assert(mapper.readTree(detail).get("calib").asDouble() === 0.412)
-    assert(Bench.parseDetailField(detail, "calib") === Some("0.412"))
-    assert(Bench.parseDetailField(detail, "cpus") === Some("32"))
-    // without calib (older files): field absent, parse yields None
+    val rec = read(detail).get
+    assert(rec.get("calib").asDouble === 0.412)
+    assert(Bench.frameOf(rec).cpus === "32")
+    // without calib (older files): field absent, reads back absent
     val old = Bench.detailJson(mk(10), 3, "sf0.1")
     assert(!mapper.readTree(old).has("calib"))
-    assert(Bench.parseDetailField(old, "calib") === None)
+    assert(!read(old).get.has("calib"))
     // the gate's normalization contract: a uniformly 2.2×-slower host
     // (calib 0.4 → 0.88) divides every current time by 2.2 before
     // comparing, so unchanged code shows ZERO regressions...
@@ -195,8 +206,8 @@ class BenchFormatSpec extends AnyFunSuite {
       .asDouble() === 1.9)
     assert(js.get("warm").get("dd_some_catalog_query_name_001")
       .asDouble() === 0.8)
-    // the queries parser still stops at the queries object
-    assert(Bench.parseDetailQueries(detail).size === 120)
+    // the queries map still reads back whole
+    assert(Bench.numbers(read(detail).get, "queries").size === 120)
   }
 
   test("datapath_bench cells + context + deviations serialize after " +
@@ -212,29 +223,28 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(js.get("datapath_bench_context").asText() === "controlled")
     assert(js.get("datapath_bench_deviations").get(0)
       .asText() === "png_decode")
-    // round-trips through its own parser; the queries parser still
-    // stops at its own section
-    assert(Bench.parseDatapathBench(detail) === dp)
-    assert(Bench.parseDetailQueries(detail).size === 120)
-    assert(Bench.parseDetailField(detail, "datapath_bench_context")
-      === Some("controlled"))
+    // round-trips through the record reader, next to the queries
+    val rec = read(detail).get
+    assert(Bench.numbers(rec, "datapath_bench") === dp)
+    assert(Bench.numbers(rec, "queries").size === 120)
+    assert(rec.path("datapath_bench_context").asText === "controlled")
     // no cells → no section, no tags; missing section parses empty
     val bare = Bench.detailJson(mk(5), 3, "sf0.1",
       datapathCtx = "controlled")
     assert(!mapper.readTree(bare).has("datapath_bench"))
     assert(!mapper.readTree(bare).has("datapath_bench_context"))
-    assert(Bench.parseDatapathBench("{\"queries\":{\"a\":1}}")
-      === Map.empty)
+    assert(Bench.numbers(read("{\"queries\":{\"a\":1}}").get,
+      "datapath_bench") === Map.empty)
     // the carry/guard decision kernel: a loaded host carries
     // controlled datapath cells verbatim
-    assert(Bench.skewPlan(loadedHost = true, dp,
+    assert(Bench.datapathPlan(loadedHost = true, dp,
       Some("controlled")) === ((false, "carried")))
     // and the deviation guard flags a >2x cell in either direction
-    assert(Bench.skewDeviations(
+    assert(Bench.datapathDeviations(
       Map("gopher_stats" -> 2.9), dp) === Set("gopher_stats"))
     // carry-without-measuring preserves provenance: only controlled
     // evidence may be re-tagged "carried" — a 'loaded' or untagged
-    // matrix keeps its own tag, so skewPlan can replace it later
+    // set of cells keeps its own tag, so datapathPlan can replace it
     // instead of treating laundered noise as controlled-equivalent
     assert(Bench.carryCtx(dp, Some("controlled")) === "carried")
     assert(Bench.carryCtx(dp, Some("carried")) === "carried")
@@ -303,15 +313,14 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(js.get("frame").get("controlled").asInt() === 1)
     val f = parseFrame(detail)
     assert(f("loadavg") === 0.375 && f("controlled") === 1.0)
-    // the queries parser still stops at the queries object
-    assert(Bench.parseDetailQueries(detail).size === 50)
+    // the queries map still reads back whole
+    val rec = read(detail).get
+    assert(Bench.numbers(rec, "queries").size === 50)
     // the frame block reuses the top-level key names "calib"/
-    // "calib_sh"; the tolerant first-match parseDetailField must
-    // still return the TOP-LEVEL value on a frame-bearing record —
-    // this pins the serialization-order constraint detailJson
-    // documents (framePart after calibPart)
-    assert(Bench.parseDetailField(detail, "calib") === Some("0.21"))
-    assert(Bench.parseDetailField(detail, "calib_sh") === Some("0.8"))
+    // "calib_sh"; the gate reads the TOP-LEVEL value on a
+    // frame-bearing record
+    assert(rec.get("calib").asDouble === 0.21)
+    assert(rec.get("calib_sh").asDouble === 0.8)
     // platform with no loadavg but a frame verdict still records it
     val noLoad = Bench.detailJson(mk(5), 3, "sf0.1", calib = 0.2,
       loadavg = -1.0, controlled = 0)
@@ -324,11 +333,11 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(parseFrame(pre) === Map.empty)
   }
 
-  test("skew guard: loaded host can never overwrite a controlled matrix") {
+  test("datapath guard: a loaded host can never overwrite controlled cells") {
     val frame = Some((0.7, 0.9))
     // within guard on both probes → controlled re-measure
     assert(!Bench.hostLoaded(frame, 0.9, 1.2))
-    assert(Bench.skewPlan(loadedHost = false, Map("c" -> 1.0),
+    assert(Bench.datapathPlan(loadedHost = false, Map("c" -> 1.0),
       Some("controlled")) === ((true, "controlled")))
     // either probe past 1.5× its frame → loaded
     assert(Bench.hostLoaded(frame, 1.1, 0.9))   // cpu 1.57×
@@ -353,27 +362,27 @@ class BenchFormatSpec extends AnyFunSuite {
     // loaded + previous controlled cells → CARRY, do not re-measure
     // (the r12 failure: a 2.4×-loaded closing refresh overwrote the
     // builder's controlled matrix with physically-backwards cells)
-    assert(Bench.skewPlan(loadedHost = true,
+    assert(Bench.datapathPlan(loadedHost = true,
       Map("scd2_plain_uniform" -> 2.4), Some("controlled"))
       === ((false, "carried")))
     // an already-carried matrix keeps being carried under load
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0),
+    assert(Bench.datapathPlan(loadedHost = true, Map("c" -> 1.0),
       Some("carried")) === ((false, "carried")))
     // a record with NO context tag has unknown provenance (r13
     // verdict #1: the one such incumbent was the r12 loaded-host
     // matrix with physically-backwards cells, and defaulting it to
     // "controlled" laundered it into quotable evidence) — it is
     // carried NOWHERE: the loaded host re-measures and says "loaded"
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0), None)
+    assert(Bench.datapathPlan(loadedHost = true, Map("c" -> 1.0), None)
       === ((true, "loaded")))
     // nothing worth protecting: measure, but the record says "loaded"
-    assert(Bench.skewPlan(loadedHost = true, Map.empty,
+    assert(Bench.datapathPlan(loadedHost = true, Map.empty,
       Some("controlled")) === ((true, "loaded")))
-    assert(Bench.skewPlan(loadedHost = true, Map("c" -> 1.0),
+    assert(Bench.datapathPlan(loadedHost = true, Map("c" -> 1.0),
       Some("loaded")) === ((true, "loaded")))
   }
 
-  test("skew deviation guard: >2x cells detected and tagged") {
+  test("datapath deviation guard: >2x cells detected and tagged") {
     // the kernel: either direction past the factor, missing or
     // nonpositive cells can never deviate (r14 verdict #1: a 15.86 s
     // cell over a 3.79 s carried controlled value shipped untagged)
@@ -384,12 +393,12 @@ class BenchFormatSpec extends AnyFunSuite {
       "bpe_count" -> 0.7,                    // 2.3× faster
       "minhash_sig" -> 11.0,                 // within 2×
       "new_cell" -> 9.9, "bad" -> 5.0)
-    assert(Bench.skewDeviations(fresh, carried)
+    assert(Bench.datapathDeviations(fresh, carried)
       === Set("gopher_stats", "bpe_count"))
-    assert(Bench.skewDeviations(fresh, carried, factor = 5.0)
+    assert(Bench.datapathDeviations(fresh, carried, factor = 5.0)
       === Set.empty)
     // exactly at the factor is NOT a deviation (strict >)
-    assert(Bench.skewDeviations(Map("a" -> 2.0), Map("a" -> 1.0))
+    assert(Bench.datapathDeviations(Map("a" -> 2.0), Map("a" -> 1.0))
       === Set.empty)
     // detailJson: the tag is present (sorted, possibly empty) exactly
     // when the guard compared — Some — and absent when it could not
@@ -444,16 +453,18 @@ class BenchFormatSpec extends AnyFunSuite {
     // round-trip (3-element entries: [t, calibCpu, calibShuffle])
     val entries = Map("q1" -> ((1.25, 0.14, 0.5)), "q2" -> ((0.5, 0.2, 0.6)))
     val js = Bench.floorJson("sf0.1", 3, "32", entries)
-    assert(Bench.parseFloorQueries(js) === entries)
-    assert(Bench.parseDetailField(js, "sf") === Some("sf0.1"))
-    assert(Bench.parseDetailField(js, "cpus") === Some("32"))
-    assert(Bench.parseFloorQueries("") === Map.empty)
+    val rec = read(js).get
+    assert(Bench.floorEntries(rec) === entries)
+    assert(Bench.frameOf(rec).sf === "sf0.1")
+    assert(Bench.frameOf(rec).cpus === "32")
+    assert(read("") === None)
     assert(Bench.floorPath("BENCH_DETAIL.json") === "BENCH_FLOOR.json")
-    // pre-shuffle-probe files (2-element entries) parse with the
+    // pre-shuffle-probe files (2-element entries) read with the
     // shuffle calib absent — cpu-only normalization, the old behavior
     val legacy = """{"sf":"sf0.1","reps":3,"cpus":"32",""" +
       """"queries":{"q1":[1.25,0.14]}}"""
-    assert(Bench.parseFloorQueries(legacy) === Map("q1" -> ((1.25, 0.14, -1.0))))
+    assert(Bench.floorEntries(read(legacy).get) ===
+      Map("q1" -> ((1.25, 0.14, -1.0))))
     // update: lowers on a faster run, never raises on a slower one,
     // seeds unseen queries
     val up = Bench.updatedFloor(entries,
@@ -519,36 +530,36 @@ class BenchFormatSpec extends AnyFunSuite {
     val entries = Map("q1" -> ((1.25, 0.14, 0.5)), "q2" -> ((0.5, 0.2, 0.6)))
     val prov = Map("q1" -> "r16: stale floor, controlled re-read 1.25")
     val js = Bench.floorJson("sf0.1", 3, "32", entries, prov)
-    // queries parse is untouched by the string-valued section
-    assert(Bench.parseFloorQueries(js) === entries)
-    assert(Bench.parseFloorProvenance(js) === prov)
+    // the queries read back untouched by the string-valued section
+    val rec = read(js).get
+    assert(Bench.floorEntries(rec) === entries)
+    assert(Bench.provenance(rec) === prov)
     // a brace inside a value must not truncate the section (hand
     // edits reference "{controlled}" protocols); later entries survive
     val braced = Map("a_q" -> "r17: re-read {controlled} 1.2",
       "z_q" -> "r17: later entry")
     val bjs = Bench.floorJson("sf0.1", 3, "32",
       Map("a_q" -> ((1.0, 0.1, 0.5)), "z_q" -> ((2.0, 0.1, 0.5))), braced)
-    assert(Bench.parseFloorProvenance(bjs) === braced,
+    assert(Bench.provenance(read(bjs).get) === braced,
       "brace in a provenance value truncated the section")
     // a HAND-formatted section (the map exists for hand edits) with
-    // whitespace around the colons must parse, not silently vanish
+    // whitespace around the colons must read, not silently vanish
     // on the next round-trip
     val pretty = js.replace("\"provenance\":{",
       "\"provenance\": {\n  ").replace("\":\"r16", "\": \"r16")
-    assert(Bench.parseFloorProvenance(pretty) === prov,
+    assert(Bench.provenance(read(pretty).get) === prov,
       "whitespace-formatted provenance dropped")
     // absent section → empty map; provenance for a key not in the
     // floor is dropped at write (its entry is gone — nothing to
     // describe)
-    assert(Bench.parseFloorProvenance(
-      Bench.floorJson("sf0.1", 3, "32", entries)) === Map.empty)
-    assert(Bench.parseFloorProvenance(Bench.floorJson("sf0.1", 3, "32",
-      entries, Map("gone" -> "r9: whatever"))) === Map.empty)
-    // the shipped BENCH_FLOOR.json's own markers parse
-    val shipped = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("BENCH_FLOOR.json")), "UTF-8")
-    val shippedProv = Bench.parseFloorProvenance(shipped)
-    val shippedQs = Bench.parseFloorQueries(shipped)
+    assert(Bench.provenance(read(
+      Bench.floorJson("sf0.1", 3, "32", entries)).get) === Map.empty)
+    assert(Bench.provenance(read(Bench.floorJson("sf0.1", 3, "32",
+      entries, Map("gone" -> "r9: whatever"))).get) === Map.empty)
+    // the shipped BENCH_FLOOR.json's own markers read back
+    val shipped = Bench.readRecord("BENCH_FLOOR.json").get
+    val shippedProv = Bench.provenance(shipped)
+    val shippedQs = Bench.floorEntries(shipped)
     assert(shippedProv.nonEmpty,
       "the r16 hand-edited floor entries must carry provenance markers")
     assert(shippedProv.keySet.subsetOf(shippedQs.keySet),
@@ -596,5 +607,100 @@ class BenchFormatSpec extends AnyFunSuite {
     assert(Bench.dualScale(Some(0.2), None, 0.4, 0.9) === 2.0)
     assert(Bench.dualScale(None, None, 0.4, 0.9) === 1.0)
     assert(Bench.dualScale(Some(0.2), Some(0.5), 0.1, 0.25) === 1.0)
+  }
+
+  test("headline output is pinned byte-for-byte for three catalog shapes") {
+    // the full map, the slowest-K degradation, and the error rungs
+    val mk10 =
+      "{\"metric\":\"total\",\"value\":2.035,\"unit\":\"sec\",\"reps\":3," +
+      "\"queries\":{\"dd_some_catalog_query_name_001\":0.037,\"dd_some_ca" +
+      "talog_query_name_002\":0.074,\"dd_some_catalog_query_name_003\":0." +
+      "111,\"dd_some_catalog_query_name_004\":0.148,\"dd_some_catalog_que" +
+      "ry_name_005\":0.185,\"dd_some_catalog_query_name_006\":0.222,\"dd_" +
+      "some_catalog_query_name_007\":0.259,\"dd_some_catalog_query_name_0" +
+      "08\":0.296,\"dd_some_catalog_query_name_009\":0.333,\"dd_some_cata" +
+      "log_query_name_010\":0.37},\"sf\":\"sf0.1\"}"
+    val mk200 =
+      "{\"metric\":\"total\",\"value\":743.7,\"unit\":\"sec\",\"reps\":3," +
+      "\"queries\":{\"dd_some_catalog_query_name_161\":6,\"dd_some_catalo" +
+      "g_query_name_162\":6,\"dd_some_catalog_query_name_163\":6,\"dd_som" +
+      "e_catalog_query_name_164\":6.1,\"dd_some_catalog_query_name_165\":" +
+      "6.1,\"dd_some_catalog_query_name_166\":6.1,\"dd_some_catalog_query" +
+      "_name_167\":6.2,\"dd_some_catalog_query_name_168\":6.2,\"dd_some_c" +
+      "atalog_query_name_169\":6.3,\"dd_some_catalog_query_name_170\":6.3" +
+      ",\"dd_some_catalog_query_name_171\":6.3,\"dd_some_catalog_query_na" +
+      "me_172\":6.4,\"dd_some_catalog_query_name_173\":6.4,\"dd_some_cata" +
+      "log_query_name_174\":6.4,\"dd_some_catalog_query_name_175\":6.5,\"" +
+      "dd_some_catalog_query_name_176\":6.5,\"dd_some_catalog_query_name_" +
+      "177\":6.5,\"dd_some_catalog_query_name_178\":6.6,\"dd_some_catalog" +
+      "_query_name_179\":6.6,\"dd_some_catalog_query_name_180\":6.7,\"dd_" +
+      "some_catalog_query_name_181\":6.7,\"dd_some_catalog_query_name_182" +
+      "\":6.7,\"dd_some_catalog_query_name_183\":6.8,\"dd_some_catalog_qu" +
+      "ery_name_184\":6.8,\"dd_some_catalog_query_name_185\":6.8,\"dd_som" +
+      "e_catalog_query_name_186\":6.9,\"dd_some_catalog_query_name_187\":" +
+      "6.9,\"dd_some_catalog_query_name_188\":7,\"dd_some_catalog_query_n" +
+      "ame_189\":7,\"dd_some_catalog_query_name_190\":7,\"dd_some_catalog" +
+      "_query_name_191\":7.1,\"dd_some_catalog_query_name_192\":7.1,\"dd_" +
+      "some_catalog_query_name_193\":7.1,\"dd_some_catalog_query_name_194" +
+      "\":7.2,\"dd_some_catalog_query_name_195\":7.2,\"dd_some_catalog_qu" +
+      "ery_name_196\":7.3,\"dd_some_catalog_query_name_197\":7.3,\"dd_som" +
+      "e_catalog_query_name_198\":7.3,\"dd_some_catalog_query_name_199\":" +
+      "7.4,\"dd_some_catalog_query_name_200\":7.4},\"q_omitted\":160,\"de" +
+      "tail\":\"BENCH_DETAIL.json\",\"sf\":\"sf0.1\"}"
+    val mk500err30 =
+      "{\"metric\":\"total\",\"value\":4617,\"unit\":\"sec\",\"reps\":3," +
+      "\"queries\":{\"dd_some_catalog_query_name_491\":18.2,\"dd_some_cat" +
+      "alog_query_name_492\":18.2,\"dd_some_catalog_query_name_493\":18.2" +
+      ",\"dd_some_catalog_query_name_494\":18.3,\"dd_some_catalog_query_n" +
+      "ame_495\":18.3,\"dd_some_catalog_query_name_496\":18.4,\"dd_some_c" +
+      "atalog_query_name_497\":18.4,\"dd_some_catalog_query_name_498\":18" +
+      ".4,\"dd_some_catalog_query_name_499\":18.5,\"dd_some_catalog_query" +
+      "_name_500\":18.5},\"q_omitted\":490,\"detail\":\"BENCH_DETAIL.json" +
+      "\",\"errors\":{\"dd_some_catalog_query_name_001\":\"SparkException" +
+      ": boom\",\"dd_some_catalog_query_name_002\":\"SparkException: boom" +
+      "\",\"dd_some_catalog_query_name_003\":\"SparkException: boom\",\"d" +
+      "d_some_catalog_query_name_004\":\"SparkException: boom\",\"dd_some" +
+      "_catalog_query_name_005\":\"SparkException: boom\"},\"errors_omitt" +
+      "ed\":25,\"sf\":\"sf0.1\"}"
+    assert(Bench.headline(mk(10), 3, "sf0.1", "BENCH_DETAIL.json") === mk10)
+    assert(Bench.headline(mk(200), 3, "sf0.1", "BENCH_DETAIL.json")
+      === mk200)
+    assert(Bench.headline(mk(500, err = 30), 3, "sf0.1",
+      "BENCH_DETAIL.json") === mk500err30)
+  }
+
+  test("a record missing sf, reps or cpus reads as a foreign frame") {
+    val here = Bench.Frame("sf0.1", "3", "32", Bench.Meas)
+    val full = Bench.floorJson("sf0.1", 3, "32",
+      Map("q" -> ((1.0, 0.2, 0.5))))
+    assert(Bench.frameOf(read(full).get) === here)
+    for (field <- Seq(""""sf":"sf0.1",""", """"reps":3,""",
+        """"cpus":"32",""")) {
+      val f = Bench.frameOf(read(full.replace(field, "")).get)
+      assert(f !== here, s"a record without $field read as this frame")
+      // the floor frame and the datapath carry ignore reps, but a
+      // missing sf or cpus still fails them
+      if (!field.contains("reps")) assert(f.copy(reps = here.reps) !== here)
+    }
+    // a record without meas predates full materialization
+    assert(Bench.frameOf(read(full.replace(""""meas":"full",""", "")).get)
+      .meas === "count")
+    // a detail record written without cpus is foreign too
+    assert(Bench.frameOf(read(Bench.detailJson(mk(3), 3, "sf0.1")).get)
+      .cpus === "?")
+  }
+
+  test("the shipped BENCH_FLOOR and BENCH_DETAIL records read back whole") {
+    val floor = Bench.readRecord("BENCH_FLOOR.json").get
+    val entries = floor.get("queries").properties.asScala
+    assert(entries.size === 202)
+    assert(entries.forall(_.getValue.size == 3),
+      "every floor entry carries [t, calib, calibSh]")
+    assert(Bench.floorEntries(floor).size === 202)
+    assert(Bench.provenance(floor).keySet ===
+      Set("ss_rrf_fusion", "ss_topk_ivf"))
+    val detail = Bench.readRecord("BENCH_DETAIL.json").get
+    assert(Bench.numbers(detail, "queries").size === 202)
+    assert(Bench.numbers(detail, "datapath_bench").size === 14)
   }
 }

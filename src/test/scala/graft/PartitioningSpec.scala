@@ -200,7 +200,7 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     val base = tempDir("lake").toString
     val events = Tables(spark, sf, "events")
       .withColumn("dt", to_date(col("ts")))
-    Partitioning.writePartitioned(events, s"$base/events", "dt")
+    Partitioning.writePartitioned(events, s"$base/events", Seq("dt"))
     val nParts = new java.io.File(s"$base/events").listFiles()
       .count(_.getName.startsWith("dt="))
     assert(nParts > 1, "fixture must span multiple dates")
@@ -219,7 +219,7 @@ class PartitioningSpec extends AnyFunSuite with SharedSpark {
     val before = new java.io.File(s"$base/events").listFiles()
       .filter(_.getName.startsWith("dt=")).length
     Partitioning.writePartitioned(
-      events.filter(col("dt") === day), s"$base/events", "dt")
+      events.filter(col("dt") === day), s"$base/events", Seq("dt"))
     val after = new java.io.File(s"$base/events").listFiles()
       .filter(_.getName.startsWith("dt=")).length
     assert(after == before, "other partitions must survive the rewrite")

@@ -649,24 +649,25 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     finally gz.close()
   }
 
-  test("partitionedParquet dynamic overwrite replaces only incoming " +
+  test("writePartitioned dynamic overwrite replaces only incoming " +
     "partitions, idempotently") {
+    import graft.operators.Partitioning
     val dir = tempDir("dynpart").toString
     // non-date partition values: partition-column type inference would
     // otherwise read ISO strings back as DATEs
     def table(): Set[(Long, String)] =
       spark.read.parquet(dir).select("id", "day").collect()
         .map(r => (r.getLong(0), r.getString(1))).toSet
-    Sinks.partitionedParquet(
+    Partitioning.writePartitioned(
       Seq((1L, "d1"), (2L, "d2")).toDF("id", "day"), dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (2L, "d2")))
     // a backfill batch touching only d2 must leave d1's files alone —
     // default overwrite would truncate the whole table
     val backfill = Seq((20L, "d2")).toDF("id", "day")
-    Sinks.partitionedParquet(backfill, dir, Seq("day"))
+    Partitioning.writePartitioned(backfill, dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (20L, "d2")))
     // T6: re-delivering the same batch lands the identical table
-    Sinks.partitionedParquet(backfill, dir, Seq("day"))
+    Partitioning.writePartitioned(backfill, dir, Seq("day"))
     assert(table() == Set((1L, "d1"), (20L, "d2")))
   }
 
