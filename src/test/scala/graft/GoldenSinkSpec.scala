@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,18 +13,17 @@ class GoldenSinkSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private def partBytes(dir: String): Array[Byte] = {
-    val part = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".csv.gz")).head
-    Files.readAllBytes(part.toPath)
-  }
+  /** The bytes of the one file a delivered key holds. */
+  private def partBytes(keyDir: String): Array[Byte] =
+    Files.readAllBytes(Paths.get(keyDir, "part-00000.csv.gz"))
 
   test("gzip CSV output is byte-identical across runs") {
-    val base = tempDir("golden").toString
+    val base = tempDir("golden")
     val q = SparkEntry.queries("ref_term_courses")
-    Sinks.gzipCsv(q(spark, sf), s"$base/a")
-    Sinks.gzipCsv(q(spark, sf), s"$base/b")
-    val (a, b) = (partBytes(s"$base/a"), partBytes(s"$base/b"))
+    Sinks.gzipCsv(q(spark, sf), base.resolve("a.csv.gz"))
+    Sinks.gzipCsv(q(spark, sf), base.resolve("b.csv.gz"))
+    val (a, b) = (Files.readAllBytes(base.resolve("a.csv.gz")),
+      Files.readAllBytes(base.resolve("b.csv.gz")))
     assert(a.nonEmpty && java.util.Arrays.equals(a, b))
   }
 
@@ -98,11 +97,14 @@ class GoldenSinkSpec extends AnyFunSuite with SharedSpark {
   }
 
   test("term-parameterized extract is byte-identical across runs") {
-    val base = tempDir("golden_term").toString
+    val base = tempDir("golden_term")
     val term = graft.jobs.Jobs.currentTermIds(spark, sf).head
-    Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term), s"$base/a")
-    Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term), s"$base/b")
-    val (a, b) = (partBytes(s"$base/a"), partBytes(s"$base/b"))
+    Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term),
+      base.resolve("a.csv.gz"))
+    Sinks.gzipCsv(graft.jobs.Jobs.termEnrollments(spark, sf, term),
+      base.resolve("b.csv.gz"))
+    val (a, b) = (Files.readAllBytes(base.resolve("a.csv.gz")),
+      Files.readAllBytes(base.resolve("b.csv.gz")))
     assert(a.nonEmpty && java.util.Arrays.equals(a, b))
   }
 }

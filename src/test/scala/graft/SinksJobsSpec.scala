@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -14,17 +14,24 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The one file a delivered key holds. */
+  private def part(keyDir: String): Path = Paths.get(keyDir, "part-00000.csv.gz")
+
+  private def gunzip(f: Path): String = {
+    val in = new java.util.zip.GZIPInputStream(Files.newInputStream(f))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
+
   test("gzipCsv writes one headerless gzip part; timestamps serialized") {
     val dir = tempDir("sink_spec").toString
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
       .withColumn("last_updated",
         org.apache.spark.sql.functions.to_timestamp(
           org.apache.spark.sql.functions.lit("2024-01-15 12:00:00")))
-    Sinks.gzipCsv(df, s"$dir/out")
-    val parts = new java.io.File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".csv.gz"))
-    assert(parts.length == 1, "coalesce(1) → exactly one part file")
-    val back = spark.read.option("header", "false").csv(s"$dir/out")
+    Sinks.gzipCsv(df, Paths.get(s"$dir/out.csv.gz"))
+    assert(new java.io.File(dir).list().toSeq == Seq("out.csv.gz"),
+      "exactly one gzip file")
+    val back = spark.read.option("header", "false").csv(s"$dir/out.csv.gz")
     assert(back.count() == 2)
     // F13b applied to the last_updated column before the sink
     val cols = back.collect().map(_.getString(2)).toSet
@@ -42,8 +49,8 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     val df = Seq(1L).toDF("id").withColumn("last_updated",
       org.apache.spark.sql.functions.expr(
         "CAST('2024-01-15 12:00:00' AS TIMESTAMP_NTZ)"))
-    Sinks.gzipCsv(df, s"$dir/out")
-    val back = spark.read.option("header", "false").csv(s"$dir/out")
+    Sinks.gzipCsv(df, Paths.get(s"$dir/out.csv.gz"))
+    val back = spark.read.option("header", "false").csv(s"$dir/out.csv.gz")
       .collect().map(_.getString(1)).toSet
     assert(back == Set("2024-01-15 04:00:00 -0800"),
       s"NTZ watermark serialized wrong: $back")
@@ -53,13 +60,8 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
       "csv.writer convention)") {
     val dir = tempDir("sink_rfc_spec").toString
     Sinks.gzipCsv(Seq(("ROBERT \"BOB\" SMITH", 1L)).toDF("name", "n"),
-      s"$dir/out")
-    val part = new java.io.File(s"$dir/out").listFiles()
-      .filter(_.getName.endsWith(".csv.gz")).head
-    val in = new java.util.zip.GZIPInputStream(
-      new java.io.FileInputStream(part))
-    val raw = new String(in.readAllBytes(), "UTF-8")
-    in.close()
+      Paths.get(s"$dir/out.csv.gz"))
+    val raw = gunzip(Paths.get(s"$dir/out.csv.gz"))
     assert(raw.contains("\"ROBERT \"\"BOB\"\" SMITH\""),
       s"interior quotes not RFC-doubled: $raw")
     assert(!raw.contains("\\\""), s"backslash-escaped quotes leaked: $raw")
@@ -75,7 +77,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     def readT1() = spark.read.csv(s"$dir/t1/$key").collect()
       .map(_.getString(0)).toSeq
     assert(readT1() == Seq("1"))
-    // a frame that fails at EXECUTION time: the staging write errors,
+    // a frame that fails at EXECUTION time: the serialization errors,
     // every target reports false, and yesterday's extract still serves
     val bad = spark.range(1)
       .selectExpr("raise_error('boom') AS id", "'x' AS v")
@@ -136,37 +138,108 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     while (jobs().isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
     Thread.sleep(200)
     assert(jobs().length == 1,
-      s"one staging write, zero per-target executions: ${jobs().toSeq}")
+      s"one serialization, zero per-target executions: ${jobs().toSeq}")
     // every target received the same byte stream (jobs.py:116-132)
-    def bytes(t: String): Seq[String] =
-      new java.io.File(s"$dir/$t/daily/k/q.gz").listFiles()
-        .filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName)
-        .map(f => java.util.Base64.getEncoder.encodeToString(
-          java.nio.file.Files.readAllBytes(f.toPath))).toSeq
+    def bytes(t: String): Seq[Byte] =
+      Files.readAllBytes(part(s"$dir/$t/daily/k/q.gz")).toSeq
     assert(bytes("t1").nonEmpty)
     assert(bytes("t1") == bytes("t2") && bytes("t2") == bytes("t3"))
   }
 
-  test("fanOut deletes its created temp parent (ADVICE r7 leak)") {
+  test("fanOut leaves no temp file, after a delivery or a failed stream") {
     val tmpRoot = new java.io.File(
       System.getProperty("java.io.tmpdir"))
-    def fanDirs() = tmpRoot.listFiles()
+    def fanFiles() = tmpRoot.listFiles()
       .filter(_.getName.startsWith("graft-fanout")).map(_.getName).toSet
-    val before = fanDirs()
+    val before = fanFiles()
     val dir = tempDir("fan_clean_spec").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val key = "daily/k/q.gz"
     val df = Seq((1, "x")).toDF("a", "b")
-    val res = Sinks.fanOut(df, Seq(s"$dir/t1", s"$dir/t2"), "daily/k/q.gz")
-    assert(res.map(_._2) == Seq(true, true))
-    assert(fanDirs() == before,
-      "fanOut must remove the graft-fanout* temp parent it created")
+    assert(Sinks.fanOut(df, targets, key).map(_._2) == Seq(true, true))
+    assert(fanFiles() == before,
+      "fanOut must remove the graft-fanout* temp file it created")
+    // a frame that raises partway through the stream
+    val bad = spark.range(1000).selectExpr(
+      "IF(id = 900, raise_error('boom at 900'), id) AS id")
+    val res = Sinks.fanOut(bad, targets, key)
+    assert(res.map(_._2) == Seq(false, false), s"reported success: $res")
+    for (t <- targets) {
+      assert(gunzip(part(s"$t/$key")) == "1,x\n",
+        s"yesterday's extract no longer serves at $t")
+      assert(!new java.io.File(s"$t/${key}__incoming").exists(),
+        s"failed delivery left an __incoming remnant at $t")
+    }
+    assert(fanFiles() == before,
+      "a failed stream must remove the graft-fanout* temp file too")
+  }
+
+  test("gzipCsv text equals Spark's CSV writer; the gzip differs in at " +
+      "most the OS byte") {
+    val dir = tempDir("sink_parity_spec").toString
+    val df = spark.sql("""SELECT * FROM VALUES
+      (1, 'plain', 'say "hi", ok', 'a\nb', 'c\r\nd', CAST(1.5 AS DOUBLE),
+       CAST(12.340 AS DECIMAL(10,3)), DATE'2024-02-29', true,
+       TIMESTAMP'2024-01-15 12:00:00', TIMESTAMP_NTZ'2024-07-01 08:30:00'),
+      (2, NULL, '', 'ünï, 漢字', NULL, CAST('NaN' AS DOUBLE),
+       CAST(-0.5 AS DECIMAL(10,3)), NULL, false, NULL, NULL),
+      (3, ' padded ', '""', ',', '\r', CAST(-0.0 AS DOUBLE),
+       NULL, DATE'1970-01-01', NULL,
+       TIMESTAMP'1999-12-31 23:59:59.123', TIMESTAMP_NTZ'2000-01-01 00:00:00')
+      AS t(id, s1, quoted, lf, crlf, d, dec, dt, b, last_updated, ntz)""")
+    Sinks.gzipCsv(df, Paths.get(s"$dir/new.csv.gz"))
+    // the reference: Spark's CSV data source with the sink's options
+    Sinks.serializeTimestamps(df).coalesce(1).write
+      .option("compression", "gzip")
+      .option("header", "false")
+      .option("lineSep", "\n")
+      .option("escape", "\"")
+      .csv(s"$dir/ref")
+    val ref = new java.io.File(s"$dir/ref").listFiles()
+      .filter(_.getName.endsWith(".csv.gz")).head.toPath
+    val newText = gunzip(Paths.get(s"$dir/new.csv.gz"))
+    assert(newText.count(_ == '\n') >= 3 && newText.contains(" UTC"))
+    assert(newText == gunzip(ref), "decompressed text differs")
+    val (a, b) = (Files.readAllBytes(Paths.get(s"$dir/new.csv.gz")),
+      Files.readAllBytes(ref))
+    assert(a.length == b.length, s"gzip lengths ${a.length} vs ${b.length}")
+    val diff = a.indices.filter(i => a(i) != b(i))
+    assert(diff.forall(_ == 9), s"gzip bytes differ at $diff")
+  }
+
+  test("every key holds one part-00000.csv.gz; an old-layout key is " +
+      "replaced whole") {
+    val dir = tempDir("sink_layout_spec").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val key = "daily/k/q.gz"
+    // the old layout: a Spark writer's output directory at the key
+    Seq((0, "old")).toDF("a", "b").coalesce(1).write
+      .option("compression", "gzip").csv(s"${targets.head}/$key")
+    val oldNames = new java.io.File(s"${targets.head}/$key").list().toSeq
+    assert(oldNames.contains("_SUCCESS") &&
+      oldNames.exists(_.endsWith(".crc")) &&
+      oldNames.exists(n => n.startsWith("part-00000-") &&
+        n.endsWith("-c000.csv.gz")), s"not the old layout: $oldNames")
+    for (v <- Seq("x", "y")) {
+      val res = Sinks.fanOut(Seq((1, v)).toDF("a", "b"), targets, key)
+      assert(res.forall(_._2), s"delivery failed: $res")
+      for (t <- targets) {
+        assert(new java.io.File(s"$t/$key").list().toSeq ==
+          Seq("part-00000.csv.gz"), s"$t/$key is not one part file")
+        assert(gunzip(part(s"$t/$key")) == s"1,$v\n")
+        for (suffix <- Seq("__old", "__incoming"))
+          assert(!new java.io.File(s"$t/$key$suffix").exists(),
+            s"$t/$key$suffix left behind")
+      }
+    }
   }
 
   test("empty result writes a valid empty output (jobs.py:181-184 path)") {
     val dir = tempDir("empty_spec").toString
     val df = Seq((1L, "a")).toDF("id", "v").filter("id < 0")
-    Sinks.gzipCsv(df, s"$dir/out")
+    Sinks.gzipCsv(df, Paths.get(s"$dir/out.csv.gz"))
     val back = spark.read.option("header", "false")
-      .schema("c0 STRING").csv(s"$dir/out")
+      .schema("c0 STRING").csv(s"$dir/out.csv.gz")
     assert(back.count() == 0)
   }
 
@@ -211,9 +284,7 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     assert(res == names.flatMap(n => targets.map(t => (n, t, true))),
       s"uploads out of order or failed: $res")
     def bytes(t: String, key: String) =
-      new java.io.File(s"$t/$key").listFiles()
-        .filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName)
-        .map(f => Files.readAllBytes(f.toPath).toSeq).toSeq
+      Files.readAllBytes(part(s"$t/$key")).toSeq
     for (t <- terms; g <- Seq("courses", "enrollments")) {
       val key = Sinks.termKey("2024-01-01", g, g, t)
       assert(key.endsWith(s"$g/$g-$t.gz"), key)
@@ -500,23 +571,17 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
     }
     assert(res == frames.indices.flatMap(_ =>
       Seq(s"$dir/t1" -> true, s"$dir/t2" -> true)))
-    def parts(t: String, i: Int): Seq[java.io.File] =
-      new java.io.File(s"$dir/$t/${key(i)}").listFiles()
-        .filter(_.getName.endsWith(".csv.gz")).sortBy(_.getName).toSeq
-    def gz(f: java.io.File): Array[Byte] = Files.readAllBytes(f.toPath)
-    def csv(f: java.io.File): String = {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.FileInputStream(f))
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    }
+    def landed(t: String, i: Int): java.nio.file.Path =
+      part(s"$dir/$t/${key(i)}")
+    def gz(t: String, i: Int): Seq[Byte] =
+      Files.readAllBytes(landed(t, i)).toSeq
     for (i <- frames.indices) {
-      assert(parts("t1", i).nonEmpty, s"extract $i did not land")
-      assert(parts("t1", i).map(gz(_).toSeq) ==
-          parts("t2", i).map(gz(_).toSeq),
+      assert(Files.isRegularFile(landed("t1", i)), s"extract $i did not land")
+      assert(gz("t1", i) == gz("t2", i),
         s"targets got different bytes for extract $i")
       // the serial reference: the same frame through one plain fanOut
       Sinks.fanOut(frames(i), Seq(s"$dir/serial"), key(i))
-      assert(parts("t1", i).map(csv) == parts("serial", i).map(csv),
+      assert(gunzip(landed("t1", i)) == gunzip(landed("serial", i)),
         s"extract $i differs from its serial delivery")
     }
   }
