@@ -1,6 +1,6 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.SparkEntry
@@ -17,9 +17,14 @@ import graft.sources.Tables
   * (jonesy/jobs.py:41-62). Here the same shape: current terms are
   * resolved once per run by collecting the `ref_current_terms` result
   * (≤3 rows — planning-class driver work, the reference does the same
-  * round-trip in get_current_term_ids, jobs.py:71-74), then each
-  * per-term extract runs as its own Spark plan with the term's month
-  * bounds pushed to the parquet scan as a range predicate.
+  * round-trip in get_current_term_ids, jobs.py:71-74). Each per-term
+  * extract FAMILY then runs as one Spark plan over all current terms:
+  * the OR of the terms' month bounds is pushed to the parquet scan as
+  * range predicates, a routing column ([[TermColumn]]) carries each
+  * row's term, and the sink routes the rows to the per-term keys
+  * ([[Sinks.fanOutRouted]]). Where the reference sends one query per
+  * (extract, term), this sends one per extract; the landed bytes per
+  * key are those of the single-term extract.
   *
   * Unknown job → message and no-op, not an exception
   * (reference: jonesy/jobs.py:64-65 semantics preserved).
@@ -28,6 +33,11 @@ object Jobs {
 
   /** A term-parameterized extract: (spark, dataDir, termId "yyyyMM"). */
   type TermQuery = (SparkSession, String, String) => DataFrame
+
+  /** A term-parameterized extract family over several terms: (spark,
+    * dataDir, termIds "yyyyMM"), each row carrying its term in
+    * [[TermColumn]]. */
+  type TermsQuery = (SparkSession, String, Seq[String]) => DataFrame
 
   /** Flat (term-independent) queries per job, as (catalog query,
     * reference extract name) — the extract name is the reference's
@@ -123,19 +133,30 @@ object Jobs {
       "ev_rfm" -> "rfm-segments",
       "ev_seasonality" -> "hourly-seasonality"))
 
-  /** Per-term extracts per job as (key directory, key file base,
-    * query). Directory and file base differ for the refresh groups —
-    * underscore dirs, dash files, matching jobs.py:44,48 — and agree
-    * for the snapshot groups (jobs.py:58,62). */
-  val perTermPipelines: Map[String, Seq[(String, String, TermQuery)]] = Map(
+  /** Per-term extract families per job as (key directory, key file
+    * base, builder over all terms). Directory and file base differ for
+    * the refresh groups — underscore dirs, dash files, matching
+    * jobs.py:44,48 — and agree for the snapshot groups (jobs.py:58,62).
+    * [[run]] builds each family once for all current terms. */
+  val termFamilies: Map[String, Seq[(String, String, TermsQuery)]] = Map(
     "upload_recent_refresh" -> Seq(
       ("instructor_updates", "instructor-updates",
-        (s, d, t) => recentInstructorUpdates(s, d, t)),
+        (s, d, ts) => recentInstructorUpdatesForTerms(s, d, ts)),
       ("enrollment_updates", "enrollment-updates",
-        (s, d, t) => recentEnrollmentUpdates(s, d, t))),
+        (s, d, ts) => recentEnrollmentUpdatesForTerms(s, d, ts))),
     "upload_snapshot" -> Seq(
-      ("courses", "courses", termCourses _),
-      ("enrollments", "enrollments", termEnrollments _)))
+      ("courses", "courses", termCoursesForTerms _),
+      ("enrollments", "enrollments", termEnrollmentsForTerms _)))
+
+  /** [[termFamilies]] one term at a time, as (key directory, key file
+    * base, single-term extract): the extract a per-term loop lands at
+    * `termKey(…, termId)`. */
+  val perTermPipelines: Map[String, Seq[(String, String, TermQuery)]] =
+    termFamilies.map { case (job, families) =>
+      job -> families.map { case (dir, file, q) =>
+        (dir, file, ((s, d, t) => q(s, d, Seq(t)).drop(TermColumn)): TermQuery)
+      }
+    }
 
   // ------------------------------------------------------------------
   // Serving-index maintenance (JOB=maintain_indexes) — the composed
@@ -423,15 +444,30 @@ object Jobs {
       .select(date_format(col("term_begin"), "yyyyMM").as("term_id"))
       .collect().map(_.getString(0)).toSeq
 
-  /** [start, end) month bounds for a yyyyMM term id — literal
-    * timestamps so the term filter reaches the parquet scan as a
-    * pushable range predicate instead of a date_trunc expression. */
-  private def monthBounds(termId: String) = {
-    val ym = java.time.YearMonth.parse(termId,
-      java.time.format.DateTimeFormatter.ofPattern("yyyyMM"))
-    (lit(ym.atDay(1).toString).cast("timestamp"),
-      lit(ym.plusMonths(1).atDay(1).toString).cast("timestamp"))
+  /** The routing column of the per-term family builders: the row's
+    * yyyyMM term, which [[Sinks.fanOutRouted]] maps to the term's key
+    * and does not write. */
+  val TermColumn = "__term"
+
+  /** `c` in any of the terms' [start, end) months — an OR of literal
+    * timestamp ranges, so the term filter reaches the parquet scan as
+    * pushable range predicates instead of a date_trunc expression. */
+  private def inTerms(c: Column, terms: Seq[String]): Column = {
+    require(terms.nonEmpty, "no terms")
+    terms.map { termId =>
+      val ym = java.time.YearMonth.parse(termId,
+        java.time.format.DateTimeFormatter.ofPattern("yyyyMM"))
+      c >= lit(ym.atDay(1).toString).cast("timestamp") &&
+        c < lit(ym.plusMonths(1).atDay(1).toString).cast("timestamp")
+    }.reduce(_ || _)
   }
+
+  /** `df` with the routing column copied from its `term_id`. Added after
+    * the DISTINCT, so the DISTINCT's hash partitioning, and with it the
+    * landed order of rows tied on every ORDER BY key, stays that of the
+    * reference columns alone. */
+  private def routedByTermId(df: DataFrame): DataFrame =
+    df.withColumn(TermColumn, col("term_id"))
 
   /** Snapshot per-term enrollments — the reference's FULL-WIDTH
     * projection (reference get_term_enrollments, queries.py:294-307:
@@ -445,13 +481,17 @@ object Jobs {
     * separately (rel_pagination / rel_keyset_pagination); the snapshot
     * job uploads the whole extract, as jobs.py:60-62 does.
     *
-    * Scale shape: the term filter is a pushable range on the orders
+    * Scale shape: the terms' filter is a pushable range OR on the orders
     * scan; lineitem joins on the order key (the one shuffle); all 13
-    * output columns are projections, no arithmetic (byte-stable CSV). */
-  def termEnrollments(s: SparkSession, dir: String, termId: String): DataFrame = {
-    val (lo, hi) = monthBounds(termId)
+    * output columns are projections, no arithmetic (byte-stable CSV).
+    * One plan for all `terms`, sorted by [[TermColumn]] first and then
+    * by the reference keys: each section lies in one term, so the
+    * leading routing key leaves every term's row order, ties included,
+    * as its single-term extract has it. */
+  def termEnrollmentsForTerms(s: SparkSession, dir: String,
+                              terms: Seq[String]): DataFrame = {
     val o = Tables(s, dir, "orders")
-      .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
+      .filter(inTerms(col("o_orderdate"), terms))
     Tables(s, dir, "lineitem")
       .join(o, col("l_orderkey") === col("o_orderkey"))
       .select(
@@ -470,6 +510,7 @@ object Jobs {
           .otherwise(col("l_returnflag")).as("grade_midterm"),
         lit("UC_GRAFT").as("institution"))
       .distinct()
+      .transform(routedByTermId)
       // the reference orders by (section_id, sis_id) only
       // (jobs.py/queries.py enrollment ORDER BY); waitlist_position
       // narrows the ties but does NOT settle them: section_id and
@@ -478,29 +519,43 @@ object Jobs {
       // at sf0.01), so distinct rows tied on all three keys still land
       // in an engine-chosen CSV order. CHANGES.md records the finding;
       // the job benchmark's manifests pin today's order.
-      .orderBy("section_id", "sis_id", "waitlist_position")
+      .orderBy(TermColumn, "section_id", "sis_id", "waitlist_position")
   }
 
-  /** Snapshot per-term courses — the distinct parts ordered in the
+  /** [[termEnrollmentsForTerms]] for one term, without the routing
+    * column: the `enrollments-{termId}` extract. */
+  def termEnrollments(s: SparkSession, dir: String, termId: String): DataFrame =
+    termEnrollmentsForTerms(s, dir, Seq(termId)).drop(TermColumn)
+
+  /** Snapshot per-term courses — the distinct parts ordered in each
     * term, with catalog metadata (reference get_term_courses,
     * jobs.py:56-58). Fact-fact join shuffles once on the order key;
-    * the small distinct part-key set then broadcast-joins to `part`. */
-  def termCourses(s: SparkSession, dir: String, termId: String): DataFrame = {
-    val (lo, hi) = monthBounds(termId)
+    * the small distinct (part key, term) set then broadcast-joins to
+    * `part`. One plan for all `terms`, ordered by [[TermColumn]], then
+    * the reference's course_id. */
+  def termCoursesForTerms(s: SparkSession, dir: String,
+                          terms: Seq[String]): DataFrame = {
     val termOrders = Tables(s, dir, "orders")
-      .filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
-      .select("o_orderkey")
+      .filter(inTerms(col("o_orderdate"), terms))
+      .select(col("o_orderkey"),
+        date_format(col("o_orderdate"), "yyyyMM").as(TermColumn))
     val partKeys = Tables(s, dir, "lineitem")
       .join(termOrders, col("l_orderkey") === col("o_orderkey"))
-      .select(col("l_partkey")).distinct()
+      .select(col("l_partkey"), col(TermColumn)).distinct()
     Tables(s, dir, "part")
       .join(partKeys, col("p_partkey") === col("l_partkey"))
       .select(col("p_partkey").as("course_id"),
         trim(col("p_name")).as("course_title"),
         col("p_brand").as("catalog_nbr"),
-        col("p_type").as("course_type"))
-      .orderBy("course_id")
+        col("p_type").as("course_type"),
+        col(TermColumn))
+      .orderBy(TermColumn, "course_id")
   }
+
+  /** [[termCoursesForTerms]] for one term, without the routing column:
+    * the `courses-{termId}` extract. */
+  def termCourses(s: SparkSession, dir: String, termId: String): DataFrame =
+    termCoursesForTerms(s, dir, Seq(termId)).drop(TermColumn)
 
   /** Refresh per-term instructor updates — the reference's FULLY
     * COMPOSED extract (get_recent_instructor_updates,
@@ -532,15 +587,16 @@ object Jobs {
     * Scale shape: term+recency+CDC predicates all push to the events
     * scan BEFORE the joins; customer joins on user_id (the one real
     * shuffle), nation broadcasts (25 rows); DISTINCT reuses the
-    * already-shuffled key's locality. */
-  def recentInstructorUpdates(s: SparkSession, dir: String, termId: String,
-                              cutoff: Option[java.sql.Timestamp] = None)
+    * already-shuffled key's locality. One plan for all `terms` (the
+    * cutoff is the same for every term, as in the reference), ordered
+    * by [[TermColumn]], then the reference keys. */
+  def recentInstructorUpdatesForTerms(s: SparkSession, dir: String,
+      terms: Seq[String], cutoff: Option[java.sql.Timestamp] = None)
       : DataFrame = {
-    val (lo, hi) = monthBounds(termId)
     val e = Tables(s, dir, "events")
     val inTerm = e
       .filter(col("event_type").isin("click", "view"))
-      .filter(col("ts") >= lo && col("ts") < hi)
+      .filter(inTerms(col("ts"), terms))
     val recent = cutoff match {
       case Some(c) => inTerm.filter(col("ts") >= lit(c))
       case None =>
@@ -566,12 +622,21 @@ object Jobs {
         (col("n_regionkey") < 2).as("is_primary"),
         col("ts").as("last_updated"))
       .distinct()
+      .transform(routedByTermId)
       // reference ORDER BY (queries.py:148): term, course, section,
       // uid, last_updated DESC — section_id (the unique stream id)
       // already makes the order total
-      .orderBy(col("term_id"), col("course_id"), col("section_id"),
-        col("ldap_uid"), col("last_updated").desc)
+      .orderBy(col(TermColumn), col("term_id"), col("course_id"),
+        col("section_id"), col("ldap_uid"), col("last_updated").desc)
   }
+
+  /** [[recentInstructorUpdatesForTerms]] for one term, without the
+    * routing column: the `instructor-updates-{termId}` extract. */
+  def recentInstructorUpdates(s: SparkSession, dir: String, termId: String,
+                              cutoff: Option[java.sql.Timestamp] = None)
+      : DataFrame =
+    recentInstructorUpdatesForTerms(s, dir, Seq(termId), cutoff)
+      .drop(TermColumn)
 
   /** Refresh per-term enrollment updates — the reference's FULLY
     * COMPOSED extract (get_recent_enrollment_updates,
@@ -604,13 +669,14 @@ object Jobs {
     * orders scan; lineitem joins term orders on the order key (the
     * one repeated shuffle key — primMin, the main join, and the
     * DISTINCT all hash on it); the priority rank is a narrow CASE
-    * evaluated only in the final sort. */
-  def recentEnrollmentUpdates(s: SparkSession, dir: String, termId: String,
-                              cutoff: Option[java.sql.Timestamp] = None)
+    * evaluated only in the final sort. One plan for all `terms`:
+    * primMin stays per term because each order key lies in one term;
+    * the rows are ordered by [[TermColumn]], then the reference keys. */
+  def recentEnrollmentUpdatesForTerms(s: SparkSession, dir: String,
+      terms: Seq[String], cutoff: Option[java.sql.Timestamp] = None)
       : DataFrame = {
-    val (lo, hi) = monthBounds(termId)
     val o = Tables(s, dir, "orders")
-    val inTerm = o.filter(col("o_orderdate") >= lo && col("o_orderdate") < hi)
+    val inTerm = o.filter(inTerms(col("o_orderdate"), terms))
     val recent = cutoff match {
       case Some(c) => inTerm.filter(col("o_orderdate") >= lit(c))
       case None =>
@@ -654,17 +720,26 @@ object Jobs {
         col("o_orderpriority").as("course_career"),
         col("o_orderdate").as("last_updated"))
       .distinct()
+      .transform(routedByTermId)
       // reference ORDER BY (queries.py:108-120): term, career rank,
       // section, uid, last_updated DESC; enroll_status appended as a
       // determinism extension (distinct rows can tie on all five
       // reference keys), same stance as termEnrollments
-      .orderBy(col("term_id"),
+      .orderBy(col(TermColumn), col("term_id"),
         graft.functions.Fns.priorityRank(col("course_career"),
           Seq("1-URGENT" -> 1, "2-HIGH" -> 2, "3-MEDIUM" -> 3,
             "4-NOT SPECIFIED" -> 4)),
         col("section_id"), col("ldap_uid"), col("last_updated").desc,
         col("enroll_status"))
   }
+
+  /** [[recentEnrollmentUpdatesForTerms]] for one term, without the
+    * routing column: the `enrollment-updates-{termId}` extract. */
+  def recentEnrollmentUpdates(s: SparkSession, dir: String, termId: String,
+                              cutoff: Option[java.sql.Timestamp] = None)
+      : DataFrame =
+    recentEnrollmentUpdatesForTerms(s, dir, Seq(termId), cutoff)
+      .drop(TermColumn)
 
   /** Run one job: every flat query in its pipeline and every
     * (per-term extract × current term), each written gzip-CSV to each
@@ -674,23 +749,29 @@ object Jobs {
     * extracts, then per-term extracts by term — whatever order the
     * steps finished in; empty for an unknown job.
     *
-    * A step is one extract: build its frame, then [[Sinks.fanOut]].
-    * The job's pre-step ([[preSteps]], index maintenance) runs first
-    * and alone, because its reports read what it wrote. The remaining
-    * steps are independent and run concurrently through [[runSteps]],
-    * on at most `sparkContext.defaultParallelism` threads (4 under
-    * `local[4]`): the flat extracts and the term lookup are submitted
-    * together, and each per-term extract as soon as the terms are
-    * known. Each step keeps its own plan, so its Spark jobs and
-    * landed bytes are those of a serial run.
+    * A flat step is one extract: build its frame, then
+    * [[Sinks.fanOut]]. A family step is one per-term extract family
+    * ([[termFamilies]]): build its frame once over all current terms,
+    * then [[Sinks.fanOutRouted]] to the terms' keys, so every term key
+    * gets a file, an empty gzip for a term without rows. The job's
+    * pre-step ([[preSteps]], index maintenance) runs first and alone,
+    * because its reports read what it wrote. The remaining steps are
+    * independent and run concurrently through [[runSteps]], on at most
+    * `sparkContext.defaultParallelism` threads (4 under `local[4]`):
+    * the flat extracts and the term lookup are submitted together, and
+    * each family step as soon as the terms are known. Each step keeps
+    * its own plan, so its Spark jobs and landed bytes are those of a
+    * serial run.
     *
     * A step that throws does not stop the others: every extract that
     * can land still lands, and then a [[StepsFailed]] is thrown. It
     * carries the rows of the steps that finished, pre-step first; its
     * cause is the first failure in declaration order, with the later
-    * ones attached to that as suppressed. A failed delivery is not a
-    * throw — [[Sinks.fanOut]] reports it as `ok = false` in the
-    * returned rows. */
+    * ones attached to that as suppressed. A family step that throws
+    * loses all its terms' rows at once. A failed delivery is not a
+    * throw — the sink reports it as `ok = false` in the returned rows;
+    * a family whose serialization fails reports every term false on
+    * every target. */
   def run(job: String, spark: SparkSession, sfDir: String,
           targets: Seq[String], isoDate: String)
       : Seq[(String, String, Boolean)] =
@@ -716,26 +797,38 @@ object Jobs {
         val pre = preSteps.get(job).toSeq.flatMap { case (extract, step) =>
           deliver(extract, step(spark, sfDir, isoDate), keyFor(extract))
         }
-        val termQueries = perTermPipelines.getOrElse(job, Seq.empty)
+        val families = termFamilies.getOrElse(job, Seq.empty)
+        var terms = Seq.empty[String]
+        // family steps return their rows family by family; order them
+        // term by term, as the per-term keys are declared (flat rows
+        // rank -1 and stay first: the sort is stable)
+        def termMajor(rows: Seq[(String, String, Boolean)]) = {
+          val rank = (for (t <- terms; (_, file, _) <- families)
+            yield s"$file-$t").zipWithIndex.toMap
+          rows.sortBy(r => rank.getOrElse(r._1, -1))
+        }
         val rest = try runSteps[(String, String, Boolean)](
             spark.sparkContext.defaultParallelism) { submit =>
           for ((name, extract) <- extracts) submit { () =>
             deliver(extract, SparkEntry.queries(name)(spark, sfDir),
               keyFor(extract))
           }
-          if (termQueries.nonEmpty) submit { () =>
-            for (term <- currentTermIds(spark, sfDir);
-                 (dir, file, q) <- termQueries) submit { () =>
-              deliver(s"$file-$term", q(spark, sfDir, term),
-                Sinks.termKey(isoDate, dir, file, term))
-            }
+          if (families.nonEmpty) submit { () =>
+            terms = currentTermIds(spark, sfDir)
+            if (terms.nonEmpty)
+              for ((dir, file, family) <- families) submit { () =>
+                Sinks.fanOutRouted(family(spark, sfDir, terms), targets,
+                  TermColumn,
+                  terms.map(t => t -> Sinks.termKey(isoDate, dir, file, t)))
+                  .map { case (t, target, ok) => (s"$file-$t", target, ok) }
+              }
             Seq.empty
           }
         } catch {
           case e: StepsFailed[(String, String, Boolean)] @unchecked =>
-            throw new StepsFailed(pre ++ e.landed, e.getCause)
+            throw new StepsFailed(pre ++ termMajor(e.landed), e.getCause)
         }
-        pre ++ rest
+        pre ++ termMajor(rest)
     }
 
   /** Thrown when some steps of a job threw: `landed` holds the rows of

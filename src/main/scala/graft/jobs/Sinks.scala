@@ -5,6 +5,9 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path}
 import java.util.zip.GZIPOutputStream
 
+import scala.collection.mutable
+
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileSystem, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
@@ -21,12 +24,21 @@ import graft.functions.Fns
   * rows streamed in order into one local gzip file on the driver, and
   * that file copied to every target with per-target error isolation.
   * Each key is a directory holding exactly one file, `part-00000.csv.gz`.
+  * A per-term extract family is one frame for all current terms
+  * ([[fanOutRouted]]): a route column sends each row to its term's file,
+  * and every term's file is then copied the same way.
   *
   * Scale note: one file per key keeps byte-parity with the reference's
   * one object per query and its ordered output (SURVEY.md §2.11), so one
-  * task reads the whole extract (`coalesce(1)`), and that single
-  * partition reaches the driver as one task result: an extract is
-  * bounded by `spark.driver.maxResultSize`.
+  * task reads the whole frame (`coalesce(1)`), and that single
+  * partition reaches the driver as one task result: a frame is bounded
+  * by `spark.driver.maxResultSize`. For a routed frame that is every
+  * current term of one family at once, at most 3 terms
+  * (`ref_current_terms` is LIMIT 3).
+  *
+  * Failure note: a routed frame whose build or serialization fails
+  * fails every one of its keys on every target, so one family's terms
+  * fail together; a failed copy still fails only its (key, target).
   */
 object Sinks {
 
@@ -99,20 +111,44 @@ object Sinks {
     * lineterminator='\n', UTF-8). The executors render each row with
     * `to_csv`, the generator Spark's CSV writer uses, so the text is the
     * CSV data source's byte for byte; the driver streams the one ordered
-    * partition into a `GZIPOutputStream`. */
-  def gzipCsv(df: DataFrame, file: Path): Unit = {
+    * partition into a `GZIPOutputStream`. The one-key case of
+    * [[gzipCsvRouted]]. */
+  def gzipCsv(df: DataFrame, file: Path): Unit =
+    gzipCsvRouted(df.withColumn(OneKey, lit("")), OneKey, Map("" -> file))
+
+  /** The route column of the one-key case: every row routes to "". */
+  private val OneKey = "__one_key"
+
+  /** [[gzipCsv]] into one local file per route value: column `route`
+    * (a string) names the file each row goes to and is not written.
+    * Every file is created, so a route value without rows gets a valid
+    * empty gzip; a row whose route value has no file fails the whole
+    * serialization. Rows keep their order within each file. */
+  private def gzipCsvRouted(df: DataFrame, route: String,
+                            files: Map[String, Path]): Unit = {
     val ser = serializeTimestamps(df)
     // RFC 4180 quote doubling ("" inside a quoted field), matching the
     // reference's python csv.writer; Spark's default escape is
     // backslash, which an RFC consumer mis-parses at the first interior
     // quote
     val lines = ser
-      .select(to_csv(struct(col("*")), java.util.Map.of("escape", "\"")))
-      .coalesce(1).as(Encoders.STRING).toLocalIterator()
-    val out = new OutputStreamWriter(
-      new GZIPOutputStream(Files.newOutputStream(file), 1 << 16), UTF_8)
-    try lines.forEachRemaining { l => out.write(l); out.write('\n') }
-    finally out.close()
+      .select(
+        to_csv(struct(ser.columns.filter(_ != route).map(col).toIndexedSeq: _*),
+          java.util.Map.of("escape", "\"")),
+        col(route))
+      .coalesce(1).as(Encoders.tuple(Encoders.STRING, Encoders.STRING))
+      .toLocalIterator()
+    val outs = mutable.Map.empty[String, OutputStreamWriter]
+    try {
+      for ((r, f) <- files) outs(r) = new OutputStreamWriter(
+        new GZIPOutputStream(Files.newOutputStream(f), 1 << 16), UTF_8)
+      lines.forEachRemaining { case (l, r) =>
+        val out = outs.getOrElse(r, throw new IllegalStateException(
+          s"a row routes to '$r', which has no key"))
+        out.write(l)
+        out.write('\n')
+      }
+    } finally outs.values.foreach(_.close())
   }
 
   /** The one file each delivered key holds. */
@@ -154,17 +190,49 @@ object Sinks {
     }
   }
 
+  /** Copy one serialized local file to `<t>/<key>`: first to
+    * `<t>/<key>__incoming/part-00000.csv.gz`, then swapped in. */
+  private def deliver(local: Path, t: String, key: String,
+                      conf: Configuration): Boolean = {
+    val dst = new HPath(s"$t/$key")
+    val tmp = new HPath(s"$t/${key}__incoming")
+    val old = new HPath(s"$t/${key}__old")
+    // the local filesystem checksums by default: its raw form writes
+    // no `.crc` beside the part, so the key holds one file
+    val fs = dst.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case f => f
+    }
+    convergeExtractSwap(fs, dst, old)
+    fs.delete(tmp, true) // a crashed delivery's leftovers
+    val out = fs.create(new HPath(tmp, PartName), false)
+    try Files.copy(local, out) finally out.close()
+    swapExtractIn(fs, dst, tmp, old)
+  }
+
   /** S5 — multi-target fan-out with per-target error isolation
     * (reference: jonesy/jobs.py:116-132: the query is serialized ONCE
     * into a gzip file, then the SAME bytes upload to each bucket in
     * TARGETS; a failing bucket logs and yields False without raising).
-    * Returns per-target success flags in input order.
+    * Returns per-target success flags in input order. The one-key case
+    * of [[fanOutRouted]]. */
+  def fanOut(df: DataFrame, targets: Seq[String],
+             key: String): Seq[(String, Boolean)] =
+    fanOutRouted(df.withColumn(OneKey, lit("")), targets, OneKey,
+      Seq("" -> key)).map { case (_, t, ok) => (t, ok) }
+
+  /** S5/S8 — [[fanOut]] of one frame to several keys: the string column
+    * `route` names each row's key through `keys` (route value → key)
+    * and is not written. Returns (route value, target, ok) rows, key by
+    * key in `keys` order, targets in input order.
     *
-    * One path for any number of targets: [[gzipCsv]] runs the plan once
-    * into a temp file on the driver's own disk, so the copies work on
-    * any master, and the file is deleted when the last target is done.
-    * A failed serialization fails every target; a failed copy fails only
-    * its target. Each target gets the file at
+    * One path for any number of keys and targets: [[gzipCsvRouted]]
+    * runs the plan once into one temp file per key on the driver's own
+    * disk, so the copies work on any master, and the files are deleted
+    * when the last copy is done. Every key gets a file, so a route
+    * value without rows lands a valid empty gzip. A failed
+    * serialization fails every key on every target; a failed copy
+    * fails only its (key, target). Each target gets a key's file at
     * `<t>/<key>__incoming/part-00000.csv.gz` first and swaps it in only
     * after the bytes landed, so the prior extract keeps serving through
     * a failed delivery (the reference's atomic S3 put), and re-delivery
@@ -172,38 +240,31 @@ object Sinks {
     * the SAME key are not supported: the `__incoming`/`__old` names are
     * shared, so each key has one writer, as the cron deployment this
     * sink serves delivers each key once per run. */
-  def fanOut(df: DataFrame, targets: Seq[String],
-             key: String): Seq[(String, Boolean)] = {
+  def fanOutRouted(df: DataFrame, targets: Seq[String], route: String,
+                   keys: Seq[(String, String)])
+      : Seq[(String, String, Boolean)] = {
     require(targets.nonEmpty, "no targets configured") // jobs.py:119-122
+    require(keys.map(_._1).distinct.size == keys.size,
+      s"route values repeat: ${keys.map(_._1)}")
     def logFail(what: String, e: Exception): Boolean = {
       System.err.println(s"[sink] $what failed: ${e.getMessage}")
       false
     }
-    val local = Files.createTempFile("graft-fanout", ".csv.gz")
+    val locals = mutable.ArrayBuffer.empty[Path]
     try {
+      for (_ <- keys)
+        locals += Files.createTempFile("graft-fanout", ".csv.gz")
       val serialized =
-        try { gzipCsv(df, local); true }
-        catch { case e: Exception => logFail("serialization", e) }
+        try {
+          gzipCsvRouted(df, route, keys.map(_._1).zip(locals).toMap)
+          true
+        } catch { case e: Exception => logFail("serialization", e) }
       val conf = df.sparkSession.sparkContext.hadoopConfiguration
-      targets.map { t =>
-        t -> (serialized && (try {
-          val dst = new HPath(s"$t/$key")
-          val tmp = new HPath(s"$t/${key}__incoming")
-          val old = new HPath(s"$t/${key}__old")
-          // the local filesystem checksums by default: its raw form
-          // writes no `.crc` beside the part, so the key holds one file
-          val fs = dst.getFileSystem(conf) match {
-            case c: ChecksumFileSystem => c.getRawFileSystem
-            case f => f
-          }
-          convergeExtractSwap(fs, dst, old)
-          fs.delete(tmp, true) // a crashed delivery's leftovers
-          val out = fs.create(new HPath(tmp, PartName), false)
-          try Files.copy(local, out) finally out.close()
-          swapExtractIn(fs, dst, tmp, old)
-        } catch { case e: Exception => logFail(s"target $t", e) }))
-      }
-    } finally Files.deleteIfExists(local)
+      for (((r, key), local) <- keys.zip(locals); t <- targets)
+        yield (r, t, serialized && (
+          try deliver(local, t, key, conf)
+          catch { case e: Exception => logFail(s"target $t, key $key", e) }))
+    } finally locals.foreach(Files.deleteIfExists)
   }
 
   /** S7 — full key for a flat (term-independent) extract:

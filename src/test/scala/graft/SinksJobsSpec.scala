@@ -510,6 +510,143 @@ class SinksJobsSpec extends AnyFunSuite with SharedSpark {
         n.startsWith("enrollment-updates-")))
   }
 
+  /** sf0.01: its enrollment extracts hold the rows tied on every ORDER
+    * BY key, whose landed order the per-term equivalence must keep. */
+  private val sf01 = Paths.get(sf).resolveSibling("sf0.01").toString
+
+  test("each per-term family lands, at every term key on both targets, " +
+      "the raw bytes its single-term extract lands alone") {
+    val dir = tempDir("family_equiv_spec").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val date = "2024-01-01"
+    val terms = Jobs.currentTermIds(spark, sf01)
+    assert(terms.size > 1, s"one term does not batch: $terms")
+    for (job <- Jobs.perTermPipelines.keys) {
+      val res = Jobs.run(job, spark, sf01, targets, date)
+      assert(res.nonEmpty && res.forall(_._3), s"$job failed: $res")
+    }
+    var nonEmpty = 0
+    for ((_, families) <- Jobs.perTermPipelines; (d, f, q) <- families;
+         t <- terms) {
+      val key = Sinks.termKey(date, d, f, t)
+      assert(Sinks.fanOut(q(spark, sf01, t), Seq(s"$dir/alone"), key)
+        .forall(_._2), s"$key alone did not land")
+      val alone = Files.readAllBytes(part(s"$dir/alone/$key"))
+      for (target <- targets)
+        assert(java.util.Arrays.equals(
+            Files.readAllBytes(part(s"$target/$key")), alone),
+          s"$target/$key differs from its single-term extract")
+      if (gunzip(part(s"$dir/alone/$key")).nonEmpty) nonEmpty += 1
+    }
+    // the snapshot families have rows in every term at sf0.01
+    assert(nonEmpty >= 2 * terms.size, s"$nonEmpty non-empty term keys")
+  }
+
+  test("a partly empty family lands a valid empty gzip at the terms " +
+      "without rows, and the single-term text at the term with rows") {
+    val dir = tempDir("family_partial_spec").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val terms = Jobs.currentTermIds(spark, sf01).sorted
+    val last = terms.last
+    // a cutoff ten days into the last term: the earlier terms end before it
+    val cutoff = java.sql.Timestamp.valueOf(
+      s"${last.take(4)}-${last.drop(4)}-11 00:00:00")
+    val keys = terms.map(t => t -> Sinks.termKey("2024-01-01",
+      "enrollment_updates", "enrollment-updates", t))
+    val res = Sinks.fanOutRouted(
+      Jobs.recentEnrollmentUpdatesForTerms(spark, sf01, terms, Some(cutoff)),
+      targets, Jobs.TermColumn, keys)
+    assert(res == keys.flatMap { case (t, _) => targets.map((t, _, true)) },
+      s"deliveries: $res")
+    val alone = Jobs.recentEnrollmentUpdates(spark, sf01, last, Some(cutoff))
+    assert(alone.count() > 0, "the last term has no rows after the cutoff")
+    Sinks.gzipCsv(alone, Paths.get(s"$dir/alone.csv.gz"))
+    for (target <- targets; (t, key) <- keys) {
+      val text = gunzip(part(s"$target/$key"))
+      if (t == last) assert(text == gunzip(Paths.get(s"$dir/alone.csv.gz")),
+        s"$target/$key differs from its single-term extract")
+      else assert(text.isEmpty, s"$target/$key holds rows: $text")
+    }
+  }
+
+  test("per-term families run in fewer Spark jobs than the per-term loop") {
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val started = new AtomicInteger
+    val counter = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        started.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      ListenerBusDrain.drain(sc)
+      started.set(0)
+      body
+      ListenerBusDrain.drain(sc)
+      started.get
+    }
+    val dir = tempDir("family_jobs_spec").toString
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val date = "2024-01-01"
+    sc.addSparkListener(counter)
+    try for (job <- Seq("upload_snapshot", "upload_recent_refresh")) {
+      val batched = jobsOf(Jobs.run(job, spark, sf01, targets, date))
+      // the same job as a per-term loop: the term lookup, the flat
+      // extracts, then one plan per (family, term)
+      val loop = jobsOf {
+        val terms = Jobs.currentTermIds(spark, sf01)
+        for ((q, e) <- Jobs.pipelines(job))
+          Sinks.fanOut(SparkEntry.queries(q)(spark, sf01), targets,
+            Sinks.dailyKey(date, e))
+        for (t <- terms; (d, f, q) <- Jobs.perTermPipelines(job))
+          Sinks.fanOut(q(spark, sf01, t), targets,
+            Sinks.termKey(date, d, f, t))
+      }
+      info(s"$job: $batched Spark jobs batched, $loop per term")
+      assert(batched < loop, s"$job: $batched jobs batched, $loop per term")
+    } finally sc.removeSparkListener(counter)
+  }
+
+  test("fanOutRouted: a failing target fails only its own keys; a stream " +
+      "that raises on one key's rows fails every key on every target and " +
+      "keeps yesterday's extracts") {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def fanFiles() = tmpRoot.listFiles()
+      .filter(_.getName.startsWith("graft-fanout")).map(_.getName).toSet
+    val before = fanFiles()
+    val dir = tempDir("routed_fail_spec").toString
+    val keys = Seq("a" -> "daily/a/a.gz", "b" -> "daily/b/b.gz",
+      "c" -> "daily/c/c.gz")
+    val df = Seq((1, "x", "a"), (2, "y", "c"), (3, "z", "a"))
+      .toDF("id", "v", "r")
+    val want = Map("a" -> "1,x\n3,z\n", "b" -> "", "c" -> "2,y\n")
+    val bad = "file:///proc/definitely/not/writable"
+    val targets = Seq(s"$dir/t1", s"$dir/t2")
+    val res = Sinks.fanOutRouted(df, Seq(bad, targets(0)), "r", keys)
+    assert(res == keys.flatMap { case (r, _) =>
+      Seq((r, bad, false), (r, targets(0), true)) }, s"deliveries: $res")
+    for ((r, key) <- keys)
+      assert(gunzip(part(s"${targets(0)}/$key")) == want(r), key)
+    // yesterday's extracts on both targets
+    assert(Sinks.fanOutRouted(df, targets, "r", keys).forall(_._3))
+    // a frame that raises partway through the stream, on key b's rows
+    val raising = spark.range(1000).selectExpr(
+      "IF(id = 901, raise_error('boom at 901'), id) AS id",
+      "CASE id % 3 WHEN 0 THEN 'a' WHEN 1 THEN 'b' ELSE 'c' END AS r")
+    val failed = Sinks.fanOutRouted(raising, targets, "r", keys)
+    assert(failed == keys.flatMap { case (r, _) => targets.map((r, _, false)) },
+      s"reported success: $failed")
+    for (t <- targets; (r, key) <- keys) {
+      assert(gunzip(part(s"$t/$key")) == want(r),
+        s"yesterday's extract no longer serves at $t/$key")
+      assert(!new java.io.File(s"$t/${key}__incoming").exists(),
+        s"failed delivery left an __incoming remnant at $t/$key")
+    }
+    assert(fanFiles() == before,
+      "fanOutRouted must remove the graft-fanout* temp files it created")
+  }
+
   /** Live threads of the step runner's pools, each given a moment to
     * exit so a thread on its way out is not counted. */
   private def liveStepThreads(): Seq[Thread] = {
